@@ -42,19 +42,14 @@ object Pipeline {
     spark.sparkContext.broadcast(idx)
   }
 
-  // the default index is immutable per (session, nGenes, seed): memoize so
-  // repeated queries in one session don't rebuild + re-broadcast it
-  private val indexCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Long), Broadcast[DimIndex]]
-
+  // the default index is immutable per (context, nGenes, seed): memoize
+  // so repeated queries don't rebuild + re-broadcast it
   def cachedIndex(spark: SparkSession, nGenes: Int = DefaultGenes,
                   seed: Long = DefaultSeed): Broadcast[DimIndex] = {
-    // session bootstrap: JIT/codegen warm-up sweep, once per session
+    // session bootstrap: JIT/codegen warm-up sweep, once per context
     // (see SessionWarmup — pure code warming, no data any query reuses)
     SessionWarmup.ensure(spark)
-    indexCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, nGenes, seed),
-      buildIndex(spark, nGenes, seed))
+    GraftContext(spark).memo(("index", nGenes, seed))(buildIndex(spark, nGenes, seed))
   }
 
   /** Map-only batch annotation of a turn Dataset. */
@@ -63,30 +58,22 @@ object Pipeline {
 
   /** Flagship end-to-end run on synthesized transcripts.
     *
-    * Memoized + persisted per (session, cfg) — the `cachedIndex` /
+    * Memoized + persisted per (context, cfg) — the `cachedIndex` /
     * `jaccardPairs` discipline: the annotation relation is
     * deterministic given the session's index and the generator
     * config, and it fans out to ~a dozen consumers (reports, output
     * assembly, cohort stats, SQL surface), several of which consume
     * it twice in one plan (Spark has no cross-branch subtree reuse) —
     * without the persist the kernel re-runs once per consumption.
-    * Direct persist (not CacheRegistry): the relation is a session
+    * A memo, not a tracked persist: the relation is a session
     * artifact, not a per-query intermediate.
     */
-  private val runCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Synth.TurnGenConfig), DataFrame]
-
   def run(spark: SparkSession,
           cfg: Synth.TurnGenConfig = Synth.TurnGenConfig(
             nConvs = 100, turnsPerConv = 10, nGenes = DefaultGenes)): DataFrame =
-    // synchronized: TrieMap.getOrElseUpdate evaluates the builder
-    // non-atomically — a concurrent first call would register a second
-    // persist whose losing copy stays pinned for the session
-    runCache.synchronized {
-      runCache.getOrElseUpdate((spark.sparkContext.applicationId, cfg), {
-        val bc = cachedIndex(spark, cfg.nGenes)
-        annotate(Synth.transcripts(spark, cfg), bc).toDF()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+    GraftContext(spark).memo(("run", cfg)) {
+      val bc = cachedIndex(spark, cfg.nGenes)
+      annotate(Synth.transcripts(spark, cfg), bc).toDF()
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 }

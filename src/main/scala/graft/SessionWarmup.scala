@@ -20,24 +20,21 @@ import org.apache.spark.sql.functions._
   * discarded), it only compiles code.
   *
   * Hooked from `Pipeline.cachedIndex` (the session-bootstrap call
-  * every entry path makes); memoized per SparkContext so tests and
-  * long sessions pay it once.
+  * every entry path makes); memoized in the GraftContext so tests and
+  * long sessions pay it once per SparkContext.
   */
 object SessionWarmup {
 
-  private val done =
-    java.util.Collections.synchronizedSet(new java.util.HashSet[String]())
-
-  def ensure(spark: SparkSession): Unit = {
-    if (!done.add(spark.sparkContext.applicationId)) return
-    try sweep(spark)
-    catch { case scala.util.control.NonFatal(e) =>
-      // warm-up must never break a session; queries just run colder.
-      // Fatal errors (OOM, link errors) and interrupts still propagate.
-      org.apache.log4j.Logger.getLogger(getClass)
-        .warn(s"session warm-up sweep failed: ${e.getMessage}")
+  def ensure(spark: SparkSession): Unit =
+    GraftContext(spark).memo("warmup") {
+      try sweep(spark)
+      catch { case scala.util.control.NonFatal(e) =>
+        // warm-up must never break a session; queries just run colder.
+        // Fatal errors (OOM, link errors) and interrupts still propagate.
+        org.apache.log4j.Logger.getLogger(getClass)
+          .warn(s"session warm-up sweep failed: ${e.getMessage}")
+      }
     }
-  }
 
   private def sweep(spark: SparkSession): Unit = {
     import spark.implicits._

@@ -114,7 +114,7 @@ object BpeTrain {
     // vocabulary the segmentation table derives from, and the corpus
     // occurrence join): without the cache the corpus is scanned and
     // exploded twice
-    val tok = CacheRegistry.persistTracked(
+    val tok = graft.GraftContext.persistTracked(
       docs.select(col(idCol).as("doc"),
         explode(TextOps.tokens(col(textCol))).as("word")))
     val seg = segmentTable(tok, "word", merges)

@@ -32,64 +32,22 @@ import org.apache.spark.sql.functions._
   */
 object Components {
 
-  /** Rounds the most recent `connectedComponents` call took to
-    * converge (diagnostic only — benchmarks report it).
+  /** Rounds the most recent `connectedComponents` call in the current
+    * session's context took to converge (diagnostic only — benchmarks
+    * report it).
     */
-  @volatile private var lastRoundsVar: Int = 0
-  def lastRounds: Int = lastRoundsVar
+  def lastRounds: Int = graft.GraftContext.current.fold(0)(_.ccRounds)
 
-  /** FINAL-round checkpoint RDDs of completed `connectedComponents`
-    * calls. Each run's last localCheckpoint backs the DataFrame it
-    * returns, so it cannot be freed inside the loop — but a long-lived
-    * session running CC repeatedly (Bench, Verify) would otherwise
-    * accumulate one cached edge set per run with no reachable handle.
-    * Mirrors `NearDup.persistTracked`: bounded (oldest evicted — only
-    * the cache win is lost, the DataFrame recomputes from the
-    * truncated plan... which for a checkpoint leaf means the blocks
-    * are gone, so eviction only happens after `MaxTracked` newer runs,
-    * by which time the old result has been consumed), with an explicit
-    * `releaseAll()` for harnesses to call between queries.
-    *
-    * NOTE on eviction semantics: unlike a persisted Dataset, an
-    * unpersisted localCheckpoint RDD is NOT lazily recomputable — the
-    * lineage was truncated. `releaseAll()` must only run after the
-    * results of prior CC calls have been fully consumed (the Bench /
-    * Verify per-query boundary, where every action on the result has
-    * completed).
+  /** Free the cached edge-set blocks of every completed CC run in the
+    * current session's context. Each run's final-round checkpoint
+    * backs the DataFrame it returns, so it cannot be freed inside the
+    * loop; the context holds the last 4 of them and evicts older
+    * ones. Unlike a persisted Dataset, an unpersisted checkpoint RDD
+    * is NOT lazily recomputable — the lineage was truncated — so call
+    * this only where prior CC results have been fully consumed (the
+    * Bench / Verify per-query boundary).
     */
-  private val MaxTracked = 4
-  private val finalRoundRdds =
-    new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
-
-  private def trackFinal(rdd: org.apache.spark.rdd.RDD[_]): Unit = {
-    finalRoundRdds.add(rdd)
-    while (finalRoundRdds.size > MaxTracked) {
-      val old = finalRoundRdds.poll()
-      if (old != null) {
-        // EXPLICIT failure mode: a checkpoint RDD does not recompute,
-        // so if the evicted run's result was never consumed, acting on
-        // it later fails with "Checkpoint block not found". Holding
-        // >MaxTracked unconsumed CC results is outside the registry's
-        // contract (consume or releaseAll() between runs) — log loudly
-        // so the eventual error is attributable
-        org.apache.log4j.Logger.getLogger(Components.getClass).warn(
-          s"evicting final-round CC checkpoint RDD ${old.id}: more than " +
-            s"$MaxTracked unconsumed connectedComponents results are live; " +
-            "actions on the evicted result will fail (blocks freed, " +
-            "lineage truncated)")
-        old.unpersist(false)
-      }
-    }
-  }
-
-  /** Free the cached edge-set blocks of every completed CC run. Call
-    * only at a point where prior CC results are no longer needed (see
-    * note above — checkpointed blocks do not recompute).
-    */
-  def releaseAll(): Unit = {
-    var rdd = finalRoundRdds.poll()
-    while (rdd != null) { rdd.unpersist(false); rdd = finalRoundRdds.poll() }
-  }
+  def releaseAll(): Unit = graft.GraftContext.current.foreach(_.releaseCheckpoints())
 
   /** (node, component) for every node appearing in `pairs`
     * (columns doc_a, doc_b); component = the minimum node id of the
@@ -102,7 +60,7 @@ object Components {
     *
     * RESULT LIFETIME: the returned DataFrame is backed by checkpoint
     * blocks whose lineage is truncated — it does NOT recompute. The
-    * registry keeps the last `MaxTracked` (4) runs' blocks alive, so a
+    * session's GraftContext keeps the last 4 runs' blocks alive, so a
     * result must be consumed before 4 newer `connectedComponents`
     * calls complete (or before `releaseAll()`); actions on an older
     * result fail with "Checkpoint block not found". Long-lived
@@ -129,8 +87,7 @@ object Components {
     * serializes the stage and must be routed. An explicit positive
     * value fixes the cut (tests/benches — degrees are still ESTIMATED
     * by the 1/256 sample once the cut exceeds 2^16, so routing above
-    * that is approximate by design); 0 disables routing; env
-    * `GRAFT_CC_HOT` overrides the parameter.
+    * that is approximate by design); 0 disables routing.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
                           hotDegreeThreshold: Long = -1L): DataFrame = {
@@ -165,24 +122,11 @@ object Components {
         "localCheckpoint did not produce a LogicalRDD leaf"))
       (rdd, cp, checksum(cp))
     }
-    val verbose = sys.env.get("GRAFT_CC_VERBOSE").contains("1")
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (verbose) println(f"[cc] $label ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-    var (edgesRdd, edges, chk) = timed("init")(materialize(pairs
+    var (edgesRdd, edges, chk) = materialize(pairs
       .select(greatest(col("doc_a"), col("doc_b")).as("u"),
         least(col("doc_a"), col("doc_b")).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()))
-    val useSHJ = sys.env.get("GRAFT_CC_SHJ").contains("1")
-    // malformed overrides degrade to the parameter/default rather than
-    // throwing NumberFormatException inside every CC call
-    val hotThreshold = sys.env.get("GRAFT_CC_HOT")
-      .flatMap(v => scala.util.Try(v.toLong).toOption)
-      .getOrElse(hotDegreeThreshold)
+      .distinct())
     var converged = false
     var it = 0
     while (!converged && it < maxIter) {
@@ -190,12 +134,9 @@ object Components {
       // degrees bound the per-key row counts of BOTH star passes
       // (large-star partitions sym by u; small-star's u-side degree is
       // at most the node's sym degree)
-      val hot =
-        if (useSHJ) Nil
-        else timed(s"probe$it")(roundHotKeys(edges, hotThreshold, chk._1))
-      val (nextRdd, next, nextChk) = timed(s"round$it")(materialize(
-        if (useSHJ) smallStarSHJ(largeStarSHJ(edges))
-        else smallStarHybrid(largeStarHybrid(edges, hot), hot)))
+      val hot = roundHotKeys(edges, hotDegreeThreshold, chk._1)
+      val (nextRdd, next, nextChk) =
+        materialize(smallStarHybrid(largeStarHybrid(edges, hot), hot))
       edgesRdd.unpersist(false) // safe: `next` is materialized (checksummed)
       edgesRdd = nextRdd
       edges = next
@@ -206,8 +147,9 @@ object Components {
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds")
-    lastRoundsVar = it
-    trackFinal(edgesRdd) // final round backs the result; freed via releaseAll()
+    val ctx = graft.GraftContext(pairs.sparkSession)
+    ctx.ccRounds = it
+    ctx.trackCheckpoint(edgesRdd) // final round backs the result; freed via releaseAll()
     // at the fixpoint the edge set is a star forest: every edge links a
     // node directly to its component root. Nodes that appear only as
     // roots (u side never) map to themselves.
@@ -217,10 +159,6 @@ object Components {
       .withColumn("component", col("node"))
     members.unionByName(roots)
   }
-
-  /** One alternating round (exposed for plan probing). */
-  private[graft] def oneRound(edges: DataFrame): DataFrame =
-    smallStar(largeStar(edges))
 
   /** Collected hot set is capped: keys beyond the cap stay on the
     * window path (graceful degradation, never an error).
@@ -318,32 +256,6 @@ object Components {
       .select(col("v").as("u"), col("_m").as("v"))
       .unionByName(mins.select(col("u"), col("_m").as("v")))
     cold.unionByName(hotOut)
-      .filter(col("u") =!= col("v"))
-      .distinct()
-  }
-
-  // A/B-measured alternative (GRAFT_CC_SHJ=1): hash-join round
-  // formulation — no sorts, forced ShuffledHashJoin so the
-  // node-count-sized mins never broadcast. Measured at 16M nodes
-  // (BENCH.md R4.2): better 8->32 RATIO (0.60 vs 0.38) but ~30-100%
-  // WORSE wall time at both core counts — the extra exchanges and
-  // hash builds add parallel work, which flatters the scaling ratio
-  // while losing absolute throughput. The window formulation stays
-  // the default; this stays as the documented control.
-  private[graft] def largeStarSHJ(edges: DataFrame): DataFrame = {
-    val sym = edges.select(col("u"), col("v"))
-      .unionByName(edges.select(col("v").as("u"), col("u").as("v")))
-    val mins = sym.groupBy(col("u")).agg(min(col("v")).as("_mn"))
-      .select(col("u"), least(col("u"), col("_mn")).as("m"))
-    sym.hint("shuffle_hash").join(mins, Seq("u"))
-      .filter(col("v") > col("u"))
-      .select(col("v").as("u"), col("m").as("v"))
-  }
-  private[graft] def smallStarSHJ(edges: DataFrame): DataFrame = {
-    val mins = edges.groupBy(col("u")).agg(min(col("v")).as("m"))
-    val relinked = edges.hint("shuffle_hash").join(mins, Seq("u"))
-      .select(col("v").as("u"), col("m").as("v"))
-    relinked.unionByName(mins.select(col("u"), col("m").as("v")))
       .filter(col("u") =!= col("v"))
       .distinct()
   }

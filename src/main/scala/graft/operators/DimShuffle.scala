@@ -77,7 +77,7 @@ object DimShuffle {
       // variant-level index build and the support-count aggregation);
       // ONE tracked materialization feeds both, so the upstream
       // dimension pipeline (source scan, evidence filter) runs once
-      val dimP = CacheRegistry.persistTracked(dim)
+      val dimP = graft.GraftContext.persistTracked(dim)
       val idx = DimIndex.build(spark, dimP, ctCfg, selectCt, withConsensus = false)
       consensusAnnotate(
         MatchKernel.annotate(turns, spark.sparkContext.broadcast(idx)),
@@ -120,7 +120,7 @@ object DimShuffle {
     // subtree reuse: without a materialization the annotation kernel —
     // and its whole upstream source scan — would execute at least
     // twice per action. One tracked persist makes the kernel run once.
-    val annP = CacheRegistry.persistTrackedDs(ann)
+    val annP = graft.GraftContext.persistTracked(ann)
 
     // (turn key, tier, var_id) rows; sentinels carry no support
     val exploded = annP.flatMap { a =>

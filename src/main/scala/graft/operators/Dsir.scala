@@ -75,7 +75,7 @@ object Dsir {
     val (cT, tT) = bucketCounts(target, idCol, textCol, buckets)
     // raw-side buckets computed ONCE for fit + scoring (see
     // selectTopKSplit — the raw corpus is the bulk of the hash work)
-    val rawB = CacheRegistry.persistTracked(
+    val rawB = graft.GraftContext.persistTracked(
       raw.select(col(idCol),
         TextOps.tokens(col(textCol)).as("toks"))
         .select(col(idCol),
@@ -113,7 +113,7 @@ object Dsir {
     // arrays instead of re-tokenizing and re-hashing every feature
     // occurrence a second time — at corpus scale the md5 work halves
     // (the scoring side dominates: raw is the bulk of the corpus).
-    val withB = CacheRegistry.persistTracked(
+    val withB = graft.GraftContext.persistTracked(
       docs.filter(targetCond.isNotNull)
         .select(col(idCol), targetCond.as("t"),
           TextOps.tokens(col(textCol)).as("toks"))

@@ -81,7 +81,7 @@ object MatchShuffle {
   def annotate(spark: SparkSession, turns: Dataset[Turn], dim: DataFrame,
                ctCfg: CtConfig,
                selectCt: Either[String, Seq[String]] = Left("highest")): Dataset[Annotation] = {
-    val dimP = CacheRegistry.persistTracked(dim)
+    val dimP = graft.GraftContext.persistTracked(dim)
     DimShuffle.consensusAnnotate(
       annotateNoConsensus(spark, turns, dimP),
       DimShuffle.supportTable(dimP, ctCfg, selectCt))
@@ -98,7 +98,7 @@ object MatchShuffle {
     //    per-gene: per-key cardinality is one gene's variant count
     //    (the same boundedness GeneDim assumes), never the dimension.
     val wGene = Window.partitionBy(col("gene_key")).orderBy(col("var_order"))
-    val varMeta = CacheRegistry.persistTrackedDs(dim
+    val varMeta = graft.GraftContext.persistTracked(dim
       .groupBy(col("gene_key"), col("var_id"))
       .agg(upper(first(col("var_name"))).as("var_name"),
         first(col("hgvs")).as("hgvs"),
@@ -143,7 +143,7 @@ object MatchShuffle {
     // 3. turn side: ONE parse per turn feeds both the key explode and
     //    the final assembly (persisted — the relation is consumed
     //    twice and Spark has no cross-branch subtree reuse)
-    val parsed = CacheRegistry.persistTrackedDs(turns.map { t =>
+    val parsed = graft.GraftContext.persistTracked(turns.map { t =>
       val p = MatchKernel.parse(t)
       ParsedTurn(t.conv_id, t.turn_idx, t.role, t.ts, p.geneKey, p.dataType,
         MatchKernel.keyBits(p).distinct)

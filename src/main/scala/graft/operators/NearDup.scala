@@ -14,32 +14,32 @@ import org.apache.spark.sql.functions._
 object NearDup {
 
   /** Intermediate relations persisted by the near-dup operators
-    * (shingle sets, embedding vectors) go through the shared
-    * `CacheRegistry` — see its scaladoc for the lifecycle contract.
+    * (shingle sets, embedding vectors) are tracked in the session's
+    * `GraftContext` — see its scaladoc for the lifecycle contract.
     */
   private def persistTracked(df: DataFrame): DataFrame =
-    CacheRegistry.persistTracked(df)
+    graft.GraftContext.persistTracked(df)
 
   /** Release every intermediate relation the curation operators have
-    * persisted so far (near-dup AND the other CacheRegistry users).
-    * Safe to call at any time: an in-flight plan that still references
-    * an unpersisted relation recomputes it lazily.
+    * tracked in the current session's context (near-dup AND the other
+    * operators' tracked persists). Safe to call at any time: an
+    * in-flight plan that still references an unpersisted relation
+    * recomputes it lazily.
     */
-  def unpersistAll(): Unit = CacheRegistry.unpersistAll()
+  def unpersistAll(): Unit = graft.GraftContext.current.foreach(_.unpersistTracked())
 
   /** Hot shingles dropped by the most recent CAPPED `jaccardNearDups`
-    * run observed on this JVM (-1 until a capped run completes).
-    * Diagnostic: lets tests and operators confirm whether a run was
-    * actually capped (the cap is silent in the result otherwise).
-    * Updated asynchronously by the query-execution listener after the
-    * materializing action finishes.
+    * run in the current session's context (-1 until a capped run
+    * completes). Diagnostic: lets tests and operators confirm whether
+    * a run was actually capped (the cap is silent in the result
+    * otherwise). Updated asynchronously by the query-execution
+    * listener after the materializing action finishes; concurrent
+    * capped queries race on it (last completion wins) — it exists for
+    * logs and tests, not for program logic.
     */
-  @volatile private var lastCapDroppedVar: Long = -1L
-  // diagnostic only: concurrent capped queries race on this single
-  // slot (last completion wins) — it exists for logs and tests, not
-  // for program logic
-  def lastCapDropped: Long = lastCapDroppedVar
-  private[graft] def resetCapDropped(): Unit = lastCapDroppedVar = -1L
+  def lastCapDropped: Long = graft.GraftContext.current.fold(-1L)(_.capDropped)
+  private[graft] def resetCapDropped(): Unit =
+    graft.GraftContext.current.foreach(_.capDropped = -1L)
 
   // observation names must be unique within ONE query plan: composing
   // two capped near-dup relations into a single query would otherwise
@@ -50,12 +50,6 @@ object NearDup {
   private val capMetricCounter = new java.util.concurrent.atomic.AtomicLong(0)
   private def nextCapMetricName(): String =
     s"${CapMetricPrefix}_${capMetricCounter.incrementAndGet()}"
-  // weakly-referenced: a stopped-and-dropped SparkSession must not be
-  // pinned in memory by this registry for the life of the JVM
-  private val capListenerSessions =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, java.lang.Boolean]()))
 
   /** Register (once per session) the listener that surfaces the
     * observed cap metric: a capped run that actually dropped shingles
@@ -63,7 +57,7 @@ object NearDup {
     * oracle.
     */
   private def ensureCapListener(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (capListenerSessions.add(spark)) {
+    graft.GraftContext(spark).oncePerSession(spark) {
       spark.listenerManager.register(
         new org.apache.spark.sql.util.QueryExecutionListener {
           override def onSuccess(funcName: String,
@@ -76,7 +70,7 @@ object NearDup {
               // SUM across the plan's capped observations: a composed
               // query with two capped relations must not let a
               // zero-drop observation overwrite a real drop count
-              lastCapDroppedVar = rows.map(_.getLong(0)).sum
+              graft.GraftContext(qe.sparkSession).capDropped = rows.map(_.getLong(0)).sum
               for (row <- rows if row.getLong(0) > 0)
                 org.apache.log4j.Logger.getLogger(NearDup.getClass).warn(
                   s"jaccardNearDups cap DROPPED ${row.getLong(0)} hot shingle(s) " +

@@ -46,7 +46,7 @@ object Relevance {
     val n = docs.count()
     // tf feeds both the df aggregation and the score join — one
     // tracked persist keeps the corpus explode to a single pass
-    val tf = CacheRegistry.persistTracked(
+    val tf = graft.GraftContext.persistTracked(
       termFreqs(docs, idCol, textCol, terms))
     val idf = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       .withColumn("idf_q", expr(s"${n * scale}L div df"))
@@ -82,7 +82,7 @@ object Relevance {
   def bm25Quantized(docs: DataFrame, idCol: String, textCol: String,
                     terms: Seq[String], scale: Long = 1000000L): DataFrame = {
     // one pass gives both corpus scalars (row count + token total)
-    val lens = CacheRegistry.persistTracked(
+    val lens = graft.GraftContext.persistTracked(
       docs.select(col(idCol).as("doc"),
         size(TextOps.tokens(col(textCol))).cast("long").as("dl")))
     val stats = lens.agg(count(lit(1)).as("n"), sum(col("dl")).as("s")).head()
@@ -90,7 +90,7 @@ object Relevance {
     if (n == 0)
       return docs.select(col(idCol), lit(0L).as("score_q")).limit(0)
     val sumDl = stats.getLong(1)
-    val tf = CacheRegistry.persistTracked(
+    val tf = graft.GraftContext.persistTracked(
       termFreqs(docs, idCol, textCol, terms))
     val idf = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       .withColumn("idf_q",
@@ -136,7 +136,7 @@ object Relevance {
     // aggregation, the per-doc term frequencies) and the scored
     // relation two (the quartile action + the caller's) — persist
     // both so the corpus is exploded once and scored once
-    val tok = CacheRegistry.persistTracked(
+    val tok = graft.GraftContext.persistTracked(
       docs.select(col(idCol).as("doc"),
         explode(TextOps.tokens(col(textCol))).as("term")))
     val total = tok.count()
@@ -157,7 +157,7 @@ object Relevance {
     // intermediate (doc, term) aggregation removes one full exchange of
     // the token relation (the (doc, term) partitioning never served the
     // term-keyed join anyway)
-    val scored = CacheRegistry.persistTracked(tok
+    val scored = graft.GraftContext.persistTracked(tok
       .join(nll, Seq("term"))
       .groupBy(col("doc"))
       .agg(sum(col("nll_q")).as("score_q"),
@@ -204,7 +204,7 @@ object Relevance {
     */
   def bigramLmScoreQuantized(train: DataFrame, docs: DataFrame,
                              idCol: String, textCol: String): DataFrame = {
-    val trainTok = CacheRegistry.persistTracked(
+    val trainTok = graft.GraftContext.persistTracked(
       train.select(explode(TextOps.tokens(col(textCol))).as("term")))
     val t = trainTok.count()
     if (t == 0)
@@ -213,7 +213,7 @@ object Relevance {
         lit("middle").as("bucket")).limit(0)
     // unigram table: plain nll (first token), backoff nll (0.4·c/T),
     // and the raw count (the bigram table's denominator)
-    val uni = CacheRegistry.persistTracked(
+    val uni = graft.GraftContext.persistTracked(
       trainTok.groupBy(col("term")).agg(count(lit(1)).as("cnt"))
         .select(col("term"), col("cnt"),
           floor(-log(col("cnt").cast("double") / t) * 1000)
@@ -244,7 +244,7 @@ object Relevance {
         floor(-log(col("cb").cast("double") / col("c1")) * 1000)
           .cast("long").as("nll_bi_q"))
 
-    val evalT = CacheRegistry.persistTracked(
+    val evalT = graft.GraftContext.persistTracked(
       docs.select(col(idCol).as("doc"), TextOps.tokens(col(textCol)).as("toks")))
     val lens = evalT.select(col("doc"), size(col("toks")).cast("long").as("n_tok"))
     val firsts = evalT.select(col("doc"), element_at(col("toks"), 1).as("term"))
@@ -262,7 +262,7 @@ object Relevance {
       .join(uni.select(col("term").as("w2"), col("nll_bo_q")), Seq("w2"), "left")
       .select(col("doc"),
         coalesce(col("nll_bi_q"), col("nll_bo_q"), lit(nllBoOov)).as("contrib"))
-    val scored = CacheRegistry.persistTracked(
+    val scored = graft.GraftContext.persistTracked(
       firsts.unionByName(bigr)
         .groupBy(col("doc")).agg(sum(col("contrib")).as("score_q"))
         .join(lens, Seq("doc"))
@@ -291,7 +291,7 @@ object Relevance {
     // right schema instead. (A non-empty corpus always has avgdl >= 1:
     // the tokenizer yields one empty token for blank text, so dl is
     // never 0.)
-    val lens = CacheRegistry.persistTracked(
+    val lens = graft.GraftContext.persistTracked(
       docs.select(col(idCol).as("doc"),
         size(TextOps.tokens(col(textCol))).as("dl")))
     val stats = lens.agg(count(lit(1)).as("n"), avg(col("dl")).as("a")).head()
@@ -299,7 +299,7 @@ object Relevance {
     if (n == 0)
       return docs.select(col(idCol), lit(0.0).as("bm25")).limit(0)
     val avgdl = stats.getDouble(1)
-    val tf = CacheRegistry.persistTracked(
+    val tf = graft.GraftContext.persistTracked(
       termFreqs(docs, idCol, textCol, terms))
     val idf = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       .withColumn("idf",

@@ -311,7 +311,7 @@ object Similarity {
     // persisted: cell sizes, the pair join's two sides, and the final
     // verdict join all read the assignment — without a cache the
     // assignment map (and its upstream scan) executes once per branch
-    val c = CacheRegistry.persistTracked(cells.select(col("id"), col("cell")))
+    val c = graft.GraftContext.persistTracked(cells.select(col("id"), col("cell")))
     // one row per cell — broadcastable by construction
     val sizes = c.groupBy(col("cell"))
       .agg(count(lit(1)).as("n"))

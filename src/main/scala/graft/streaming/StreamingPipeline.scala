@@ -204,6 +204,7 @@ object StreamingPipeline {
     */
   def sessionAutomaton(ann: Dataset[Annotation], cfg: StreamConfig): Dataset[SessionSummary] = {
     import ann.sparkSession.implicits._
+    val streaming = ann.isStreaming
 
     def fsm(convId: String, rows: Iterator[Annotation],
             state: GroupState[ConvState]): Iterator[SessionSummary] = {
@@ -241,8 +242,18 @@ object StreamingPipeline {
             s.t3 + (if (a.highest_tier == "tier_3") 1 else 0),
             s.t4 + (if (a.highest_tier == "tier_4") 1 else 0))
         }
-        state.update(s)
-        state.setTimeoutTimestamp(s.sessionEnd + cfg.sessionGapMs)
+        // a row that passed the late filter (the previous trigger's
+        // watermark) can still end a session the CURRENT watermark has
+        // already closed: Spark rejects such a timeout, so emit the
+        // summary now — what the timeout would do one trigger later
+        val timeoutMs = s.sessionEnd + cfg.sessionGapMs
+        if (streaming && timeoutMs <= state.getCurrentWatermarkMs()) {
+          closed += summarize(s)
+          state.remove()
+        } else {
+          state.update(s)
+          state.setTimeoutTimestamp(timeoutMs)
+        }
         closed.result()
       }
     }

@@ -616,6 +616,51 @@ class StreamingSpec extends AnyFunSuite {
     assert(sessions == Seq(2, 3), s"expected sessions of 3 and 2 turns, got $sessions")
   }
 
+  test("session automaton closes a session that a late row ends behind the watermark") {
+    import spark.implicits._
+    val t0 = 1700000000000L
+    val hour = 3600 * 1000L
+    def turn(conv: String, idx: Int, offMs: Long): Turn =
+      Turn(conv, idx, "assistant", "ENT0001 AMP", "",
+        new java.sql.Timestamp(t0 + offMs))
+    // one file per trigger. Trigger 3 filters late rows with the
+    // watermark after trigger 1 (t0 - 9 min) but checks timeouts against
+    // the one after trigger 2's pusher (t0 + 7h50): A's row at t0 + 1h
+    // passes the filter and opens a session whose timeout (t0 + 1h30)
+    // the watermark has already passed
+    val triggers = Seq(
+      Seq(turn("A", 0, 0L), turn("A", 1, 60000L)),
+      Seq(turn("B", 0, 8 * hour)),
+      Seq(turn("A", 2, hour)))
+    val srcDir = java.nio.file.Paths.get(tmp("sesslate"))
+    val now = System.currentTimeMillis()
+    triggers.zipWithIndex.foreach { case (rows, i) =>
+      val out = tmp("sesslate_part")
+      rows.toDS().coalesce(1).write.mode("overwrite").parquet(out)
+      val part = new java.io.File(out).listFiles()
+        .find(_.getName.endsWith(".parquet")).get.toPath
+      val f = Files.move(part, srcDir.resolve(s"t$i.parquet"))
+      Files.setLastModifiedTime(f,
+        java.nio.file.attribute.FileTime.fromMillis(now - (3 - i) * 1000L))
+    }
+    val stream = spark.readStream
+      .schema(org.apache.spark.sql.Encoders.product[Turn].schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(srcDir.toString).as[Turn]
+    val q = StreamingPipeline.sessionAutomaton(
+        StreamingPipeline.annotations(stream, bc, cfg), cfg)
+      .writeStream.format("memory").queryName("sess_late_out")
+      .outputMode(OutputMode.Append)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+
+    val sessions = spark.table("sess_late_out")
+      .filter(col("conv_id") === "A")
+      .select("n_turns").collect().map(_.getInt(0)).sorted.toSeq
+    assert(sessions == Seq(1, 2), s"expected sessions of 2 and 1 turns, got $sessions")
+  }
+
   test("exactly-once sink: idempotent partition replace + checkpoint resume") {
     import spark.implicits._
     val turnCfg = Synth.TurnGenConfig(nConvs = 8, turnsPerConv = 5, nGenes = 12)
