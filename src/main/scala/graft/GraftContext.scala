@@ -57,13 +57,18 @@ final class GraftContext private () {
 
   /** Persist `ds` (MEMORY_AND_DISK) as an operator intermediate: the
     * oldest of more than `MaxTracked` is unpersisted (it recomputes if
-    * still referenced — only the cache win is lost).
+    * still referenced — only the cache win is lost). A `ds` that is
+    * already cached (a memo's, or the caller's own) is returned
+    * untracked: its cache belongs to whoever persisted it, and
+    * unpersisting any equal plan would free it.
     */
-  def persistTracked[T](ds: Dataset[T]): Dataset[T] = {
-    val p = ds.persist(StorageLevel.MEMORY_AND_DISK)
-    datasets.add(p)
-    p
-  }
+  def persistTracked[T](ds: Dataset[T]): Dataset[T] =
+    if (ds.storageLevel != StorageLevel.NONE) ds
+    else {
+      val p = ds.persist(StorageLevel.MEMORY_AND_DISK)
+      datasets.add(p)
+      p
+    }
 
   /** Hold the final-round checkpoint RDD of a `connectedComponents`
     * call; it backs the returned DataFrame until evicted or released.

@@ -1438,16 +1438,15 @@ object SparkEntry {
         .orderBy(col("entry"))
     }),
     "q66_match_shuffle" -> ((s, _) => {
-      // FULL-shuffle regime: even the match-string index is too large
-      // to collect (forced via maxIndexRows) — tier matching runs as
-      // the explode + (gene_key, domain, string) equi-join and the
-      // consensus as shuffle joins; must equal q21's broadcast-kernel
-      // output row-for-row, so it shares q21's oracle
+      // shuffle regime (forced over-threshold): tier matching runs as
+      // the explode + (gene_key, domain, string) equi-join, the
+      // consensus counts join per gene; must equal q21's
+      // broadcast-kernel output row-for-row, so it shares q21's oracle
       val turns = sources.Synth.transcripts(s,
         sources.Synth.TurnGenConfig(nConvs = 100, turnsPerConv = 10,
           nGenes = Pipeline.DefaultGenes))
       operators.DimShuffle.annotateAuto(s, turns, defaultFilteredDim(s),
-          Pipeline.defaultCt, maxBroadcastRows = 5, maxIndexRows = 10)
+          Pipeline.defaultCt, maxBroadcastRows = 5)
         .toDF()
         .select(col("conv_id"), col("turn_idx"), col("gene_key"),
           col("data_type"), col("highest_tier"),
@@ -1460,10 +1459,9 @@ object SparkEntry {
         .orderBy(col("conv_id"), col("turn_idx"))
     }),
     "q59_ann_shuffle" -> ((s, _) => {
-      // SHUFFLE-regime consensus: the index is built WITHOUT the
-      // driver-collected count vectors (forced over-threshold) and
-      // ds_tier_* is re-derived by DimShuffle's shuffle joins — must
-      // equal q21's broadcast-kernel output, so it shares q21's oracle
+      // shuffle regime at a second forced threshold: the same
+      // MatchShuffle join path as q66 — must equal q21's
+      // broadcast-kernel output, so it shares q21's oracle
       val turns = sources.Synth.transcripts(s,
         sources.Synth.TurnGenConfig(nConvs = 100, turnsPerConv = 10,
           nGenes = Pipeline.DefaultGenes))

@@ -83,16 +83,9 @@ object DimIndex {
     * schema). `dim` should already be evidence-filtered
     * (EvidenceFilter); ct annotation/selection happens here because the
     * support vectors depend on it.
-    *
-    * `withConsensus = false` skips the consensus-count collect — the
-    * over-broadcast-threshold regime, where `DimShuffle
-    * .consensusAnnotate` re-derives `ds_tier_*` with shuffle joins
-    * instead of driver-collected count vectors (the kernel then emits
-    * empty support lists).
     */
   def build(spark: SparkSession, dim: DataFrame, ctCfg: CtConfig,
-            selectCt: Either[String, Seq[String]] = Left("highest"),
-            withConsensus: Boolean = true): DimIndex = {
+            selectCt: Either[String, Seq[String]] = Left("highest")): DimIndex = {
 
     // variant-level records, ordered by first appearance in the scan
     val variantRows = dim
@@ -107,8 +100,7 @@ object DimIndex {
     // the aggregation feeds both regimes: this is the collected form
     // of DimShuffle.supportTable, so broadcast-vs-shuffle parity
     // (q59/DimShuffleSpec) cannot drift between two copies.
-    val supportRows = if (!withConsensus) Array.empty[org.apache.spark.sql.Row]
-    else DimShuffle.supportTable(dim, ctCfg, selectCt).collect()
+    val supportRows = DimShuffle.supportTable(dim, ctCfg, selectCt).collect()
 
     // (gene, var) -> (drug, ct) -> counts
     val supByVar = mutable.HashMap.empty[(String, String), mutable.HashMap[(String, String), Array[Long]]]

@@ -2,9 +2,10 @@ package graft.operators
 
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.model.Turn
+import scala.collection.mutable
+import graft.functions.Nomenclature
+import graft.model.{Cts, Turn}
 
 /** SHUFFLE-regime tier matching — the non-broadcast counterpart of
   * `MatchKernel` + `DimIndex` for a dimension whose exploded
@@ -18,45 +19,53 @@ import graft.model.Turn
   * Regime economics: the broadcast kernel is map-only on the fact
   * stream — the right default while the dimension is
   * knowledge-base-sized. THIS path shuffles the per-turn key explode
-  * (bounded by keys per turn, not dimension size) and the matched
-  * hits (bounded by matches per turn), so it survives any dimension
-  * size at the cost of fact-side exchanges. `DimShuffle.annotateAuto`
-  * picks the regime; output is row-for-row identical to the
-  * broadcast kernel (MatchShuffleSpec parity pin; the q66 oracle
-  * shares q21's).
+  * (bounded by keys per turn, not dimension size), the matched hits
+  * (bounded by matches per turn) and one gene's records and support
+  * counts per turn (bounded by the largest gene, the bound `GeneDim`
+  * already assumes), so it survives any dimension size at the cost
+  * of fact-side exchanges. `DimShuffle.annotateAuto`
+  * picks it for any dimension over the broadcast threshold; output is
+  * row-for-row identical to the broadcast kernel (MatchShuffleSpec
+  * parity pin; the q59 and q66 oracles share q21's).
   *
   * Drift discipline: the dimension side derives through
   * `DimIndex.variantIndexEntries` and the turn side through
   * `MatchKernel.parse`/`MatchKernel.keyBits` — the SAME functions the
-  * broadcast build and kernel use; only the per-turn tier assembly is
-  * re-expressed sparsely (over matched positions instead of the dense
+  * broadcast build and kernel use; only the per-turn tier and
+  * consensus assembly is re-expressed sparsely (over matched positions instead of the dense
   * per-gene arrays), with parity pinned across every tier path.
   */
 object MatchShuffle {
 
-  /** One matched (variant position, OR-ed tier bits) per turn. */
-  final case class Hit(pos: Int, flags: Int, var_id: String, is_general: Boolean)
-  /** One fallback record of the turn's (gene, data type). */
-  final case class FbEntry(pos: Int, var_id: String)
-  /** A turn joined with its matched hits + fallback candidates. */
+  /** One matched key of a turn: the variant position it hit and the
+    * key's tier bit (a position may be hit by several keys). */
+  final case class Hit(pos: Long, flags: Int, var_id: String, is_general: Boolean)
+  /** One variant record of the turn's gene, for tier-3 fallbacks. */
+  final case class Rec(pos: Long, var_id: String, is_cnv: Boolean, is_expr: Boolean)
+  /** One `DimShuffle.supportTable` row of the turn's gene. */
+  final case class Sup(var_id: String, drug: String, ct: String,
+                       pos: Long, neg: Long, unk_b: Long, unk_d: Long)
+  /** A turn joined with its raw key hits and its gene's records and
+    * support counts (empty records: the gene is absent from the
+    * dimension). */
   final case class TurnHits(
       conv_id: String, turn_idx: Int, role: String, ts: Timestamp,
       gene_key: String, data_type: String,
-      hits: Seq[Hit], fb: Seq[FbEntry], gene_exists: Boolean)
+      hits: Seq[Hit], recs: Seq[Rec], sup: Seq[Sup])
 
   // encoder-visible (Catalyst's generated [de]serializers cannot
   // access private classes), internal to the operator in spirit
   final case class VariantRaw(
       gene_key: String, var_id: String, var_name: String,
-      hgvs: Seq[String], pos: Int)
+      hgvs: Seq[String], pos: Long)
 
   /** Variant record with its derived index entries — the regex-heavy
     * `variantIndexEntries` derivation runs ONCE per variant into the
-    * persisted relation; the string explode and the flag/fallback
-    * tables below are cheap re-reads of the stored arrays.
+    * persisted relation; the string explode and the per-gene record
+    * lists below are cheap re-reads of the stored arrays.
     */
   final case class VariantMeta(
-      gene_key: String, var_id: String, var_name: String, pos: Int,
+      gene_key: String, var_id: String, var_name: String, pos: Long,
       snv_strings: Seq[String], expr_strings: Seq[String],
       is_general: Boolean, is_cnv: Boolean, is_expr: Boolean,
       is_exon_cnv: Boolean)
@@ -66,9 +75,7 @@ object MatchShuffle {
       gene_key: String, data_type: String,
       keys: Seq[(String, String, Int)])
 
-  /** Tier annotation via distributed joins; `ds_tier_*` re-derived by
-    * `DimShuffle.consensusAnnotate` (the same shuffle consensus the
-    * over-broadcast-threshold regime already uses).
+  /** Tier annotation and consensus via distributed joins.
     *
     * PRECONDITION: `turns` must be unique per (conv_id, turn_idx) —
     * the transcript table's primary key (it is what the exactly-once
@@ -81,31 +88,20 @@ object MatchShuffle {
   def annotate(spark: SparkSession, turns: Dataset[Turn], dim: DataFrame,
                ctCfg: CtConfig,
                selectCt: Either[String, Seq[String]] = Left("highest")): Dataset[Annotation] = {
-    val dimP = graft.GraftContext.persistTracked(dim)
-    DimShuffle.consensusAnnotate(
-      annotateNoConsensus(spark, turns, dimP),
-      DimShuffle.supportTable(dimP, ctCfg, selectCt))
-  }
-
-  /** The tier half (empty support lists) — exposed for parity tests. */
-  private[operators] def annotateNoConsensus(
-      spark: SparkSession, turns: Dataset[Turn], dim: DataFrame): Dataset[Annotation] = {
     import spark.implicits._
+    // read twice: the variant records and the support counts
+    val dimP = graft.GraftContext.persistTracked(dim)
 
-    // 1. variant-level records with per-gene scan-order positions —
-    //    the same (first var_name/hgvs, min dim_order) derivation
-    //    DimIndex.build collects, kept distributed. The window is
-    //    per-gene: per-key cardinality is one gene's variant count
-    //    (the same boundedness GeneDim assumes), never the dimension.
-    val wGene = Window.partitionBy(col("gene_key")).orderBy(col("var_order"))
-    val varMeta = graft.GraftContext.persistTracked(dim
+    // 1. variant-level records — the same (first var_name/hgvs,
+    //    min dim_order) derivation DimIndex.build collects, kept
+    //    distributed. A variant's position is its min dim_order:
+    //    dim_order is unique per dimension row, so positions are
+    //    unique per variant and sort in the kernel's scan order.
+    val varMeta = graft.GraftContext.persistTracked(dimP
       .groupBy(col("gene_key"), col("var_id"))
       .agg(upper(first(col("var_name"))).as("var_name"),
         first(col("hgvs")).as("hgvs"),
-        min(col("dim_order")).as("var_order"))
-      .withColumn("pos", (row_number().over(wGene) - 1).cast("int"))
-      .select(col("gene_key"), col("var_id"), col("var_name"),
-        col("hgvs"), col("pos"))
+        min(col("dim_order")).as("pos"))
       .as[VariantRaw]
       .map { v =>
         val e = DimIndex.variantIndexEntries(v.var_name, v.hgvs)
@@ -115,71 +111,59 @@ object MatchShuffle {
       })
 
     // 2. dimension-side index entries, exploded to joinable rows —
-    //    the same variantIndexEntries the broadcast build consumes
+    //    the same variantIndexEntries the broadcast build consumes;
+    //    each entry carries what the assembly needs of its variant
     val dimEntries = varMeta.flatMap { v =>
-      v.snv_strings.map(s => (v.gene_key, "SNV", s, v.pos)) ++
-        Seq((v.gene_key, "CNV", v.var_name, v.pos)) ++
-        v.expr_strings.map(s => (v.gene_key, "EXPR", s, v.pos)) ++
-        (if (v.is_exon_cnv) Seq((v.gene_key, "CNV_EXON", "DELETION", v.pos)) else Nil)
-    }.toDF("gene_key", "domain", "s", "pos")
+      def e(domain: String, s: String) = (v.gene_key, domain, s, v.pos, v.var_id, v.is_general)
+      v.snv_strings.map(e("SNV", _)) ++ Seq(e("CNV", v.var_name)) ++
+        v.expr_strings.map(e("EXPR", _)) ++
+        (if (v.is_exon_cnv) Seq(e("CNV_EXON", "DELETION")) else Nil)
+    }.toDF("gene_key", "domain", "s", "pos", "var_id", "is_general")
 
-    // per-variant flags / per-(gene, domain) fallback lists
-    val varFlags = varMeta.toDF()
-      .select(col("gene_key"), col("pos"), col("var_id"), col("is_general"),
-        col("is_cnv").as("_is_cnv"), col("is_expr").as("_is_expr"))
-    val fallback = varFlags.select(col("gene_key"), col("pos"), col("var_id"),
-        explode(concat(
-          when(!col("_is_cnv") && !col("_is_expr"), array(lit("SNV")))
-            .otherwise(array().cast("array<string>")),
-          when(col("_is_cnv"), array(lit("CNV")))
-            .otherwise(array().cast("array<string>")),
-          when(col("_is_expr"), array(lit("EXPR")))
-            .otherwise(array().cast("array<string>")))).as("data_type"))
-      .groupBy(col("gene_key"), col("data_type"))
-      .agg(sort_array(collect_list(struct(col("pos"), col("var_id")))).as("fb"))
-    val genes = varMeta.toDF().select(col("gene_key")).distinct()
-      .withColumn("gene_exists", lit(true))
+    // per-gene scan-ordered record list (gene existence and every data
+    // type's tier-3 fallback) beside the gene's consensus counts — the
+    // distributed GeneDim: both sides are hash-partitioned on the gene,
+    // so the join adds no exchange
+    val sup = DimShuffle.supportTable(dimP, ctCfg, selectCt)
+      .groupBy(col("gene_key"))
+      .agg(collect_list(struct(col("var_id"), col("drug"), col("ct"),
+        col("pos"), col("neg"), col("unk_b"), col("unk_d"))).as("sup"))
+    val recs = varMeta.toDF()
+      .groupBy(col("gene_key"))
+      .agg(sort_array(collect_list(struct(col("pos"), col("var_id"),
+        col("is_cnv"), col("is_expr")))).as("recs"))
+      .join(sup, Seq("gene_key"), "left")
 
-    // 3. turn side: ONE parse per turn feeds both the key explode and
-    //    the final assembly (persisted — the relation is consumed
-    //    twice and Spark has no cross-branch subtree reuse)
-    val parsed = graft.GraftContext.persistTracked(turns.map { t =>
-      val p = MatchKernel.parse(t)
-      ParsedTurn(t.conv_id, t.turn_idx, t.role, t.ts, p.geneKey, p.dataType,
-        MatchKernel.keyBits(p).distinct)
-    })
-    val turnKeys = parsed.flatMap(p =>
-        p.keys.map(k => (p.conv_id, p.turn_idx, p.gene_key, k._1, k._2, k._3)))
-      .toDF("conv_id", "turn_idx", "gene_key", "domain", "s", "bit")
+    // 3. turn side: one parse per turn, its keys exploded (outer: a
+    //    turn without keys still yields its row)
+    val turnKeys = turns.map { t =>
+        val p = MatchKernel.parse(t)
+        ParsedTurn(t.conv_id, t.turn_idx, t.role, t.ts, p.geneKey, p.dataType,
+          MatchKernel.keyBits(p).distinct)
+      }.toDF()
+      .select(col("conv_id"), col("turn_idx"), col("role"), col("ts"),
+        col("gene_key"), col("data_type"), inline_outer(col("keys")))
+      .toDF("conv_id", "turn_idx", "role", "ts", "gene_key", "data_type",
+        "domain", "s", "bit")
 
-    // 4. THE match join: equi-join on (gene_key, domain, match string),
-    //    then OR the tier bits per matched variant position — the
-    //    reference's nested loop as one shuffle hash join
+    // 4. THE match join: equi-join on (gene_key, domain, match string)
+    //    — the reference's nested loop as one shuffle hash join — and
+    //    one per-turn list of the raw key hits (bounded by keys per
+    //    turn); every turn appears exactly once
     val matched = turnKeys
-      .join(dimEntries, Seq("gene_key", "domain", "s"))
-      .groupBy(col("conv_id"), col("turn_idx"), col("gene_key"), col("pos"))
-      .agg(bit_or(col("bit")).cast("int").as("flags"))
-      .join(varFlags.select(col("gene_key"), col("pos"), col("var_id"),
-        col("is_general")), Seq("gene_key", "pos"))
-      .groupBy(col("conv_id"), col("turn_idx"))
-      .agg(sort_array(collect_list(struct(col("pos"), col("flags"),
-        col("var_id"), col("is_general")))).as("hits"))
-
-    // 5. assembly: every turn appears exactly once (left joins); hits
-    //    bounded by matches per turn, fb by the gene's record count
-    parsed.toDF()
-      .select(col("conv_id"), col("turn_idx"), col("role"), col("ts"),
+      .join(dimEntries, Seq("gene_key", "domain", "s"), "left")
+      .groupBy(col("conv_id"), col("turn_idx"), col("role"), col("ts"),
         col("gene_key"), col("data_type"))
-      .join(matched, Seq("conv_id", "turn_idx"), "left")
-      .join(fallback, Seq("gene_key", "data_type"), "left")
-      .join(genes, Seq("gene_key"), "left")
-      .select(col("conv_id"), col("turn_idx"), col("role"), col("ts"),
-        col("gene_key"), col("data_type"),
-        coalesce(col("hits"), array().cast(
-          "array<struct<pos:int,flags:int,var_id:string,is_general:boolean>>")).as("hits"),
-        coalesce(col("fb"), array().cast(
-          "array<struct<pos:int,var_id:string>>")).as("fb"),
-        coalesce(col("gene_exists"), lit(false)).as("gene_exists"))
+      .agg(collect_list(when(col("pos").isNotNull, struct(col("pos"),
+        col("bit").as("flags"), col("var_id"), col("is_general")))).as("hits"))
+
+    // 5. assembly: recs and sup bounded by one gene's records
+    matched
+      .join(recs, Seq("gene_key"), "left")
+      .withColumn("recs", coalesce(col("recs"), array().cast(
+        "array<struct<pos:bigint,var_id:string,is_cnv:boolean,is_expr:boolean>>")))
+      .withColumn("sup", coalesce(col("sup"), array().cast(
+        "array<struct<var_id:string,drug:string,ct:string,pos:bigint,neg:bigint,unk_b:bigint,unk_d:bigint>>")))
       .as[TurnHits]
       .map(assemble)
   }
@@ -187,18 +171,22 @@ object MatchShuffle {
   /** Sparse tier assembly over matched positions — semantics
     * identical to the dense kernel (general-variant promotion,
     * tier-3 fallback, sentinels, tier_4 on gene miss); parity pinned
-    * across every path in MatchShuffleSpec. Support lists are empty
-    * here (the shuffle consensus fills them).
+    * across every path in MatchShuffleSpec. Support lists sum the
+    * listed variants' counts per (drug, ct) — the reference's vote is
+    * additive (match.py:1459-1493) — in the kernel's canonical
+    * (drug, ct rank) order.
     */
   private[operators] def assemble(th: TurnHits): Annotation = {
-    if (!th.gene_exists)
+    if (th.recs.isEmpty)
       return Annotation(th.conv_id, th.turn_idx, th.role, th.ts,
         th.gene_key, th.data_type, Nil, Nil, Nil, Nil,
         tier_4 = true, "tier_4", Nil, Nil, Nil, Nil)
-    // hits arrive pos-ascending (sort_array); promotion: the first
-    // scan-order general positional match keeps bit 4, all other
-    // positions lose it (match.py:644-652)
-    var hits = th.hits
+    // one hit per matched position, bits OR-ed, in scan order;
+    // promotion: the first scan-order general positional match keeps
+    // bit 4, all other positions lose it (match.py:644-652)
+    var hits = th.hits.groupBy(_.pos).toSeq.sortBy(_._1).map { case (_, hs) =>
+      hs.head.copy(flags = hs.map(_.flags).reduce(_ | _))
+    }
     if (th.data_type == "SNV") {
       hits.find(h => (h.flags & 4) != 0 && h.is_general).foreach { fg =>
         hits = hits.map(h =>
@@ -208,15 +196,33 @@ object MatchShuffle {
     val t1 = hits.filter(h => (h.flags & 1) != 0).map(_.var_id)
     val t1b = hits.filter(h => (h.flags & 2) != 0).map(_.var_id)
     val t2 = hits.filter(h => (h.flags & 4) != 0).map(_.var_id)
-    val t3: Seq[String] =
-      if (t1.nonEmpty || t1b.nonEmpty || t2.nonEmpty) Nil
-      else if (th.fb.nonEmpty) th.fb.map(_.var_id)
-      else List(s"NON_${th.data_type}_MATCH_ONLY")
+    val anyMatch = t1.nonEmpty || t1b.nonEmpty || t2.nonEmpty
+    // tier-3 fallback: the gene's records of the turn's data type
+    // (record-kind split as DimIndex.build's *Fallback arrays)
+    val fb: Seq[String] = if (anyMatch) Nil else th.recs.filter(r => th.data_type match {
+      case "SNV" => !r.is_cnv && !r.is_expr
+      case "CNV" => r.is_cnv
+      case _ => r.is_expr
+    }).map(_.var_id)
+    val t3 = if (!anyMatch && fb.isEmpty) List(s"NON_${th.data_type}_MATCH_ONLY") else fb
     val highest =
       if (t1.nonEmpty) "tier_1" else if (t1b.nonEmpty) "tier_1b"
       else if (t2.nonEmpty) "tier_2" else "tier_3"
+
+    val supByVar = th.sup.groupBy(_.var_id)
+    def support(ids: Seq[String]): Seq[String] = {
+      val acc = mutable.HashMap.empty[(String, String), Array[Long]]
+      for (id <- ids; s <- supByVar.getOrElse(id, Nil)) {
+        val a = acc.getOrElseUpdate((s.drug, s.ct), new Array[Long](4))
+        a(0) += s.pos; a(1) += s.neg; a(2) += s.unk_b; a(3) += s.unk_d
+      }
+      acc.toSeq.filter(_._2.sum > 0)
+        .sortBy { case ((d, ct), _) => (d, Cts.rank(ct), ct) }
+        .map { case ((d, ct), a) =>
+          s"$d:${ct.toUpperCase}:${Nomenclature.consensus(a(0), a(1), a(2), a(3))}" }
+    }
     Annotation(th.conv_id, th.turn_idx, th.role, th.ts,
       th.gene_key, th.data_type, t1, t1b, t2, t3,
-      tier_4 = false, highest, Nil, Nil, Nil, Nil)
+      tier_4 = false, highest, support(t1), support(t1b), support(t2), support(fb))
   }
 }

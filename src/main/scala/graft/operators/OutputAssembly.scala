@@ -344,7 +344,7 @@ object OutputAssembly {
                           writeCt: Boolean = false,
                           writeComplete: Boolean = false,
                           writeSupport: Boolean = true,
-                          maxBroadcastRows: Long = 500000): DataFrame = {
+                          maxBroadcastRows: Long = DimShuffle.MaxBroadcastRows): DataFrame = {
     val over = DimShuffle.overBroadcastThreshold(dim, maxBroadcastRows)
     if (over)
       writeMatchTableShuffle(ann,

@@ -311,7 +311,7 @@ object Reports {
   def drugTargetsAuto(spark: SparkSession, ann: Dataset[Annotation],
                       dim: DataFrame, ctCfg: CtConfig,
                       selectCt: Either[String, Seq[String]] = Left("highest"),
-                      maxBroadcastRows: Long = 500000): DataFrame = {
+                      maxBroadcastRows: Long = DimShuffle.MaxBroadcastRows): DataFrame = {
     val pred = predEntriesTable(dim, ctCfg, selectCt)
     if (!DimShuffle.overBroadcastThreshold(dim, maxBroadcastRows)) {
       val predMap = pred.collect()

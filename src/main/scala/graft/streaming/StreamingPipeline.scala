@@ -155,18 +155,12 @@ object StreamingPipeline {
 
   /** (b) Watermark-bounded windowed hash-aggregate: per-window
     * match-tier counts (north rule; reference analog: the per-batch
-    * tier counters, Query_CIViCutils.py:449-459).
+    * tier counters, Query_CIViCutils.py:449-459). Tumbling: the
+    * sliding form with slide = window, which is Spark's own
+    * `window(ts, w)`.
     */
   def tierRollup(ann: Dataset[Annotation], cfg: StreamConfig): DataFrame =
-    ann.toDF()
-      // the ingest watermark on `ts` propagates through the typed map;
-      // redefining it here is disallowed since Spark 3.5
-      .groupBy(window(col("ts"), cfg.tierWindow),
-        col("data_type"), col("highest_tier"))
-      .agg(count(lit(1)).as("n_turns"))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"),
-        col("data_type"), col("highest_tier"), col("n_turns"))
+    tierRollupSliding(ann, cfg, cfg.tierWindow)
 
   /** (b') Sliding-window variant of the rollup (north star: tumbling
     * AND sliding windows): each turn contributes to window/slide
@@ -175,6 +169,8 @@ object StreamingPipeline {
   def tierRollupSliding(ann: Dataset[Annotation], cfg: StreamConfig,
                         slide: String): DataFrame =
     ann.toDF()
+      // the ingest watermark on `ts` propagates through the typed map;
+      // redefining it here is disallowed since Spark 3.5
       .groupBy(window(col("ts"), cfg.tierWindow, slide),
         col("data_type"), col("highest_tier"))
       .agg(count(lit(1)).as("n_turns"))

@@ -6,8 +6,9 @@ import graft.operators._
 import graft.sources.Synth
 
 /** Broadcast-vs-shuffle regime parity: the over-threshold dimension
-  * paths (shuffle-derived consensus `ds_tier_*`, shuffle-joined output
-  * renders) must reproduce the broadcast kernel's output row-for-row.
+  * paths (`annotateAuto`'s `MatchShuffle` route with shuffle-derived
+  * consensus `ds_tier_*`, shuffle-joined output renders and drug
+  * targets) must reproduce the broadcast kernel's output row-for-row.
   * The dimension here is over-threshold by FORCING a tiny
   * `maxBroadcastRows` — the split logic, not the absolute size, is
   * what's under test.

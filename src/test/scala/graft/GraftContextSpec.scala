@@ -87,4 +87,15 @@ class GraftContextSpec extends AnyFunSuite {
     assert(builds.get == 2, "release must drop the memo")
     assert(!sc.isStopped)
   }
+
+  test("persistTracked leaves a cache it does not own alone") {
+    val owned = persistedRange(4000L)
+    // an equal plan, as an operator would receive a memoized relation
+    val passed = GraftContext.persistTracked(spark.range(4000L).toDF("id"))
+    passed.count()
+    GraftContext(spark).unpersistTracked()
+    assert(owned.storageLevel == StorageLevel.MEMORY_AND_DISK,
+      "unpersistTracked freed the owner's cache")
+    owned.unpersist(true)
+  }
 }

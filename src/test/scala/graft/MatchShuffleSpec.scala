@@ -61,7 +61,7 @@ class MatchShuffleSpec extends AnyFunSuite {
       DimIndex.build(spark, dim, Pipeline.defaultCt))
     val want = byKey(MatchKernel.annotate(turns, bcIdx).collect())
     val got = byKey(DimShuffle.annotateAuto(spark, turns, dim,
-        Pipeline.defaultCt, maxBroadcastRows = 5, maxIndexRows = 10)
+        Pipeline.defaultCt, maxBroadcastRows = 5)
       .collect())
     assert(got == want)
   }
