@@ -39,8 +39,8 @@ final class GraftContext private () {
     java.util.Collections.newSetFromMap(
       new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
 
-  /** Hot shingles dropped by the most recent capped near-dup run
-    * (-1 until one completes); see `NearDup.lastCapDropped`.
+  /** Blocks dropped by the most recent capped near-dup run (-1 until
+    * one completes); see `NearDup.lastCapDropped`.
     */
   @volatile var capDropped: Long = -1L
   /** Rounds the most recent `connectedComponents` call took. */

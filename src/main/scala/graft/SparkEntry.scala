@@ -141,9 +141,9 @@ object SparkEntry {
   // queries (q36 pairs, q37 greedy dedup, q40 connected components) —
   // exactly how a real pipeline works: pairs are computed once and the
   // dedup decisions fan out from them. Memoize + persist per
-  // (context, sfDir) so the posting self-join runs once per session,
-  // not once per consumer. Deterministic (pure hash math), so oracle
-  // agreement is unaffected.
+  // (context, sfDir) so the posting-list pair derivation runs once per
+  // session, not once per consumer. Deterministic (pure hash math), so
+  // oracle agreement is unaffected.
   def jaccardPairs(s: SparkSession, dir: String): DataFrame =
     GraftContext(s).memo(("jaccardPairs", dir)) {
       operators.NearDup.jaccardNearDups(
@@ -566,9 +566,9 @@ object SparkEntry {
         Pipeline.run(s).as[operators.Annotation], pred, names)
     }),
     "q36_jaccard_exact" -> ((s, dir) => {
-      // EXACT n-gram Jaccard near-dup (inverted shingle join, no
+      // EXACT n-gram Jaccard near-dup (inverted shingle index, no
       // hashing approximation) — the exact counterpart of q14. The
-      // explicit stop-shingle cap bounds the posting self-join at
+      // explicit stop-shingle cap bounds each posting list's pairs at
       // O(maxDocFreq²) per shingle; at the tested scales no shingle's
       // doc-frequency reaches it, so the uncapped DuckDB oracle must
       // agree bit-for-bit (cap-vs-uncapped recall pinned in DataOpsSpec)

@@ -4,12 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Near-duplicate detection at corpus scale: MinHash+LSH banding,
-  * SimHash hamming banding, and exact n-gram Jaccard verification.
+  * SimHash hamming banding, embedding-hyperplane LSH and exact n-gram
+  * Jaccard verification.
   *
-  * Scale shape: signatures are map-only; the ONLY shuffle is on LSH
-  * band buckets (tiny keys), and the candidate self-join runs on the
-  * bucket-grouped id lists — never an all-pairs cross join. This is the
-  * standard shingle -> minhash -> band -> bucket-join pipeline.
+  * Every path is blocking: documents are grouped into blocks (shingle
+  * postings, LSH bands, simhash chunks, hyperplane tables) and
+  * candidate pairs come only from within a block. Oversized blocks are
+  * dropped by one counted cap (`capBlocks`), and pairs explode from the
+  * capped member lists (`blockPairs`) — never a block self-join, never
+  * an all-pairs cross join. Signatures are map-only; the block key
+  * shuffle is the only one before pair derivation.
   */
 object NearDup {
 
@@ -28,11 +32,13 @@ object NearDup {
     */
   def unpersistAll(): Unit = graft.GraftContext.current.foreach(_.unpersistTracked())
 
-  /** Hot shingles dropped by the most recent CAPPED `jaccardNearDups`
-    * run in the current session's context (-1 until a capped run
-    * completes). Diagnostic: lets tests and operators confirm whether
-    * a run was actually capped (the cap is silent in the result
-    * otherwise). Updated asynchronously by the query-execution
+  /** Blocks dropped by the most recent capped near-dup run in the
+    * current session's context (-1 until a capped run completes): hot
+    * shingles of a `jaccardNearDups`/`jaccardNearDupsAgainst` df cap,
+    * or oversized buckets of a minhash, simhash or embedding
+    * `maxBucket` cap. Diagnostic: lets tests and operators confirm
+    * whether a run was actually capped (the cap is silent in the
+    * result otherwise). Updated asynchronously by the query-execution
     * listener after the materializing action finishes; concurrent
     * capped queries race on it (last completion wins) — it exists for
     * logs and tests, not for program logic.
@@ -46,13 +52,13 @@ object NearDup {
   // throw AnalysisException (duplicate observation name), so every
   // capped call mints its own suffixed name and the listener matches
   // on the prefix
-  private val CapMetricPrefix = "graft_jaccard_cap"
+  private val CapMetricPrefix = "graft_block_cap"
   private val capMetricCounter = new java.util.concurrent.atomic.AtomicLong(0)
   private def nextCapMetricName(): String =
     s"${CapMetricPrefix}_${capMetricCounter.incrementAndGet()}"
 
   /** Register (once per session) the listener that surfaces the
-    * observed cap metric: a capped run that actually dropped shingles
+    * observed cap metric: a capped run that actually dropped blocks
     * logs loudly instead of silently diverging from an uncapped
     * oracle.
     */
@@ -73,9 +79,9 @@ object NearDup {
               graft.GraftContext(qe.sparkSession).capDropped = rows.map(_.getLong(0)).sum
               for (row <- rows if row.getLong(0) > 0)
                 org.apache.log4j.Logger.getLogger(NearDup.getClass).warn(
-                  s"jaccardNearDups cap DROPPED ${row.getLong(0)} hot shingle(s) " +
-                    s"(of ${row.getLong(1)} distinct): result is exact " +
-                    "Jaccard over the retained vocabulary, not the full one")
+                  s"near-dup block cap DROPPED ${row.getLong(0)} block(s) " +
+                    s"(of ${row.getLong(1)} distinct): pairs are derived " +
+                    "within the retained blocks only")
             }
           }
           override def onFailure(funcName: String,
@@ -83,6 +89,31 @@ object NearDup {
               exception: Exception): Unit = ()
         })
     }
+
+  /** The members (`doc` + the block key columns) of the blocks holding
+    * between `minBlock` and `maxBlock` members — the one block cap of
+    * the near-dup family. Block sizes are partial-aggregated counts (a
+    * hot block never materializes its members) joined back on the key,
+    * so AQE co-plans the two exchanges and a following `blockPairs`
+    * groups without another. The count aggregation doubles as the cap
+    * OBSERVATION: blocks over `maxBlock` are counted and surfaced by
+    * the listener (`lastCapDropped`) once the materializing action
+    * completes — a silent cap would be indistinguishable from an exact
+    * run. Blocks under `minBlock` are filtered as well but not counted
+    * as dropped (the LSH paths pass 2: a singleton bucket has no pair).
+    */
+  private def capBlocks(members: DataFrame, keys: Seq[String], maxBlock: Int,
+                        minBlock: Int = 1): DataFrame = {
+    ensureCapListener(members.sparkSession)
+    val sizes = members.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_n"))
+      .observe(nextCapMetricName(),
+        count(when(col("_n") > maxBlock, lit(1))).as("dropped_blocks"),
+        count(lit(1)).as("distinct_blocks"))
+    members.join(
+      sizes.filter(col("_n") <= maxBlock && col("_n") >= minBlock)
+        .select(keys.map(col): _*),
+      keys)
+  }
 
   /** k minhash values over a shingle array, computed in ONE pass by the
     * native MinHashSigExpression (graft.plans.TextExpressions) — the
@@ -105,19 +136,20 @@ object NearDup {
         xxhash64(slice(sigCol, b * rows + 1, rows)).as("bucket"))
     }: _*)
 
-  /** Ordered candidate pairs (doc_a < doc_b) from a capped bucket
-    * relation (`doc` + the bucket key columns): members are grouped
-    * per bucket — the list is bounded because the input is already
-    * cap-filtered — and pairs explode from the list. Reuses the
-    * upstream cap-join's hash partitioning (groupBy on the join key
-    * needs no new exchange), so candidate generation adds ZERO
-    * exchanges where the bucket self-join formulation re-shuffled and
-    * sorted the bucket relation twice. Emits each unordered pair once
-    * per bucket (members are distinct within a bucket on every caller's
-    * path); callers dedup across buckets.
+  /** Ordered candidate pairs (doc_a < doc_b) from a block relation
+    * (`doc` + the block key columns) — the one pair form of the
+    * single-corpus near-dup paths: members are grouped per block and
+    * pairs explode from the list. A list is bounded where the caller
+    * caps its blocks first (`capBlocks`, or SemDeDup's flagged cell
+    * cap); after `capBlocks` the grouping reuses the cap join's hash
+    * partitioning and adds no exchange. A hot block's pairs land in one
+    * task, as they would under a block self-join, which hash-partitions
+    * on the same key. Emits each unordered pair once per shared block
+    * (the multiset a block self-join with `a < b` emits); callers dedup
+    * or count across blocks.
     */
-  private def bucketPairs(capped: DataFrame, keyCols: Seq[String]): DataFrame =
-    capped.groupBy(keyCols.map(col): _*)
+  private[graft] def blockPairs(members: DataFrame, keys: Seq[String]): DataFrame =
+    members.groupBy(keys.map(col): _*)
       .agg(collect_list(col("doc")).as("_ds"))
       .select(explode(col("_ds")).as("doc_a"), col("_ds"))
       .select(col("doc_a"),
@@ -130,9 +162,10 @@ object NearDup {
     * The shingle relation is consumed three times (band side + both
     * verify sides): it is persisted so signatures are computed in ONE
     * pass over the corpus. Buckets larger than `maxBucket` are dropped
-    * before the self-join — a degenerate bucket (boilerplate band key
-    * shared by 10^6 docs) would otherwise explode quadratically; pairs
-    * lost to a capped bucket are still found via their other bands.
+    * (and counted, see `lastCapDropped`) before pair derivation — a
+    * degenerate bucket (boilerplate band key shared by 10^6 docs) would
+    * otherwise explode quadratically; pairs lost to a capped bucket are
+    * still found via their other bands.
     */
   def minhashNearDups(docs: DataFrame, idCol: String, textCol: String,
                       nShingle: Int = 3, k: Int = 64,
@@ -158,20 +191,8 @@ object NearDup {
     val banded = withSh
       .select(col("doc"), explode(bandKeys(col("sig"), bands, rows)).as("bk"))
       .select(col("doc"), col("bk.band"), col("bk.bucket"))
-    // partial-aggregated counts (never materializes a bucket's members);
-    // the join back is on the same key, so AQE co-plans the exchanges
-    val okBuckets = banded.groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("_n"))
-      .filter(col("_n") <= maxBucket && col("_n") > 1)
-      .select(col("band"), col("bucket"))
-    // bucket members grouped AFTER the cap join (list size bounded by
-    // maxBucket), reusing the join's hash partitioning — then ordered
-    // pairs explode from each list. This replaces the bucket SELF-JOIN
-    // (two more exchanges + sorts of the banded relation) with zero
-    // additional exchanges; the pair multiset is identical.
-    val cand = bucketPairs(
-      banded.join(okBuckets, Seq("band", "bucket")),
-      Seq("band", "bucket"))
+    val keys = Seq("band", "bucket")
+    val cand = blockPairs(capBlocks(banded, keys, maxBucket, minBlock = 2), keys)
       .dropDuplicates("doc_a", "doc_b")
     // exact verification: re-attach shingles only for candidates
     val shA = withSh.select(col("doc").as("doc_a"), col("sh").as("sh_a"))
@@ -184,15 +205,16 @@ object NearDup {
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
-  /** EXACT n-gram Jaccard near-duplicates via an inverted shingle
-    * join — no hashing approximation anywhere: explode (doc, shingle),
-    * self-join on the shingle, count shared shingles per pair, then
-    * |A∩B| / (|A|+|B|-|A∩B|). The self-join is on shingle keys (the
-    * inverted-index shape), never an all-pairs cross join; `maxDocFreq`
-    * drops shingles appearing in more than that many docs before the
-    * join — the standard stop-shingle cap against quadratic hot keys
-    * (the posting self-join is O(df²) per shingle, so ONE boilerplate
-    * trigram shared by 10^6 docs would otherwise cost 10^12 join rows).
+  /** EXACT n-gram Jaccard near-duplicates over an inverted shingle
+    * index — no hashing approximation anywhere: explode (doc, shingle),
+    * pair the members of each shingle's posting list (`blockPairs`),
+    * count shared shingles per pair, then |A∩B| / (|A|+|B|-|A∩B|).
+    * Pairs come from posting lists (the inverted-index shape), never an
+    * all-pairs cross join; `maxDocFreq` drops shingles appearing in
+    * more than that many docs first — the standard stop-shingle cap
+    * against quadratic hot keys (a posting list yields O(df²) pairs,
+    * so ONE boilerplate trigram shared by 10^6 docs would otherwise
+    * cost 10^12 pair rows).
     *
     * Cap semantics: per-doc sizes are counted over the SAME capped
     * posting list as the intersections, so the ratio is the exact
@@ -204,6 +226,8 @@ object NearDup {
     * fires at test scale; passing 0 disables the cap for a
     * full-vocabulary exact run, which goes quadratic on hot shingles —
     * it logs loudly because that regime must be a deliberate choice.
+    * A non-empty `stopShingles` set (e.g. from `hotShinglesSketch`)
+    * replaces the doc-frequency cap.
     *
     * This is the exact counterpart of `minhashNearDups`: same output
     * contract, O(sum of postings²) per shingle instead of O(corpus)
@@ -215,98 +239,62 @@ object NearDup {
                       nShingle: Int = 3, threshold: Double = 0.5,
                       maxDocFreq: Int = 10000,
                       stopShingles: Set[Long] = Set.empty): DataFrame = {
-    if (maxDocFreq <= 0 && stopShingles.isEmpty)
-      org.apache.log4j.Logger.getLogger(getClass)
-        .warn("jaccardNearDups running UNCAPPED (maxDocFreq<=0): the " +
-          "posting self-join is O(df^2) per shingle and goes quadratic " +
-          "on hot shingles — bounded runs should pass maxDocFreq > 0")
     val posting = docs
       .select(col(idCol).as("doc"),
         explode(TextOps.shingles(col(textCol), nShingle)).as("s"))
-    // capping paths, cheapest first: an explicit stop-shingle set
-    // (e.g. from hotShinglesSketch — zero-shuffle derivation) applies
-    // as a broadcast anti-join; otherwise the exact doc-frequency
-    // count-filter-join (one extra aggregation over the postings).
-    // The posting LISTS are only ever collected AFTER the cap (list
-    // length bounded by maxDocFreq — no hot shingle ever materializes
-    // its members), reusing the cap join's hash partitioning, so the
-    // grouped form costs no extra exchange over the capped postings.
-    val capped =
-      if (stopShingles.nonEmpty) {
-        import docs.sparkSession.implicits._
-        posting.join(
-          broadcast(stopShingles.toSeq.toDF("s")), Seq("s"), "left_anti")
-      } else if (maxDocFreq <= 0) posting
-      else {
-        // the df-count aggregation doubles as the cap OBSERVATION:
-        // a capped run that actually drops shingles is logged (and
-        // surfaced via lastCapDropped) by the listener when the
-        // materializing action completes — a silent cap would be
-        // indistinguishable from an exact full-vocabulary run
-        ensureCapListener(docs.sparkSession)
-        val dfCounts = posting.groupBy(col("s")).agg(count(lit(1)).as("_df"))
-          .observe(nextCapMetricName(),
-            sum(when(col("_df") > maxDocFreq, lit(1L)).otherwise(lit(0L)))
-              .as("dropped_shingles"),
-            count(lit(1)).as("distinct_shingles"))
-        posting.join(
-          dfCounts.filter(col("_df") <= maxDocFreq).select(col("s")), Seq("s"))
-      }
-    // grouped-list pair derivation ONLY under the exact df cap (the
-    // list per row is then bounded by maxDocFreq): the uncapped and
-    // stop-shingle paths have no such guarantee — a hot shingle there
-    // would concentrate its whole posting list (and its in-list pair
-    // explode) into ONE row/task, where the self-join form is equally
-    // quadratic but at least distributes the pair rows across tasks
-    val (sizes, inter) =
-      if (maxDocFreq > 0 && stopShingles.isEmpty) {
-        // ONE persisted relation of retained (shingle -> member list)
-        // rows: sizes and the pair counts both read it; it is
-        // vocabulary-bounded in rows and cap-bounded per row —
-        // strictly smaller than the exploded postings the self-join
-        // formulation persisted
-        val lists = persistTracked(capped.groupBy(col("s"))
-          .agg(collect_list(col("doc")).as("_ds")))
-        // sizes over the capped postings: the ratio is then the exact
-        // jaccard of the retained-vocabulary shingle sets
-        val szs = lists.select(explode(col("_ds")).as("doc"))
-          .groupBy(col("doc")).agg(count(lit(1)).as("n"))
-        // shared-shingle counts per ordered pair via in-list pair
-        // explode — the inverted-index self-join expressed without the
-        // second and third exchange+sort of the posting relation
-        val inr = lists
-          .select(explode(col("_ds")).as("doc_a"), col("_ds"))
-          .select(col("doc_a"),
-            explode(filter(col("_ds"), x => x > col("doc_a"))).as("doc_b"))
-          .groupBy(col("doc_a"), col("doc_b"))
-          .agg(count(lit(1)).as("n_inter"))
-        (szs, inr)
-      } else {
-        val cp = persistTracked(capped)
-        val szs = cp.groupBy(col("doc")).agg(count(lit(1)).as("n"))
-        val a = cp.alias("a"); val b = cp.alias("b")
-        val inr = a.join(b,
-            col("a.s") === col("b.s") && col("a.doc") < col("b.doc"))
-          .groupBy(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
-          .agg(count(lit(1)).as("n_inter"))
-        (szs, inr)
-      }
-    inter
-      .join(sizes.select(col("doc").as("doc_a"), col("n").as("n_a")), Seq("doc_a"))
-      .join(sizes.select(col("doc").as("doc_b"), col("n").as("n_b")), Seq("doc_b"))
+    // ONE persisted relation of retained postings: the sizes and the
+    // pair counts both read it. Singleton shingles stay (minBlock 1):
+    // they yield no pair but count toward the sizes, so the ratio is
+    // the exact jaccard of the retained-vocabulary shingle sets
+    val cp = persistTracked(capPostings(posting, maxDocFreq, stopShingles))
+    val sizes = cp.groupBy(col("doc")).agg(count(lit(1)).as("n"))
+    jaccardOf(blockPairs(cp, Seq("s")),
+      sizes.select(col("doc").as("doc_a"), col("n").as("n_a")),
+      sizes.select(col("doc").as("doc_b"), col("n").as("n_b")), threshold)
+  }
+
+  /** (doc_a, doc_b, jaccard >= threshold) from one (doc_a, doc_b) row
+    * per shared retained shingle and the per-doc retained-shingle
+    * counts (doc_a, n_a) and (doc_b, n_b).
+    */
+  private def jaccardOf(shared: DataFrame, sizesA: DataFrame, sizesB: DataFrame,
+                        threshold: Double): DataFrame =
+    shared.groupBy(col("doc_a"), col("doc_b"))
+      .agg(count(lit(1)).as("n_inter"))
+      .join(sizesA, Seq("doc_a"))
+      .join(sizesB, Seq("doc_b"))
       .withColumn("jaccard", round(
         col("n_inter").cast("double") /
           (col("n_a") + col("n_b") - col("n_inter")), 4))
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
-  }
+
+  /** The retained postings of the exact-Jaccard paths: an explicit
+    * stop-shingle set applies as a broadcast anti-join (cheapest — the
+    * set came from a sketch), otherwise the counted doc-frequency cap;
+    * `maxDocFreq <= 0` keeps every posting and warns, because every
+    * posting list then yields all of its O(df²) pairs.
+    */
+  private def capPostings(posting: DataFrame, maxDocFreq: Int,
+                          stopShingles: Set[Long]): DataFrame =
+    if (stopShingles.nonEmpty) {
+      import posting.sparkSession.implicits._
+      posting.join(broadcast(stopShingles.toSeq.toDF("s")), Seq("s"), "left_anti")
+    } else if (maxDocFreq > 0) capBlocks(posting, Seq("s"), maxDocFreq)
+    else {
+      org.apache.log4j.Logger.getLogger(getClass)
+        .warn("exact-jaccard near-dup running UNCAPPED (maxDocFreq<=0): " +
+          "every shingle's posting list yields O(df^2) pairs and goes " +
+          "quadratic on hot shingles — bounded runs should pass maxDocFreq > 0")
+      posting
+    }
 
   /** INCREMENTAL dedup: exact n-gram Jaccard pairs BETWEEN an existing
     * base corpus and a new increment — the production dedup shape for
     * a growing corpus: base-vs-base pairs were already resolved when
     * the base was built, so a new crawl batch only needs checking
     * against the base (and within itself, via `jaccardNearDups` on the
-    * increment alone). Same inverted-index join and stop-shingle cap
+    * increment alone). Same inverted-index shape and stop-shingle cap
     * discipline as `jaccardNearDups`; the doc-frequency cap counts
     * over the UNION of both sides (a shingle hot across the whole
     * corpus is hot, whichever side it lives on), and per-doc sizes are
@@ -324,84 +312,24 @@ object NearDup {
                              nShingle: Int = 3, threshold: Double = 0.5,
                              maxDocFreq: Int = 10000,
                              stopShingles: Set[Long] = Set.empty): DataFrame = {
-    if (maxDocFreq <= 0 && stopShingles.isEmpty)
-      org.apache.log4j.Logger.getLogger(getClass)
-        .warn("jaccardNearDupsAgainst running UNCAPPED (maxDocFreq<=0): " +
-          "the cross-side shingle join is O(df_a*df_b) per shingle and " +
-          "goes quadratic on hot shingles — bounded runs should pass " +
-          "maxDocFreq > 0")
-    def posting(df: DataFrame) = df.select(col(idCol).as("doc"),
+    def posting(df: DataFrame, side: Int) = df.select(col(idCol).as("doc"),
+      lit(side).as("side"),
       explode(TextOps.shingles(col(textCol), nShingle)).as("s"))
-    val pa = posting(base)
-    val pb = posting(increment)
-    val capped: DataFrame => DataFrame =
-      if (stopShingles.nonEmpty) {
-        import base.sparkSession.implicits._
-        val stop = broadcast(stopShingles.toSeq.toDF("s"))
-        p => p.join(stop, Seq("s"), "left_anti")
-      } else if (maxDocFreq <= 0) identity
-      else {
-        // same cap OBSERVABILITY as jaccardNearDups (a silent cap is
-        // indistinguishable from an exact run), and the union
-        // doc-frequency aggregation — the heaviest stage, scanning
-        // BOTH corpora — is persisted so materializing each capped
-        // side does not re-run it
-        ensureCapListener(base.sparkSession)
-        val ok = persistTracked(pa.unionByName(pb).groupBy(col("s"))
-          .agg(count(lit(1)).as("_df"))
-          .observe(nextCapMetricName(),
-            sum(when(col("_df") > maxDocFreq, lit(1L)).otherwise(lit(0L)))
-              .as("dropped_shingles"),
-            count(lit(1)).as("distinct_shingles"))
-          .filter(col("_df") <= maxDocFreq).select(col("s")))
-        p => p.join(ok, Seq("s"))
-      }
-    // grouped-list pair derivation only under the exact df cap (list
-    // length then bounded by maxDocFreq — see jaccardNearDups); the
-    // uncapped/stop-shingle paths keep the distributed cross-side join
-    val (sizesA, sizesB, inter) =
-      if (maxDocFreq > 0 && stopShingles.isEmpty) {
-        // per-side (shingle -> member list) relations: cap-bounded per
-        // row (the quadratic guard), strictly smaller than the
-        // exploded postings; both groupBys and the cross-side join
-        // share one hash partitioning on s, so the pair derivation
-        // re-shuffles nothing
-        val la = persistTracked(capped(pa).groupBy(col("s"))
-          .agg(collect_list(col("doc")).as("_da")))
-        val lb = persistTracked(capped(pb).groupBy(col("s"))
-          .agg(collect_list(col("doc")).as("_db")))
-        val sa = la.select(explode(col("_da")).as("doc"))
-          .groupBy(col("doc")).agg(count(lit(1)).as("n_a"))
-          .withColumnRenamed("doc", "doc_a")
-        val sb = lb.select(explode(col("_db")).as("doc"))
-          .groupBy(col("doc")).agg(count(lit(1)).as("n_b"))
-          .withColumnRenamed("doc", "doc_b")
-        val inr = la.join(lb, Seq("s"))
-          .select(explode(col("_da")).as("doc_a"), col("_db"))
-          .select(col("doc_a"), explode(col("_db")).as("doc_b"))
-          .groupBy(col("doc_a"), col("doc_b"))
-          .agg(count(lit(1)).as("n_inter"))
-        (sa, sb, inr)
-      } else {
-        val ca = persistTracked(capped(pa))
-        val cb = persistTracked(capped(pb))
-        val sa = ca.groupBy(col("doc")).agg(count(lit(1)).as("n_a"))
-          .withColumnRenamed("doc", "doc_a")
-        val sb = cb.groupBy(col("doc")).agg(count(lit(1)).as("n_b"))
-          .withColumnRenamed("doc", "doc_b")
-        val inr = ca.alias("a").join(cb.alias("b"), col("a.s") === col("b.s"))
-          .groupBy(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
-          .agg(count(lit(1)).as("n_inter"))
-        (sa, sb, inr)
-      }
-    inter
-      .join(sizesA, Seq("doc_a"))
-      .join(sizesB, Seq("doc_b"))
-      .withColumn("jaccard", round(
-        col("n_inter").cast("double") /
-          (col("n_a") + col("n_b") - col("n_inter")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    val capped = capPostings(posting(base, 0).unionByName(posting(increment, 1)),
+      maxDocFreq, stopShingles)
+    // the cross-side pair form: ONE persisted (shingle -> base members,
+    // increment members) relation, grouped on the cap join's
+    // partitioning; the sizes and the cross product of the two lists
+    // both read it, so no same-side pair is ever formed
+    val lists = persistTracked(capped.groupBy(col("s")).agg(
+      collect_list(when(col("side") === 0, col("doc"))).as("_da"),
+      collect_list(when(col("side") === 1, col("doc"))).as("_db")))
+    def sizes(list: String, id: String, n: String) =
+      lists.select(explode(col(list)).as(id)).groupBy(col(id)).agg(count(lit(1)).as(n))
+    jaccardOf(
+      lists.select(explode(col("_da")).as("doc_a"), col("_db"))
+        .select(col("doc_a"), explode(col("_db")).as("doc_b")),
+      sizes("_da", "doc_a", "n_a"), sizes("_db", "doc_b", "n_b"), threshold)
   }
 
   /** Hot-shingle (stop-shingle) detection via a Count-Min Sketch — the
@@ -514,14 +442,8 @@ object NearDup {
     val sigs = base.select(col("doc"), posexplode(col("sigs")))
       .toDF("doc", "table", "sig")
     // cap degenerate buckets, as in the MinHash path
-    val okBuckets = sigs.groupBy(col("table"), col("sig"))
-      .agg(count(lit(1)).as("_n"))
-      .filter(col("_n") <= maxBucket && col("_n") > 1)
-      .select(col("table"), col("sig"))
-    // grouped-members pair explode over the capped buckets (bounded by
-    // maxBucket), replacing the bucket self-join — see bucketPairs
-    val cand = bucketPairs(sigs.join(okBuckets, Seq("table", "sig")),
-        Seq("table", "sig"))
+    val keys = Seq("table", "sig")
+    val cand = blockPairs(capBlocks(sigs, keys, maxBucket, minBlock = 2), keys)
       .dropDuplicates("doc_a", "doc_b")
     val vA = base.select(col("doc").as("doc_a"), col("vec").as("vec_a"))
     val vB = base.select(col("doc").as("doc_b"), col("vec").as("vec_b"))
@@ -556,13 +478,14 @@ object NearDup {
     *
     * Same degenerate-bucket discipline as the MinHash and embedding
     * paths: a chunk value shared by 10^6 short/templated documents
-    * (e.g. chunk 0 of a boilerplate-heavy corpus) would make the
-    * candidate self-join quadratic, so buckets above `maxBucket` are
-    * dropped (partial-aggregated counts, never a materialized member
-    * list); a pair lost to one capped chunk is still found via its
-    * other agreeing chunks. The candidate pairs are deduplicated as
-    * bare (doc_a, doc_b) ids BEFORE the signatures are re-attached, so
-    * the dedup exchange carries 16-byte rows, not signature payloads.
+    * (e.g. chunk 0 of a boilerplate-heavy corpus) would make its pair
+    * list quadratic, so buckets above `maxBucket` are dropped and
+    * counted (`capBlocks`: partial-aggregated counts, never a
+    * materialized member list); a pair lost to one capped chunk is
+    * still found via its other agreeing chunks. The candidate pairs are
+    * deduplicated as bare (doc_a, doc_b) ids BEFORE the signatures are
+    * re-attached, so the dedup exchange carries 16-byte rows, not
+    * signature payloads.
     */
   def simhashNearDups(docs: DataFrame, idCol: String, textCol: String,
                       maxHamming: Int = 3, maxBucket: Int = 10000): DataFrame = {
@@ -577,14 +500,8 @@ object NearDup {
             .bitwiseAND(lit((1L << chunkBits) - 1)).as("v"))
       }: _*)).as("ck"))
       .select(col("doc"), col("ck.chunk"), col("ck.v"))
-    val okBuckets = chunks.groupBy(col("chunk"), col("v"))
-      .agg(count(lit(1)).as("_n"))
-      .filter(col("_n") <= maxBucket && col("_n") > 1)
-      .select(col("chunk"), col("v"))
-    // grouped-members pair explode over the capped buckets (bounded by
-    // maxBucket), replacing the bucket self-join — see bucketPairs
-    val cand = bucketPairs(chunks.join(okBuckets, Seq("chunk", "v")),
-        Seq("chunk", "v"))
+    val keys = Seq("chunk", "v")
+    val cand = blockPairs(capBlocks(chunks, keys, maxBucket, minBlock = 2), keys)
       .dropDuplicates("doc_a", "doc_b")
     val sA = withSig.select(col("doc").as("doc_a"), col("sig").as("sig_a"))
     val sB = withSig.select(col("doc").as("doc_b"), col("sig").as("sig_b"))

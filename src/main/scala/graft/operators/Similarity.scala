@@ -296,8 +296,9 @@ object Similarity {
     * (id, cell, capped, n_smaller_dups, keep). A doc is dropped
     * (keep=false) when some SMALLER id in its cell has quantized
     * cosine >= tau against it — the greedy keep-first rule, consistent
-    * with `NearDup.dedupKeepFirst`. Candidate pairs carry only
-    * (cell, id) through the cell self-join; vectors are re-attached
+    * with `NearDup.dedupKeepFirst`. Candidate pairs explode from each
+    * cell's id list (`NearDup.blockPairs`, the near-dup family's one
+    * pair form) and carry only ids; vectors are re-attached
     * per-candidate (payload-light). Cells larger than `maxCell` are
     * excluded from pairing and their docs all kept — NOT silently:
     * the `capped` column marks them, so downstream can count/route the
@@ -308,7 +309,7 @@ object Similarity {
                        vecCol: String, tau: Double,
                        maxCell: Int = 1000000): DataFrame = {
     val a = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    // persisted: cell sizes, the pair join's two sides, and the final
+    // persisted: cell sizes, the pair derivation, and the final
     // verdict join all read the assignment — without a cache the
     // assignment map (and its upstream scan) executes once per branch
     val c = graft.GraftContext.persistTracked(cells.select(col("id"), col("cell")))
@@ -318,16 +319,13 @@ object Similarity {
       .select(col("cell"), (col("n") > maxCell).as("capped"))
     val flagged = c.join(broadcast(sizes), Seq("cell"))
     val eligible = flagged.filter(!col("capped"))
-    val cand = eligible.select(col("cell"), col("id").as("lhs"))
-      .join(eligible.select(col("cell"), col("id").as("rhs")), Seq("cell"))
-      .filter(col("lhs") < col("rhs"))
-      .select(col("lhs"), col("rhs"))
-    val dups = cand
-      .join(a.select(col("id").as("lhs"), col("vec").as("va")), Seq("lhs"))
-      .join(a.select(col("id").as("rhs"), col("vec").as("vb")), Seq("rhs"))
+    val dups = NearDup.blockPairs(
+        eligible.select(col("cell"), col("id").as("doc")), Seq("cell"))
+      .join(a.select(col("id").as("doc_a"), col("vec").as("va")), Seq("doc_a"))
+      .join(a.select(col("id").as("doc_b"), col("vec").as("vb")), Seq("doc_b"))
       .filter(quantizedCosine(col("va"), col("vb")) >= tau)
-      .select(col("rhs"))
-    val dupCounts = dups.groupBy(col("rhs").as("id"))
+      .select(col("doc_b"))
+    val dupCounts = dups.groupBy(col("doc_b").as("id"))
       .agg(count(lit(1)).as("n_smaller_dups"))
     flagged.join(dupCounts, Seq("id"), "left")
       .withColumn("n_smaller_dups",

@@ -143,23 +143,68 @@ class DataOpsSpec extends AnyFunSuite {
     val cut = 10L
     val base = df.filter(col("doc_id") < cut)
     val inc = df.filter(col("doc_id") >= cut)
-    val got = NearDup.jaccardNearDupsAgainst(base, inc, "doc_id", "text",
-        threshold = 0.5)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    // oracle: the full-corpus exact run restricted to cross pairs
-    val full = NearDup.jaccardNearDups(df, "doc_id", "text", threshold = 0.5)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2)))
-      .filter { case ((a, b), _) => a < cut && b >= cut }.toMap
-    assert(got == full, s"missing=${full.keySet -- got.keySet} " +
-      s"extra=${got.keySet -- full.keySet}")
-    assert(got.nonEmpty, "fixture has no cross-side near-dups")
-    // same-side pairs exist in the full run and are correctly absent
-    // from the incremental result
-    val sameSide = NearDup.jaccardNearDups(df, "doc_id", "text", threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-      .filterNot { case (a, b) => a < cut && b >= cut }
-    assert(sameSide.nonEmpty, "fixture has no same-side near-dups")
-    assert(sameSide.forall(p => !got.contains(p)))
+    // every cap mode: the default df cap, uncapped, and a sketch-derived
+    // stop set — each compared with the full run in the same mode
+    val stop = NearDup.hotShinglesSketch(df, "doc_id", "text", maxDocFreq = 3)
+    assert(stop.nonEmpty, "fixture has no hot shingles")
+    for ((mode, maxDocFreq, stopShingles) <- Seq(("df cap", 10000, Set.empty[Long]),
+        ("uncapped", 0, Set.empty[Long]), ("stop set", 10000, stop))) {
+      val got = NearDup.jaccardNearDupsAgainst(base, inc, "doc_id", "text",
+          threshold = 0.5, maxDocFreq = maxDocFreq, stopShingles = stopShingles)
+        .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+      // oracle: the full-corpus exact run restricted to cross pairs
+      val all = NearDup.jaccardNearDups(df, "doc_id", "text", threshold = 0.5,
+          maxDocFreq = maxDocFreq, stopShingles = stopShingles)
+        .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2)))
+      val full = all.filter { case ((a, b), _) => a < cut && b >= cut }.toMap
+      assert(got == full, s"$mode: missing=${full.keySet -- got.keySet} " +
+        s"extra=${got.keySet -- full.keySet}")
+      assert(got.nonEmpty, s"$mode: fixture has no cross-side near-dups")
+      // same-side pairs exist in the full run and are correctly absent
+      // from the incremental result
+      val sameSide = all.map(_._1).filterNot { case (a, b) => a < cut && b >= cut }
+      assert(sameSide.nonEmpty, s"$mode: fixture has no same-side near-dups")
+      assert(sameSide.forall(p => !got.contains(p)), mode)
+    }
+  }
+
+  test("LSH bucket caps are counted: lastCapDropped equals the oversized buckets") {
+    val df = docsDf(corpus)
+    val cap = 2
+    // brute force: block sizes over the same signatures, counted here
+    def oversized(blocks: Seq[Any]): Long =
+      blocks.groupBy(identity).count(_._2.size > cap).toLong
+    val sigs = df.select(col("doc_id"),
+        NearDup.minhashSignature(TextOps.shingles(col("text"), 3), 32).as("sig"),
+        NearDup.simhash64(col("text")).as("simhash"))
+      .collect().map(r => (r.getSeq[Long](1), r.getLong(2)))
+    val minhashBlocks = sigs.toSeq.flatMap { case (sig, _) =>
+      sig.grouped(4).zipWithIndex.map { case (rows, band) => (band, rows) } }
+    val simhashBlocks = sigs.toSeq.flatMap { case (_, h) =>
+      (0 until 4).map(c => (c, (h >> (c * 16)) & 0xffffL)) }
+    val emb = df.select(col("doc_id"),
+      TextOps.hashEmbedding(col("text"), 64).as("vec"))
+    val embeddingBlocks = emb.select(
+        Similarity.hyperplaneSigs(col("vec"), 4, 8, seedBase = 101))
+      .collect().toSeq.flatMap(_.getSeq[Any](0).zipWithIndex)
+    for ((name, blocks, run) <- Seq(
+        ("minhash", minhashBlocks, () => NearDup.minhashNearDups(df, "doc_id",
+          "text", k = 32, bands = 8, threshold = 0.6, maxBucket = cap)),
+        ("simhash", simhashBlocks, () => NearDup.simhashNearDups(df, "doc_id",
+          "text", maxHamming = 3, maxBucket = cap)),
+        ("embedding", embeddingBlocks, () => NearDup.embeddingNearDups(emb,
+          "doc_id", "vec", nBits = 4, nTables = 8, maxBucket = cap)))) {
+      val want = oversized(blocks)
+      assert(want > 0, s"$name: fixture has no bucket over $cap — cap never fires")
+      NearDup.resetCapDropped()
+      run().collect()
+      // delivered async on the listener bus — spin briefly
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (NearDup.lastCapDropped != want && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(NearDup.lastCapDropped == want,
+        s"$name: observed dropped=${NearDup.lastCapDropped}, oversized=$want")
+    }
   }
 
   test("CMS hot-shingle sketch: superset of exact hot set, recall preserved") {

@@ -152,10 +152,10 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("near-dup candidate joins read bucket-count-capped inputs") {
     // every LSH-family path (minhash bands, simhash chunks, embedding
-    // tables) must filter degenerate buckets BEFORE the candidate
-    // self-join — the optimized plan carries the `_n <= maxBucket`
-    // count filter; without it one templated-corpus bucket makes the
-    // join quadratic
+    // tables) must filter degenerate buckets BEFORE pairs explode from
+    // the bucket lists — the optimized plan carries the `_n <= maxBucket`
+    // count filter; without it one templated-corpus bucket makes its
+    // pair list quadratic
     for (q <- Seq("q14_minhash_neardup", "q15_simhash_neardup",
         "q35_embed_neardup")) {
       val plan = SparkEntry.queries(q)(spark, sf)
@@ -166,6 +166,41 @@ class PlanQualitySpec extends AnyFunSuite {
       }
       assert(capFilters.nonEmpty,
         s"$q candidate join input is not bucket-count-filtered:\n$plan")
+    }
+  }
+
+  test("near-dup pairs never come from a block self-join") {
+    import spark.implicits._
+    // a block self-join is a join keyed on the block column (`s` for
+    // shingle postings, `cell` for SemDeDup) with member ids on BOTH
+    // sides; the cap joins (stop set, cell sizes) carry ids on one side
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val base = docs.filter(col("doc_id") < 400L)
+    val inc = docs.filter(col("doc_id") >= 400L)
+    val emb = (0L until 20L)
+      .map(i => (i, Array.tabulate(4)(j => ((i + j) % 5).toFloat)))
+      .toDF("doc_id", "vec")
+    val cells = (0L until 20L).map(i => (i, (i % 3).toInt)).toDF("id", "cell")
+    val plans = Seq(
+      "jaccard uncapped" -> operators.NearDup.jaccardNearDups(docs, "doc_id",
+        "text", maxDocFreq = 0),
+      "jaccard stop set" -> operators.NearDup.jaccardNearDups(docs, "doc_id",
+        "text", stopShingles = Set(1L, 2L, 3L)),
+      "against uncapped" -> operators.NearDup.jaccardNearDupsAgainst(base, inc,
+        "doc_id", "text", maxDocFreq = 0),
+      "semdedup" -> operators.Similarity.semDedupVerdicts(cells, emb, "doc_id",
+        "vec", tau = 0.9))
+    val blockCols = Set("s", "cell")
+    val memberIds = Set("doc", "id", "lhs", "rhs", "doc_a", "doc_b")
+    for ((name, df) <- plans) {
+      val plan = df.queryExecution.optimizedPlan
+      val selfJoins = plan.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join
+            if j.condition.exists(_.references.exists(a => blockCols(a.name))) &&
+              j.left.output.exists(a => memberIds(a.name)) &&
+              j.right.output.exists(a => memberIds(a.name)) => j
+      }
+      assert(selfJoins.isEmpty, s"$name derives pairs by a block self-join:\n$plan")
     }
   }
 
