@@ -17,6 +17,15 @@ import org.apache.spark.storage.StorageLevel
   * when the context is created, calls `release(sc)`: every held
   * persist is freed and the context dropped, so nothing outlives the
   * SparkContext.
+  *
+  * Creating the context also binds `file:` in the SparkContext's Hadoop
+  * configuration to the fork-free local filesystem (`graft.io.LocalFs`):
+  * checkpoints, state stores, `IcebergLikeTable` and parquet writes stop
+  * starting a `chmod` or `readlink` process per file. A caller who set
+  * `fs.file.impl` or `fs.AbstractFileSystem.file.impl` keeps their own
+  * value. Create the context before the first local file I/O: a `file:`
+  * FileSystem Hadoop cached earlier keeps the stock class (FileContext,
+  * which checkpoints and state stores use, is never cached).
   */
 final class GraftContext private () {
   import GraftContext._
@@ -107,6 +116,7 @@ object GraftContext {
   def apply(sc: SparkContext): GraftContext =
     live.computeIfAbsent(sc, { _ =>
       val ctx = new GraftContext
+      graft.io.LocalFs.bind(sc.hadoopConfiguration)
       sc.addSparkListener(new SparkListener {
         // the application is ending and its blocks go with it: a free
         // that races the shutdown must not fail the listener bus

@@ -26,6 +26,9 @@ object CurateRun {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    // the engine context binds the fork-free local filesystem: create
+    // it before the first file write (see GraftContext)
+    graft.GraftContext(spark)
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

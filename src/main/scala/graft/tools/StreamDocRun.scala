@@ -42,6 +42,9 @@ object StreamDocRun {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    // the engine context binds the fork-free local filesystem: create
+    // it before the first file write (see GraftContext)
+    graft.GraftContext(spark)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -37,6 +37,9 @@ object StreamRun {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    // the engine context binds the fork-free local filesystem: create
+    // it before the first file write (see GraftContext)
+    graft.GraftContext(spark)
     import spark.implicits._
     spark.sparkContext.setLogLevel("WARN")
 

@@ -98,4 +98,41 @@ class GraftContextSpec extends AnyFunSuite {
       "unpersistTracked freed the owner's cache")
     owned.unpersist(true)
   }
+
+  test("creating the context binds file: to the fork-free classes; a caller's keys stay") {
+    import java.net.URI
+    import org.apache.hadoop.fs.{FileContext, FileSystem}
+    import graft.io.{ForkFreeLocalFileSystem, ForkFreeLocalFs, LocalFs}
+    val sc = spark.sparkContext
+    val shared = sc.hadoopConfiguration
+    val keys = Seq(LocalFs.FileSystemKey, LocalFs.FileContextKey)
+    val saved = keys.map(k => (k, Option(shared.get(k)), Option(shared.getPropertySources(k))))
+    def unbind(): Unit = { GraftContext.release(sc); keys.foreach(shared.unset) }
+    try {
+      unbind()
+      GraftContext(sc)
+      val conf = spark.sessionState.newHadoopConf()
+      assert(FileContext.getFileContext(URI.create("file:///"), conf)
+        .getDefaultFileSystem.getClass == classOf[ForkFreeLocalFs])
+      val fs = FileSystem.newInstance(URI.create("file:///"), conf)
+      try assert(fs.getClass == classOf[ForkFreeLocalFileSystem]) finally fs.close()
+
+      // either key set before the context exists (here to the stock
+      // class, the documented way to keep it): neither is touched
+      val stock = Map(LocalFs.FileSystemKey -> "org.apache.hadoop.fs.LocalFileSystem",
+        LocalFs.FileContextKey -> "org.apache.hadoop.fs.local.LocalFs")
+      for ((k, v) <- stock) {
+        unbind()
+        shared.set(k, v)
+        GraftContext(sc)
+        assert(shared.get(k) == v, k)
+        keys.filterNot(_ == k).foreach(o =>
+          assert(!Option(shared.get(o)).exists(_.startsWith("graft.")), o))
+      }
+    } finally {
+      unbind()
+      for ((k, v, src) <- saved; value <- v)
+        shared.set(k, value, src.flatMap(_.headOption).orNull)
+    }
+  }
 }

@@ -583,6 +583,42 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("a checkpointed stateful query starts no chmod or readlink process") {
+    import spark.implicits._
+    import jdk.jfr.consumer.RecordingStream
+    GraftContext(spark) // binds the fork-free local filesystem
+    val turnCfg = Synth.TurnGenConfig(nConvs = 12, turnsPerConv = 8, nGenes = 12, dupRate = 0.1)
+    val rows = Synth.transcriptRows(turnCfg)
+    val commands = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val rs = new RecordingStream()
+    try {
+      rs.enable("jdk.ProcessStart")
+      rs.onEvent("jdk.ProcessStart", e => commands.add(e.getString("command")))
+      rs.startAsync()
+      implicit val sq = spark.sqlContext
+      val mem = MemoryStream[Turn]
+      val q = StreamingPipeline.sessionAutomaton(
+          StreamingPipeline.annotationsDedupFirst(mem.toDS(), bc, cfg), cfg)
+        .writeStream.format("memory").queryName("spawn_sess")
+        .option("checkpointLocation", tmp("spawn_ckpt"))
+        .outputMode(OutputMode.Append).start()
+      mem.addData(rows.take(rows.size / 2))
+      q.processAllAvailable()
+      mem.addData(rows.drop(rows.size / 2))
+      q.processAllAvailable()
+      q.stop()
+      assert(q.recentProgress.count(_.numInputRows > 0) == 2)
+      // a marker process: once its event arrives, every earlier one has
+      new ProcessBuilder("true").start().waitFor()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!commands.contains("true") && System.nanoTime() < deadline) Thread.sleep(100)
+      assert(commands.contains("true"), "the process-start events never arrived")
+    } finally rs.close()
+    import scala.jdk.CollectionConverters._
+    val forked = commands.asScala.filter(_.matches("(\\S*/)?(chmod|readlink)\\b.*")).toSeq
+    assert(forked.isEmpty, s"${forked.size} forks, e.g. ${forked.take(3)}")
+  }
+
   test("session automaton closes sessions on event-time gap") {
     import spark.implicits._
     val t0 = 1700000000000L
