@@ -10,13 +10,12 @@ import org.apache.spark.storage.StorageLevel
 
 /** Everything the engine keeps for one live SparkContext: memoized
   * session artifacts (dimension index, annotation run, near-dup pairs,
-  * fitted models, the warm-up sweep), the bounded queues of tracked
-  * persists, the per-session cap-listener registration and the two
-  * diagnostics. Sessions of one SparkContext share one context — they
-  * share its CacheManager too. An application-end listener, registered
-  * when the context is created, calls `release(sc)`: every held
-  * persist is freed and the context dropped, so nothing outlives the
-  * SparkContext.
+  * fitted models), the bounded queues of tracked persists, the
+  * per-session cap-listener registration and the two diagnostics.
+  * Sessions of one SparkContext share one context — they share its
+  * CacheManager too. An application-end listener, registered when the
+  * context is created, calls `release(sc)`: every held persist is freed
+  * and the context dropped, so nothing outlives the SparkContext.
   *
   * Creating the context also binds `file:` in the SparkContext's Hadoop
   * configuration to the fork-free local filesystem (`graft.io.LocalFs`):

@@ -43,14 +43,12 @@ object Pipeline {
   }
 
   // the default index is immutable per (context, nGenes, seed): memoize
-  // so repeated queries don't rebuild + re-broadcast it
+  // so repeated queries don't rebuild + re-broadcast it. On a fresh
+  // context this build is the first Spark work, so it pays the session's
+  // first JIT/codegen cost.
   def cachedIndex(spark: SparkSession, nGenes: Int = DefaultGenes,
-                  seed: Long = DefaultSeed): Broadcast[DimIndex] = {
-    // session bootstrap: JIT/codegen warm-up sweep, once per context
-    // (see SessionWarmup — pure code warming, no data any query reuses)
-    SessionWarmup.ensure(spark)
+                  seed: Long = DefaultSeed): Broadcast[DimIndex] =
     GraftContext(spark).memo(("index", nGenes, seed))(buildIndex(spark, nGenes, seed))
-  }
 
   /** Map-only batch annotation of a turn Dataset. */
   def annotate(turns: Dataset[Turn], bc: Broadcast[DimIndex]): Dataset[Annotation] =

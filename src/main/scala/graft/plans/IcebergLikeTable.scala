@@ -1,8 +1,11 @@
 package graft.plans
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.functions.{col, lit}
 
 /** Snapshot-committing partitioned-parquet table — the sandbox stand-in
   * for the north rule's Iceberg sink (no Iceberg runtime jar ships with
@@ -34,7 +37,8 @@ final class IcebergLikeTable(val root: String, val partitionCols: Seq[String]) {
 
   /** Idempotently replace the partitions present in `df`. Safe to call
     * again with the same batchId (no-op) or after a partial failure
-    * (dynamic overwrite re-replaces the same partitions).
+    * (dynamic overwrite re-replaces the same partitions). A `df` with
+    * no rows commits nothing.
     *
     * Physical partitioning is (partitionCols..., _batch_id): a dynamic
     * partition overwrite is only exactly-once when every physical
@@ -48,49 +52,80 @@ final class IcebergLikeTable(val root: String, val partitionCols: Seq[String]) {
   def replacePartitions(df: DataFrame, batchId: Long): Unit = {
     if (committed(batchId)) return // replayed micro-batch: already durable
     // per-partition row counts for the manifest (lineage/metrics)
-    import org.apache.spark.sql.functions._
-    val counts = df.groupBy(partitionCols.map(col): _*)
-      .count().collect()
-      .map { r =>
-        val key = partitionCols.indices
-          .map(i => s""""${partitionCols(i)}":"${r.get(i)}"""").mkString(",")
-        s"""{$key,"rows":${r.getLong(partitionCols.length)}}"""
-      }
-
+    val counts = partitionEntries(df)
     if (counts.isEmpty) return // empty micro-batch: nothing to commit
+    writeBatch(df, batchId)
+    commitManifest(batchId, None, counts)
+  }
 
-    // per-write option, NOT a session conf set: a session-level
-    // partitionOverwriteMode=dynamic would leak into unrelated
-    // Overwrite writes issued later in the same session
-    df.withColumn("_batch_id", lit(batchId))
+  /** One manifest entry per partition of `df` that has rows:
+    * `{"<col>":"<value>",...,"rows":<n>}`. Empty when `df` is: the
+    * global count of an unpartitioned table is one row of 0.
+    */
+  private def partitionEntries(df: DataFrame): Seq[String] = {
+    val n = partitionCols.length
+    df.groupBy(partitionCols.map(col): _*).count().collect().toSeq
+      .filter(_.getLong(n) > 0)
+      .map { r =>
+        val keys = partitionCols.indices
+          .map(i => quote(partitionCols(i)) + ":" + quote(String.valueOf(r.get(i))))
+        (keys :+ s""""rows":${r.getLong(n)}""").mkString("{", ",", "}")
+      }
+  }
+
+  /** Dynamic partition overwrite of `df` under `_batch_id = batchId`.
+    * The id goes in as a string literal: Spark inlines a long literal
+    * into the generated code, so every batch id would compile the write
+    * stage anew. The directory is `_batch_id=<id>` either way, and reads
+    * infer the column's numeric type from the path.
+    */
+  private def writeBatch(df: DataFrame, batchId: Long): Unit =
+    df.withColumn("_batch_id", lit(batchId.toString))
       .write
+      // per-write option, NOT a session conf set: a session-level
+      // partitionOverwriteMode=dynamic would leak into unrelated
+      // Overwrite writes issued later in the same session
       .option("partitionOverwriteMode", "dynamic")
       .mode(SaveMode.Overwrite)
       .partitionBy(partitionCols :+ "_batch_id": _*)
       .parquet(root)
 
-    // snapshot commit: write manifest to a temp file, atomic rename
+  /** Snapshot commit: write the manifest to a temp file, atomic rename. */
+  private def commitManifest(batchId: Long, replaces: Option[Seq[Long]],
+                             partitions: Seq[String]): Unit = {
+    val fields = Seq(s""""batch_id":$batchId""") ++
+      replaces.map(ids => s""""replaces":${ids.mkString("[", ",", "]")}""") ++
+      Seq(s""""partition_cols":${partitionCols.map(quote).mkString("[", ",", "]")}""",
+        s""""partitions":${partitions.mkString("[", ",", "]")}""")
     Files.createDirectories(manifestDir)
-    val body =
-      s"""{"batch_id":$batchId,"partition_cols":[${partitionCols.map("\"" + _ + "\"").mkString(",")}],
-         |"partitions":[${counts.mkString(",")}]}""".stripMargin
     val tmp = manifestDir.resolve(s".snap-$batchId.tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, fields.mkString("{", ",\n", "}").getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, manifestPath(batchId), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
 
+  /** A JSON string literal of `s`. */
+  private def quote(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** `f` over a directory stream's paths; the stream is closed when `f`
+    * returns, so `f` must materialize what it keeps.
+    */
+  private def paths[T](open: => java.util.stream.Stream[Path])(f: Iterator[Path] => T): T =
+    Using.resource(open)(s => f(s.iterator().asScala))
+
   /** All committed snapshot batch ids, ascending. */
   def snapshots(): Seq[Long] =
     if (!Files.exists(manifestDir)) Nil
-    else {
-      import scala.jdk.CollectionConverters._
-      Files.list(manifestDir).iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(n => n.startsWith("snap-") && n.endsWith(".json"))
-        .map(n => n.stripPrefix("snap-").stripSuffix(".json").toLong)
-        .toSeq.sorted
-    }
+    else paths(Files.list(manifestDir))(_
+      .map(_.getFileName.toString)
+      .filter(n => n.startsWith("snap-") && n.endsWith(".json"))
+      .map(n => n.stripPrefix("snap-").stripSuffix(".json").toLong)
+      .toSeq.sorted)
 
   private val ReplacesRe = """"replaces":\[([0-9,\s]*)\]""".r
 
@@ -127,7 +162,6 @@ final class IcebergLikeTable(val root: String, val partitionCols: Seq[String]) {
     * pruning keeps this a metadata-level filter).
     */
   def read(spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val live = liveBatches()
     spark.read.parquet(root).filter(col("_batch_id").isin(live: _*))
   }
@@ -143,7 +177,6 @@ final class IcebergLikeTable(val root: String, val partitionCols: Seq[String]) {
     manifestDir.resolve(f"expired-$batchId%08d")
 
   def readAsOf(spark: org.apache.spark.sql.SparkSession, asOf: Long): DataFrame = {
-    import org.apache.spark.sql.functions.col
     require(committed(asOf), s"snapshot $asOf was never committed")
     val live = liveBatchesAsOf(asOf)
     // two gates, both required:
@@ -160,13 +193,10 @@ final class IcebergLikeTable(val root: String, val partitionCols: Seq[String]) {
     val expired = live.filter(id => Files.exists(expiredMarker(id)))
     require(expired.isEmpty,
       s"snapshot $asOf is expired: batches ${expired.mkString(",")} reclaimed")
-    val present: Set[String] = {
-      import scala.jdk.CollectionConverters._
-      Files.walk(Paths.get(root)).iterator().asScala
-        .flatMap(p => Option(p.getFileName).map(_.toString))
-        .filter(_.startsWith("_batch_id="))
-        .toSet
-    }
+    val present: Set[String] = paths(Files.walk(Paths.get(root)))(_
+      .flatMap(p => Option(p.getFileName).map(_.toString))
+      .filter(_.startsWith("_batch_id="))
+      .toSet)
     val missing = live.filterNot(id => present(s"_batch_id=$id"))
     require(missing.isEmpty,
       s"snapshot $asOf lost batch dirs ${missing.mkString(",")} (no tombstone)")
@@ -181,7 +211,6 @@ final class IcebergLikeTable(val root: String, val partitionCols: Seq[String]) {
     * readers resolve state from manifests, never directory listings.
     */
   def expireSnapshots(): Unit = {
-    import scala.jdk.CollectionConverters._
     val dead = snapshots().toSet -- liveBatches().toSet
     if (dead.isEmpty) return
     // tombstone FIRST, delete after: a crash or a failed per-path
@@ -195,8 +224,9 @@ final class IcebergLikeTable(val root: String, val partitionCols: Seq[String]) {
     // exact path-SEGMENT match: a substring test would make
     // "_batch_id=1" also hit "_batch_id=100" (a live snapshot!)
     val deadDirs = dead.map(id => s"_batch_id=$id")
-    Files.walk(Paths.get(root)).iterator().asScala.toSeq
+    paths(Files.walk(Paths.get(root)))(_
       .filter(p => p.iterator().asScala.exists(seg => deadDirs(seg.toString)))
+      .toList)
       .reverse
       .foreach(p => try Files.deleteIfExists(p) catch { case _: Exception => })
   }
@@ -221,7 +251,6 @@ final class IcebergLikeTable(val root: String, val partitionCols: Seq[String]) {
     */
   def compact(spark: org.apache.spark.sql.SparkSession, compactionId: Long,
               filesPerPartition: Int = 1): Unit = {
-    import org.apache.spark.sql.functions._
     if (committed(compactionId)) return
     val live = liveBatches()
     require(live.forall(_ < compactionId),
@@ -237,32 +266,14 @@ final class IcebergLikeTable(val root: String, val partitionCols: Seq[String]) {
     val df =
       if (filesPerPartition <= 1) rows.repartition(partitionCols.map(col): _*)
       else rows.repartition(filesPerPartition, partitionCols.map(col): _*)
-    val counts = df.groupBy(partitionCols.map(col): _*).count().collect()
-      .map { r =>
-        val key = partitionCols.indices
-          .map(i => s""""${partitionCols(i)}":"${r.get(i)}"""").mkString(",")
-        s"""{$key,"rows":${r.getLong(partitionCols.length)}}"""
-      }
+    val counts = partitionEntries(df)
     // dynamic partition OVERWRITE, not append: every partition written
     // here is solely owned by this compactionId, so a retry after a
     // crash between the parquet write and the manifest rename replaces
     // the orphaned files instead of appending the live rows a second
     // time — the same idempotence contract replacePartitions gives
     // micro-batches
-    df.withColumn("_batch_id", lit(compactionId))
-      .write
-      .option("partitionOverwriteMode", "dynamic") // per-write, no session leak
-      .mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols :+ "_batch_id": _*)
-      .parquet(root)
-    Files.createDirectories(manifestDir)
-    val body =
-      s"""{"batch_id":$compactionId,"replaces":[${live.mkString(",")}],
-         |"partition_cols":[${partitionCols.map("\"" + _ + "\"").mkString(",")}],
-         |"partitions":[${counts.mkString(",")}]}""".stripMargin
-    val tmp = manifestDir.resolve(s".snap-$compactionId.tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, manifestPath(compactionId), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    writeBatch(df, compactionId)
+    commitManifest(compactionId, Some(live), counts)
   }
 }

@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
@@ -134,5 +135,34 @@ class GraftContextSpec extends AnyFunSuite {
       for ((k, v, src) <- saved; value <- v)
         shared.set(k, value, src.flatMap(_.headOption).orNull)
     }
+  }
+
+  test("a fresh context's index build starts no SessionWarmup job") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val marker = "spec.warmup.marker"
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.add(j.stageInfos.map(s => s.name + "\n" + s.details).mkString("\n"))
+    }
+    GraftContext.release(sc) // the next cachedIndex is a session's first
+    sc.addSparkListener(listener)
+    try {
+      Pipeline.cachedIndex(spark)
+      // listener events arrive in order: once the marker job is seen,
+      // every job the index build started has been counted
+      sc.setCallSite(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearCallSite()
+      val deadline = System.nanoTime() + 60.seconds.toNanos
+      while (!jobs.toArray.exists(_.toString.startsWith(marker)) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      val started = jobs.toArray.map(_.toString).takeWhile(!_.startsWith(marker))
+      assert(started.length < jobs.size, "marker job never reached the listener")
+      assert(started.nonEmpty, "the index build ran no job: the listener saw nothing")
+      val fromWarmup = started.filter(_.contains("SessionWarmup"))
+      val n = fromWarmup.length
+      assert(n == 0, s"of ${started.length} jobs came from SessionWarmup; call sites: " +
+          fromWarmup.map(_.linesIterator.next()).distinct.mkString(", "))
+    } finally sc.removeSparkListener(listener)
   }
 }
