@@ -28,18 +28,7 @@ object StreamingPipeline {
       watermark: String = "10 minutes",
       sessionGapMs: Long = 30 * 60 * 1000L,
       tierWindow: String = "1 hour",
-      partitions: Int = 32,
-      /** >1 adds a turn-hash salt to the explicit conv_id
-        * repartition: a hot conversation (10% of a batch on one
-        * conv_id) otherwise funnels into ONE post-shuffle partition
-        * and its task walls the kernel/sink stage. Salting trades
-        * per-conv physical locality (irrelevant to the map-only
-        * kernel and the _batch_id-partitioned sink) for balance; the
-        * dedup/session STATE keys are untouched — state partitioning
-        * is by full key and the automaton is inherently conv-keyed
-        * (SkewAgg scaladoc).
-        */
-      salts: Int = 1)
+      partitions: Int = 32)
 
   /** Per-conversation session summary emitted by the automaton on
     * event-time session close (the streaming analog of the reference's
@@ -61,39 +50,6 @@ object StreamingPipeline {
       sessionStart: Long, sessionEnd: Long, nTurns: Int,
       t1: Int, t1b: Int, t2: Int, t3: Int, t4: Int)
 
-  /** (a) Per-turn annotation stream.
-    *
-    * Operator order matters for watermark plumbing: the stateless
-    * broadcast-map runs FIRST (a typed map would strip the event-time
-    * marker from `ts`, and Spark disallows redefining a watermark after
-    * a stateful operator), then ONE watermark is defined on the
-    * annotated stream and shared by every downstream stateful operator
-    * (dedup, windowed aggregation, session automaton), then the
-    * explicit conv_id-hash repartition places the shuffle
-    * (north rule: explicit conv_id-hash repartitioning).
-    */
-  def annotations(turns: Dataset[Turn], bc: Broadcast[DimIndex],
-                  cfg: StreamConfig): Dataset[Annotation] = {
-    import turns.sparkSession.implicits._
-    turns
-      .mapPartitions { it => // map-only, no shuffle; broadcast deref hoisted
-        val idx = bc.value
-        it.map(t => MatchKernel.annotateTurn(t, idx))
-      }
-      .withWatermark("ts", cfg.watermark)
-      .dropDuplicatesWithinWatermark("conv_id", "turn_idx")
-      .repartition(cfg.partitions, partitionCols(cfg): _*)
-      .as[Annotation]
-  }
-
-  /** Explicit conv_id-hash repartition columns, salted when
-    * `cfg.salts` > 1 (hot-conversation balance; see StreamConfig).
-    */
-  private def partitionCols(cfg: StreamConfig) =
-    if (cfg.salts > 1)
-      Seq(col("conv_id"), pmod(hash(col("turn_idx")), lit(cfg.salts)))
-    else Seq(col("conv_id"))
-
   /** Broadcast-deref holder for UDF closures: `bc.value` inside a UDF
     * body would re-read the SoftReference-backed broadcast PER ROW
     * (the GC-contention pathology MatchKernel.annotate documents); a
@@ -103,28 +59,23 @@ object StreamingPipeline {
     @transient lazy val idx: DimIndex = bc.value
   }
 
-  /** (a') Dedup-FIRST annotation stream — the byte-frugal operator
-    * order: the watermark and the stateful dedup run on the narrow
-    * `Turn` rows (roughly half the bytes of an `Annotation`), so the
-    * dedup exchange and the state store carry Turn-sized payloads and
-    * the kernel runs on the post-dedup survivors only. The kernel is
-    * applied as an UNTYPED UDF projection that keeps the original
-    * `ts` attribute in the output row — a typed `.map` would strip
-    * the event-time marker, and Spark refuses a new watermark after a
-    * stateful operator, so this projection trick is what lets
-    * downstream windowed aggregates keep working (StreamingSpec pins
+  /** (a) Per-turn annotation stream, in its one operator order:
+    * ONE watermark on `ts`, then the stateful dedup on
+    * (conv_id, turn_idx), then the explicit conv_id-hash repartition
+    * (north rule), then the broadcast kernel. The watermark and the
+    * dedup run on the narrow `Turn` rows (roughly half the bytes of an
+    * `Annotation`), so the dedup exchange and the state store carry
+    * Turn-sized payloads and the kernel runs on the post-dedup
+    * survivors only. The kernel is applied as an UNTYPED UDF
+    * projection that keeps the original `ts` attribute in the output
+    * row — a typed `.map` would strip the event-time marker, and Spark
+    * refuses a new watermark after a stateful operator, so this
+    * projection trick is what lets the downstream windowed aggregate
+    * and session automaton share the one watermark (StreamingSpec pins
     * a windowed rollup over this stream).
     *
-    * Trade vs `annotations`: one extra row<->struct conversion per
-    * row (the UDF boundary) against Turn-sized state and shuffle.
-    * Measured on the 25M-turn scale bench (BENCH.md R4.3) the byte
-    * saving wins at both parallelism levels.
-    *
-    * Checkpoint compatibility: the dedup state KEY schema differs from
-    * `annotations`' (turn_idx nullability flips across the kernel
-    * boundary), so switching orders on an EXISTING checkpoint fails
-    * Spark's state-schema check by design — resume with the order the
-    * checkpoint was created with, or start a fresh checkpoint.
+    * The name records an older annotate-first order that is gone; it
+    * stays because the benchmark harness (`perfbench`) calls it.
     */
   def annotationsDedupFirst(turns: Dataset[Turn], bc: Broadcast[DimIndex],
                             cfg: StreamConfig): Dataset[Annotation] = {
@@ -137,7 +88,7 @@ object StreamingPipeline {
     turns
       .withWatermark("ts", cfg.watermark)
       .dropDuplicatesWithinWatermark("conv_id", "turn_idx")
-      .repartition(cfg.partitions, partitionCols(cfg): _*)
+      .repartition(cfg.partitions, col("conv_id"))
       .select(col("ts"), annUdf(col("conv_id"), col("turn_idx"), col("role"),
         col("ts"), col("text"), col("tool")).as("a"))
       // project the struct open but keep the ORIGINAL ts attribute —
@@ -819,12 +770,16 @@ object StreamingPipeline {
         GroupStateTimeout.NoTimeout)(fsm)
   }
 
+  /** Hash buckets of `conv_id` in the annotation table's partition
+    * key (data_type, conv_bucket).
+    */
+  private val SinkBuckets = 16
+
   /** Start the per-turn annotation sink: exactly-once via checkpoint +
     * idempotent partition replace keyed (data_type, conv bucket).
     */
   def startAnnotationSink(ann: Dataset[Annotation], table: IcebergLikeTable,
-                          checkpoint: String,
-                          nBuckets: Int = 16): StreamingQuery = {
+                          checkpoint: String): StreamingQuery = {
     ann.toDF()
       .writeStream
       .outputMode(OutputMode.Append)
@@ -832,7 +787,7 @@ object StreamingPipeline {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val withBucket = batch.withColumn("conv_bucket",
-          pmod(hash(col("conv_id")), lit(nBuckets)))
+          pmod(hash(col("conv_id")), lit(SinkBuckets)))
           .withColumn("tiers_json", to_json(struct(
             col("tier_1"), col("tier_1b"), col("tier_2"), col("tier_3"))))
           .drop("tier_1", "tier_1b", "tier_2", "tier_3",
@@ -841,6 +796,36 @@ object StreamingPipeline {
         ()
       }
       .start()
+  }
+
+  /** Start the whole turn stream under AvailableNow: one annotation
+    * stream feeding three queries, each with its own checkpoint under
+    * `outRoot` —
+    *  - "ann": the annotation sink into `annotations/` (an
+    *    IcebergLikeTable partitioned by data_type and conv bucket),
+    *    checkpoint `ckpt_ann/`;
+    *  - "sess": the session automaton, parquet in `sessions/`,
+    *    checkpoint `ckpt_sess/`;
+    *  - "roll": the windowed tier rollup, parquet in `rollups/`,
+    *    checkpoint `ckpt_roll/`.
+    * Returns the named queries (started, not awaited) and the table.
+    * Re-running with the same `outRoot` resumes from the checkpoints.
+    */
+  def start(turns: Dataset[Turn], bc: Broadcast[DimIndex], cfg: StreamConfig,
+            outRoot: String): (Seq[(String, StreamingQuery)], IcebergLikeTable) = {
+    val ann = annotationsDedupFirst(turns, bc, cfg)
+    val table = new IcebergLikeTable(s"$outRoot/annotations",
+      Seq("data_type", "conv_bucket"))
+    def parquetSink(df: DataFrame, name: String, ckpt: String): StreamingQuery =
+      df.writeStream.outputMode(OutputMode.Append)
+        .option("checkpointLocation", s"$outRoot/$ckpt")
+        .trigger(Trigger.AvailableNow())
+        .format("parquet").option("path", s"$outRoot/$name")
+        .start()
+    val qAnn = startAnnotationSink(ann, table, s"$outRoot/ckpt_ann")
+    val qSess = parquetSink(sessionAutomaton(ann, cfg).toDF(), "sessions", "ckpt_sess")
+    val qRoll = parquetSink(tierRollup(ann, cfg), "rollups", "ckpt_roll")
+    (Seq("ann" -> qAnn, "sess" -> qSess, "roll" -> qRoll), table)
   }
 
   /** Metrics listener: appends one JSON line per micro-batch progress

@@ -49,7 +49,8 @@ object StreamDocRun {
     import spark.implicits._
 
     // source prep: documents + synthetic event times, event-time-ordered
-    // files (same mtime-stamping protocol as StreamScaleBench). 20% of
+    // files (the file source reads in mtime order, and parallel writes
+    // tie mtimes, so stamp ascending mtimes in ts-range order). 20% of
     // the corpus arrives a second time ~17 min later under fresh ids —
     // the re-crawl/retry burst a production ingest actually sees and
     // the content-dedup stage exists to suppress

@@ -1,29 +1,26 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import graft.Pipeline
 import graft.model.Turn
-import graft.plans.IcebergLikeTable
 import graft.sources.Synth
 import graft.streaming.StreamingPipeline
 import graft.streaming.StreamingPipeline.StreamConfig
 
 /** The spark-submit-able streaming job (north rule): reads a transcript
-  * parquet directory as a stream, runs the full annotate -> dedup ->
-  * session-automaton -> windowed-rollup pipeline, commits to the
-  * exactly-once table, and reports sustained throughput.
+  * parquet directory as a stream, runs the full dedup -> annotate ->
+  * session-automaton -> windowed-rollup pipeline
+  * (`StreamingPipeline.start`), commits to the exactly-once table, and
+  * reports sustained throughput.
   *
   * Usage: StreamRun [srcDir] [outRoot] [cores]
   *  - with no srcDir, synthesizes a deterministic transcript parquet
   *    first (no external data).
-  * Resumable: re-running with the same outRoot resumes from checkpoint
-  * — PROVIDED the operator order matches the one the checkpoint was
-  * created with (the dedup state key schema differs between orders,
-  * and Spark's state-schema check refuses a mismatch by design).
-  * Default order is dedup-first (the measured-faster one, BENCH.md
-  * R4.3); set SPARK_GRAFT_STREAM_ORDER=annotate-first to resume
-  * checkpoints created by builds that predate the switch.
+  * Resumable: re-running with the same outRoot resumes from its
+  * checkpoints. A checkpoint made by an older build in its
+  * annotate-first order has a different dedup state key schema, which
+  * Spark's state-schema check refuses: start such a run with a fresh
+  * outRoot (README, "One stream order").
   */
 object StreamRun {
   def main(args: Array[String]): Unit = {
@@ -58,32 +55,9 @@ object StreamRun {
 
     val schema = implicitly[org.apache.spark.sql.Encoder[Turn]].schema
     val turns = spark.readStream.schema(schema).parquet(srcDir).as[Turn]
-    // dedup-first is the measured-faster operator order (BENCH.md
-    // R4.3); the env override exists for resuming checkpoints created
-    // under the old order (state key schemas differ — see scaladoc)
-    val ann =
-      if (sys.env.get("SPARK_GRAFT_STREAM_ORDER").contains("annotate-first"))
-        StreamingPipeline.annotations(turns, bc, cfg)
-      else StreamingPipeline.annotationsDedupFirst(turns, bc, cfg)
-
-    val table = new IcebergLikeTable(s"$outRoot/annotations",
-      Seq("data_type", "conv_bucket"))
     val t0 = System.nanoTime()
-    val qAnn = StreamingPipeline.startAnnotationSink(ann, table,
-      s"$outRoot/ckpt_ann")
-    val qSess = StreamingPipeline.sessionAutomaton(ann, cfg)
-      .writeStream.outputMode(OutputMode.Append)
-      .option("checkpointLocation", s"$outRoot/ckpt_sess")
-      .trigger(Trigger.AvailableNow())
-      .format("parquet").option("path", s"$outRoot/sessions")
-      .start()
-    val qRoll = StreamingPipeline.tierRollup(ann, cfg)
-      .writeStream.outputMode(OutputMode.Append)
-      .option("checkpointLocation", s"$outRoot/ckpt_roll")
-      .trigger(Trigger.AvailableNow())
-      .format("parquet").option("path", s"$outRoot/rollups")
-      .start()
-    qAnn.awaitTermination(); qSess.awaitTermination(); qRoll.awaitTermination()
+    val (queries, table) = StreamingPipeline.start(turns, bc, cfg, outRoot)
+    queries.foreach(_._2.awaitTermination())
     val secs = (System.nanoTime() - t0) / 1e9
 
     val nAnn = spark.read.parquet(s"$outRoot/annotations").count()

@@ -86,7 +86,7 @@ class PlanQualitySpec extends AnyFunSuite {
     def runOnce(name: String): Seq[String] = {
       implicit val sq = spark.sqlContext
       val mem = MemoryStream[Turn]
-      val q = StreamingPipeline.annotations(mem.toDS(), bc, cfg)
+      val q = StreamingPipeline.annotationsDedupFirst(mem.toDS(), bc, cfg)
         .writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Append).start()
       // identical chunking both runs: 3 batches

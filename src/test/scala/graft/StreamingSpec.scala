@@ -38,7 +38,7 @@ class StreamingSpec extends AnyFunSuite {
 
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[Turn]
-    val q = StreamingPipeline.annotations(mem.toDS(), bc, cfg)
+    val q = StreamingPipeline.annotationsDedupFirst(mem.toDS(), bc, cfg)
       .writeStream.format("memory").queryName("ann_out")
       .outputMode(OutputMode.Append).start()
     mem.addData(rows.take(rows.size / 2))
@@ -57,7 +57,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.toSeq == want.toSeq)
   }
 
-  test("dedup-first annotations: same rows as annotations, watermark survives") {
+  test("dedup-first annotations: same rows as the batch kernel, watermark survives") {
     import spark.implicits._
     val turnCfg = Synth.TurnGenConfig(nConvs = 12, turnsPerConv = 8,
       nGenes = 12, dupRate = 0.2)
@@ -84,17 +84,12 @@ class StreamingSpec extends AnyFunSuite {
 
     val got = spark.table("ddf_ann")
       .collect().map(_.toString).sorted
-    // parity oracle: the annotate-first stream on the same input
-    val mem2 = MemoryStream[Turn]
-    val q2 = StreamingPipeline.annotations(mem2.toDS(), bc, cfg)
-      .writeStream.format("memory").queryName("ddf_want")
-      .outputMode(OutputMode.Append).start()
-    mem2.addData(rows.take(rows.size / 2))
-    q2.processAllAvailable()
-    mem2.addData(rows.drop(rows.size / 2))
-    q2.processAllAvailable()
-    q2.stop()
-    val want = spark.table("ddf_want").collect().map(_.toString).sorted
+    // parity oracle: the batch kernel over each key's first arrival
+    val annCols = spark.table("ddf_ann").columns.toSeq.map(col)
+    val want = Pipeline.annotate(
+        spark.createDataset(rows.distinctBy(t => (t.conv_id, t.turn_idx))), bc).toDF()
+      .select(annCols: _*)
+      .collect().map(_.toString).sorted
     assert(got.toSeq == want.toSeq)
   }
 
@@ -522,7 +517,7 @@ class StreamingSpec extends AnyFunSuite {
 
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[Turn]
-    val q = StreamingPipeline.annotations(mem.toDS(), bc, cfg)
+    val q = StreamingPipeline.annotationsDedupFirst(mem.toDS(), bc, cfg)
       .writeStream.format("memory").queryName("dedup_out")
       .outputMode(OutputMode.Append).start()
     mem.addData(rows)
@@ -633,7 +628,7 @@ class StreamingSpec extends AnyFunSuite {
 
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[Turn]
-    val ann = StreamingPipeline.annotations(mem.toDS(), bc, cfg)
+    val ann = StreamingPipeline.annotationsDedupFirst(mem.toDS(), bc, cfg)
     val q = StreamingPipeline.sessionAutomaton(ann, cfg)
       .writeStream.format("memory").queryName("sess_out")
       .outputMode(OutputMode.Append).start()
@@ -652,18 +647,19 @@ class StreamingSpec extends AnyFunSuite {
     assert(sessions == Seq(2, 3), s"expected sessions of 3 and 2 turns, got $sessions")
   }
 
-  test("session automaton closes a session that a late row ends behind the watermark") {
+  /** The late-row source: one file per trigger. Trigger 3 filters late
+    * rows with the watermark after trigger 1 (t0 - 9 min) but checks
+    * timeouts against the one after trigger 2's pusher (t0 + 7h50): A's
+    * row at t0 + 1h passes the filter and opens a session whose timeout
+    * (t0 + 1h30) the watermark has already passed.
+    */
+  private def lateRowSource(): org.apache.spark.sql.Dataset[Turn] = {
     import spark.implicits._
     val t0 = 1700000000000L
     val hour = 3600 * 1000L
     def turn(conv: String, idx: Int, offMs: Long): Turn =
       Turn(conv, idx, "assistant", "ENT0001 AMP", "",
         new java.sql.Timestamp(t0 + offMs))
-    // one file per trigger. Trigger 3 filters late rows with the
-    // watermark after trigger 1 (t0 - 9 min) but checks timeouts against
-    // the one after trigger 2's pusher (t0 + 7h50): A's row at t0 + 1h
-    // passes the filter and opens a session whose timeout (t0 + 1h30)
-    // the watermark has already passed
     val triggers = Seq(
       Seq(turn("A", 0, 0L), turn("A", 1, 60000L)),
       Seq(turn("B", 0, 8 * hour)),
@@ -679,12 +675,16 @@ class StreamingSpec extends AnyFunSuite {
       Files.setLastModifiedTime(f,
         java.nio.file.attribute.FileTime.fromMillis(now - (3 - i) * 1000L))
     }
-    val stream = spark.readStream
+    spark.readStream
       .schema(org.apache.spark.sql.Encoders.product[Turn].schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(srcDir.toString).as[Turn]
+  }
+
+  test("session automaton closes a session that a late row ends behind the watermark") {
+    val stream = lateRowSource()
     val q = StreamingPipeline.sessionAutomaton(
-        StreamingPipeline.annotations(stream, bc, cfg), cfg)
+        StreamingPipeline.annotationsDedupFirst(stream, bc, cfg), cfg)
       .writeStream.format("memory").queryName("sess_late_out")
       .outputMode(OutputMode.Append)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -695,6 +695,44 @@ class StreamingSpec extends AnyFunSuite {
       .filter(col("conv_id") === "A")
       .select("n_turns").collect().map(_.getInt(0)).sorted.toSeq
     assert(sessions == Seq(1, 2), s"expected sessions of 2 and 1 turns, got $sessions")
+  }
+
+  test("start: its three outputs equal the three queries wired by hand") {
+    import org.apache.spark.sql.streaming.Trigger
+    val stream = lateRowSource()
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+
+    val started = tmp("start_out")
+    val (queries, table) = StreamingPipeline.start(stream, bc, cfg, started)
+    assert(queries.map(_._1) == Seq("ann", "sess", "roll"))
+    queries.foreach(_._2.awaitTermination())
+
+    val byHand = tmp("start_hand")
+    val ann = StreamingPipeline.annotationsDedupFirst(stream, bc, cfg)
+    val handTable = new IcebergLikeTable(s"$byHand/annotations",
+      Seq("data_type", "conv_bucket"))
+    val qAnn = StreamingPipeline.startAnnotationSink(ann, handTable, s"$byHand/ckpt_ann")
+    def parquetSink(df: org.apache.spark.sql.DataFrame, name: String, ckpt: String) =
+      df.writeStream.outputMode(OutputMode.Append)
+        .option("checkpointLocation", s"$byHand/$ckpt")
+        .trigger(Trigger.AvailableNow())
+        .format("parquet").option("path", s"$byHand/$name")
+        .start()
+    val qSess = parquetSink(StreamingPipeline.sessionAutomaton(ann, cfg).toDF(),
+      "sessions", "ckpt_sess")
+    val qRoll = parquetSink(StreamingPipeline.tierRollup(ann, cfg), "rollups", "ckpt_roll")
+    Seq(qAnn, qSess, qRoll).foreach(_.awaitTermination())
+
+    assert(table.root == s"$started/annotations")
+    val annRows = rows(table.read(spark))
+    assert(annRows.size == 4, s"expected 4 committed turns, got ${annRows.size}")
+    assert(annRows == rows(handTable.read(spark)), "annotation sink differs")
+    for (out <- Seq("sessions", "rollups")) {
+      val got = rows(spark.read.parquet(s"$started/$out"))
+      assert(got.nonEmpty, s"$out is empty")
+      assert(got == rows(spark.read.parquet(s"$byHand/$out")), s"$out differ")
+    }
   }
 
   test("exactly-once sink: idempotent partition replace + checkpoint resume") {
@@ -709,7 +747,7 @@ class StreamingSpec extends AnyFunSuite {
       val stream = spark.readStream
         .schema(spark.createDataset(rows).schema)
         .parquet(srcDir).as[Turn]
-      val ann = StreamingPipeline.annotations(stream, bc, cfg)
+      val ann = StreamingPipeline.annotationsDedupFirst(stream, bc, cfg)
       val q = StreamingPipeline.startAnnotationSink(ann, table, ckpt)
       q.awaitTermination() // AvailableNow terminates when caught up
     }
@@ -804,7 +842,7 @@ class StreamingSpec extends AnyFunSuite {
 
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[Turn]
-    val ann = StreamingPipeline.annotations(mem.toDS(), bc, cfg)
+    val ann = StreamingPipeline.annotationsDedupFirst(mem.toDS(), bc, cfg)
     val q = StreamingPipeline.tierRollup(ann, cfg)
       .writeStream.format("memory").queryName("rollup_out")
       .outputMode(OutputMode.Append).start()
