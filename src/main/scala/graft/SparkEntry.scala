@@ -205,11 +205,6 @@ object SparkEntry {
         col("ts")))
   }
 
-  /** q23/q24 dimension-side inputs. The renders / PREDICTIVE-entry /
-    * name tables are broadcast-small driver structures; exposing them
-    * as DataFrames lets the oracle re-derive the output-assembly and
-    * drug-target joins cross-engine.
-    */
   // memoized + persisted per context (the cachedIndex/jaccardPairs
   // discipline): six queries (q23/q24/q58/q64/q66/q67) derive the same
   // deterministic filtered dimension, several consuming it in multiple
@@ -221,43 +216,26 @@ object SparkEntry {
         Pipeline.defaultFilter)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-  private def q24Collected(s: SparkSession): (DataFrame, Seq[(model.EvidenceRow, String)]) = {
+  /** The output table (q23, q58): per-variant renders joined to the
+    * annotations' matched variants.
+    */
+  private def outputTable(s: SparkSession): DataFrame = {
     import s.implicits._
-    val filtered = defaultFilteredDim(s)
-    val collected = operators.CtClassifier.select(
-      operators.CtClassifier.annotate(filtered, Pipeline.defaultCt), Left("highest"))
-      .select(struct(filtered.columns.toIndexedSeq.map(col): _*).as("_1"), col("ct").as("_2"))
-      .as[(model.EvidenceRow, String)].collect().toSeq
-    (filtered, collected)
+    operators.OutputAssembly.writeMatchTable(
+      Pipeline.run(s).as[operators.Annotation],
+      operators.OutputAssembly.renderTable(defaultFilteredDim(s), Pipeline.defaultCt))
+      .orderBy(col("conv_id"), col("turn_idx"), col("tier"))
   }
 
-  def rendersDF(s: SparkSession): DataFrame = {
+  /** The drug-targets report (q24, q64): PREDICTIVE-entry and
+    * variant-name tables joined to the annotations' matched variants.
+    */
+  private def drugTargetsReport(s: SparkSession): DataFrame = {
     import s.implicits._
-    val renders = operators.OutputAssembly.buildRenders(
-      s, defaultFilteredDim(s), Pipeline.defaultCt)
-    renders.value.toSeq.map { case ((g, v), r) =>
-      (g, v, r.scores, r.typesString,
-        r.evStrings.getOrElse("PREDICTIVE", Nil),
-        r.evStrings.getOrElse("DIAGNOSTIC", Nil),
-        r.evStrings.getOrElse("PROGNOSTIC", Nil),
-        r.evStrings.getOrElse("PREDISPOSING", Nil))
-    }.toDF("gene_key", "var_id", "scores", "types_string",
-      "ev_predictive", "ev_diagnostic", "ev_prognostic", "ev_predisposing")
-  }
-
-  def predEntriesDF(s: SparkSession): DataFrame = {
-    import s.implicits._
-    operators.Reports.buildPredEntries(q24Collected(s)._2).toSeq
-      .flatMap { case ((g, v), es) =>
-        es.map(e => (g, v, e.drug, e.ct, e.disease, e.evidence, e.entryIdx)) }
-      .toDF("gene_key", "var_id", "drug", "ct", "disease", "evidence", "entry_idx")
-  }
-
-  def varNamesDF(s: SparkSession): DataFrame = {
-    import s.implicits._
-    operators.Reports.buildNameMap(s, defaultFilteredDim(s)).value.toSeq
-      .map { case ((g, v), n) => (g, v, n) }
-      .toDF("gene_key", "var_id", "civic_variant")
+    val dim = defaultFilteredDim(s)
+    operators.Reports.drugTargets(Pipeline.run(s).as[operators.Annotation],
+      operators.Reports.predEntriesTable(dim, Pipeline.defaultCt),
+      operators.Reports.nameTable(dim))
   }
 
   /** Relations Verify writes to `<outDir>/_rel/<name>` so the oracle
@@ -284,9 +262,13 @@ object SparkEntry {
     "ss_versioned_ann" -> ((s, _) => ssVersionedAnn(s)
       .select(col("conv_id"), col("turn_idx"), col("epoch"), col("highest_tier"))),
     "video_frames" -> ((s, _) => videoFrames(s)),
-    "renders" -> ((s, _) => rendersDF(s)),
-    "pred_entries" -> ((s, _) => predEntriesDF(s)),
-    "var_names" -> ((s, _) => varNamesDF(s)),
+    // the dimension-side tables of q23/q24, so the oracle re-derives
+    // the output-assembly and drug-target joins cross-engine
+    "renders" -> ((s, _) => operators.OutputAssembly.renderTable(
+      defaultFilteredDim(s), Pipeline.defaultCt).toDF()),
+    "pred_entries" -> ((s, _) => operators.Reports.predEntriesTable(
+      defaultFilteredDim(s), Pipeline.defaultCt)),
+    "var_names" -> ((s, _) => operators.Reports.nameTable(defaultFilteredDim(s))),
     "support_table" -> ((s, _) => operators.DimShuffle.supportTable(
       defaultFilteredDim(s), Pipeline.defaultCt)),
     "bpe_stages" -> ((s, dir) => bpeModel(s, dir).stagesDf(s)),
@@ -549,22 +531,11 @@ object SparkEntry {
         .groupBy(col("highest_tier")).agg(count(lit(1)).as("n"))
         .orderBy(col("highest_tier"))
     }),
-    "q23_output_table" -> ((s, _) => {
-      import s.implicits._
-      val renders = operators.OutputAssembly.buildRenders(
-        s, defaultFilteredDim(s), Pipeline.defaultCt)
-      operators.OutputAssembly.writeMatchTable(
-        Pipeline.run(s).as[operators.Annotation], renders)
-        .orderBy(col("conv_id"), col("turn_idx"), col("tier"))
-    }),
-    "q24_drug_targets" -> ((s, _) => {
-      import s.implicits._
-      val (filtered, collected) = q24Collected(s)
-      val pred = s.sparkContext.broadcast(operators.Reports.buildPredEntries(collected))
-      val names = operators.Reports.buildNameMap(s, filtered)
-      operators.Reports.drugTargets(
-        Pipeline.run(s).as[operators.Annotation], pred, names)
-    }),
+    // q23 and q58 run one plan, outputTable, as do q24 and q64 with
+    // drugTargetsReport: each pair keeps both names and shares one
+    // oracle SQL
+    "q23_output_table" -> ((s, _) => outputTable(s)),
+    "q24_drug_targets" -> ((s, _) => drugTargetsReport(s)),
     "q36_jaccard_exact" -> ((s, dir) => {
       // EXACT n-gram Jaccard near-dup (inverted shingle index, no
       // hashing approximation) — the exact counterpart of q14. The
@@ -932,28 +903,10 @@ object SparkEntry {
       operators.CohortStats.perConversation(Pipeline.run(s))
         .orderBy(col("conv_id"))
     }),
-    "q58_output_shuffle" -> ((s, _) => {
-      import s.implicits._
-      // SHUFFLE-regime writeMatchTable: renders joined on the variant
-      // key instead of broadcast — must equal q23's output
-      // row-for-row, so it shares q23's oracle SQL
-      operators.OutputAssembly.writeMatchTableShuffle(
-        Pipeline.run(s).as[operators.Annotation],
-        operators.OutputAssembly.buildRendersDist(
-          defaultFilteredDim(s), Pipeline.defaultCt))
-        .orderBy(col("conv_id"), col("turn_idx"), col("tier"))
-    }),
-    "q64_drug_targets_shuffle" -> ((s, _) => {
-      import s.implicits._
-      // SHUFFLE-regime drug-targets report: the PREDICTIVE-entry and
-      // variant-name lookups run as distributed (gene_key, var_id)
-      // equi-joins instead of driver-collected broadcast maps (forced
-      // over-threshold) — must equal q24's report row-for-row, so it
-      // shares q24's oracle
-      operators.Reports.drugTargetsAuto(s,
-        Pipeline.run(s).as[operators.Annotation], defaultFilteredDim(s),
-        Pipeline.defaultCt, maxBroadcastRows = 10)
-    }),
+    // q23's and q24's plans (outputTable, drugTargetsReport) under
+    // their second names; each pair shares one oracle SQL
+    "q58_output_shuffle" -> ((s, _) => outputTable(s)),
+    "q64_drug_targets_shuffle" -> ((s, _) => drugTargetsReport(s)),
     "q68_gopher_rules" -> ((s, dir) => {
       // the published Gopher document-quality rules as named columns +
       // the composed keep verdict; planted violators exercise every
@@ -1424,13 +1377,13 @@ object SparkEntry {
     }),
     "q67_reprocess" -> ((s, _) => {
       import s.implicits._
-      // A2 coarse consensus across all annotated rows, via the
-      // SHUFFLE dual (supportTable joins — no broadcast index); the
-      // oracle re-derives every vote from the dumped annotation +
-      // support relations, including the CASE-expressible majority
+      // A2 coarse consensus across all annotated rows, via
+      // supportTable joins (no broadcast index); the oracle
+      // re-derives every vote from the dumped annotation + support
+      // relations, including the CASE-expressible majority
       // rule, so the report is value-checked cross-engine for the
       // first time (it was tests/parity-only before)
-      operators.Reports.reprocessAcrossDist(
+      operators.Reports.reprocessAcross(
           Pipeline.run(s).as[operators.Annotation],
           operators.DimShuffle.supportTable(defaultFilteredDim(s),
             Pipeline.defaultCt))

@@ -79,18 +79,7 @@ final case class MatchResult(
     tier_1b: Seq[String],
     tier_2: Seq[String],
     tier_3: Seq[String],
-    tier_4: Boolean) {
-
-  /** Highest non-empty tier label, hierarchy 1>1b>2>3>4
-    * (reference: match.py:981-990).
-    */
-  def highestTier: String =
-    if (tier_1.nonEmpty) "tier_1"
-    else if (tier_1b.nonEmpty) "tier_1b"
-    else if (tier_2.nonEmpty) "tier_2"
-    else if (tier_3.nonEmpty) "tier_3"
-    else "tier_4"
-}
+    tier_4: Boolean)
 
 /** One consensus drug-support annotation for a (record, tier)
   * (reference: match.py:1353-1506). Rendered as "DRUG:CT:RESULT".

@@ -137,8 +137,6 @@ object BpeTrain {
       { import sp.implicits._; merges.toDF() }
     def stagesDf(sp: SparkSession): DataFrame =
       { import sp.implicits._; stages.toDF() }
-    def segmentsDf(sp: SparkSession): DataFrame =
-      { import sp.implicits._; segments.toDF() }
   }
 
   /** Train `nMerges` merges over the corpus; stop early when the best

@@ -46,7 +46,6 @@ final case class GeneDim(
 
 final case class DimIndex(genes: Map[String, GeneDim]) {
   def nGenes: Int = genes.size
-  def nVariants: Int = genes.valuesIterator.map(_.varIds.length).sum
 }
 
 object DimIndex {

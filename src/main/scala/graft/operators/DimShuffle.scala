@@ -20,18 +20,10 @@ import graft.functions.Nomenclature
   */
 object DimShuffle {
 
-  /** The dimension row count above which every regime selector
-    * (`annotateAuto`, `OutputAssembly.writeMatchTableAuto`,
-    * `Reports.drugTargetsAuto`) leaves the broadcast path.
+  /** The dimension row count above which `annotateAuto`, the one
+    * regime selector, leaves the broadcast path.
     */
   val MaxBroadcastRows: Long = 500000
-
-  /** Shared regime probe (used by all three selectors, so they can
-    * never disagree about which regime a dimension is in): a
-    * `limit(n+1).count()` early-out — never scans past the threshold.
-    */
-  def overBroadcastThreshold(dim: DataFrame, maxRows: Long): Boolean =
-    dim.limit((maxRows + 1).min(Int.MaxValue).toInt).count() > maxRows
 
   /** Two-regime annotation split, decided by ONE probe:
     *
@@ -40,6 +32,9 @@ object DimShuffle {
     *     on the fact stream, the 10^12-turn default;
     *  2. otherwise the `MatchShuffle` equi-join path — tier matching
     *     AND consensus as distributed joins, nothing collected.
+    *
+    * The probe is a `limit(n+1).count()` early-out — it never scans
+    * past the threshold.
     *
     * PRECONDITION (regime 2): `turns` must be unique per (conv_id,
     * turn_idx), see `MatchShuffle.annotate`; regime 1 annotates every
@@ -50,7 +45,7 @@ object DimShuffle {
                    ctCfg: CtConfig,
                    selectCt: Either[String, Seq[String]] = Left("highest"),
                    maxBroadcastRows: Long = MaxBroadcastRows): Dataset[Annotation] =
-    if (overBroadcastThreshold(dim, maxBroadcastRows))
+    if (dim.limit((maxBroadcastRows + 1).min(Int.MaxValue).toInt).count() > maxBroadcastRows)
       MatchShuffle.annotate(spark, turns, dim, ctCfg, selectCt)
     else {
       val idx = DimIndex.build(spark, dim, ctCfg, selectCt)

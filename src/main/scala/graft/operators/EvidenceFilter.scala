@@ -166,11 +166,4 @@ object EvidenceFilter {
     filtered.withColumn("n_evidence_items",
       count(lit(1)).over(mpWin).cast("int"))
   }
-
-  /** Semi-join reduction to matched variant ids (reference applies this
-    * via filter_civic(var_id_in=matched_ids), match.py:936-939).
-    */
-  def keepVarIds(dim: DataFrame, matchedIds: DataFrame): DataFrame =
-    dim.join(matchedIds.select(col("var_id")).distinct(),
-      Seq("var_id"), "left_semi")
 }

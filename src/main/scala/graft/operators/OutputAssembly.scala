@@ -1,8 +1,7 @@
 package graft.operators
 
 import scala.collection.mutable
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.model.EvidenceRow
 
@@ -14,8 +13,9 @@ import graft.model.EvidenceRow
   *
   * Scale shape: every per-variant output fragment (scores, types,
   * evidence strings per type) depends ONLY on the dimension, so it is
-  * pre-rendered once per variant, broadcast, and stitched per turn
-  * map-side — the fact stream is never joined or shuffled.
+  * pre-rendered once per variant (`renderTable`) and joined to the
+  * matched variants on (gene_key, var_id) (`writeMatchTable`); Spark
+  * picks the join strategy (AQE broadcasts a small render table).
   *
   * Replicated reference quirks (parity path, SURVEY.md §7.3):
   *  - `write_drug` is effectively always true (the self-comparison
@@ -123,23 +123,10 @@ object OutputAssembly {
     out.toList
   }
 
-  /** Build the broadcastable per-variant render table from the
-    * (filtered, ct-annotated+selected) dimension rows.
+  /** Per-variant render assembly over one variant's
+    * (ct-annotated+selected) dimension rows — the pure function
+    * `renderTable` runs per variant group.
     */
-  def buildRenders(spark: SparkSession, dim: DataFrame, ctCfg: CtConfig,
-                   selectCt: Either[String, Seq[String]] = Left("highest"),
-                   writeCt: Boolean = false,
-                   writeComplete: Boolean = false): Broadcast[Map[(String, String), VarRender]] = {
-    import spark.implicits._
-    val ctSel = CtClassifier.select(CtClassifier.annotate(dim, ctCfg), selectCt)
-    val collected = ctSel
-      .select(struct(dim.columns.toIndexedSeq.map(col): _*).as("_1"), col("ct").as("_2"))
-      .as[(EvidenceRow, String)].collect()
-    spark.sparkContext.broadcast(
-      buildRendersLocal(collected.toIndexedSeq, writeCt, writeComplete))
-  }
-
-  /** Driver-side assembly (dimension is broadcast-small). */
   def buildRendersLocal(rows: Seq[(EvidenceRow, String)], writeCt: Boolean,
                         writeComplete: Boolean): Map[(String, String), VarRender] = {
     val byVar = rows.groupBy { case (r, _) => (r.gene_key, r.var_id) }
@@ -177,9 +164,9 @@ object OutputAssembly {
     }
   }
 
-  /** Flat per-variant render row — the shuffle-join face of
-    * `VarRender` (evStrings flattened to one column per evidence type
-    * for a stable product encoding).
+  /** Flat per-variant render row — the table face of `VarRender`
+    * (evStrings flattened to one column per evidence type for a stable
+    * product encoding).
     */
   final case class RenderRow(
       gene_key: String, var_id: String,
@@ -187,17 +174,15 @@ object OutputAssembly {
       ev_predictive: Seq[String], ev_diagnostic: Seq[String],
       ev_prognostic: Seq[String], ev_predisposing: Seq[String])
 
-  /** DISTRIBUTED render table for the over-broadcast-threshold regime:
-    * the same per-variant pure function as `buildRendersLocal`, run
-    * inside `groupByKey((gene, var)).mapGroups` so the dimension is
-    * never collected — one shuffle on the variant key, output bounded
-    * by the variant count. Row-for-row identical to the broadcast
-    * table (DimShuffleSpec pins it).
+  /** Per-variant render table: `buildRendersLocal` run inside
+    * `groupByKey((gene, var)).mapGroups` so the dimension is never
+    * collected — one shuffle on the variant key, output bounded by
+    * the variant count.
     */
-  def buildRendersDist(dim: DataFrame, ctCfg: CtConfig,
-                       selectCt: Either[String, Seq[String]] = Left("highest"),
-                       writeCt: Boolean = false,
-                       writeComplete: Boolean = false): Dataset[RenderRow] = {
+  def renderTable(dim: DataFrame, ctCfg: CtConfig,
+                  selectCt: Either[String, Seq[String]] = Left("highest"),
+                  writeCt: Boolean = false,
+                  writeComplete: Boolean = false): Dataset[RenderRow] = {
     import dim.sparkSession.implicits._
     val ctSel = CtClassifier.select(CtClassifier.annotate(dim, ctCfg), selectCt)
     ctSel
@@ -215,72 +200,18 @@ object OutputAssembly {
       }
   }
 
-  /** One output row per (annotated turn, non-empty tier) — the
-    * denormalized table write_match produces; map-only over the
-    * annotation stream with broadcast renders.
-    */
   private val specialCases = MatchKernel.TierSentinels
 
-  def writeMatchTable(ann: Dataset[Annotation],
-                      bc: Broadcast[Map[(String, String), VarRender]],
-                      writeSupport: Boolean = true): DataFrame = {
-    import ann.sparkSession.implicits._
-    ann.mapPartitions { it =>
-      val renders = bc.value
-      it.flatMap { a =>
-        val tiers = Seq(
-          ("tier_1", a.tier_1, a.ds_tier_1), ("tier_1b", a.tier_1b, a.ds_tier_1b),
-          ("tier_2", a.tier_2, a.ds_tier_2), ("tier_3", a.tier_3, a.ds_tier_3))
-        val rowsOut = tiers.flatMap { case (tier, matched, ds) =>
-          if (matched.isEmpty) None
-          else {
-            val scores = mutable.ArrayBuffer.empty[String]
-            val types = mutable.ArrayBuffer.empty[String]
-            val evs = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[String]]
-            for (varId <- matched if !specialCases.contains(varId.toUpperCase);
-                 r <- renders.get((a.gene_key, varId))) {
-              scores ++= r.scores
-              types += r.typesString
-              for (et <- sortedEvidenceTypes; s <- r.evStrings.getOrElse(et, Nil))
-                evs.getOrElseUpdate(et, mutable.ArrayBuffer.empty) += s
-            }
-            def dot(xs: Seq[String]) = if (xs.isEmpty) "." else xs.mkString(";")
-            Some((a.conv_id, a.turn_idx, a.gene_key, a.data_type,
-              tier.stripPrefix("tier_"),
-              dot(scores.toSeq), dot(types.toSeq),
-              if (writeSupport) dot(ds.map(_.toUpperCase)) else ".",
-              dot(evs.getOrElse("PREDICTIVE", Nil).toSeq),
-              dot(evs.getOrElse("DIAGNOSTIC", Nil).toSeq),
-              dot(evs.getOrElse("PROGNOSTIC", Nil).toSeq),
-              dot(evs.getOrElse("PREDISPOSING", Nil).toSeq)))
-          }
-        }
-        // tier_4 rows: all annotation columns empty (write_match:624-630)
-        val t4 =
-          if (a.tier_4)
-            Seq((a.conv_id, a.turn_idx, a.gene_key, a.data_type, "4",
-              ".", ".", ".", ".", ".", ".", "."))
-          else Nil
-        rowsOut ++ t4
-      }
-    }.toDF("conv_id", "turn_idx", "gene_key", "data_type", "tier",
-      "civic_scores", "civic_var_types", "civic_drug_support",
-      "civic_predictive", "civic_diagnostic", "civic_prognostic",
-      "civic_predisposing")
-  }
-
-  /** Shuffle-regime `writeMatchTable`: fragments come from a join
-    * against the DISTRIBUTED render table instead of a broadcast map —
-    * the path for a dimension too large to collect. Shape:
-    * annotations explode to (turn, tier, position, var_id) rows
-    * (bounded by matched variants per turn), one shuffle join on the
-    * variant key attaches render fragments, and a per-(turn, tier)
-    * sorted re-aggregation stitches them back in matched-list order.
-    * Output rows equal the broadcast path's exactly (DimShuffleSpec).
+  /** One output row per (annotated turn, non-empty tier) — the
+    * denormalized table write_match produces. Annotations explode to
+    * (turn, tier, position, var_id) rows (bounded by matched variants
+    * per turn), one join on the variant key attaches render fragments
+    * from `renderTable`, and a per-(turn, tier) sorted re-aggregation
+    * stitches them back in matched-list order.
     */
-  def writeMatchTableShuffle(ann: Dataset[Annotation],
-                             renders: Dataset[RenderRow],
-                             writeSupport: Boolean = true): DataFrame = {
+  def writeMatchTable(ann: Dataset[Annotation],
+                      renders: Dataset[RenderRow],
+                      writeSupport: Boolean = true): DataFrame = {
     import ann.sparkSession.implicits._
     // one row per (turn, non-empty tier), carrying the ORDERED
     // non-special variant list + the tier's drug-support strings
@@ -330,29 +261,5 @@ object OutputAssembly {
       dotJoin(flat("ev_diagnostic")).as("civic_diagnostic"),
       dotJoin(flat("ev_prognostic")).as("civic_prognostic"),
       dotJoin(flat("ev_predisposing")).as("civic_predisposing"))
-  }
-
-  /** Regime selector, mirroring `VersionedDim`'s split: broadcast
-    * renders while the dimension fits the driver, shuffle-join renders
-    * beyond. The probe is `DimShuffle.overBroadcastThreshold` — shared
-    * with `annotateAuto`, so the annotation and output-assembly paths
-    * always agree on the regime.
-    */
-  def writeMatchTableAuto(ann: Dataset[Annotation], dim: DataFrame,
-                          ctCfg: CtConfig,
-                          selectCt: Either[String, Seq[String]] = Left("highest"),
-                          writeCt: Boolean = false,
-                          writeComplete: Boolean = false,
-                          writeSupport: Boolean = true,
-                          maxBroadcastRows: Long = DimShuffle.MaxBroadcastRows): DataFrame = {
-    val over = DimShuffle.overBroadcastThreshold(dim, maxBroadcastRows)
-    if (over)
-      writeMatchTableShuffle(ann,
-        buildRendersDist(dim, ctCfg, selectCt, writeCt, writeComplete),
-        writeSupport)
-    else
-      writeMatchTable(ann,
-        buildRenders(dim.sparkSession, dim, ctCfg, selectCt, writeCt, writeComplete),
-        writeSupport)
   }
 }

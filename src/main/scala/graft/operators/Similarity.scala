@@ -334,12 +334,4 @@ object Similarity {
       .select(col("id"), col("cell"), col("capped"),
         col("n_smaller_dups"), col("keep"))
   }
-
-  /** One-call SemDeDup: fit + assign + verdicts. */
-  def semDedup(corpus: DataFrame, idCol: String, vecCol: String,
-               tau: Double, nClusters: Int = 16, seed: Long = 7L,
-               maxFitRows: Int = 100000, maxCell: Int = 1000000): DataFrame =
-    semDedupVerdicts(
-      semDedupCells(corpus, idCol, vecCol, nClusters, seed, maxFitRows),
-      corpus, idCol, vecCol, tau, maxCell)
 }

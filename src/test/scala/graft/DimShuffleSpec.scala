@@ -5,13 +5,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators._
 import graft.sources.Synth
 
-/** Broadcast-vs-shuffle regime parity: the over-threshold dimension
-  * paths (`annotateAuto`'s `MatchShuffle` route with shuffle-derived
-  * consensus `ds_tier_*`, shuffle-joined output renders and drug
-  * targets) must reproduce the broadcast kernel's output row-for-row.
-  * The dimension here is over-threshold by FORCING a tiny
-  * `maxBroadcastRows` — the split logic, not the absolute size, is
-  * what's under test.
+/** Broadcast-vs-relational parity: `annotateAuto`'s over-threshold
+  * `MatchShuffle` route (shuffle-derived consensus `ds_tier_*`) must
+  * reproduce the broadcast kernel's output row-for-row, and the
+  * relational output table, drug-targets report and coarse consensus
+  * must reproduce the driver-collected broadcast forms kept in
+  * `BroadcastReports`. The annotation dimension is over-threshold by
+  * FORCING a tiny `maxBroadcastRows` — the split logic, not the
+  * absolute size, is what's under test.
   */
 class DimShuffleSpec extends AnyFunSuite {
 
@@ -68,8 +69,8 @@ class DimShuffleSpec extends AnyFunSuite {
   }
 
   test("distributed render table equals the broadcast render map") {
-    val bcRenders = OutputAssembly.buildRenders(spark, dim, Pipeline.defaultCt)
-    val dist = OutputAssembly.buildRendersDist(dim, Pipeline.defaultCt)
+    val bcRenders = BroadcastReports.buildRenders(spark, dim, Pipeline.defaultCt)
+    val dist = OutputAssembly.renderTable(dim, Pipeline.defaultCt)
       .collect().map(r => (r.gene_key, r.var_id) -> r).toMap
     assert(dist.keySet == bcRenders.value.keySet)
     for ((k, vr) <- bcRenders.value) {
@@ -91,10 +92,10 @@ class DimShuffleSpec extends AnyFunSuite {
       .select(struct(dim.columns.toIndexedSeq.map(col): _*).as("_1"),
         col("ct").as("_2"))
       .as[(graft.model.EvidenceRow, String)].collect().toSeq
-    val want = Reports.buildPredEntries(collected)
+    val want = BroadcastReports.buildPredEntries(collected)
     val got = Reports.predEntriesTable(dim, Pipeline.defaultCt).collect()
       .map(r => ((r.getString(0), r.getString(1)),
-        Reports.PredEntry(r.getString(2), r.getString(3), r.getString(4),
+        BroadcastReports.PredEntry(r.getString(2), r.getString(3), r.getString(4),
           r.getString(5), r.getInt(6))))
       .groupBy(_._1)
       .map { case (k, es) => k -> es.map(_._2).sortBy(_.entryIdx).toList }
@@ -117,26 +118,16 @@ class DimShuffleSpec extends AnyFunSuite {
       .select(struct(dim.columns.toIndexedSeq.map(col): _*).as("_1"),
         col("ct").as("_2"))
       .as[(graft.model.EvidenceRow, String)].collect().toSeq
-    val want = Reports.drugTargets(ann,
-        spark.sparkContext.broadcast(Reports.buildPredEntries(collected)),
-        Reports.buildNameMap(spark, dim))
+    val want = BroadcastReports.drugTargets(ann,
+        spark.sparkContext.broadcast(BroadcastReports.buildPredEntries(collected)),
+        BroadcastReports.buildNameMap(spark, dim))
       .collect().map(_.toString).sorted.toSeq
     assert(want.nonEmpty)
-    val got = Reports.drugTargetsDist(ann,
+    val got = Reports.drugTargets(ann,
         Reports.predEntriesTable(dim, Pipeline.defaultCt),
         Reports.nameTable(dim))
       .collect().map(_.toString).sorted.toSeq
     assert(got == want)
-    // the auto selector picks the shuffle path at a forced threshold
-    val auto = Reports.drugTargetsAuto(spark, ann, dim, Pipeline.defaultCt,
-        maxBroadcastRows = 10)
-      .collect().map(_.toString).sorted.toSeq
-    assert(auto == want)
-    // and the under-threshold branch (broadcast maps collected FROM the
-    // distributed tables) matches too
-    val under = Reports.drugTargetsAuto(spark, ann, dim, Pipeline.defaultCt)
-      .collect().map(_.toString).sorted.toSeq
-    assert(under == want)
   }
 
   test("pred-entries parity holds on null evidence fields (render as 'null')") {
@@ -162,10 +153,10 @@ class DimShuffleSpec extends AnyFunSuite {
       .select(struct(d.columns.toIndexedSeq.map(col): _*).as("_1"),
         col("ct").as("_2"))
       .as[(graft.model.EvidenceRow, String)].collect().toSeq
-    val want = Reports.buildPredEntries(collected)
+    val want = BroadcastReports.buildPredEntries(collected)
     val got = Reports.predEntriesTable(d, Pipeline.defaultCt).collect()
       .map(r => ((r.getString(0), r.getString(1)),
-        Reports.PredEntry(r.getString(2), r.getString(3), r.getString(4),
+        BroadcastReports.PredEntry(r.getString(2), r.getString(3), r.getString(4),
           r.getString(5), r.getInt(6))))
       .groupBy(_._1)
       .map { case (k, es) => k -> es.map(_._2).sortBy(_.entryIdx).toList }
@@ -178,9 +169,9 @@ class DimShuffleSpec extends AnyFunSuite {
     val bcIdx = spark.sparkContext.broadcast(
       DimIndex.build(spark, dim, Pipeline.defaultCt))
     val ann = MatchKernel.annotate(turns, bcIdx)
-    val want = Reports.reprocessAcross(ann, bcIdx)
+    val want = BroadcastReports.reprocessAcross(ann, bcIdx)
     assert(want.nonEmpty)
-    val got = Reports.reprocessAcrossDist(ann,
+    val got = Reports.reprocessAcross(ann,
       DimShuffle.supportTable(dim, Pipeline.defaultCt))
     assert(got == want)
   }
@@ -189,17 +180,12 @@ class DimShuffleSpec extends AnyFunSuite {
     val bcIdx = spark.sparkContext.broadcast(
       DimIndex.build(spark, dim, Pipeline.defaultCt))
     val ann = MatchKernel.annotate(turns, bcIdx)
-    val want = OutputAssembly.writeMatchTable(ann,
-        OutputAssembly.buildRenders(spark, dim, Pipeline.defaultCt))
+    val want = BroadcastReports.writeMatchTable(ann,
+        BroadcastReports.buildRenders(spark, dim, Pipeline.defaultCt))
       .collect().map(_.toString).sorted.toSeq
-    val got = OutputAssembly.writeMatchTableShuffle(ann,
-        OutputAssembly.buildRendersDist(dim, Pipeline.defaultCt))
+    val got = OutputAssembly.writeMatchTable(ann,
+        OutputAssembly.renderTable(dim, Pipeline.defaultCt))
       .collect().map(_.toString).sorted.toSeq
     assert(got == want)
-    // and the auto selector picks the shuffle path over-threshold
-    val auto = OutputAssembly.writeMatchTableAuto(ann, dim,
-        Pipeline.defaultCt, maxBroadcastRows = 10)
-      .collect().map(_.toString).sorted.toSeq
-    assert(auto == want)
   }
 }

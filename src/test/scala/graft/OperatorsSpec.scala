@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.model.{EvidenceRow, Turn}
+import graft.model.Turn
 import graft.operators._
 import graft.sources.{Synth, TsvReader}
 
@@ -226,10 +226,9 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("S6/P1-P3: output assembly renders the reference string formats") {
-    import spark.implicits._
     val dim = Synth.evidenceDim(spark, 12, 42L).toDF()
     val filtered = EvidenceFilter(dim, Pipeline.defaultFilter)
-    val renders = OutputAssembly.buildRenders(spark, filtered, Pipeline.defaultCt)
+    val renders = OutputAssembly.renderTable(filtered, Pipeline.defaultCt)
     val out = OutputAssembly.writeMatchTable(ann(turnCfg), renders).collect()
     assert(out.nonEmpty)
     // every annotated turn with matches yields >=1 row; tier_4 rows all-dots
@@ -253,16 +252,10 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("S7/A3: drug-targets report ranks drugs by distinct gene count") {
-    import spark.implicits._
     val dim = Synth.evidenceDim(spark, 12, 42L).toDF()
     val filtered = EvidenceFilter(dim, Pipeline.defaultFilter)
-    val ctSel = CtClassifier.select(
-      CtClassifier.annotate(filtered, Pipeline.defaultCt), Left("highest"))
-    val collected = ctSel
-      .select(struct(filtered.columns.map(col): _*).as("_1"), col("ct").as("_2"))
-      .as[(EvidenceRow, String)].collect()
-    val pred = spark.sparkContext.broadcast(Reports.buildPredEntries(collected))
-    val names = Reports.buildNameMap(spark, filtered)
+    val pred = Reports.predEntriesTable(filtered, Pipeline.defaultCt)
+    val names = Reports.nameTable(filtered)
     val dt = Reports.drugTargets(ann(turnCfg), pred, names).collect()
     assert(dt.nonEmpty)
     // sorted by n_genes desc
@@ -276,7 +269,10 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("A2: cross-variant consensus emits counts and matches per-row sums") {
     val a = ann(turnCfg.copy(nConvs = 10))
-    val got = Reports.reprocessAcross(a, bc)
+    // the support counts of the dimension `bc` indexes
+    val dim = EvidenceFilter(Synth.evidenceDim(spark, 12, Pipeline.DefaultSeed).toDF(),
+      Pipeline.defaultFilter)
+    val got = Reports.reprocessAcross(a, DimShuffle.supportTable(dim, Pipeline.defaultCt))
     assert(got.nonEmpty)
     val re = """.+:(CT|GT|NCT):CIVIC_(SUPPORT|RESISTANCE|CONFLICT|UNKNOWN):\d+\|\d+\|\d+\|\d+""".r
     for (s <- got) assert(re.findFirstIn(s).isDefined, s"bad reprocess string: $s")

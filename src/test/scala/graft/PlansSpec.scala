@@ -3,12 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.SkewAgg
 import graft.plans.GraftFunctions
-import graft.sources.Synth
 
-/** Custom Catalyst expression (codegen path + SQL registration) and
-  * salted skew aggregation equivalence.
+/** Custom Catalyst expressions: the codegen path, SQL registration,
+  * and parity of the native text expressions with their Column forms.
   */
 class PlansSpec extends AnyFunSuite {
 
@@ -48,38 +46,6 @@ class PlansSpec extends AnyFunSuite {
     // "*(n)" marks operators inside a WholeStageCodegen stage
     assert(plan.contains("*(1) Project"), plan)
     assert(!plan.contains("ScalaUDF"), plan)
-  }
-
-  test("salted aggregation equals direct groupBy on skewed data") {
-    import spark.implicits._
-    val cfg = Synth.TurnGenConfig(nConvs = 20, turnsPerConv = 10,
-      nGenes = 12, hotConvs = 2, hotMult = 15)
-    val ann = Pipeline.annotate(
-      spark.createDataset(Synth.transcriptRows(cfg)),
-      Pipeline.cachedIndex(spark, 12)).toDF()
-
-    val salted = SkewAgg.saltedTierCounts(ann, salts = 8)
-      .collect().map(r => r.getString(0) ->
-        (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toMap
-    val direct = ann.groupBy(col("conv_id"))
-      .agg(
-        count(when(col("highest_tier") === "tier_1", 1)).as("a"),
-        count(when(col("highest_tier") === "tier_1b", 1)).as("b"),
-        count(when(col("highest_tier") === "tier_2", 1)).as("c"),
-        count(when(col("highest_tier") === "tier_3", 1)).as("d"),
-        count(when(col("highest_tier") === "tier_4", 1)).as("e"))
-      .collect().map(r => r.getString(0) ->
-        (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toMap
-    assert(salted == direct)
-    // hot conversations really are hot in the fixture
-    val sizes = ann.groupBy("conv_id").count().collect().map(_.getLong(1))
-    assert(sizes.max >= 10 * sizes.min)
-
-    val lists = SkewAgg.saltedTurnList(ann, salts = 8).collect()
-      .map(r => r.getString(0) -> r.getSeq[Int](1)).toMap
-    for ((conv, idxs) <- lists)
-      assert(idxs == idxs.sorted, s"unsorted salted list for $conv")
-    assert(lists.values.map(_.size).sum == ann.count())
   }
 
   test("native shingles match the declarative form set-for-set") {
