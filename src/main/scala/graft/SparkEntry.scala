@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Synth
@@ -44,21 +45,33 @@ object SparkEntry {
     operators.Multimodal.sampleFrames(
       operators.Multimodal.mediaTable(s, 300), stride = 5)
 
-  /** Event-time-versioned dimension annotation (q31 base). */
-  def versionedAnn(s: SparkSession): DataFrame = {
-    import s.implicits._
-    val epoch0 = 1700000000000L
-    val epoch1 = epoch0 + 50L * 3600000L // v2 cuts in mid-stream
+  private val Epoch0 = 1700000000000L
+  private val Epoch1 = Epoch0 + 50L * 3600000L // v2 cuts in mid-stream
+
+  /** The two-epoch versioned dimension index and the transcripts q31
+    * and q34 annotate against it.
+    */
+  private def versionedInputs(s: SparkSession)
+      : (Broadcast[operators.VersionedDimIndex], Dataset[model.Turn]) = {
     val bc = operators.VersionedDim.build(s, Seq(
-      epoch0 -> sources.Synth.evidenceDim(s, 20, Pipeline.DefaultSeed).toDF(),
-      epoch1 -> sources.Synth.evidenceDim(s, Pipeline.DefaultGenes,
+      Epoch0 -> sources.Synth.evidenceDim(s, 20, Pipeline.DefaultSeed).toDF(),
+      Epoch1 -> sources.Synth.evidenceDim(s, Pipeline.DefaultGenes,
         Pipeline.DefaultSeed).toDF()), Pipeline.defaultCt)
     val turns = sources.Synth.transcripts(s,
       sources.Synth.TurnGenConfig(nConvs = 100, turnsPerConv = 10,
-        nGenes = Pipeline.DefaultGenes, baseTs = epoch0))
-    operators.VersionedDim.annotate(turns, bc).toDF()
-      .withColumn("epoch", when(col("ts") < to_timestamp(lit(
-        new java.sql.Timestamp(epoch1))), "v1").otherwise("v2"))
+        nGenes = Pipeline.DefaultGenes, baseTs = Epoch0))
+    (bc, turns)
+  }
+
+  /** Annotations labelled with the dimension version their turn fell in. */
+  private def withEpoch(ann: Dataset[operators.Annotation]): DataFrame =
+    ann.toDF().withColumn("epoch", when(col("ts") < to_timestamp(lit(
+      new java.sql.Timestamp(Epoch1))), "v1").otherwise("v2"))
+
+  /** Event-time-versioned dimension annotation (q31 base). */
+  def versionedAnn(s: SparkSession): DataFrame = {
+    val (bc, turns) = versionedInputs(s)
+    withEpoch(operators.VersionedDim.annotate(turns, bc))
   }
 
   /** Stream-stream SCD-join annotation (q34 base): the same versioned
@@ -68,23 +81,13 @@ object SparkEntry {
     */
   def ssVersionedAnn(s: SparkSession): DataFrame = {
     import s.implicits._
-    val epoch0 = 1700000000000L
-    val epoch1 = epoch0 + 50L * 3600000L
-    val bc = operators.VersionedDim.build(s, Seq(
-      epoch0 -> sources.Synth.evidenceDim(s, 20, Pipeline.DefaultSeed).toDF(),
-      epoch1 -> sources.Synth.evidenceDim(s, Pipeline.DefaultGenes,
-        Pipeline.DefaultSeed).toDF()), Pipeline.defaultCt)
-    val turns = sources.Synth.transcripts(s,
-      sources.Synth.TurnGenConfig(nConvs = 100, turnsPerConv = 10,
-        nGenes = Pipeline.DefaultGenes, baseTs = epoch0))
+    val (bc, turns) = versionedInputs(s)
     // version rows must cover the generator's unknown-gene tail too —
     // unmatched genes still join and resolve to tier_4 in the kernel
     val genes = (0 until 60).map(g => sources.Synth.geneName(g.toLong))
     val versions = s.createDataset(operators.VersionedDim.versionRows(
-      Seq(epoch0, epoch1), genes, epoch0 + 10000L * 3600000L))
-    operators.VersionedDim.annotateStreamStream(turns, versions, bc).toDF()
-      .withColumn("epoch", when(col("ts") < to_timestamp(lit(
-        new java.sql.Timestamp(epoch1))), "v1").otherwise("v2"))
+      Seq(Epoch0, Epoch1), genes, Epoch0 + 10000L * 3600000L))
+    withEpoch(operators.VersionedDim.annotateStreamStream(turns, versions, bc))
   }
 
   /** SNV protein strings from the synthetic transcripts (q25 base). */
@@ -238,6 +241,32 @@ object SparkEntry {
       operators.Reports.nameTable(dim))
   }
 
+  /** The annotation columns q21, q59 and q66 compare: tier and
+    * consensus lists `;`-joined, ordered by turn.
+    */
+  private def annotationColumns(ann: DataFrame): DataFrame =
+    ann.select(col("conv_id"), col("turn_idx"), col("gene_key"),
+      col("data_type"), col("highest_tier"),
+      concat_ws(";", col("tier_1")).as("tier_1"),
+      concat_ws(";", col("tier_1b")).as("tier_1b"),
+      concat_ws(";", col("tier_2")).as("tier_2"),
+      concat_ws(";", col("tier_3")).as("tier_3"),
+      col("tier_4"),
+      concat_ws(";", col("ds_tier_1")).as("ds_tier_1"))
+      .orderBy(col("conv_id"), col("turn_idx"))
+
+  /** The shuffle-regime annotations (q59, q66): tier matching runs as
+    * the explode + (gene_key, domain, string) equi-join and the
+    * consensus counts join per gene; nothing is collected.
+    */
+  private def shuffleAnnotations(s: SparkSession): DataFrame = {
+    val turns = sources.Synth.transcripts(s,
+      sources.Synth.TurnGenConfig(nConvs = 100, turnsPerConv = 10,
+        nGenes = Pipeline.DefaultGenes))
+    annotationColumns(operators.MatchShuffle.annotate(s, turns,
+      defaultFilteredDim(s), Pipeline.defaultCt).toDF())
+  }
+
   /** Relations Verify writes to `<outDir>/_rel/<name>` so the oracle
     * SQL can query engine-produced inputs cross-engine.
     */
@@ -269,7 +298,7 @@ object SparkEntry {
     "pred_entries" -> ((s, _) => operators.Reports.predEntriesTable(
       defaultFilteredDim(s), Pipeline.defaultCt)),
     "var_names" -> ((s, _) => operators.Reports.nameTable(defaultFilteredDim(s))),
-    "support_table" -> ((s, _) => operators.DimShuffle.supportTable(
+    "support_table" -> ((s, _) => operators.DimIndex.supportTable(
       defaultFilteredDim(s), Pipeline.defaultCt)),
     "bpe_stages" -> ((s, dir) => bpeModel(s, dir).stagesDf(s)),
     "bpe_seg_table" -> ((s, dir) => q77SegTable(s, dir)),
@@ -1385,64 +1414,17 @@ object SparkEntry {
       // first time (it was tests/parity-only before)
       operators.Reports.reprocessAcross(
           Pipeline.run(s).as[operators.Annotation],
-          operators.DimShuffle.supportTable(defaultFilteredDim(s),
+          operators.DimIndex.supportTable(defaultFilteredDim(s),
             Pipeline.defaultCt))
         .toDF("entry")
         .orderBy(col("entry"))
     }),
-    "q66_match_shuffle" -> ((s, _) => {
-      // shuffle regime (forced over-threshold): tier matching runs as
-      // the explode + (gene_key, domain, string) equi-join, the
-      // consensus counts join per gene; must equal q21's
-      // broadcast-kernel output row-for-row, so it shares q21's oracle
-      val turns = sources.Synth.transcripts(s,
-        sources.Synth.TurnGenConfig(nConvs = 100, turnsPerConv = 10,
-          nGenes = Pipeline.DefaultGenes))
-      operators.DimShuffle.annotateAuto(s, turns, defaultFilteredDim(s),
-          Pipeline.defaultCt, maxBroadcastRows = 5)
-        .toDF()
-        .select(col("conv_id"), col("turn_idx"), col("gene_key"),
-          col("data_type"), col("highest_tier"),
-          concat_ws(";", col("tier_1")).as("tier_1"),
-          concat_ws(";", col("tier_1b")).as("tier_1b"),
-          concat_ws(";", col("tier_2")).as("tier_2"),
-          concat_ws(";", col("tier_3")).as("tier_3"),
-          col("tier_4"),
-          concat_ws(";", col("ds_tier_1")).as("ds_tier_1"))
-        .orderBy(col("conv_id"), col("turn_idx"))
-    }),
-    "q59_ann_shuffle" -> ((s, _) => {
-      // shuffle regime at a second forced threshold: the same
-      // MatchShuffle join path as q66 — must equal q21's
-      // broadcast-kernel output, so it shares q21's oracle
-      val turns = sources.Synth.transcripts(s,
-        sources.Synth.TurnGenConfig(nConvs = 100, turnsPerConv = 10,
-          nGenes = Pipeline.DefaultGenes))
-      operators.DimShuffle.annotateAuto(s, turns, defaultFilteredDim(s),
-          Pipeline.defaultCt, maxBroadcastRows = 10)
-        .toDF()
-        .select(col("conv_id"), col("turn_idx"), col("gene_key"),
-          col("data_type"), col("highest_tier"),
-          concat_ws(";", col("tier_1")).as("tier_1"),
-          concat_ws(";", col("tier_1b")).as("tier_1b"),
-          concat_ws(";", col("tier_2")).as("tier_2"),
-          concat_ws(";", col("tier_3")).as("tier_3"),
-          col("tier_4"),
-          concat_ws(";", col("ds_tier_1")).as("ds_tier_1"))
-        .orderBy(col("conv_id"), col("turn_idx"))
-    }),
-    "q21_annotations" -> ((s, _) => {
-      Pipeline.run(s)
-        .select(col("conv_id"), col("turn_idx"), col("gene_key"),
-          col("data_type"), col("highest_tier"),
-          concat_ws(";", col("tier_1")).as("tier_1"),
-          concat_ws(";", col("tier_1b")).as("tier_1b"),
-          concat_ws(";", col("tier_2")).as("tier_2"),
-          concat_ws(";", col("tier_3")).as("tier_3"),
-          col("tier_4"),
-          concat_ws(";", col("ds_tier_1")).as("ds_tier_1"))
-        .orderBy(col("conv_id"), col("turn_idx"))
-    }))
+    // q59 and q66 run one plan, shuffleAnnotations, and share q21's
+    // oracle SQL: the shuffle regime must equal q21's broadcast-kernel
+    // output row-for-row
+    "q66_match_shuffle" -> ((s, _) => shuffleAnnotations(s)),
+    "q59_ann_shuffle" -> ((s, _) => shuffleAnnotations(s)),
+    "q21_annotations" -> ((s, _) => annotationColumns(Pipeline.run(s))))
 
   def oracleSql: Map[String, String] = oracleSqlBase ++ Map(
     // shuffle-regime paths must equal the broadcast paths row-for-row,

@@ -65,22 +65,6 @@ final case class EvidenceRow(
     variant_origin: String,
     rating: Option[Double])
 
-/** Tier-classification result for one input record (analog of the
-  * reference's `match_map` entry, match.py:568). Tier lists hold CIViC
-  * variant ids ordered by `dim_order`; `tier_4` is a flag as in the
-  * reference (gene absent from the dimension).
-  */
-final case class MatchResult(
-    conv_id: String,
-    turn_idx: Int,
-    gene_key: String,
-    data_type: String,
-    tier_1: Seq[String],
-    tier_1b: Seq[String],
-    tier_2: Seq[String],
-    tier_3: Seq[String],
-    tier_4: Boolean)
-
 /** One consensus drug-support annotation for a (record, tier)
   * (reference: match.py:1353-1506). Rendered as "DRUG:CT:RESULT".
   */

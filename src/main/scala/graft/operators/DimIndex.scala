@@ -48,6 +48,10 @@ final case class DimIndex(genes: Map[String, GeneDim]) {
   def nGenes: Int = genes.size
 }
 
+/** The dimension side of both annotation regimes: every relation the
+  * broadcast `build` collects is defined here once, and `MatchShuffle`
+  * and `Reports` read the same definitions distributed.
+  */
 object DimIndex {
 
   /** Per-variant derived index entries — THE single definition of the
@@ -78,6 +82,40 @@ object DimIndex {
       isExprRecord = Nomenclature.isExprRecordName(nameUpper))
   }
 
+  /** Variant-level records (gene_key, var_id, var_name, hgvs, pos):
+    * the first var_name and hgvs of each variant and its min
+    * dim_order. `pos` is unique per variant (dim_order is unique per
+    * dimension row) and sorts in scan order. `build` collects it,
+    * `MatchShuffle` keeps it distributed and `Reports.nameTable`
+    * projects it.
+    */
+  def variantRecords(dim: DataFrame): DataFrame =
+    dim.groupBy(col("gene_key"), col("var_id"))
+      .agg(first(col("var_name")).as("var_name"),
+        first(col("hgvs")).as("hgvs"),
+        min(col("dim_order")).as("pos"))
+
+  /** Consensus drug-support counts (gene_key, var_id, drug, ct, pos,
+    * neg, unk_b, unk_d): PREDICTIVE evidence only, ct-selected
+    * (reference: match.py:1420-1493). `build` collects it into the
+    * per-variant count vectors; `MatchShuffle` and
+    * `Reports.reprocessAcross` join it.
+    */
+  def supportTable(dim: DataFrame, ctCfg: CtConfig,
+                   selectCt: Either[String, Seq[String]] = Left("highest")): DataFrame = {
+    val ctSel = CtClassifier.select(CtClassifier.annotate(dim, ctCfg), selectCt)
+    val clsUdf = udf((d: String, s: String) => Nomenclature.drugSupportClass(d, s))
+    ctSel
+      .filter(col("evidence_type") === "PREDICTIVE")
+      .withColumn("_cls", clsUdf(col("direction"), col("significance")))
+      .groupBy(col("gene_key"), col("var_id"), col("drug"), col("ct"))
+      .agg(
+        count(when(col("_cls") === "POSITIVE", 1)).as("pos"),
+        count(when(col("_cls") === "NEGATIVE", 1)).as("neg"),
+        count(when(col("_cls") === "UNKNOWN_BLANK", 1)).as("unk_b"),
+        count(when(col("_cls") === "UNKNOWN_DNS", 1)).as("unk_d"))
+  }
+
   /** Build the index from a flat evidence DataFrame (EvidenceRow
     * schema). `dim` should already be evidence-filtered
     * (EvidenceFilter); ct annotation/selection happens here because the
@@ -86,20 +124,10 @@ object DimIndex {
   def build(spark: SparkSession, dim: DataFrame, ctCfg: CtConfig,
             selectCt: Either[String, Seq[String]] = Left("highest")): DimIndex = {
 
-    // variant-level records, ordered by first appearance in the scan
-    val variantRows = dim
-      .groupBy(col("gene_key"), col("var_id"))
-      .agg(first(col("var_name")).as("var_name"),
-        first(col("hgvs")).as("hgvs"),
-        min(col("dim_order")).as("var_order"))
-      .collect()
+    val variantRows = variantRecords(dim).collect()
 
-    // consensus support vectors per variant (PREDICTIVE only,
-    // ct-selected; reference: match.py:1420-1463). ONE definition of
-    // the aggregation feeds both regimes: this is the collected form
-    // of DimShuffle.supportTable, so broadcast-vs-shuffle parity
-    // (q59/DimShuffleSpec) cannot drift between two copies.
-    val supportRows = DimShuffle.supportTable(dim, ctCfg, selectCt).collect()
+    // consensus support vectors per variant
+    val supportRows = supportTable(dim, ctCfg, selectCt).collect()
 
     // (gene, var) -> (drug, ct) -> counts
     val supByVar = mutable.HashMap.empty[(String, String), mutable.HashMap[(String, String), Array[Long]]]
@@ -112,7 +140,7 @@ object DimIndex {
 
     val byGene = variantRows.groupBy(_.getString(0))
     val genes = byGene.map { case (gene, rows) =>
-      val ordered = rows.sortBy(_.getLong(4)) // var_order
+      val ordered = rows.sortBy(_.getLong(4)) // pos
       val n = ordered.length
       val varIds = new Array[String](n)
       val varNames = new Array[String](n)

@@ -23,13 +23,14 @@ import graft.model.{Cts, Turn}
   * (bounded by matches per turn) and one gene's records and support
   * counts per turn (bounded by the largest gene, the bound `GeneDim`
   * already assumes), so it survives any dimension size at the cost
-  * of fact-side exchanges. `DimShuffle.annotateAuto`
-  * picks it for any dimension over the broadcast threshold; output is
-  * row-for-row identical to the broadcast kernel (MatchShuffleSpec
-  * parity pin; the q59 and q66 oracles share q21's).
+  * of fact-side exchanges. The call site picks the regime: q59 and
+  * q66 call this path, every other annotation caller the kernel.
+  * Output is row-for-row identical to the broadcast kernel
+  * (MatchShuffleSpec parity pin; the q59 and q66 oracles share q21's).
   *
   * Drift discipline: the dimension side derives through
-  * `DimIndex.variantIndexEntries` and the turn side through
+  * `DimIndex.variantRecords`, `DimIndex.supportTable` and
+  * `DimIndex.variantIndexEntries`, and the turn side through
   * `MatchKernel.parse`/`MatchKernel.keyBits` — the SAME functions the
   * broadcast build and kernel use; only the per-turn tier and
   * consensus assembly is re-expressed sparsely (over matched positions instead of the dense
@@ -42,7 +43,7 @@ object MatchShuffle {
   final case class Hit(pos: Long, flags: Int, var_id: String, is_general: Boolean)
   /** One variant record of the turn's gene, for tier-3 fallbacks. */
   final case class Rec(pos: Long, var_id: String, is_cnv: Boolean, is_expr: Boolean)
-  /** One `DimShuffle.supportTable` row of the turn's gene. */
+  /** One `DimIndex.supportTable` row of the turn's gene. */
   final case class Sup(var_id: String, drug: String, ct: String,
                        pos: Long, neg: Long, unk_b: Long, unk_d: Long)
   /** A turn joined with its raw key hits and its gene's records and
@@ -92,20 +93,14 @@ object MatchShuffle {
     // read twice: the variant records and the support counts
     val dimP = graft.GraftContext.persistTracked(dim)
 
-    // 1. variant-level records — the same (first var_name/hgvs,
-    //    min dim_order) derivation DimIndex.build collects, kept
-    //    distributed. A variant's position is its min dim_order:
-    //    dim_order is unique per dimension row, so positions are
-    //    unique per variant and sort in the kernel's scan order.
-    val varMeta = graft.GraftContext.persistTracked(dimP
-      .groupBy(col("gene_key"), col("var_id"))
-      .agg(upper(first(col("var_name"))).as("var_name"),
-        first(col("hgvs")).as("hgvs"),
-        min(col("dim_order")).as("pos"))
+    // 1. variant-level records — the relation DimIndex.build
+    //    collects, kept distributed, with each variant's index entries
+    val varMeta = graft.GraftContext.persistTracked(DimIndex.variantRecords(dimP)
       .as[VariantRaw]
       .map { v =>
-        val e = DimIndex.variantIndexEntries(v.var_name, v.hgvs)
-        VariantMeta(v.gene_key, v.var_id, v.var_name, v.pos,
+        val name = v.var_name.toUpperCase
+        val e = DimIndex.variantIndexEntries(name, v.hgvs)
+        VariantMeta(v.gene_key, v.var_id, name, v.pos,
           e.snvStrings, e.exprStrings, e.isGeneral,
           e.isCnvRecord, e.isExprRecord, e.isExonCnv)
       })
@@ -124,7 +119,7 @@ object MatchShuffle {
     // type's tier-3 fallback) beside the gene's consensus counts — the
     // distributed GeneDim: both sides are hash-partitioned on the gene,
     // so the join adds no exchange
-    val sup = DimShuffle.supportTable(dimP, ctCfg, selectCt)
+    val sup = DimIndex.supportTable(dimP, ctCfg, selectCt)
       .groupBy(col("gene_key"))
       .agg(collect_list(struct(col("var_id"), col("drug"), col("ct"),
         col("pos"), col("neg"), col("unk_b"), col("unk_d"))).as("sup"))

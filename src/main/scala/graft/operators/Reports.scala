@@ -20,7 +20,7 @@ object Reports {
 
   /** A2: consensus recomputed ACROSS a chosen set of annotation rows —
     * the coarser-grouping vote (match.py:1509-1655), derived from
-    * `DimShuffle.supportTable` joins. Emits the long form
+    * `DimIndex.supportTable` joins. Emits the long form
     * "DRUG:CT:RESULT:#pos|#neg|#unk|#dns" (the reference includes
     * counts only in this variant, match.py:1652), sorted by the
     * "DRUG:CT:" prefix; the collect is the final (drug, ct)-vocabulary-
@@ -62,10 +62,11 @@ object Reports {
 
   private def ctRankUdf = udf((ct: String) => graft.model.Cts.rank(ct))
 
-  /** (gene_key, var_id) -> var_name (uppercased) table. */
+  /** (gene_key, var_id) -> var_name (uppercased) table, projected
+    * from `DimIndex.variantRecords`. */
   def nameTable(dim: DataFrame): DataFrame =
-    dim.groupBy(col("gene_key"), col("var_id"))
-      .agg(upper(first(col("var_name"))).as("civic_variant"))
+    DimIndex.variantRecords(dim).select(col("gene_key"), col("var_id"),
+      upper(col("var_name")).as("civic_variant"))
 
   /** PREDICTIVE-entry table: one row per
     * (gene_key, var_id, ct, disease, drug) with the reference's

@@ -782,18 +782,14 @@ object TextExprs {
   def registerAll(spark: SparkSession): Unit = {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "simhash64", exprs => SimHash64Expression(exprs.head), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig", exprs => MinHashSigExpression(exprs.head,
-        exprs(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"minhash_sig k must be an integer literal, got $other")
-        }), "internal")
     def intLit(e: Expression, what: String): Int = e match {
       case Literal(v: Int, IntegerType) => v
       case other => throw new IllegalArgumentException(
         s"$what must be an integer literal, got $other")
     }
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "minhash_sig", exprs => MinHashSigExpression(exprs.head,
+        intLit(exprs(1), "minhash_sig k")), "internal")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "langid", exprs => LangIdExpression(exprs.head), "internal")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
@@ -822,11 +818,7 @@ object TextExprs {
         intLit(exprs(1), "window_hashes k")), "internal")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "shingles_hashed", exprs => HashedShinglesExpression(exprs.head,
-        exprs(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"shingles_hashed n must be an integer literal, got $other")
-        }), "internal")
+        intLit(exprs(1), "shingles_hashed n")), "internal")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "bloom_any_contain", exprs => BloomAnyContainExpression(exprs.head,
         exprs(1) match {

@@ -5,14 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators._
 import graft.sources.Synth
 
-/** Broadcast-vs-relational parity: `annotateAuto`'s over-threshold
-  * `MatchShuffle` route (shuffle-derived consensus `ds_tier_*`) must
-  * reproduce the broadcast kernel's output row-for-row, and the
-  * relational output table, drug-targets report and coarse consensus
-  * must reproduce the driver-collected broadcast forms kept in
-  * `BroadcastReports`. The annotation dimension is over-threshold by
-  * FORCING a tiny `maxBroadcastRows` — the split logic, not the
-  * absolute size, is what's under test.
+/** Broadcast-vs-relational parity: `MatchShuffle.annotate`
+  * (shuffle-derived consensus `ds_tier_*`) must reproduce the
+  * broadcast kernel's output row-for-row, and the relational output
+  * table, drug-targets report and coarse consensus must reproduce the
+  * driver-collected broadcast forms kept in `BroadcastReports`. Both
+  * sides read the dimension through `DimIndex`'s definitions.
   */
 class DimShuffleSpec extends AnyFunSuite {
 
@@ -40,8 +38,7 @@ class DimShuffleSpec extends AnyFunSuite {
     val want = MatchKernel.annotate(turns, bcIdx)
       .collect().map(a => annKey(a) -> a).toMap
 
-    val got = DimShuffle.annotateAuto(spark, turns, dim, Pipeline.defaultCt,
-        maxBroadcastRows = 10) // force the over-threshold regime
+    val got = MatchShuffle.annotate(spark, turns, dim, Pipeline.defaultCt)
       .collect().map(a => annKey(a) -> a).toMap
 
     assert(got.keySet == want.keySet)
@@ -56,16 +53,6 @@ class DimShuffleSpec extends AnyFunSuite {
     assert(want.values.exists(_.ds_tier_2.nonEmpty))
     assert(want.values.exists(a =>
       a.ds_tier_3.nonEmpty || a.tier_3.exists(_.startsWith("NON_"))))
-  }
-
-  test("under-threshold annotateAuto stays on the broadcast path (same rows)") {
-    val bcIdx = spark.sparkContext.broadcast(
-      DimIndex.build(spark, dim, Pipeline.defaultCt))
-    val want = MatchKernel.annotate(turns, bcIdx)
-      .collect().map(a => annKey(a) -> a).toMap
-    val got = DimShuffle.annotateAuto(spark, turns, dim, Pipeline.defaultCt)
-      .collect().map(a => annKey(a) -> a).toMap
-    assert(got == want)
   }
 
   test("distributed render table equals the broadcast render map") {
@@ -172,7 +159,7 @@ class DimShuffleSpec extends AnyFunSuite {
     val want = BroadcastReports.reprocessAcross(ann, bcIdx)
     assert(want.nonEmpty)
     val got = Reports.reprocessAcross(ann,
-      DimShuffle.supportTable(dim, Pipeline.defaultCt))
+      DimIndex.supportTable(dim, Pipeline.defaultCt))
     assert(got == want)
   }
 

@@ -56,16 +56,6 @@ class MatchShuffleSpec extends AnyFunSuite {
     assert(vs.exists(_.ds_tier_1.nonEmpty), "no consensus coverage")
   }
 
-  test("annotateAuto routes to the full-shuffle regime at a forced index threshold") {
-    val bcIdx = spark.sparkContext.broadcast(
-      DimIndex.build(spark, dim, Pipeline.defaultCt))
-    val want = byKey(MatchKernel.annotate(turns, bcIdx).collect())
-    val got = byKey(DimShuffle.annotateAuto(spark, turns, dim,
-        Pipeline.defaultCt, maxBroadcastRows = 5)
-      .collect())
-    assert(got == want)
-  }
-
   // ---- crafted edge fixtures --------------------------------------
 
   private def evRow(gene: String, varId: String, name: String,

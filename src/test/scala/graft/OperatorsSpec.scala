@@ -272,7 +272,7 @@ class OperatorsSpec extends AnyFunSuite {
     // the support counts of the dimension `bc` indexes
     val dim = EvidenceFilter(Synth.evidenceDim(spark, 12, Pipeline.DefaultSeed).toDF(),
       Pipeline.defaultFilter)
-    val got = Reports.reprocessAcross(a, DimShuffle.supportTable(dim, Pipeline.defaultCt))
+    val got = Reports.reprocessAcross(a, DimIndex.supportTable(dim, Pipeline.defaultCt))
     assert(got.nonEmpty)
     val re = """.+:(CT|GT|NCT):CIVIC_(SUPPORT|RESISTANCE|CONFLICT|UNKNOWN):\d+\|\d+\|\d+\|\d+""".r
     for (s <- got) assert(re.findFirstIn(s).isDefined, s"bad reprocess string: $s")

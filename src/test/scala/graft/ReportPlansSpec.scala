@@ -6,10 +6,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The output table and the drug-targets report are one relational
-  * plan each: once the session's index exists, building their
-  * declared queries collects nothing and probes nothing, so it starts
-  * no Spark job — every job runs when the DataFrame is acted on.
+/** The output table, the drug-targets report and the shuffle-regime
+  * annotations are one relational plan each: once the session's index
+  * exists, building their declared queries collects nothing and probes
+  * nothing, so it starts no Spark job — every job runs when the
+  * DataFrame is acted on.
   */
 class ReportPlansSpec extends AnyFunSuite {
 
@@ -20,10 +21,10 @@ class ReportPlansSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private val reportQueries = Seq("q23_output_table", "q24_drug_targets",
-    "q58_output_shuffle", "q64_drug_targets_shuffle")
-
-  test("building the output-table and drug-targets queries starts no Spark job") {
+  /** The first line of each job started while building each query,
+    * after the session's index is built.
+    */
+  private def jobsWhileBuilding(queries: Seq[String]): Seq[(String, Seq[String])] = {
     val sc = spark.sparkContext
     Pipeline.cachedIndex(spark)
     val jobs = new ConcurrentLinkedQueue[String]()
@@ -42,24 +43,35 @@ class ReportPlansSpec extends AnyFunSuite {
       // marker jobs are the build's in between; the first marker fences
       // off the index build's events still queued for the listener
       markerJob("start")
-      for (name <- reportQueries) {
+      for (name <- queries) {
         SparkEntry.queries(name)(spark, "") // these queries read no table
         markerJob(name)
       }
-      val last = marker + reportQueries.last
+      val last = marker + queries.last
       val deadline = System.nanoTime() + 60.seconds.toNanos
       while (!jobs.toArray.exists(_.toString.startsWith(last)) && System.nanoTime() < deadline)
         Thread.sleep(20)
       val seen = jobs.toArray.map(_.toString).toSeq
       assert(seen.exists(_.startsWith(last)), "marker job never reached the listener")
-      val perQuery = reportQueries.map { name =>
+      queries.map { name =>
         val upTo = seen.indexWhere(_.startsWith(marker + name))
         val from = seen.lastIndexWhere(_.startsWith(marker), upTo - 1) + 1
         name -> seen.slice(from, upTo).map(_.linesIterator.next())
       }
-      assert(perQuery.forall(_._2.isEmpty), "jobs started while building: " +
-        perQuery.filter(_._2.nonEmpty).map { case (n, js) =>
-          s"$n: ${js.size} (${js.distinct.mkString(", ")})" }.mkString("; "))
     } finally sc.removeSparkListener(listener)
+  }
+
+  private def assertNoJobs(perQuery: Seq[(String, Seq[String])]): Unit =
+    assert(perQuery.forall(_._2.isEmpty), "jobs started while building: " +
+      perQuery.filter(_._2.nonEmpty).map { case (n, js) =>
+        s"$n: ${js.size} (${js.distinct.mkString(", ")})" }.mkString("; "))
+
+  test("building the output-table and drug-targets queries starts no Spark job") {
+    assertNoJobs(jobsWhileBuilding(Seq("q23_output_table", "q24_drug_targets",
+      "q58_output_shuffle", "q64_drug_targets_shuffle")))
+  }
+
+  test("building the shuffle-regime annotation queries starts no Spark job") {
+    assertNoJobs(jobsWhileBuilding(Seq("q59_ann_shuffle", "q66_match_shuffle")))
   }
 }
