@@ -36,10 +36,10 @@ final class GraftContext private () {
     // acting on the evicted result later fails with "Checkpoint block
     // not found" — log loudly so that error is attributable
     org.apache.log4j.Logger.getLogger(classOf[GraftContext]).warn(
-      s"evicting final-round CC checkpoint RDD ${rdd.id}: more than " +
-        s"$MaxTracked unconsumed connectedComponents results are live; " +
-        "actions on the evicted result will fail (blocks freed, " +
-        "lineage truncated)")
+      s"evicting checkpoint RDD ${rdd.id}: more than $MaxTracked " +
+        "checkpoint-backed results (connectedComponents, CurateFlow) " +
+        "are live; actions on the evicted result will fail (blocks " +
+        "freed, lineage truncated)")
   })
   // weakly referenced: a dropped SparkSession must not stay pinned
   // until its SparkContext stops
@@ -78,8 +78,9 @@ final class GraftContext private () {
       p
     }
 
-  /** Hold the final-round checkpoint RDD of a `connectedComponents`
-    * call; it backs the returned DataFrame until evicted or released.
+  /** Hold the checkpoint RDD that backs a returned DataFrame (the
+    * final round of `connectedComponents`, the last stage of
+    * `CurateFlow.run`) until evicted or released.
     */
   def trackCheckpoint(rdd: RDD[_]): Unit = checkpoints.add(rdd)
 

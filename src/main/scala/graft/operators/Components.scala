@@ -38,16 +38,32 @@ object Components {
     */
   def lastRounds: Int = graft.GraftContext.current.fold(0)(_.ccRounds)
 
-  /** Free the cached edge-set blocks of every completed CC run in the
-    * current session's context. Each run's final-round checkpoint
-    * backs the DataFrame it returns, so it cannot be freed inside the
-    * loop; the context holds the last 4 of them and evicts older
-    * ones. Unlike a persisted Dataset, an unpersisted checkpoint RDD
-    * is NOT lazily recomputable — the lineage was truncated — so call
-    * this only where prior CC results have been fully consumed (the
-    * Bench / Verify per-query boundary).
+  /** Free the checkpoint blocks backing every completed CC run and
+    * CurateFlow release in the current session's context. Each run's
+    * last checkpoint backs the DataFrame it returns, so it cannot be
+    * freed inside the run; the context holds the last 4 of them and
+    * evicts older ones. Unlike a persisted Dataset, an unpersisted
+    * checkpoint RDD is NOT lazily recomputable — the lineage was
+    * truncated — so call this only where prior results have been
+    * fully consumed (the Bench / Verify per-query boundary).
     */
   def releaseAll(): Unit = graft.GraftContext.current.foreach(_.releaseCheckpoints())
+
+  /** `df` lazily localCheckpoint'ed, with the checkpoint's internal
+    * RDD: the first action over the returned DataFrame materializes
+    * the blocks and truncates the lineage, and `rdd.unpersist` frees
+    * them (Dataset.unpersist is a CacheManager no-op here — the
+    * checkpoint RDD never registers). Freed blocks do not recompute.
+    */
+  private[operators] def checkpointLazily(df: DataFrame)
+      : (org.apache.spark.rdd.RDD[_], DataFrame) = {
+    val cp = df.localCheckpoint(false)
+    val rdd = cp.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }.headOption.getOrElse(throw new IllegalStateException(
+      "localCheckpoint did not produce a LogicalRDD leaf"))
+    (rdd, cp)
+  }
 
   /** (node, component) for every node appearing in `pairs`
     * (columns doc_a, doc_b); component = the minimum node id of the
@@ -102,24 +118,17 @@ object Components {
     // cached: one edge set, bounded by the node count. (On a real
     // cluster with executor churn, reliable checkpoint() to HDFS
     // replaces localCheckpoint — same loop.)
-    // eager localCheckpoint materializes the round on the InternalRow
-    // path (no row encode/decode — measured ~15% per-round overhead on
-    // the typed-RDD alternative) and truncates the plan at a LogicalRDD
-    // leaf; the leaf hands back the internal RDD so superseded rounds'
-    // blocks can ACTUALLY be freed (Dataset.unpersist would be a
-    // CacheManager no-op here — the checkpoint RDD never registers).
-    // LAZY checkpoint + checksum as the materializing action: the
-    // checksum aggregate runs over the checkpoint-marked RDD, so ONE
-    // job both caches the round's blocks and computes the
-    // convergence scalars — an eager checkpoint would spend a
-    // separate job (and a second full pass) per round on the same
-    // rows
+    // localCheckpoint materializes the round on the InternalRow path
+    // (no row encode/decode — measured ~15% per-round overhead on the
+    // typed-RDD alternative) and truncates the plan at a LogicalRDD
+    // leaf (see checkpointLazily). LAZY checkpoint + checksum as the
+    // materializing action: the checksum aggregate runs over the
+    // checkpoint-marked RDD, so ONE job both caches the round's blocks
+    // and computes the convergence scalars — an eager checkpoint would
+    // spend a separate job (and a second full pass) per round on the
+    // same rows
     def materialize(df: DataFrame): (org.apache.spark.rdd.RDD[_], DataFrame, (Long, Long)) = {
-      val cp = df.localCheckpoint(false)
-      val rdd = cp.queryExecution.analyzed.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.headOption.getOrElse(throw new IllegalStateException(
-        "localCheckpoint did not produce a LogicalRDD leaf"))
+      val (rdd, cp) = checkpointLazily(df)
       (rdd, cp, checksum(cp))
     }
     var (edgesRdd, edges, chk) = materialize(pairs

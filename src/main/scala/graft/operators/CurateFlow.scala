@@ -19,9 +19,11 @@ import org.apache.spark.sql.functions._
   *      deterministic shard assignment (q78).
   *
   * Returns the released documents plus the per-stage survivor funnel —
-  * the report every curation run ships with. Each reduction stage
-  * persists before its count so no stage executes twice; the funnel
-  * actions are inherent to reporting, not recomputation. Every stage
+  * the report every curation run ships with. Each reduction stage is
+  * checkpointed by its count so no stage executes twice; the funnel
+  * actions are inherent to reporting, not recomputation. The released
+  * frame is backed by checkpoint blocks that do not recompute: consume
+  * it before `Components.releaseAll()`. Every stage
   * is individually deterministic on any partitioning, so the composed
   * release is too (pinned in CurationSpec).
   */
@@ -48,13 +50,18 @@ object CurateFlow {
     // of which JOIN their own input (line/para rewrites, keep-first)
     // — grow the logical plan geometrically, and Catalyst re-derives
     // the whole tree per stage (the Components.scala pathology).
-    // Checkpointing truncates lineage to the materialized blocks.
-    // Lifetime note: localCheckpoint blocks free only with the
-    // session (Dataset.unpersist is a no-op on them) — a production
-    // run writes stage outputs to the lake instead.
+    // Checkpointing truncates lineage to the materialized blocks. The
+    // checkpoint is lazy and the funnel count is the one job that
+    // materializes it; once a stage is counted nothing reads the
+    // stage before it, so that stage's blocks are freed. The last
+    // stage's blocks back `released`: the session's GraftContext
+    // holds them until `Components.releaseAll()`.
+    var live: Option[org.apache.spark.rdd.RDD[_]] = None
     def stage(name: String, df: DataFrame): DataFrame = {
-      val p = df.localCheckpoint()
+      val (rdd, p) = Components.checkpointLazily(df)
       funnel += name -> p.count()
+      live.foreach(_.unpersist(false))
+      live = Some(rdd)
       p
     }
 
@@ -129,6 +136,7 @@ object CurateFlow {
         budgetTokens, salt + ":mix"))
     val released = Mixing.assignShards(mixed, "doc_id", nShards,
       salt + ":shard")
+    live.foreach(graft.GraftContext(docs.sparkSession).trackCheckpoint)
 
     CurateResult(released, funnel.result())
   }

@@ -116,7 +116,7 @@ object NearDup {
   }
 
   /** k minhash values over a shingle array, computed in ONE pass by the
-    * native MinHashSigExpression (graft.plans.TextExpressions) — the
+    * native `minhash_sig` kernel (graft.plans.MinHashHelper) — the
     * composed-Column form (k array_min/transform traversals) measured
     * 3x slower on the sf0.1 bench.
     */
@@ -436,7 +436,7 @@ object NearDup {
     val base = persistTracked(
       docs.select(col(idCol).as("doc"), col(vecCol).as("vec"))
         // one-pass multi-table signatures (bit-identical to per-table
-        // hyperplaneSig calls at seeds 101..101+nTables-1; PlansSpec pin)
+        // signatures at seeds 101..101+nTables-1; PlansSpec pin)
         .withColumn("sigs",
           Similarity.hyperplaneSigs(col("vec"), nBits, nTables, seedBase = 101)))
     val sigs = base.select(col("doc"), posexplode(col("sigs")))
@@ -460,7 +460,7 @@ object NearDup {
 
   /** 64-bit SimHash: bit i of the signature is the sign of the sum over
     * tokens of (+1/-1 for bit i of the token hash). Computed in one
-    * pass by the native SimHash64Expression — the composed-Column form
+    * pass by the native `simhash64` kernel — the composed-Column form
     * (64 filter/size passes) measured 21.5 s on the sf0.1 bench vs
     * sub-second native.
     */

@@ -29,18 +29,15 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (norm(a) * norm(b))
 
-  /** Integer-quantized dot product: round(x*scale) per slot, exact
-    * 64-bit integer accumulation. At the default scale this is the
-    * native one-pass QuantizedDotExpression (float arrays) — the
-    * composed aggregate/zip_with form walks both arrays through
-    * interpreted lambdas, which dominated the brute-force scoring
-    * pass (q10); non-default scales keep the declarative form.
+  /** Integer-quantized dot product: round(x*1000) per slot, exact
+    * 64-bit integer accumulation. Computed by the native one-pass
+    * `quantized_dot` kernel (float arrays) — the composed
+    * aggregate/zip_with form walks both arrays through interpreted
+    * lambdas, which dominated the brute-force scoring pass (q10).
     */
-  def quantizedDot(a: Column, b: Column, scale: Int = 1000): Column =
-    if (scale == 1000)
-      graft.plans.TextExprs.quantizedDot(
-        org.apache.spark.sql.SparkSession.active, a, b)
-    else quantizedDotColumnar(a, b, scale)
+  def quantizedDot(a: Column, b: Column): Column =
+    graft.plans.TextExprs.quantizedDot(
+      org.apache.spark.sql.SparkSession.active, a, b)
 
   /** The declarative quantized-dot form (cross-checkable reference for
     * the native expression; any numeric array type).
@@ -59,7 +56,7 @@ object Similarity {
     * the property the DuckDB oracle needs. Quantization error is
     * ~1e-3 relative at scale=1000; fine for ANN ranking.
     *
-    * Computed by the native one-pass QuantizedCosineExpression (float
+    * Computed by the native one-pass `quantized_cosine` kernel (float
     * arrays, fixed scale 1000): the composed form walked both arrays
     * three times through interpreted lambdas — minutes over millions
     * of candidate pairs. Parity with the Columnar form is pinned in
@@ -192,22 +189,15 @@ object Similarity {
     rerankTopK(
       ivfCandidates(corpus, queries, idCol, vecCol, nCentroids, nProbe, seed), k)
 
-  /** Random-hyperplane signature: bit j = sign(dot(v, h_j)) where the
-    * hyperplane h_j is a deterministic pseudo-random +-1 vector derived
-    * from (j, slot index) hashes — no stored planes, reproducible
-    * everywhere. Computed by the native one-pass HyperplaneSigExpression
-    * (bit-identical to the composed-Column form, which re-walked the
-    * vector once per bit per table).
-    */
-  def hyperplaneSig(vec: Column, nBits: Int = 16, seed: Int = 7): Column =
-    graft.plans.TextExprs.hyperplaneSig(
-      org.apache.spark.sql.SparkSession.active, vec, nBits, seed)
-
-  /** All `nTables` signatures (seeds seedBase..seedBase+nTables-1) in
-    * ONE vector pass, bit-identical to nTables `hyperplaneSig` calls —
-    * the xxhash chain's (slot, bit) prefix is hoisted out of the table
-    * loop (pinned in PlansSpec). This is the LSH signature hot path:
-    * per-table expressions re-walk the vector nTables times.
+  /** Random-hyperplane signatures: bit j of table t = sign(dot(v, h_j))
+    * where the hyperplane h_j is a deterministic pseudo-random +-1
+    * vector derived from (j, slot index, seedBase + t) hashes — no
+    * stored planes, reproducible everywhere. All `nTables` signatures
+    * come from ONE vector pass of the native `hyperplane_sigs` kernel,
+    * each bit-identical to `hyperplaneSigColumnar` at its seed (pinned
+    * in PlansSpec); the xxhash chain's (slot, bit) prefix is hoisted
+    * out of the table loop. This is the LSH signature hot path: one
+    * signature per table would re-walk the vector nTables times.
     */
   def hyperplaneSigs(vec: Column, nBits: Int, nTables: Int, seedBase: Int): Column =
     graft.plans.TextExprs.hyperplaneSigs(

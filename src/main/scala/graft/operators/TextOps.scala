@@ -23,7 +23,7 @@ object TextOps {
 
   /** Word n-gram shingles, hashed to 64-bit — the input to
     * MinHash/Jaccard. Distinct, so downstream set ops are exact.
-    * Computed by the native one-pass HashedShinglesExpression: the
+    * Computed by the native one-pass `shingles_hashed` kernel: the
     * composed-Column form re-ran the regex tokenizer once per shingle
     * index (O(tokens²) regex work per row — 5.6 s for a 5k-doc pass vs
     * sub-second native).
@@ -481,7 +481,7 @@ object TextOps {
 
   /** One-pass word n-gram repetition stats: struct(n_grams, n_distinct,
     * max_count) over the NON-distinct in-order gram windows (native
-    * NgramRepStatsExpression — the composed form is O(grams·distinct)
+    * `ngram_rep_stats` kernel — the composed form is O(grams·distinct)
     * interpreted lambda evals per row).
     */
   def ngramRepStats(text: Column, n: Int = 2): Column =
@@ -535,7 +535,7 @@ object TextOps {
 
   /** Cheap n-gram/stopword language id: argmax over per-language
     * stopword hits; "und" (undetermined) when no profile scores.
-    * Computed by the native one-pass LangIdExpression — the composed
+    * Computed by the native one-pass `langid` kernel — the composed
     * form inlined the regex tokenizer into every profile filter
     * (~9 splits per row).
     */

@@ -1,21 +1,22 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.AnalysisErrorAt
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.DataTypeMismatch
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression for the hottest nomenclature primitive:
-  * the positional-prefix extraction `extract_p_start`
+/** Native kernel for the hottest nomenclature primitive: the
+  * positional-prefix extraction `extract_p_start`
   * (reference: civicutils/match.py:127-144; X3 in SURVEY.md §2.8).
   *
-  * Correctness never requires a custom expression here (SURVEY.md §4.2
-  * — a UDF suffices); this exists for the codegen path: `doGenCode`
-  * emits a direct static call with a shared compiled Pattern, keeping
-  * the operator inside whole-stage codegen instead of crossing the
+  * Correctness never requires a native kernel here (SURVEY.md §4.2
+  * — a UDF suffices); this exists for the codegen path: generated code
+  * calls `eval` directly with a shared compiled Pattern, keeping the
+  * operator inside whole-stage codegen instead of crossing the
   * ScalaUDF serialization boundary per row.
   */
 object PStartHelper {
@@ -29,55 +30,80 @@ object PStartHelper {
   }
 }
 
-case class PStartExpression(child: Expression)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"p_start requires a string argument, got ${child.dataType}")
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "p_start"
-
-  override def nullSafeEval(v: Any): Any =
-    PStartHelper.eval(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""
-         |${ev.value} = graft.plans.PStartHelper$$.MODULE$$.eval($c);
-         |if (${ev.value} == null) { ${ev.isNull} = true; }
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Session extensions: registers the native functions for SQL use
-  * (`SELECT p_start(col)`). Install via
-  * `SparkSession.builder.withExtensions(new GraftExtensions)` or call
-  * `GraftFunctions.register(spark)` on an existing session.
+/** The SQL functions of every native kernel in `plans/`. A kernel is a
+  * helper object's one-pass `eval`, planned as Spark's `StaticInvoke`
+  * (the way Spark itself calls `UrlCodec` for `url_encode`): generated
+  * code calls `<Helper>.eval(...)` inside whole-stage codegen, a NULL
+  * argument gives NULL without a call, and integer parameters go in as
+  * integer literals (constants in the generated code).
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("p_start"),
-      new ExpressionInfo(classOf[PStartExpression].getName, "p_start"),
-      (exprs: Seq[Expression]) => PStartExpression(exprs.head)))
-  }
-}
-
 object GraftFunctions {
-  /** Register SQL functions on an already-built session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "p_start", exprs => PStartExpression(exprs.head), "internal")
 
-  /** Column API (requires `register(spark)` or GraftExtensions). */
+  /** Register every native kernel on `spark`'s session for SQL use
+    * (`SELECT p_start(col)`); the Column APIs call it.
+    */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    def intLit(e: Expression, what: String): Int = e match {
+      case Literal(v: Int, IntegerType) => v
+      case other => throw new IllegalArgumentException(
+        s"$what must be an integer literal, got $other")
+    }
+    // `name(cols..., ints...)` calls `helper.eval(cols..., ints...)`.
+    // The columns are checked as ExpectsInputTypes checks them: given
+    // `inputTypes`, StaticInvoke would cast a mistyped column instead
+    // (an array<double> narrowed to array<float> without an error)
+    def kernel(name: String, helper: AnyRef, dataType: DataType,
+        colTypes: Seq[DataType], intParams: Seq[String] = Nil,
+        nullable: Boolean = false): Unit =
+      registry.createOrReplaceTempFunction(name, { args =>
+        intParams.zipWithIndex.foreach { case (p, i) =>
+          intLit(args(colTypes.size + i), s"$name $p") }
+        val call = StaticInvoke(helper.getClass, dataType, "eval", args,
+          returnNullable = nullable)
+        ExpectsInputTypes.checkInputDataTypes(args.take(colTypes.size),
+            colTypes) match {
+          case m: DataTypeMismatch => call.dataTypeMismatch(call, m)
+          case _ => call
+        }
+      }, "internal")
+    val text = Seq(StringType)
+    val longs = ArrayType(LongType, containsNull = false)
+    val floats = ArrayType(FloatType)
+
+    kernel("p_start", PStartHelper, StringType, text, nullable = true)
+    kernel("simhash64", SimHashHelper, LongType, text)
+    kernel("langid", LangIdHelper, StringType, text)
+    kernel("shingles_hashed", ShinglesHelper, longs, text, Seq("n"))
+    kernel("window_hashes", WindowHashesHelper, longs, text, Seq("k"))
+    kernel("ngram_rep_stats", RepStatsHelper, StructType(Seq(
+      StructField("n_grams", IntegerType, nullable = false),
+      StructField("n_distinct", IntegerType, nullable = false),
+      StructField("max_count", IntegerType, nullable = false))),
+      text, Seq("n"))
+    kernel("hash_embedding", HashEmbeddingHelper,
+      ArrayType(FloatType, containsNull = false), text, Seq("dim"))
+    kernel("minhash_sig", MinHashHelper, longs, Seq(ArrayType(LongType)),
+      Seq("k"))
+    kernel("quantized_dot", QuantizedDotHelper, LongType, Seq(floats, floats))
+    kernel("quantized_cosine", QuantizedCosineHelper, DoubleType,
+      Seq(floats, floats))
+    kernel("hyperplane_sigs", HyperplaneMultiHelper,
+      ArrayType(IntegerType, containsNull = false), Seq(floats),
+      Seq("nBits", "nTables", "seedBase"))
+    // the one kernel with its own expression class: its bitmap is a
+    // reference object of the generated code, not a per-row argument
+    registry.createOrReplaceTempFunction(
+      "bloom_any_contain", exprs => BloomAnyContainExpression(exprs.head,
+        exprs(1) match {
+          case Literal(a: ArrayData, ArrayType(LongType, _)) => a.toLongArray()
+          case other => throw new IllegalArgumentException(
+            "bloom_any_contain bitmap must be a long-array literal, got " +
+              other.getClass.getName)
+        }, intLit(exprs(2), "bloom_any_contain probes")), "internal")
+  }
+
+  /** Column API (requires `register(spark)`). */
   def pStart(c: Column): Column =
     org.apache.spark.sql.functions.call_function("p_start", c)
 }

@@ -1,23 +1,24 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native one-pass expressions for the near-dup signatures.
+/** Native one-pass kernels for the near-dup signatures, registered as
+  * SQL functions by [[GraftFunctions.register]].
   *
   * The composed-Column forms (64 filter/size passes for SimHash, k
   * array_min/transform passes for MinHash) re-walk the token/shingle
   * array once per output slot — measured 21.5 s / 7.6 s on the sf0.1
-  * bench. These expressions compute the same signatures in ONE pass
+  * bench. These kernels compute the same signatures in ONE pass
   * inside whole-stage codegen; at 100 TB the signature step is
   * fact-side map work, so per-row constant factors dominate the bill.
   */
 /** Locale/charclass-stable tokenization primitives shared by the native
-  * text expressions. The declarative reference forms (and the DuckDB
+  * text kernels. The declarative reference forms (and the DuckDB
   * oracle) tokenize with locale-independent lower() and the Java regex
   * \\s class — default-locale String.toLowerCase (Turkish dotted-I) and
   * Character.isWhitespace (U+2028, U+001C...) both drift from that on
@@ -75,21 +76,6 @@ object SimHashHelper {
   }
 }
 
-case class SimHash64Expression(child: Expression) extends UnaryExpression
-    with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(StringType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
-  override def nullSafeEval(v: Any): Any =
-    SimHashHelper.eval(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.SimHashHelper$$.MODULE$$.eval($c);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object MinHashHelper {
   /** One-pass k-slot minhash over a long-array of shingles. */
   def eval(shingles: ArrayData, k: Int): ArrayData = {
@@ -114,7 +100,7 @@ object MinHashHelper {
 }
 
 /** Shared token-span scan + per-window hash fold for the span-based
-  * one-pass expressions (ShinglesHelper, WindowHashesHelper) — ONE
+  * one-pass kernels (ShinglesHelper, WindowHashesHelper) — ONE
   * definition of the tokenization convention (trim+lower, \s+ split,
   * empty text ≙ one empty token) and of the splitmix-style window
   * mixing, so a change to either cannot silently diverge between the
@@ -206,21 +192,6 @@ object ShinglesHelper {
   }
 }
 
-case class HashedShinglesExpression(child: Expression, n: Int) extends UnaryExpression
-    with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "shingles_hashed"
-  override def nullSafeEval(v: Any): Any =
-    ShinglesHelper.eval(v.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.ShinglesHelper$$.MODULE$$.eval($c, $n);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object WindowHashesHelper {
   /** Positional variant of [[ShinglesHelper.eval]] for the duplicate-
     * span pass (SpanDedup): in-order, NOT deduplicated, FULL windows
@@ -246,20 +217,6 @@ object WindowHashesHelper {
     }
     new GenericArrayData(out)
   }
-}
-
-case class WindowHashesExpression(child: Expression, k: Int) extends UnaryExpression
-    with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "window_hashes"
-  override def nullSafeEval(v: Any): Any =
-    WindowHashesHelper.eval(v.asInstanceOf[UTF8String], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.WindowHashesHelper$$.MODULE$$.eval($c, $k);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 object RepStatsHelper {
@@ -330,23 +287,6 @@ object RepStatsHelper {
   }
 }
 
-case class NgramRepStatsExpression(child: Expression, n: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_grams", IntegerType, nullable = false),
-    StructField("n_distinct", IntegerType, nullable = false),
-    StructField("max_count", IntegerType, nullable = false)))
-  override def prettyName: String = "ngram_rep_stats"
-  override def nullSafeEval(v: Any): Any =
-    RepStatsHelper.eval(v.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.RepStatsHelper$$.MODULE$$.eval($c, $n);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object HashEmbeddingHelper {
   /** Feature-hashed text embedding over DISTINCT word-3-gram shingles
     * (ShinglesHelper): each shingle hash maps to a (slot, ±1) update of
@@ -381,21 +321,6 @@ object HashEmbeddingHelper {
     while (j < dim) { out(j) = (acc(j) * inv).toFloat; j += 1 }
     new GenericArrayData(out)
   }
-}
-
-case class HashEmbeddingExpression(child: Expression, dim: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(StringType)
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def prettyName: String = "hash_embedding"
-  override def nullSafeEval(v: Any): Any =
-    HashEmbeddingHelper.eval(v.asInstanceOf[UTF8String], dim)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.HashEmbeddingHelper$$.MODULE$$.eval($c, $dim);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 object QuantizedCosineHelper {
@@ -456,42 +381,6 @@ object QuantizedDotHelper {
   }
 }
 
-case class QuantizedDotExpression(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with ExpectsInputTypes {
-  // the helper reads via getFloat: an array<double> input would be
-  // reinterpreted byte-wise, so analysis must reject it
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(FloatType), ArrayType(FloatType))
-  override def dataType: DataType = LongType
-  override def prettyName: String = "quantized_dot"
-  override def nullSafeEval(l: Any, r: Any): Any =
-    QuantizedDotHelper.eval(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) =>
-      s"${ev.value} = graft.plans.QuantizedDotHelper$$.MODULE$$.eval($l, $r);")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-case class QuantizedCosineExpression(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(FloatType), ArrayType(FloatType))
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "quantized_cosine"
-  override def nullSafeEval(l: Any, r: Any): Any =
-    QuantizedCosineHelper.eval(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) =>
-      s"${ev.value} = graft.plans.QuantizedCosineHelper$$.MODULE$$.eval($l, $r);")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object LangIdHelper {
   // MUST mirror TextOps.langProfiles exactly (the declarative form and
   // the DuckDB oracle both derive from that table)
@@ -544,61 +433,19 @@ object LangIdHelper {
   }
 }
 
-case class LangIdExpression(child: Expression) extends UnaryExpression
-    with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(StringType)
-  override def dataType: DataType = StringType
-  override def prettyName: String = "langid"
-  override def nullSafeEval(v: Any): Any =
-    LangIdHelper.eval(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.LangIdHelper$$.MODULE$$.eval($c);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object HyperplaneHelper {
-  import org.apache.spark.sql.catalyst.expressions.XXH64
-
-  /** Bit-exact native form of Similarity.hyperplaneSig's composed
-    * Columns: bit j = sign of sum_i vec(i) * (±1), where the ±1 is the
-    * parity of xxhash64(i, j, seed) exactly as the xxhash64 expression
-    * folds int children from its 42 seed. Sequential double summation
-    * in ascending slot order matches `aggregate`'s left fold, so the
-    * signatures are identical — one pass instead of nBits re-walks.
-    */
-  def eval(vec: ArrayData, nBits: Int, seed: Int): Int = {
-    val n = vec.numElements()
-    var sig = 0
-    var j = 0
-    while (j < nBits) {
-      var s = 0.0
-      var i = 0
-      while (i < n) {
-        var h = XXH64.hashInt(i, 42L)
-        h = XXH64.hashInt(j, h)
-        h = XXH64.hashInt(seed, h)
-        s += vec.getFloat(i).toDouble * ((h & 1L) * 2 - 1).toDouble
-        i += 1
-      }
-      if (s > 0) sig |= (1 << j)
-      j += 1
-    }
-    sig
-  }
-}
-
 object HyperplaneMultiHelper {
   import org.apache.spark.sql.catalyst.expressions.XXH64
 
   /** All `nTables` hyperplane signatures (seeds seedBase..seedBase+
-    * nTables-1) in ONE pass over the vector, BIT-IDENTICAL to nTables
-    * separate HyperplaneHelper.eval calls: the xxhash chain is
-    * hashInt(i,42) -> hashInt(j,·) -> hashInt(seed,·), so the first two
-    * links depend only on (slot, bit) and are hoisted out of the table
-    * loop — 3x fewer hashes than the per-table expression
+    * nTables-1) in ONE pass over the vector, each BIT-IDENTICAL to
+    * Similarity.hyperplaneSigColumnar at its seed (pinned in PlansSpec):
+    * bit j = sign of sum_i vec(i) * (±1), where the ±1 is the parity of
+    * xxhash64(i, j, seed) exactly as the xxhash64 expression folds int
+    * children from its 42 seed, and sequential double summation in
+    * ascending slot order matches `aggregate`'s left fold. The xxhash
+    * chain is hashInt(i,42) -> hashInt(j,·) -> hashInt(seed,·), so the
+    * first two links depend only on (slot, bit) and are hoisted out of
+    * the table loop — 3x fewer hashes than one signature per table
     * (dim·nBits·nTables·3 -> dim·nBits·(2 + nTables)) and one vector
     * traversal instead of nTables. This is the LSH signature hot path:
     * at 100 TB the signature step is fact-side map work, so per-row
@@ -639,52 +486,6 @@ object HyperplaneMultiHelper {
     }
     new GenericArrayData(out)
   }
-}
-
-case class HyperplaneSigsExpression(child: Expression, nBits: Int,
-    nTables: Int, seedBase: Int) extends UnaryExpression
-    with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(FloatType))
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "hyperplane_sigs"
-  override def nullSafeEval(v: Any): Any =
-    HyperplaneMultiHelper.eval(v.asInstanceOf[ArrayData], nBits, nTables, seedBase)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.HyperplaneMultiHelper$$.MODULE$$.eval($c, $nBits, $nTables, $seedBase);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class HyperplaneSigExpression(child: Expression, nBits: Int, seed: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(FloatType))
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "hyperplane_sig"
-  override def nullSafeEval(v: Any): Any =
-    HyperplaneHelper.eval(v.asInstanceOf[ArrayData], nBits, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.HyperplaneHelper$$.MODULE$$.eval($c, $nBits, $seed);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class MinHashSigExpression(child: Expression, k: Int) extends UnaryExpression
-    with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(LongType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig"
-  override def nullSafeEval(v: Any): Any =
-    MinHashHelper.eval(v.asInstanceOf[ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.MinHashHelper$$.MODULE$$.eval($c, $k);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Bloom-filter primitives over 64-bit keys (already-hashed shingles).
@@ -775,120 +576,41 @@ case class BloomAnyContainExpression(child: Expression, bitmap: Array[Long],
     copy(child = newChild)
 }
 
-/** Registry-based Column API (same pattern as GraftFunctions.pStart —
-  * Column->Expression construction is not public in Spark 4).
+/** Column API of the native kernels: each call registers them
+  * ([[GraftFunctions.register]]) and names its kernel through the
+  * session's function registry — Column->Expression construction is
+  * not public in Spark 4.
   */
 object TextExprs {
-  def registerAll(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64Expression(exprs.head), "internal")
-    def intLit(e: Expression, what: String): Int = e match {
-      case Literal(v: Int, IntegerType) => v
-      case other => throw new IllegalArgumentException(
-        s"$what must be an integer literal, got $other")
-    }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig", exprs => MinHashSigExpression(exprs.head,
-        intLit(exprs(1), "minhash_sig k")), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "langid", exprs => LangIdExpression(exprs.head), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hash_embedding", exprs => HashEmbeddingExpression(exprs.head,
-        intLit(exprs(1), "hash_embedding dim")), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "quantized_cosine", exprs =>
-        QuantizedCosineExpression(exprs.head, exprs(1)), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "quantized_dot", exprs =>
-        QuantizedDotExpression(exprs.head, exprs(1)), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hyperplane_sig", exprs => HyperplaneSigExpression(exprs.head,
-        intLit(exprs(1), "hyperplane_sig nBits"),
-        intLit(exprs(2), "hyperplane_sig seed")), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hyperplane_sigs", exprs => HyperplaneSigsExpression(exprs.head,
-        intLit(exprs(1), "hyperplane_sigs nBits"),
-        intLit(exprs(2), "hyperplane_sigs nTables"),
-        intLit(exprs(3), "hyperplane_sigs seedBase")), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngram_rep_stats", exprs => NgramRepStatsExpression(exprs.head,
-        intLit(exprs(1), "ngram_rep_stats n")), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "window_hashes", exprs => WindowHashesExpression(exprs.head,
-        intLit(exprs(1), "window_hashes k")), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingles_hashed", exprs => HashedShinglesExpression(exprs.head,
-        intLit(exprs(1), "shingles_hashed n")), "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_any_contain", exprs => BloomAnyContainExpression(exprs.head,
-        exprs(1) match {
-          case Literal(a: ArrayData, ArrayType(LongType, _)) => a.toLongArray()
-          case other => throw new IllegalArgumentException(
-            "bloom_any_contain bitmap must be a long-array literal, got " +
-              other.getClass.getName)
-        }, intLit(exprs(2), "bloom_any_contain probes")), "internal")
+  import org.apache.spark.sql.functions.{call_function, lit}
+
+  private def call(spark: SparkSession, name: String, args: Column*): Column = {
+    GraftFunctions.register(spark)
+    call_function(name, args: _*)
   }
 
-  def simhash64(spark: SparkSession, c: Column): Column = {
-    registerAll(spark)
-    org.apache.spark.sql.functions.call_function("simhash64", c)
-  }
-  def minhashSig(spark: SparkSession, c: Column, k: Int): Column = {
-    registerAll(spark)
-    org.apache.spark.sql.functions.call_function("minhash_sig", c,
-      org.apache.spark.sql.functions.lit(k))
-  }
-  def windowHashes(spark: SparkSession, c: Column, k: Int): Column = {
-    registerAll(spark)
-    org.apache.spark.sql.functions.call_function("window_hashes", c,
-      org.apache.spark.sql.functions.lit(k))
-  }
-  def shinglesHashed(spark: SparkSession, c: Column, n: Int): Column = {
-    registerAll(spark)
-    org.apache.spark.sql.functions.call_function("shingles_hashed", c,
-      org.apache.spark.sql.functions.lit(n))
-  }
-  def ngramRepStats(spark: SparkSession, c: Column, n: Int): Column = {
-    registerAll(spark)
-    org.apache.spark.sql.functions.call_function("ngram_rep_stats", c,
-      org.apache.spark.sql.functions.lit(n))
-  }
-  def langid(spark: SparkSession, c: Column): Column = {
-    registerAll(spark)
-    org.apache.spark.sql.functions.call_function("langid", c)
-  }
-  def hashEmbedding(spark: SparkSession, c: Column, dim: Int): Column = {
-    registerAll(spark)
-    org.apache.spark.sql.functions.call_function("hash_embedding", c,
-      org.apache.spark.sql.functions.lit(dim))
-  }
-  def quantizedCosine(spark: SparkSession, a: Column, b: Column): Column = {
-    registerAll(spark)
-    org.apache.spark.sql.functions.call_function("quantized_cosine", a, b)
-  }
-  def quantizedDot(spark: SparkSession, a: Column, b: Column): Column = {
-    registerAll(spark)
-    org.apache.spark.sql.functions.call_function("quantized_dot", a, b)
-  }
-  def hyperplaneSig(spark: SparkSession, c: Column, nBits: Int, seed: Int): Column = {
-    registerAll(spark)
-    org.apache.spark.sql.functions.call_function("hyperplane_sig", c,
-      org.apache.spark.sql.functions.lit(nBits),
-      org.apache.spark.sql.functions.lit(seed))
-  }
+  def simhash64(spark: SparkSession, c: Column): Column =
+    call(spark, "simhash64", c)
+  def minhashSig(spark: SparkSession, c: Column, k: Int): Column =
+    call(spark, "minhash_sig", c, lit(k))
+  def windowHashes(spark: SparkSession, c: Column, k: Int): Column =
+    call(spark, "window_hashes", c, lit(k))
+  def shinglesHashed(spark: SparkSession, c: Column, n: Int): Column =
+    call(spark, "shingles_hashed", c, lit(n))
+  def ngramRepStats(spark: SparkSession, c: Column, n: Int): Column =
+    call(spark, "ngram_rep_stats", c, lit(n))
+  def langid(spark: SparkSession, c: Column): Column =
+    call(spark, "langid", c)
+  def hashEmbedding(spark: SparkSession, c: Column, dim: Int): Column =
+    call(spark, "hash_embedding", c, lit(dim))
+  def quantizedCosine(spark: SparkSession, a: Column, b: Column): Column =
+    call(spark, "quantized_cosine", a, b)
+  def quantizedDot(spark: SparkSession, a: Column, b: Column): Column =
+    call(spark, "quantized_dot", a, b)
   def hyperplaneSigs(spark: SparkSession, c: Column, nBits: Int,
-      nTables: Int, seedBase: Int): Column = {
-    registerAll(spark)
-    org.apache.spark.sql.functions.call_function("hyperplane_sigs", c,
-      org.apache.spark.sql.functions.lit(nBits),
-      org.apache.spark.sql.functions.lit(nTables),
-      org.apache.spark.sql.functions.lit(seedBase))
-  }
+      nTables: Int, seedBase: Int): Column =
+    call(spark, "hyperplane_sigs", c, lit(nBits), lit(nTables), lit(seedBase))
   def bloomAnyContain(spark: SparkSession, c: Column, bitmap: Array[Long],
-      probes: Int): Column = {
-    registerAll(spark)
-    org.apache.spark.sql.functions.call_function("bloom_any_contain", c,
-      org.apache.spark.sql.functions.lit(bitmap),
-      org.apache.spark.sql.functions.lit(probes))
-  }
+      probes: Int): Column =
+    call(spark, "bloom_any_contain", c, lit(bitmap), lit(probes))
 }

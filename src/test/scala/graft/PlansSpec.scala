@@ -48,6 +48,56 @@ class PlansSpec extends AnyFunSuite {
     assert(!plan.contains("ScalaUDF"), plan)
   }
 
+  test("every native kernel: whole-stage codegen, NULL in gives NULL, mistyped column fails analysis") {
+    import graft.plans.TextExprs
+    GraftFunctions.register(spark)
+    // even ids carry values, odd ids NULL; probe on a range source (a
+    // local Seq folds to LocalTableScan)
+    def even(c: org.apache.spark.sql.Column) = when(col("id") % 2 === 0, c)
+    val base = spark.range(16).select(col("id"),
+      even(concat(lit("p.Val"), col("id"), lit(" the und le la"))).as("text"),
+      even(array(col("id").cast("float"), lit(0.5f), lit(-1.5f))).as("vec"),
+      even(array(col("id"), col("id") * 7)).as("longs"),
+      array(col("id").cast("double"), lit(0.5)).as("doubles"))
+    val (text, vec, longs, n, doubles) =
+      (col("text"), col("vec"), col("longs"), col("id"), col("doubles"))
+    // (name, the kernel over well-typed columns, over a mistyped column)
+    val kernels = Seq(
+      ("p_start", GraftFunctions.pStart(text), GraftFunctions.pStart(n)),
+      ("simhash64", TextExprs.simhash64(spark, text), TextExprs.simhash64(spark, n)),
+      ("langid", TextExprs.langid(spark, text), TextExprs.langid(spark, n)),
+      ("shingles_hashed", TextExprs.shinglesHashed(spark, text, 3),
+        TextExprs.shinglesHashed(spark, n, 3)),
+      ("window_hashes", TextExprs.windowHashes(spark, text, 2),
+        TextExprs.windowHashes(spark, n, 2)),
+      ("ngram_rep_stats", TextExprs.ngramRepStats(spark, text, 2),
+        TextExprs.ngramRepStats(spark, n, 2)),
+      ("hash_embedding", TextExprs.hashEmbedding(spark, text, 8),
+        TextExprs.hashEmbedding(spark, n, 8)),
+      ("minhash_sig", TextExprs.minhashSig(spark, longs, 4),
+        TextExprs.minhashSig(spark, doubles, 4)),
+      ("quantized_dot", TextExprs.quantizedDot(spark, vec, vec),
+        TextExprs.quantizedDot(spark, vec, doubles)),
+      ("quantized_cosine", TextExprs.quantizedCosine(spark, vec, vec),
+        TextExprs.quantizedCosine(spark, doubles, doubles)),
+      ("hyperplane_sigs", TextExprs.hyperplaneSigs(spark, vec, 4, 2, 7),
+        TextExprs.hyperplaneSigs(spark, doubles, 4, 2, 7)),
+      ("bloom_any_contain", TextExprs.bloomAnyContain(spark, longs, Array(-1L), 2),
+        TextExprs.bloomAnyContain(spark, doubles, Array(-1L), 2)))
+    for ((name, good, bad) <- kernels) {
+      val plan = base.select(good).queryExecution.executedPlan.toString
+      // "*(n)" marks operators inside a WholeStageCodegen stage
+      assert(plan.contains("*(1) Project"), s"$name: $plan")
+      assert(!plan.contains("ScalaUDF"), s"$name: $plan")
+      val nulls = base.select(col("id"), good.isNull).collect()
+        .map(r => r.getLong(0) -> r.getBoolean(1))
+      assert(nulls.forall { case (id, isNull) => isNull == (id % 2 != 0) },
+        s"$name: NULL iff the input is NULL, got ${nulls.toSeq}")
+      val e = intercept[org.apache.spark.sql.AnalysisException](base.select(bad))
+      assert(e.getCondition.startsWith("DATATYPE_MISMATCH"), s"$name: $e")
+    }
+  }
+
   test("native shingles match the declarative form set-for-set") {
     import org.apache.spark.sql.functions._
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -127,7 +177,8 @@ class PlansSpec extends AnyFunSuite {
       .limit(300)
     for ((nBits, seed) <- Seq((4, 7), (12, 9), (16, 23))) {
       val drift = emb.select(
-        graft.operators.Similarity.hyperplaneSig(col("embedding"), nBits, seed).as("nat"),
+        graft.operators.Similarity.hyperplaneSigs(
+          col("embedding"), nBits, nTables = 1, seedBase = seed)(0).as("nat"),
         graft.operators.Similarity.hyperplaneSigColumnar(col("embedding"), nBits, seed).as("dec"))
         .filter(col("nat") =!= col("dec")).count()
       assert(drift == 0, s"signature drift at nBits=$nBits seed=$seed")
@@ -143,7 +194,7 @@ class PlansSpec extends AnyFunSuite {
         graft.operators.Similarity.hyperplaneSigs(
           col("embedding"), nBits, nTables, base).as("multi"),
         array((0 until nTables).map(t =>
-          graft.operators.Similarity.hyperplaneSig(
+          graft.operators.Similarity.hyperplaneSigColumnar(
             col("embedding"), nBits, base + t)): _*).as("per"))
         .filter(col("multi") =!= col("per")).count()
       assert(drift == 0,
