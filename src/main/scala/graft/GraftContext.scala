@@ -11,7 +11,8 @@ import org.apache.spark.storage.StorageLevel
 /** Everything the engine keeps for one live SparkContext: memoized
   * session artifacts (dimension index, annotation run, near-dup pairs,
   * fitted models), the bounded queues of tracked persists, the
-  * per-session cap-listener registration and the two diagnostics.
+  * per-session registrations (cap listener, native kernels) and the
+  * two diagnostics.
   * Sessions of one SparkContext share one context — they share its
   * CacheManager too. An application-end listener, registered when the
   * context is created, calls `release(sc)`: every held persist is freed
@@ -41,11 +42,10 @@ final class GraftContext private () {
         "are live; actions on the evicted result will fail (blocks " +
         "freed, lineage truncated)")
   })
-  // weakly referenced: a dropped SparkSession must not stay pinned
-  // until its SparkContext stops
-  private val listened = java.util.Collections.synchronizedSet(
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
+  // the keys each session has run; weakly referenced: a dropped
+  // SparkSession must not stay pinned until its SparkContext stops
+  private val registered =
+    new java.util.WeakHashMap[SparkSession, java.util.Set[Any]]()
 
   /** Blocks dropped by the most recent capped near-dup run (-1 until
     * one completes); see `NearDup.lastCapDropped`.
@@ -87,9 +87,15 @@ final class GraftContext private () {
   def unpersistTracked(): Unit = datasets.clear()
   def releaseCheckpoints(): Unit = checkpoints.clear()
 
-  /** Run `register` once per session of this context. */
-  def oncePerSession(spark: SparkSession)(register: => Unit): Unit =
-    if (listened.add(spark)) register
+  /** Run `register` once per (session of this context, `key`): each
+    * key is its own registration, so two users never share a flag.
+    */
+  def oncePerSession(spark: SparkSession, key: Any)(register: => Unit): Unit = {
+    val first = registered.synchronized {
+      registered.computeIfAbsent(spark, _ => new java.util.HashSet[Any]()).add(key)
+    }
+    if (first) register
+  }
 
   private def free(): Unit = {
     unpersistTracked()

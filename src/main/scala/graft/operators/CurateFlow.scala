@@ -8,12 +8,12 @@ import org.apache.spark.sql.functions._
   * the individually-oracle-checked operators (each stage cites its
   * query):
   *
-  *   1. URL canonical dedup (q82's batch form) and per-domain cap
-  *      (q79) — admission control, cheapest first;
+  *   1. URL canonical dedup (q82's first-arrival rule) and
+  *      per-domain cap (q79) — admission control, cheapest first;
   *   2. per-document filters: C4 blocklist (q83) + Gopher rules (q68);
   *   3. text dedup, narrowest scope outward: within-doc lines (q89),
   *      cross-corpus paragraphs (q69), exact content fingerprints
-  *      (q63's batch rule), Jaccard near-dups keep-first (q36/q37);
+  *      (q63's rule), Jaccard near-dups keep-first (q36/q37);
   *   4. eval decontamination via the Bloom regime (q87/q51);
   *   5. packaging: temperature mix to a token budget (q91) and
   *      deterministic shard assignment (q78).
@@ -47,7 +47,7 @@ object CurateFlow {
           salt: String = "curate"): CurateResult = {
     val funnel = Seq.newBuilder[(String, Long)]
     // localCheckpoint, not persist: eleven chained stages — several
-    // of which JOIN their own input (line/para rewrites, keep-first)
+    // of which JOIN their own input (para rewrite, near-dup keep-first)
     // — grow the logical plan geometrically, and Catalyst re-derives
     // the whole tree per stage (the Components.scala pathology).
     // Checkpointing truncates lineage to the materialized blocks. The
@@ -68,13 +68,9 @@ object CurateFlow {
     val input = stage("input", docs.select(
       col("doc_id"), col("url"), col("source"), col("text")))
 
-    // 1a. first doc per dedup-canonical URL (q82 batch rule, min id)
-    val normed = input.withColumn("_norm", UrlOps.normalizeUrl(col("url")))
-    val firstPerUrl = normed.groupBy(col("_norm"))
-      .agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id"))
-    val urlDeduped = stage("url_dedup",
-      normed.join(firstPerUrl, Seq("doc_id"), "left_semi").drop("_norm"))
+    // 1a. first doc per dedup-canonical URL (q82's rule, first = min id)
+    val urlDeduped = stage("url_dedup", FirstArrival.keep(input,
+      UrlOps.normalizeUrl(col("url")), Seq("doc_id")))
 
     // 1b. per-domain crawl-diversity cap (q79). Each sampling stage
     // gets its OWN salt: the cap keeps the LOWEST md5(id:salt) ranks
@@ -107,15 +103,11 @@ object CurateFlow {
         .filter(length(col("text")) > 0))
 
     // 3c. exact CONTENT dedup on the normalized fingerprint — the
-    // batch form of dedupByContent (q63): case/whitespace re-crawl
-    // variants collapse (q06's raw-hash dedup deliberately keeps them
-    // distinct — wrong for a release)
-    val firstPerFp = paraDeduped
-      .select(col("doc_id"), TextOps.fingerprint64(col("text")).as("_fp"))
-      .groupBy(col("_fp")).agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id"))
-    val exactDeduped = stage("exact_dedup",
-      paraDeduped.join(firstPerFp, Seq("doc_id"), "left_semi"))
+    // rule of dedupByContent (q63), first = min id: case/whitespace
+    // re-crawl variants collapse (q06's raw-hash dedup deliberately
+    // keeps them distinct — wrong for a release)
+    val exactDeduped = stage("exact_dedup", FirstArrival.keep(paraDeduped,
+      TextOps.fingerprint64(col("text")), Seq("doc_id")))
 
     // 3d. near-dup keep-first (bucketed inverted-index Jaccard)
     val pairs = NearDup.jaccardNearDups(exactDeduped, "doc_id", "text",

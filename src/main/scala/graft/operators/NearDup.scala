@@ -63,7 +63,7 @@ object NearDup {
     * oracle.
     */
   private def ensureCapListener(spark: org.apache.spark.sql.SparkSession): Unit =
-    graft.GraftContext(spark).oncePerSession(spark) {
+    graft.GraftContext(spark).oncePerSession(spark, CapMetricPrefix) {
       spark.listenerManager.register(
         new org.apache.spark.sql.util.QueryExecutionListener {
           override def onSuccess(funcName: String,
@@ -471,6 +471,22 @@ object NearDup {
   /** Hamming distance between two 64-bit signatures. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
+  /** The pigeonhole chunks of a 64-bit SimHash, one (chunk, v) struct
+    * row each: `maxHamming + 1` chunks of `64 / (maxHamming + 1)` bits,
+    * chunk c holding bits from c·bits up. Two signatures within
+    * `maxHamming` agree on at least one (chunk, v) — the block key of
+    * both the batch and the streaming SimHash pairs.
+    */
+  private[graft] def simhashChunks(sig: Column, maxHamming: Int): Column = {
+    val nChunks = maxHamming + 1
+    val chunkBits = 64 / nChunks
+    explode(array((0 until nChunks).map { c =>
+      struct(lit(c).as("chunk"),
+        shiftright(sig, c * chunkBits)
+          .bitwiseAND(lit((1L << chunkBits) - 1)).as("v"))
+    }: _*))
+  }
+
   /** SimHash near-dups within maxHamming, using the pigeonhole banding
     * trick: split the 64-bit signature into (maxHamming+1) chunks — two
     * docs within the distance bound must agree on at least one chunk,
@@ -489,16 +505,10 @@ object NearDup {
     */
   def simhashNearDups(docs: DataFrame, idCol: String, textCol: String,
                       maxHamming: Int = 3, maxBucket: Int = 10000): DataFrame = {
-    val nChunks = maxHamming + 1
-    val chunkBits = 64 / nChunks
     val withSig = persistTracked(docs.select(col(idCol).as("doc"),
       simhash64(col(textCol)).as("sig")))
     val chunks = withSig.select(col("doc"),
-      explode(array((0 until nChunks).map { c =>
-        struct(lit(c).as("chunk"),
-          shiftright(col("sig"), c * chunkBits)
-            .bitwiseAND(lit((1L << chunkBits) - 1)).as("v"))
-      }: _*)).as("ck"))
+        simhashChunks(col("sig"), maxHamming).as("ck"))
       .select(col("doc"), col("ck.chunk"), col("ck.v"))
     val keys = Seq("chunk", "v")
     val cand = blockPairs(capBlocks(chunks, keys, maxBucket, minBlock = 2), keys)

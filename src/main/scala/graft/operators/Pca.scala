@@ -2,10 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Literal, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
 
 /** Deterministic PCA over embedding columns — the dimensionality
   * reduction step in front of semantic dedup / ANN (SemDeDup's
@@ -245,76 +241,7 @@ object Pca {
     * integer components (one pass, codegen — k·d multiplies per row
     * with zero allocation beyond the output).
     */
-  def project(spark: SparkSession, vec: Column, model: PcaModel): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pca_project_q", exprs => PcaProjectExpression(exprs.head,
-        longArrayLit(exprs(1), "pca_project_q mbar"),
-        longArrayLit(exprs(2), "pca_project_q rot"),
-        intLit(exprs(3), "pca_project_q k"),
-        intLit(exprs(4), "pca_project_q scale")), "internal")
-    call_function("pca_project_q", vec, lit(model.mbar),
-      lit(model.rotQ.flatten), lit(model.k), lit(model.scale))
-  }
-
-  private def intLit(e: Expression, what: String): Int = e match {
-    case Literal(v: Int, IntegerType) => v
-    case other => throw new IllegalArgumentException(
-      s"$what must be an integer literal, got $other")
-  }
-  private def longArrayLit(e: Expression, what: String): Array[Long] =
-    e match {
-      case Literal(a: ArrayData, ArrayType(LongType, _)) => a.toLongArray()
-      case other => throw new IllegalArgumentException(
-        s"$what must be a long-array literal, got ${other.getClass.getName}")
-    }
-}
-
-object PcaProjectHelper {
-  def eval(v: ArrayData, mbar: Array[Long], rot: Array[Long], k: Int,
-      scale: Int): ArrayData = {
-    val dim = mbar.length
-    require(v.numElements() == dim,
-      s"pca_project_q expected dim=$dim, got ${v.numElements()}")
-    val centered = new Array[Long](dim)
-    var i = 0
-    while (i < dim) {
-      val x = v.getFloat(i).toDouble * scale
-      val q = if (x >= 0) java.lang.Math.round(x) else -java.lang.Math.round(-x)
-      centered(i) = q - mbar(i)
-      i += 1
-    }
-    val out = new Array[Long](k)
-    var c = 0
-    while (c < k) {
-      var acc = 0L
-      val base = c * dim
-      i = 0
-      while (i < dim) {
-        acc += centered(i) * rot(base + i)
-        i += 1
-      }
-      out(c) = acc
-      c += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-}
-
-case class PcaProjectExpression(child: Expression, mbar: Array[Long],
-    rot: Array[Long], k: Int, scale: Int) extends UnaryExpression
-    with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "pca_project_q"
-  override def nullSafeEval(v: Any): Any =
-    PcaProjectHelper.eval(v.asInstanceOf[ArrayData], mbar, rot, k, scale)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mb = ctx.addReferenceObj("pcaMbar", mbar, "long[]")
-    val rt = ctx.addReferenceObj("pcaRot", rot, "long[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.operators.PcaProjectHelper$$.MODULE$$" +
-        s".eval($c, $mb, $rt, $k, $scale);")
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  def project(spark: SparkSession, vec: Column, model: PcaModel): Column =
+    graft.plans.TextExprs.pcaProject(spark, vec, model.mbar,
+      model.rotQ.flatten, model.k, model.scale)
 }

@@ -286,13 +286,15 @@ object TextOps {
     * paragraphs in order. The repeated-boilerplate (footer/header/
     * cookie-banner) killer at crawl scale.
     *
-    * Scale shape: paragraphs explode map-only; first-arrival is a
-    * partial-aggregated min over the 8-byte paragraph HASH (never a
-    * window — a boilerplate paragraph shared by 10^6 docs is exactly
-    * the hot key the CC work routes around, and min-aggregation is
-    * map-side combinable), and the reassembly groups by doc. Keying
-    * on xxhash64 trades a 2^-64 collision (two distinct paragraphs
-    * merging) for never shuffling paragraph text as a join key.
+    * Scale shape: paragraphs explode map-only; first-arrival is
+    * `FirstArrival.keep` grouped by the 8-byte paragraph HASH — one
+    * partial-aggregated `min_by` that carries the surviving row itself,
+    * so nothing joins back on the hash (and never a window: a
+    * boilerplate paragraph shared by 10^6 docs is exactly the hot key
+    * the CC work routes around, and min-aggregation is map-side
+    * combinable); the reassembly groups by doc. Keying on xxhash64
+    * trades a 2^-64 collision (two distinct paragraphs merging) for
+    * never shuffling paragraph text as a grouping key.
     *
     * Returns (idCol, text_dedup) for EVERY input document (a document
     * whose every paragraph was seen before comes back empty).
@@ -306,12 +308,7 @@ object TextOps {
       .select(col(idCol),
         posexplode(split(col(textCol), java.util.regex.Pattern.quote(sep))))
       .toDF(idCol, "pos", "para")
-      .withColumn("h", xxhash64(col("para")))
-    val first = paras.groupBy(col("h"))
-      .agg(min(struct(col(idCol).as("d"), col("pos").as("p"))).as("f"))
-      .select(col("h"), col("f.d").as("fdoc"), col("f.p").as("fpos"))
-    val kept = paras.join(first, Seq("h"))
-      .filter(col(idCol) === col("fdoc") && col("pos") === col("fpos"))
+    val kept = FirstArrival.keep(paras, xxhash64(col("para")), Seq(idCol, "pos"))
     reassembleParagraphs(kept, docs, idCol, sep)
   }
 

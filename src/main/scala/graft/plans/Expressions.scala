@@ -40,15 +40,27 @@ object PStartHelper {
 object GraftFunctions {
 
   /** Register every native kernel on `spark`'s session for SQL use
-    * (`SELECT p_start(col)`); the Column APIs call it.
+    * (`SELECT p_start(col)`), once per session; the Column APIs call it.
     */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    def intLit(e: Expression, what: String): Int = e match {
-      case Literal(v: Int, IntegerType) => v
-      case other => throw new IllegalArgumentException(
-        s"$what must be an integer literal, got $other")
+  def register(spark: SparkSession): Unit =
+    graft.GraftContext(spark).oncePerSession(spark, "graft.plans.GraftFunctions") {
+      registerAll(spark)
     }
+
+  private def intLit(e: Expression, what: String): Int = e match {
+    case Literal(v: Int, IntegerType) => v
+    case other => throw new IllegalArgumentException(
+      s"$what must be an integer literal, got $other")
+  }
+
+  private def longArrayLit(e: Expression, what: String): Array[Long] = e match {
+    case Literal(a: ArrayData, ArrayType(LongType, _)) => a.toLongArray()
+    case other => throw new IllegalArgumentException(
+      s"$what must be a long-array literal, got ${other.getClass.getName}")
+  }
+
+  private def registerAll(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     // `name(cols..., ints...)` calls `helper.eval(cols..., ints...)`.
     // The columns are checked as ExpectsInputTypes checks them: given
     // `inputTypes`, StaticInvoke would cast a mistyped column instead
@@ -91,16 +103,18 @@ object GraftFunctions {
     kernel("hyperplane_sigs", HyperplaneMultiHelper,
       ArrayType(IntegerType, containsNull = false), Seq(floats),
       Seq("nBits", "nTables", "seedBase"))
-    // the one kernel with its own expression class: its bitmap is a
-    // reference object of the generated code, not a per-row argument
+    // the two kernels with their own expression class: their arrays
+    // are reference objects of the generated code, not per-row arguments
     registry.createOrReplaceTempFunction(
       "bloom_any_contain", exprs => BloomAnyContainExpression(exprs.head,
-        exprs(1) match {
-          case Literal(a: ArrayData, ArrayType(LongType, _)) => a.toLongArray()
-          case other => throw new IllegalArgumentException(
-            "bloom_any_contain bitmap must be a long-array literal, got " +
-              other.getClass.getName)
-        }, intLit(exprs(2), "bloom_any_contain probes")), "internal")
+        longArrayLit(exprs(1), "bloom_any_contain bitmap"),
+        intLit(exprs(2), "bloom_any_contain probes")), "internal")
+    registry.createOrReplaceTempFunction(
+      "pca_project_q", exprs => PcaProjectExpression(exprs.head,
+        longArrayLit(exprs(1), "pca_project_q mbar"),
+        longArrayLit(exprs(2), "pca_project_q rot"),
+        intLit(exprs(3), "pca_project_q k"),
+        intLit(exprs(4), "pca_project_q scale")), "internal")
   }
 
   /** Column API (requires `register(spark)`). */

@@ -576,10 +576,66 @@ case class BloomAnyContainExpression(child: Expression, bitmap: Array[Long],
     copy(child = newChild)
 }
 
-/** Column API of the native kernels: each call registers them
-  * ([[GraftFunctions.register]]) and names its kernel through the
-  * session's function registry — Column->Expression construction is
-  * not public in Spark 4.
+/** The quantized PCA projection `pca_project_q` (`Pca.project`): the
+  * centered, quantized vector times the quantized rotation rows, in
+  * exact integer arithmetic. Like `bloom_any_contain`, its arrays (the
+  * mean and the rotation) ride as reference objects of the generated
+  * code, not as per-row arguments.
+  */
+object PcaProjectHelper {
+  def eval(v: ArrayData, mbar: Array[Long], rot: Array[Long], k: Int,
+      scale: Int): ArrayData = {
+    val dim = mbar.length
+    require(v.numElements() == dim,
+      s"pca_project_q expected dim=$dim, got ${v.numElements()}")
+    val centered = new Array[Long](dim)
+    var i = 0
+    while (i < dim) {
+      val x = v.getFloat(i).toDouble * scale
+      val q = if (x >= 0) java.lang.Math.round(x) else -java.lang.Math.round(-x)
+      centered(i) = q - mbar(i)
+      i += 1
+    }
+    val out = new Array[Long](k)
+    var c = 0
+    while (c < k) {
+      var acc = 0L
+      val base = c * dim
+      i = 0
+      while (i < dim) {
+        acc += centered(i) * rot(base + i)
+        i += 1
+      }
+      out(c) = acc
+      c += 1
+    }
+    new GenericArrayData(out)
+  }
+}
+
+case class PcaProjectExpression(child: Expression, mbar: Array[Long],
+    rot: Array[Long], k: Int, scale: Int) extends UnaryExpression
+    with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType))
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "pca_project_q"
+  override def nullSafeEval(v: Any): Any =
+    PcaProjectHelper.eval(v.asInstanceOf[ArrayData], mbar, rot, k, scale)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val mb = ctx.addReferenceObj("pcaMbar", mbar, "long[]")
+    val rt = ctx.addReferenceObj("pcaRot", rot, "long[]")
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.plans.PcaProjectHelper$$.MODULE$$" +
+        s".eval($c, $mb, $rt, $k, $scale);")
+  }
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** Column API of the native kernels: each call registers them on
+  * the session's first use ([[GraftFunctions.register]]) and names its
+  * kernel through the session's function registry — Column->Expression
+  * construction is not public in Spark 4.
   */
 object TextExprs {
   import org.apache.spark.sql.functions.{call_function, lit}
@@ -613,4 +669,7 @@ object TextExprs {
   def bloomAnyContain(spark: SparkSession, c: Column, bitmap: Array[Long],
       probes: Int): Column =
     call(spark, "bloom_any_contain", c, lit(bitmap), lit(probes))
+  def pcaProject(spark: SparkSession, c: Column, mbar: Array[Long],
+      rot: Array[Long], k: Int, scale: Int): Column =
+    call(spark, "pca_project_q", c, lit(mbar), lit(rot), lit(k), lit(scale))
 }

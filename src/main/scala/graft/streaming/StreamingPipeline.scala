@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.model.Turn
-import graft.operators.{Annotation, DimIndex, MatchKernel}
+import graft.operators.{Annotation, DimIndex, FirstArrival, MatchKernel, NearDup}
 import graft.plans.IcebergLikeTable
 
 /** Structured-streaming wrap of the match pipeline (north rule):
@@ -335,8 +335,7 @@ object StreamingPipeline {
       out.result().iterator
     }
 
-    val wm = if (streaming) ann.withWatermark("ts", cfg.watermark) else ann
-    wm.groupByKey(_.conv_id)
+    ann.withWatermark("ts", cfg.watermark).groupByKey(_.conv_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(fsm)
   }
@@ -365,26 +364,15 @@ object StreamingPipeline {
     * 8-byte `TextOps.fingerprint64` (lower/trim/whitespace-collapse),
     * so re-crawls and formatting variants of the same text are
     * suppressed while state stays 8 bytes per distinct document —
-    * the shape that survives a 10^12-doc stream.
+    * the shape that survives a 10^12-doc stream. Batch-mode execution
+    * is the first arrival by (ts, doc_id) (`FirstArrival.keep`).
     */
   def dedupByContent(docs: Dataset[DocEvent],
                      cfg: StreamConfig): Dataset[DocEvent] = {
     import docs.sparkSession.implicits._
-    val withFp = docs
-      .withColumn("_fp", graft.operators.TextOps.fingerprint64(col("text")))
-    val kept =
-      if (docs.isStreaming)
-        withFp.withWatermark("ts", cfg.watermark)
-          .dropDuplicatesWithinWatermark("_fp")
-          .drop("_fp")
-      else
-        // batch equivalent of first-arrival-wins: min_by event time
-        // (doc_id tiebreak), deterministic under any partitioning
-        withFp.groupBy(col("_fp"))
-          .agg(min_by(struct(docs.columns.toIndexedSeq.map(col): _*),
-            struct(col("ts"), col("doc_id"))).as("_d"))
-          .select(col("_d.*"))
-    kept.as[DocEvent]
+    FirstArrival.keep(docs.withWatermark("ts", cfg.watermark).toDF(),
+        graft.operators.TextOps.fingerprint64(col("text")), Seq("ts", "doc_id"))
+      .as[DocEvent]
   }
 
   /** One crawl event of a streaming URL-dedup pass. */
@@ -397,25 +385,16 @@ object StreamingPipeline {
     * is one 8-byte xxhash of the canonical form per distinct URL,
     * never the URL string: the same bounded-state shape as
     * `dedupByContent`, sized for a 10^12-event crawl stream.
-    * Batch-mode execution is the deterministic first-arrival
-    * (min over (ts, doc_id)) on any partitioning.
+    * Batch-mode execution is the deterministic first arrival by
+    * (ts, doc_id) on any partitioning (`FirstArrival.keep`).
     */
   def dedupByUrl(events: Dataset[UrlEvent],
                  cfg: StreamConfig): Dataset[UrlEvent] = {
     import events.sparkSession.implicits._
-    val withK = events.withColumn("_k",
-      xxhash64(graft.operators.UrlOps.normalizeUrl(col("url"))))
-    val kept =
-      if (events.isStreaming)
-        withK.withWatermark("ts", cfg.watermark)
-          .dropDuplicatesWithinWatermark("_k")
-          .drop("_k")
-      else
-        withK.groupBy(col("_k"))
-          .agg(min_by(struct(events.columns.toIndexedSeq.map(col): _*),
-            struct(col("ts"), col("doc_id"))).as("_d"))
-          .select(col("_d.*"))
-    kept.as[UrlEvent]
+    FirstArrival.keep(events.withWatermark("ts", cfg.watermark).toDF(),
+        xxhash64(graft.operators.UrlOps.normalizeUrl(col("url"))),
+        Seq("ts", "doc_id"))
+      .as[UrlEvent]
   }
 
   /** A url event with its derived domain (the quota key). */
@@ -468,9 +447,7 @@ object StreamingPipeline {
     val withDom = events
       .withColumn("domain", graft.operators.UrlOps.host(col("url")))
       .as[DomainEvent]
-    val wm = if (withDom.isStreaming)
-      withDom.withWatermark("ts", cfg.watermark) else withDom
-    wm.groupByKey(_.domain)
+    withDom.withWatermark("ts", cfg.watermark).groupByKey(_.domain)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fsm)
   }
@@ -490,10 +467,10 @@ object StreamingPipeline {
     * aged by the watermark: the same bounded-horizon semantic as
     * `dedupByContent`, at paragraph granularity.
     *
-    * Batch-mode execution uses the deterministic first-arrival
-    * (min_by event time, then (doc, pos)) — with uniform timestamps
-    * this selects exactly what `TextOps.dedupParagraphs` keeps
-    * (stream==batch pinned in StreamingSpec).
+    * Batch-mode execution is the first arrival by (ts, doc_id, pos)
+    * (`FirstArrival.keep`) — with uniform timestamps this selects
+    * exactly what `TextOps.dedupParagraphs` keeps (stream==batch
+    * pinned in StreamingSpec).
     */
   def dedupParagraphsStream(docs: Dataset[DocEvent], cfg: StreamConfig,
                             sep: String = "\n"): Dataset[ParaEvent] = {
@@ -503,17 +480,9 @@ object StreamingPipeline {
         posexplode(split(col("text"),
           java.util.regex.Pattern.quote(sep)))) // literal separator
       .toDF("doc_id", "ts", "pos", "para")
-      .withColumn("_h", xxhash64(col("para")))
-    val kept =
-      if (docs.isStreaming)
-        paras.withWatermark("ts", cfg.watermark)
-          .dropDuplicatesWithinWatermark("_h")
-      else
-        paras.groupBy(col("_h"))
-          .agg(min_by(struct(col("doc_id"), col("pos"), col("para"), col("ts")),
-            struct(col("ts"), col("doc_id"), col("pos"))).as("_p"))
-          .select(col("_p.*"))
-    kept.select(col("doc_id"), col("pos"), col("para"), col("ts"))
+      .withWatermark("ts", cfg.watermark)
+    FirstArrival.keep(paras, xxhash64(col("para")), Seq("ts", "doc_id", "pos"))
+      .select(col("doc_id"), col("pos"), col("para"), col("ts"))
       .as[ParaEvent]
   }
 
@@ -602,15 +571,10 @@ object StreamingPipeline {
     }
 
     val sigs = docs.select(col("doc_id"), col("ts"),
-      graft.operators.NearDup.simhash64(col("text")).as("sig"))
-    val watermarked =
-      if (docs.isStreaming) sigs.withWatermark("ts", cfg.watermark) else sigs
-    val chunks = watermarked.select(col("doc_id"), col("sig"), col("ts"),
-      explode(array((0 until nChunks).map { c =>
-        struct(lit(c).as("chunk"),
-          shiftright(col("sig"), c * chunkBits)
-            .bitwiseAND(lit((1L << chunkBits) - 1)).as("v"))
-      }: _*)).as("ck"))
+      NearDup.simhash64(col("text")).as("sig"))
+    val chunks = sigs.withWatermark("ts", cfg.watermark)
+      .select(col("doc_id"), col("sig"), col("ts"),
+        NearDup.simhashChunks(col("sig"), maxHamming).as("ck"))
       .select(col("doc_id"), col("sig"), col("ts"), col("ck.chunk"), col("ck.v"))
       .as[ChunkRow]
     chunks.groupByKey(r => (r.chunk, r.v))
@@ -717,9 +681,7 @@ object StreamingPipeline {
       out.result().iterator
     }
 
-    val wm = if (streaming) events.withWatermark("ts", cfg.watermark)
-      else events
-    wm.groupByKey(_.token)
+    events.withWatermark("ts", cfg.watermark).groupByKey(_.token)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(fsm)
   }
@@ -763,9 +725,7 @@ object StreamingPipeline {
       state.update(PackState(cum))
       out.iterator
     }
-    val wm = if (docs.isStreaming)
-      docs.withWatermark("ts", cfg.watermark) else docs
-    wm.groupByKey(_.stratum)
+    docs.withWatermark("ts", cfg.watermark).groupByKey(_.stratum)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fsm)
   }

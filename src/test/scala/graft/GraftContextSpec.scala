@@ -67,6 +67,19 @@ class GraftContextSpec extends AnyFunSuite {
     assert(builds.get == 2)
   }
 
+  test("oncePerSession runs each key once per session; a second key is its own registration") {
+    val (a, b) = (new AtomicInteger(0), new AtomicInteger(0))
+    val ctx = GraftContext(spark)
+    for (_ <- 1 to 3) {
+      ctx.oncePerSession(spark, "spec.once.a")(a.incrementAndGet())
+      ctx.oncePerSession(spark, "spec.once.b")(b.incrementAndGet())
+    }
+    assert((a.get, b.get) == (1, 1))
+    // a new session of the same context registers again
+    ctx.oncePerSession(spark.newSession(), "spec.once.a")(a.incrementAndGet())
+    assert(a.get == 2)
+  }
+
   test("release(sc) frees the context's persisted blocks and the next call rebuilds") {
     val sc = spark.sparkContext
     val builds = new AtomicInteger(0)

@@ -389,6 +389,15 @@ class PlanQualitySpec extends AnyFunSuite {
       s"paragraph first-arrival used a window:\n$dedup")
     assert(!dedup.contains("CartesianProduct") &&
       !dedup.contains("BroadcastNestedLoopJoin"), dedup)
+    // the first-arrival aggregate carries the surviving row: nothing
+    // joins back on the paragraph hash, and the one join left is the
+    // reassembly's join on the id
+    val joinKeys = operators.TextOps.dedupParagraphs(docs, "doc_id", "text")
+      .queryExecution.optimizedPlan.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join =>
+          j.condition.toSeq.flatMap(_.references.map(_.name)).distinct
+      }
+    assert(joinKeys == Seq(Seq("doc_id")), s"joins on $joinKeys")
   }
 
   test("semdedup pairs via cell equi-join; no quadratic strategy") {
