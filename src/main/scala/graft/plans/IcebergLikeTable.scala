@@ -4,8 +4,10 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 import scala.util.Using
-import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.functions.{array, col, lit, udaf}
 
 /** Snapshot-committing partitioned-parquet table — the sandbox stand-in
   * for the north rule's Iceberg sink (no Iceberg runtime jar ships with
@@ -51,36 +53,28 @@ final class IcebergLikeTable(val root: String, val partitionCols: Seq[String]) {
     */
   def replacePartitions(df: DataFrame, batchId: Long): Unit = {
     if (committed(batchId)) return // replayed micro-batch: already durable
-    // per-partition row counts for the manifest (lineage/metrics)
-    val counts = partitionEntries(df)
+    val counts = writeBatch(df, batchId)
     if (counts.isEmpty) return // empty micro-batch: nothing to commit
-    writeBatch(df, batchId)
     commitManifest(batchId, None, counts)
   }
 
-  /** One manifest entry per partition of `df` that has rows:
-    * `{"<col>":"<value>",...,"rows":<n>}`. Empty when `df` is: the
-    * global count of an unpartitioned table is one row of 0.
-    */
-  private def partitionEntries(df: DataFrame): Seq[String] = {
-    val n = partitionCols.length
-    df.groupBy(partitionCols.map(col): _*).count().collect().toSeq
-      .filter(_.getLong(n) > 0)
-      .map { r =>
-        val keys = partitionCols.indices
-          .map(i => quote(partitionCols(i)) + ":" + quote(String.valueOf(r.get(i))))
-        (keys :+ s""""rows":${r.getLong(n)}""").mkString("{", ",", "}")
-      }
-  }
-
-  /** Dynamic partition overwrite of `df` under `_batch_id = batchId`.
+  /** Dynamic partition overwrite of `df` under `_batch_id = batchId`,
+    * returning one manifest entry per partition it wrote:
+    * `{"<col>":"<value>",...,"rows":<n>}` (a NULL value reads `"null"`).
+    * The counts are observed during the write itself (`Dataset.observe`
+    * with a fresh `Observation`), so a commit evaluates `df` once; an
+    * empty `df` writes no data file and returns no entry.
+    *
     * The id goes in as a string literal: Spark inlines a long literal
     * into the generated code, so every batch id would compile the write
     * stage anew. The directory is `_batch_id=<id>` either way, and reads
     * infer the column's numeric type from the path.
     */
-  private def writeBatch(df: DataFrame, batchId: Long): Unit =
-    df.withColumn("_batch_id", lit(batchId.toString))
+  private def writeBatch(df: DataFrame, batchId: Long): Seq[String] = {
+    val observation = new Observation()
+    df.observe(observation, IcebergLikeTable.partitionRows(
+        array(partitionCols.map(c => col(c).cast("string")): _*)).as("rows"))
+      .withColumn("_batch_id", lit(batchId.toString))
       .write
       // per-write option, NOT a session conf set: a session-level
       // partitionOverwriteMode=dynamic would leak into unrelated
@@ -89,6 +83,14 @@ final class IcebergLikeTable(val root: String, val partitionCols: Seq[String]) {
       .mode(SaveMode.Overwrite)
       .partitionBy(partitionCols :+ "_batch_id": _*)
       .parquet(root)
+    observation.get("rows")
+      .asInstanceOf[scala.collection.Map[scala.collection.Seq[String], Long]]
+      .toSeq.map { case (values, n) =>
+        val keys = partitionCols.zip(values)
+          .map { case (c, v) => quote(c) + ":" + quote(String.valueOf(v)) }
+        (keys :+ s""""rows":$n""").mkString("{", ",", "}")
+      }.sorted
+  }
 
   /** Snapshot commit: write the manifest to a temp file, atomic rename. */
   private def commitManifest(batchId: Long, replaces: Option[Seq[Long]],
@@ -266,14 +268,32 @@ final class IcebergLikeTable(val root: String, val partitionCols: Seq[String]) {
     val df =
       if (filesPerPartition <= 1) rows.repartition(partitionCols.map(col): _*)
       else rows.repartition(filesPerPartition, partitionCols.map(col): _*)
-    val counts = partitionEntries(df)
     // dynamic partition OVERWRITE, not append: every partition written
     // here is solely owned by this compactionId, so a retry after a
     // crash between the parquet write and the manifest rename replaces
     // the orphaned files instead of appending the live rows a second
     // time — the same idempotence contract replacePartitions gives
     // micro-batches
-    writeBatch(df, compactionId)
-    commitManifest(compactionId, Some(live), counts)
+    commitManifest(compactionId, Some(live), writeBatch(df, compactionId))
   }
+}
+
+object IcebergLikeTable {
+
+  /** Rows per partition-value tuple, folded as the write's rows pass by:
+    * the manifest's per-partition counts without a separate count job.
+    */
+  private object PartitionRows
+      extends Aggregator[Seq[String], Map[Seq[String], Long], Map[Seq[String], Long]] {
+    def zero: Map[Seq[String], Long] = Map.empty
+    def reduce(b: Map[Seq[String], Long], key: Seq[String]): Map[Seq[String], Long] =
+      b.updated(key, b.getOrElse(key, 0L) + 1L)
+    def merge(a: Map[Seq[String], Long], b: Map[Seq[String], Long]): Map[Seq[String], Long] =
+      b.foldLeft(a) { case (m, (key, n)) => m.updated(key, m.getOrElse(key, 0L) + n) }
+    def finish(b: Map[Seq[String], Long]): Map[Seq[String], Long] = b
+    def bufferEncoder = ExpressionEncoder[Map[Seq[String], Long]]()
+    def outputEncoder = ExpressionEncoder[Map[Seq[String], Long]]()
+  }
+
+  private val partitionRows = udaf(PartitionRows, ExpressionEncoder[Seq[String]]())
 }

@@ -11,10 +11,14 @@ import graft.operators.{Annotation, DimIndex, FirstArrival, MatchKernel, NearDup
 import graft.plans.IcebergLikeTable
 
 /** Structured-streaming wrap of the match pipeline (north rule):
-  * watermark -> stateful dedup -> explicit conv_id-hash repartition ->
-  * map-only broadcast annotation -> (a) per-turn append sink,
-  * (b) watermark-bounded windowed tier rollups, (c) per-conversation
-  * session automaton via flatMapGroupsWithState.
+  * watermark -> stateful dedup -> map-only broadcast annotation, then
+  * three consumers, each one Spark job of three stages per trigger:
+  * (a) the per-turn sink, which repartitions on conv_id and commits
+  * with one write job (the manifest's counts are observed during the
+  * write), (b) watermark-bounded windowed tier rollups, whose one
+  * further exchange is the window aggregate's, (c) the per-conversation
+  * session automaton via flatMapGroupsWithState, fed by an explicit
+  * conv_id-hash repartition of a four-column row.
   *
   * Determinism contract (BASELINE.json north_star): for the same input
   * stream and the same watermark, output rows are identical — late rows
@@ -61,18 +65,23 @@ object StreamingPipeline {
 
   /** (a) Per-turn annotation stream, in its one operator order:
     * ONE watermark on `ts`, then the stateful dedup on
-    * (conv_id, turn_idx), then the explicit conv_id-hash repartition
-    * (north rule), then the broadcast kernel. The watermark and the
-    * dedup run on the narrow `Turn` rows (roughly half the bytes of an
-    * `Annotation`), so the dedup exchange and the state store carry
+    * (conv_id, turn_idx), then the broadcast kernel in the same stage as
+    * the dedup's state store — no exchange between them, so every
+    * consumer runs the kernel once per surviving turn. The watermark and
+    * the dedup run on the narrow `Turn` rows (roughly half the bytes of
+    * an `Annotation`), so the dedup exchange and the state store carry
     * Turn-sized payloads and the kernel runs on the post-dedup
-    * survivors only. The kernel is applied as an UNTYPED UDF
-    * projection that keeps the original `ts` attribute in the output
-    * row — a typed `.map` would strip the event-time marker, and Spark
-    * refuses a new watermark after a stateful operator, so this
-    * projection trick is what lets the downstream windowed aggregate
-    * and session automaton share the one watermark (StreamingSpec pins
-    * a windowed rollup over this stream).
+    * survivors only. The stream is NOT repartitioned on conv_id here:
+    * the consumers keyed by conversation do that themselves
+    * (`startAnnotationSink` on the sink rows, `sessionAutomaton` on a
+    * four-column row), and `tierRollup`, keyed by window, needs no such
+    * shuffle. The kernel is applied as an UNTYPED UDF projection that
+    * keeps the original `ts` attribute in the output row — a typed
+    * `.map` would strip the event-time marker, and Spark refuses a new
+    * watermark after a stateful operator, so this projection trick is
+    * what lets the downstream windowed aggregate and session automaton
+    * share the one watermark (StreamingSpec pins a windowed rollup over
+    * this stream).
     *
     * The name records an older annotate-first order that is gone; it
     * stays because the benchmark harness (`perfbench`) calls it.
@@ -88,7 +97,6 @@ object StreamingPipeline {
     turns
       .withWatermark("ts", cfg.watermark)
       .dropDuplicatesWithinWatermark("conv_id", "turn_idx")
-      .repartition(cfg.partitions, col("conv_id"))
       .select(col("ts"), annUdf(col("conv_id"), col("turn_idx"), col("role"),
         col("ts"), col("text"), col("tool")).as("a"))
       // project the struct open but keep the ORIGINAL ts attribute —
@@ -145,15 +153,25 @@ object StreamingPipeline {
         col("session_window.end").as("session_end"),
         col("conv_id"), col("n_turns"), col("n_tier_1"))
 
+  /** The four columns of an annotated turn the session automaton reads. */
+  final case class TierTurn(conv_id: String, turn_idx: Int, ts: Timestamp,
+                            highest_tier: String)
+
   /** (c) The tier-resolution session automaton: flatMapGroupsWithState
     * keyed by conv_id with event-time timeout at session gap past the
     * newest seen turn. Emits one SessionSummary per closed session.
+    *
+    * Its input is a `TierTurn` projection, explicitly hash-repartitioned
+    * into `cfg.partitions` on conv_id, and the groups are keyed by that
+    * same `conv_id` column: when `cfg.partitions` equals the session's
+    * shuffle-partition count, that repartition is the operator's one
+    * exchange, and it carries four columns instead of an `Annotation`.
     */
   def sessionAutomaton(ann: Dataset[Annotation], cfg: StreamConfig): Dataset[SessionSummary] = {
     import ann.sparkSession.implicits._
     val streaming = ann.isStreaming
 
-    def fsm(convId: String, rows: Iterator[Annotation],
+    def fsm(convId: String, rows: Iterator[TierTurn],
             state: GroupState[ConvState]): Iterator[SessionSummary] = {
       def summarize(s: ConvState): SessionSummary = {
         val top =
@@ -205,7 +223,9 @@ object StreamingPipeline {
       }
     }
 
-    ann.groupByKey(_.conv_id)
+    ann.select(col("conv_id"), col("turn_idx"), col("ts"), col("highest_tier"))
+      .repartition(cfg.partitions, col("conv_id"))
+      .groupBy(col("conv_id")).as[String, TierTurn]
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(fsm)
   }
@@ -736,23 +756,29 @@ object StreamingPipeline {
   private val SinkBuckets = 16
 
   /** Start the per-turn annotation sink: exactly-once via checkpoint +
-    * idempotent partition replace keyed (data_type, conv bucket).
+    * idempotent partition replace keyed (data_type, conv bucket). The
+    * sink rows are hash-repartitioned on conv_id inside the streaming
+    * plan, after the kernel, so each trigger's commit is one Spark job
+    * over already-annotated rows. The bucket is the same Murmur3 hash
+    * of conv_id, so whenever the shuffle-partition count divides
+    * `SinkBuckets` each (data_type, conv_bucket) is written by one task
+    * as one file.
     */
   def startAnnotationSink(ann: Dataset[Annotation], table: IcebergLikeTable,
                           checkpoint: String): StreamingQuery = {
     ann.toDF()
+      .withColumn("conv_bucket", pmod(hash(col("conv_id")), lit(SinkBuckets)))
+      .withColumn("tiers_json", to_json(struct(
+        col("tier_1"), col("tier_1b"), col("tier_2"), col("tier_3"))))
+      .drop("tier_1", "tier_1b", "tier_2", "tier_3",
+        "ds_tier_1", "ds_tier_1b", "ds_tier_2", "ds_tier_3")
+      .repartition(col("conv_id"))
       .writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val withBucket = batch.withColumn("conv_bucket",
-          pmod(hash(col("conv_id")), lit(SinkBuckets)))
-          .withColumn("tiers_json", to_json(struct(
-            col("tier_1"), col("tier_1b"), col("tier_2"), col("tier_3"))))
-          .drop("tier_1", "tier_1b", "tier_2", "tier_3",
-            "ds_tier_1", "ds_tier_1b", "ds_tier_2", "ds_tier_3")
-        table.replacePartitions(withBucket, batchId)
+        table.replacePartitions(batch, batchId)
         ()
       }
       .start()

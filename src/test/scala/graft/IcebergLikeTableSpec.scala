@@ -10,9 +10,10 @@ import graft.plans.IcebergLikeTable
 
 /** The snapshot table's commit path: manifests are valid JSON for
   * partitioned and unpartitioned tables, an empty batch commits
-  * nothing, the write stage compiles once per data shape rather than
-  * once per batch id, and manifest listings close their directory
-  * streams.
+  * nothing, a commit evaluates its input once and its manifest counts
+  * the rows it wrote, the write stage compiles once per data shape
+  * rather than once per batch id, and manifest listings close their
+  * directory streams.
   */
 class IcebergLikeTableSpec extends AnyFunSuite {
 
@@ -63,6 +64,42 @@ class IcebergLikeTableSpec extends AnyFunSuite {
       assert(table.liveBatches() == Seq(10L))
       assert(table.read(spark).count() == 15L)
     }
+  }
+
+  test("a commit evaluates its input once; its manifest counts the rows it wrote") {
+    import org.apache.spark.sql.functions.{col, concat, lit, udf, when}
+    val json = new ObjectMapper()
+    val table = new IcebergLikeTable(tmp("ilt_once"), Seq("k"))
+    val seen = spark.sparkContext.longAccumulator("ilt_rows_seen")
+    // on the partition column, so a separate count job would need it too
+    val seenK = udf { (k: String) => seen.add(1L); k }
+    // a generated source, so nothing folds the UDF; every 4th k is NULL
+    def batch(from: Long, n: Long): DataFrame =
+      spark.range(from, from + n).select(col("id").cast("int").as("v"),
+        seenK(when(col("id") % 4 =!= 0,
+          concat(lit("k"), (col("id") % 3).cast("string")))).as("k"))
+    def manifestRows(batchId: Long): Map[String, Long] =
+      json.readTree(table.manifestPath(batchId).toFile).get("partitions")
+        .elements().asScala.map(p => p.get("k").asText -> p.get("rows").asLong).toMap
+    def tableRows(batchId: Long): Map[String, Long] =
+      table.read(spark).filter(col("_batch_id") === batchId)
+        .groupBy(col("k")).count().collect()
+        .map(r => String.valueOf(r.get(0)) -> r.getLong(1)).toMap
+
+    table.replacePartitions(batch(0, 40), 0L)
+    assert(seen.value == 40L, s"the input's 40 rows were evaluated ${seen.value} times")
+    table.replacePartitions(batch(40, 21), 1L)
+    assert(seen.value == 61L, s"the input's 61 rows were evaluated ${seen.value} times")
+    for (id <- Seq(0L, 1L)) {
+      assert(manifestRows(id) == tableRows(id), s"snapshot $id")
+      assert(manifestRows(id).contains("null"), s"snapshot $id: ${manifestRows(id)}")
+    }
+    assert(manifestRows(0L).values.sum == 40L && manifestRows(1L).values.sum == 21L)
+
+    table.compact(spark, compactionId = 10L)
+    assert(table.liveBatches() == Seq(10L))
+    assert(manifestRows(10L) == tableRows(10L))
+    assert(manifestRows(10L).values.sum == 61L)
   }
 
   test("the write stage compiles once per data shape, not once per batch id") {

@@ -105,6 +105,80 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(a.size <= batchCount)
   }
 
+  test("stream queries: conv_id exchanges only where keyed by it; one sink job per batch") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+    val bc = Pipeline.cachedIndex(spark, 12)
+    val cfg = StreamConfig(partitions = 4)
+    val dir = java.nio.file.Files.createTempDirectory("plan_streams").toString
+    spark.createDataset(Synth.transcriptRows(Synth.TurnGenConfig(nConvs = 10,
+        turnsPerConv = 5, nGenes = 12, dupRate = 0.1)))
+      .coalesce(1).write.parquet(s"$dir/src")
+    val ann = StreamingPipeline.annotationsDedupFirst(spark.readStream
+      .schema(org.apache.spark.sql.Encoders.product[Turn].schema)
+      .parquet(s"$dir/src").as[Turn], bc, cfg)
+
+    // Spark jobs per (query id, batch id), read off each job's
+    // description ("<name>\nid = <id>\nrunId = ...\nbatch = <n>")
+    val jobs = new java.util.concurrent.ConcurrentHashMap[(String, Long), Int]()
+    val Batch = """(?s).*\nid = (\S+)\n.*\nbatch = (\d+).*""".r
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach {
+            case Batch(id, b) => jobs.merge((id, b.toLong), 1, (x: Int, y: Int) => x + y)
+            case "plan_streams_marker" => drained.countDown()
+            case _ =>
+          }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    def sink(df: org.apache.spark.sql.DataFrame, name: String): StreamingQuery =
+      df.writeStream.outputMode(OutputMode.Append)
+        .option("checkpointLocation", s"$dir/ckpt_$name")
+        .trigger(Trigger.AvailableNow()).format("parquet").option("path", s"$dir/$name")
+        .start()
+    val table = new graft.plans.IcebergLikeTable(s"$dir/annotations",
+      Seq("data_type", "conv_bucket"))
+    val qAnn = StreamingPipeline.startAnnotationSink(ann, table, s"$dir/ckpt_ann")
+    val qSess = sink(StreamingPipeline.sessionAutomaton(ann, cfg).toDF(), "sessions")
+    val qRoll = sink(StreamingPipeline.tierRollup(ann, cfg), "rollups")
+    try {
+      Seq(qAnn, qSess, qRoll).foreach(_.awaitTermination())
+      // listener events arrive in order: once the marker job's start is
+      // seen, so is every stream job's
+      spark.sparkContext.setJobDescription("plan_streams_marker")
+      spark.range(1).count()
+      spark.sparkContext.setJobDescription(null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    def plan(q: StreamingQuery): String =
+      q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan.toString
+    /** Each hash exchange's keys, in plan order (top first). */
+    def exchanges(plan: String): Seq[String] =
+      "Exchange hashpartitioning\\(([^)]*)\\)".r.findAllMatchIn(plan)
+        .map(_.group(1).replaceAll("#\\d+(-T\\d+ms)?", "")).toSeq
+    assert(exchanges(plan(qSess)) == Seq("conv_id, 4", "conv_id, turn_idx, 4"),
+      "session query: one exchange on conv_id above the dedup's")
+    val rollPlan = plan(qRoll)
+    assert(exchanges(rollPlan) == Seq("window, data_type, highest_tier, 4",
+      "conv_id, turn_idx, 4"), "rollup query: the window exchange above the dedup's")
+    val windowEx = rollPlan.indexOf("Exchange hashpartitioning(window")
+    assert(rollPlan.indexOf("partial_count", windowEx) > windowEx,
+      "no map-side partial count below the window exchange:\n" + rollPlan)
+
+    val annBatches = qAnn.recentProgress.filter(_.numInputRows > 0).map(_.batchId)
+    assert(annBatches.nonEmpty)
+    for (b <- annBatches) {
+      val n = jobs.getOrDefault((qAnn.id.toString, b), 0)
+      assert(n == 1, s"sink batch $b ran $n Spark jobs")
+    }
+    assert(table.read(spark).count() == 50L)
+  }
+
   test("sliding and session-window rollups (batch-mode semantics)") {
     import spark.implicits._
     val bc = Pipeline.cachedIndex(spark, 12)

@@ -647,6 +647,35 @@ class StreamingSpec extends AnyFunSuite {
     assert(sessions == Seq(2, 3), s"expected sessions of 3 and 2 turns, got $sessions")
   }
 
+  /** Stage one parquet file per trigger in `dir`, the `i`-th (counting
+    * from `first`) modified `i` seconds after the 0-th, so a file
+    * stream reading one file per trigger reads them in that order.
+    */
+  private def stageTriggers(dir: java.nio.file.Path, triggers: Seq[Seq[Turn]],
+                            first: Int = 0): Unit = {
+    import spark.implicits._
+    val t0 = System.currentTimeMillis() - 1000L * 1000L
+    triggers.zipWithIndex.foreach { case (rows, j) =>
+      val i = first + j
+      val out = tmp("staged_part")
+      rows.toDS().coalesce(1).write.mode("overwrite").parquet(out)
+      val part = new java.io.File(out).listFiles()
+        .find(_.getName.endsWith(".parquet")).get.toPath
+      val f = Files.move(part, dir.resolve(s"t$i.parquet"))
+      Files.setLastModifiedTime(f,
+        java.nio.file.attribute.FileTime.fromMillis(t0 + i * 1000L))
+    }
+  }
+
+  /** A turn stream over `dir` that reads one file per trigger. */
+  private def fileStream(dir: java.nio.file.Path): org.apache.spark.sql.Dataset[Turn] = {
+    import spark.implicits._
+    spark.readStream
+      .schema(org.apache.spark.sql.Encoders.product[Turn].schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(dir.toString).as[Turn]
+  }
+
   /** The late-row source: one file per trigger. Trigger 3 filters late
     * rows with the watermark after trigger 1 (t0 - 9 min) but checks
     * timeouts against the one after trigger 2's pusher (t0 + 7h50): A's
@@ -654,31 +683,17 @@ class StreamingSpec extends AnyFunSuite {
     * (t0 + 1h30) the watermark has already passed.
     */
   private def lateRowSource(): org.apache.spark.sql.Dataset[Turn] = {
-    import spark.implicits._
     val t0 = 1700000000000L
     val hour = 3600 * 1000L
     def turn(conv: String, idx: Int, offMs: Long): Turn =
       Turn(conv, idx, "assistant", "ENT0001 AMP", "",
         new java.sql.Timestamp(t0 + offMs))
-    val triggers = Seq(
+    val srcDir = java.nio.file.Paths.get(tmp("sesslate"))
+    stageTriggers(srcDir, Seq(
       Seq(turn("A", 0, 0L), turn("A", 1, 60000L)),
       Seq(turn("B", 0, 8 * hour)),
-      Seq(turn("A", 2, hour)))
-    val srcDir = java.nio.file.Paths.get(tmp("sesslate"))
-    val now = System.currentTimeMillis()
-    triggers.zipWithIndex.foreach { case (rows, i) =>
-      val out = tmp("sesslate_part")
-      rows.toDS().coalesce(1).write.mode("overwrite").parquet(out)
-      val part = new java.io.File(out).listFiles()
-        .find(_.getName.endsWith(".parquet")).get.toPath
-      val f = Files.move(part, srcDir.resolve(s"t$i.parquet"))
-      Files.setLastModifiedTime(f,
-        java.nio.file.attribute.FileTime.fromMillis(now - (3 - i) * 1000L))
-    }
-    spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[Turn].schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir.toString).as[Turn]
+      Seq(turn("A", 2, hour))))
+    fileStream(srcDir)
   }
 
   test("session automaton closes a session that a late row ends behind the watermark") {
@@ -695,6 +710,50 @@ class StreamingSpec extends AnyFunSuite {
       .filter(col("conv_id") === "A")
       .select("n_turns").collect().map(_.getInt(0)).sorted.toSeq
     assert(sessions == Seq(1, 2), s"expected sessions of 2 and 1 turns, got $sessions")
+  }
+
+  test("session automaton resumes from its checkpoint: same summaries as one run") {
+    import org.apache.spark.sql.streaming.Trigger
+    // conversations an hour apart, so each trigger's watermark closes
+    // the sessions of the one before; duplicates cross the triggers
+    val rows = Synth.transcriptRows(Synth.TurnGenConfig(nConvs = 12, turnsPerConv = 8,
+      nGenes = 12, dupRate = 0.1))
+    val triggers = rows.sortBy(t => (t.ts.getTime, t.conv_id, t.turn_idx))
+      .grouped(rows.size / 3 + 1).toSeq
+    assert(triggers.size == 3)
+    def run(src: java.nio.file.Path, out: String) = {
+      val q = StreamingPipeline.sessionAutomaton(
+          StreamingPipeline.annotationsDedupFirst(fileStream(src), bc, cfg), cfg)
+        .writeStream.outputMode(OutputMode.Append)
+        .option("checkpointLocation", s"$out/ckpt_sess")
+        .trigger(Trigger.AvailableNow())
+        .format("parquet").option("path", s"$out/sessions")
+        .start()
+      q.awaitTermination()
+      q
+    }
+    def summaries(out: String): Seq[String] =
+      spark.read.parquet(s"$out/sessions").collect().map(_.toString).sorted.toSeq
+
+    val whole = java.nio.file.Paths.get(tmp("sess_whole_src"))
+    stageTriggers(whole, triggers)
+    val wholeOut = tmp("sess_whole_out")
+    run(whole, wholeOut)
+
+    val split = java.nio.file.Paths.get(tmp("sess_split_src"))
+    stageTriggers(split, triggers.take(1))
+    val splitOut = tmp("sess_split_out")
+    val first = run(split, splitOut)
+    assert(first.recentProgress.count(_.numInputRows > 0) == 1,
+      "the first run should stop after one micro-batch of rows")
+    stageTriggers(split, triggers.drop(1), first = 1)
+    val resumed = run(split, splitOut)
+    assert(resumed.recentProgress.map(_.numInputRows).sum ==
+      triggers.drop(1).map(_.size).sum, "the resumed run must read only the new files")
+
+    val want = summaries(wholeOut)
+    assert(want.size >= 8, s"expected most of 12 sessions closed, got ${want.size}")
+    assert(summaries(splitOut) == want, "a resumed automaton differs from one run")
   }
 
   test("start: its three outputs equal the three queries wired by hand") {
