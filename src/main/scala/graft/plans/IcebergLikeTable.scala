@@ -251,8 +251,7 @@ final class IcebergLikeTable(val root: String, val partitionCols: Seq[String]) {
     *     to pre-compaction snapshots until expiry runs.
     * `compactionId` must be larger than every live batch id.
     */
-  def compact(spark: org.apache.spark.sql.SparkSession, compactionId: Long,
-              filesPerPartition: Int = 1): Unit = {
+  def compact(spark: org.apache.spark.sql.SparkSession, compactionId: Long): Unit = {
     if (committed(compactionId)) return
     val live = liveBatches()
     require(live.forall(_ < compactionId),
@@ -260,14 +259,10 @@ final class IcebergLikeTable(val root: String, val partitionCols: Seq[String]) {
     if (live.size <= 1) return // nothing worth consolidating
     // hash-repartition on the partition columns: every logical
     // partition's rows land in one task -> one consolidated file
-    // (filesPerPartition > 1 spreads a huge partition over that many
-    // shuffle tasks instead)
-    val rows = spark.read.parquet(root)
+    val df = spark.read.parquet(root)
       .filter(col("_batch_id").isin(live: _*))
       .drop("_batch_id")
-    val df =
-      if (filesPerPartition <= 1) rows.repartition(partitionCols.map(col): _*)
-      else rows.repartition(filesPerPartition, partitionCols.map(col): _*)
+      .repartition(partitionCols.map(col): _*)
     // dynamic partition OVERWRITE, not append: every partition written
     // here is solely owned by this compactionId, so a retry after a
     // crash between the parquet write and the manifest rename replaces

@@ -1,8 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Reference-format TSV ingestion — the reader family S1-S3/S10
   * (reference: civicutils/read_and_write.py:84-273;
@@ -16,128 +16,76 @@ import org.apache.spark.sql.expressions.Window
   * unreachable for well-formed headers and positional truthiness is a
   * Python accident, not a format rule.
   *
-  * `n_line` (the reference's only ordering token) is materialized as a
-  * PER-FILE 0-based body line number — the reference numbers lines
-  * within each input file, and partitioning the window by
-  * `input_file_name()` keeps the numbering embarrassingly parallel
-  * across files (one window task per file, no global single-partition
-  * exchange). At 100 TB the corpus arrives as many per-sample files, so
-  * files are the parallelism unit; within one file the row order is the
-  * scan order (reference-format TSVs are single-split small files — a
-  * reader for huge splittable single files would carry an explicit
-  * line-id column instead).
+  * Every reader takes its rows from the one scan `readTsv`: `n_line`
+  * (the reference's only ordering token) is the 0-based body line
+  * number within each input file, and cells are the reference's plain
+  * tab split, so an empty cell is an empty string.
   */
 object TsvReader {
 
-  private def withLineNumbers(df: DataFrame): DataFrame = {
-    // deterministic 0-based body line number within each file
-    // (reference n_line); partitioned window => per-file tasks
-    val w = Window.partitionBy(input_file_name())
-      .orderBy(monotonically_increasing_id())
-    df.withColumn("n_line", (row_number().over(w) - 1).cast("long"))
-  }
-
-  private def readTsv(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .option("sep", "\t").option("header", "true")
-      .option("mode", "FAILFAST")
-      .csv(path)
-
-  /** Splittable TSV scan for the huge-file regime (the documented
-    * alternative to the per-file window above): a 100 GB TSV must be
-    * read by MANY tasks, so `n_line` cannot come from a per-file
-    * window (one window task = one file). Files are read through
-    * Hadoop TextInputFormat, whose record key is the line's BYTE
-    * OFFSET — a stable property of the file content, independent of
-    * the split plan — and dense 0-based PER-FILE line numbers are
-    * assigned in two passes:
-    *   1. per-split (file, minOffset, lineCount) -> driver prefix
-    *      sums keyed by file (bytes-sized metadata, not data; a
-    *      TextInputFormat split never crosses a file boundary);
-    *   2. per-split base + local index (offsets ascend within a
-    *      split).
-    * The numbering is therefore identical under ANY split size AND
-    * any file count (pinned in OperatorsSpec by re-reading with
-    * forced tiny splits and a 3-file directory input). Multi-file
-    * inputs (directory or glob) number each file independently from 0
-    * — the reference's per-file n_line semantics — and carry the
-    * originating file in an `input_file` column; every file's header
-    * must be byte-identical (files with diverging schemas must not be
-    * silently unioned). Quoted multi-line fields are not supported —
-    * the reference TSV format has none.
+  /** The numbered TSV scan, and the number of files it resolved.
+    *
+    * Files are read through Hadoop TextInputFormat, whose record key is
+    * the line's BYTE OFFSET — a stable property of the file content,
+    * independent of the split plan — and dense 0-based PER-FILE line
+    * numbers are assigned in two passes:
+    *   1. per-split (file, split start, line count, header) -> driver
+    *      prefix sums keyed by file (bytes-sized metadata, not data; a
+    *      TextInputFormat split never crosses a file boundary, and its
+    *      lines are the ones starting inside it, so ordering a file's
+    *      splits by start orders its lines);
+    *   2. per-split base + local index.
+    * The numbering is therefore identical under ANY split size AND any
+    * file count (pinned in OperatorsSpec by re-reading with forced tiny
+    * splits, set through `mapreduce.input.fileinputformat.split.maxsize`
+    * in the SparkContext's Hadoop configuration, and a 3-file directory
+    * input). Multi-file inputs (directory or glob) number each file
+    * independently from 0 — the reference's per-file n_line semantics —
+    * and carry the originating file in an `input_file` column; every
+    * file's header must be byte-identical (files with diverging schemas
+    * must not be silently unioned). Quoted multi-line fields are not
+    * supported — the reference TSV format has none.
+    *
+    * The file count tells readers whether `n_line`-derived keys must be
+    * file-qualified: per-file numbering restarts at 0, so a
+    * (payload, n_line) key is only unique within one file.
     *
     * This is the engine's one deliberate RDD use (the "unless forced"
     * case of the no-RDD contract): no DataFrame source exposes the
     * per-line byte offset that makes split-invariant numbering
     * possible; everything downstream of the two numbering passes is a
     * plain DataFrame again.
-    *
-    * `maxSplitBytes` forces a split ceiling (testing / small-file
-    * parallelism); 0 leaves the cluster default (128 MB).
     */
-  def readTsvSplittable(spark: SparkSession, path: String,
-                        maxSplitBytes: Long = 0L): DataFrame =
-    readTsvSplittableCounted(spark, path, maxSplitBytes)._1
-
-  /** As `readTsvSplittable`, also returning the number of input files
-    * the scan resolved — the stats pass already knows it, and readers
-    * need it to decide whether `n_line`-derived keys must be
-    * file-qualified (per-file numbering restarts at 0, so a
-    * (payload, n_line) key is only unique within one file).
-    */
-  private def readTsvSplittableCounted(spark: SparkSession, path: String,
-                                       maxSplitBytes: Long): (DataFrame, Int) = {
+  def readTsv(spark: SparkSession, path: String): (DataFrame, Int) = {
     import org.apache.hadoop.io.{LongWritable, Text}
     import org.apache.hadoop.mapreduce.lib.input.{FileSplit, TextInputFormat}
-    val conf = new org.apache.hadoop.conf.Configuration(
-      spark.sparkContext.hadoopConfiguration)
-    if (maxSplitBytes > 0)
-      conf.setLong("mapreduce.input.fileinputformat.split.maxsize", maxSplitBytes)
-    // each split knows its file: byte offsets restart at 0 in every
-    // file, so the prefix sums below are keyed by (file, split)
-    val lines = spark.sparkContext.newAPIHadoopFile(
-        path, classOf[TextInputFormat], classOf[LongWritable], classOf[Text], conf)
+    val lines = spark.sparkContext.newAPIHadoopFile(path, classOf[TextInputFormat],
+        classOf[LongWritable], classOf[Text],
+        new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration))
       .asInstanceOf[org.apache.spark.rdd.NewHadoopRDD[LongWritable, Text]]
-      .mapPartitionsWithInputSplit({ (split, it) =>
-        val file = split.asInstanceOf[FileSplit].getPath.toString
-        it.map { case (off, text) =>
-          // Hadoop reuses the Writable instances: copy out
-          (file, off.get(), new String(text.getBytes, 0, text.getLength,
-            java.nio.charset.StandardCharsets.UTF_8))
-        }
-      }, preservesPartitioning = true)
-    // pass 1: per-split (file, minOffset, count) — tiny driver-side
+    // pass 1: per-split (file, start, count) — tiny driver-side
     // metadata — and the file's header line (offset 0), captured HERE
-    // so the huge files are read exactly twice, not three times
-    val stats = lines.mapPartitionsWithIndex { (pid, it) =>
-      var n = 0L; var min = Long.MaxValue
-      var file: String = null
-      var header: String = null
-      it.foreach { case (f, off, line) =>
-        n += 1; if (off < min) min = off
-        file = f
-        if (off == 0L) header = line
+    // so the files are read exactly twice, not three times; only the
+    // header is decoded
+    val splits = lines.mapPartitionsWithInputSplit({ (split, it) =>
+      val s = split.asInstanceOf[FileSplit]
+      var n = 0L
+      var header: Option[String] = None
+      it.foreach { case (off, text) =>
+        n += 1
+        if (off.get == 0L) header = Some(text.toString)
       }
-      Iterator((pid, Option(file), min, n, Option(header)))
-    }.collect()
-    // per-FILE prefix sums: splits of each file sorted by offset,
-    // bases accumulate within the file only (every file restarts at 0)
-    val bases: Map[Int, Long] =
-      stats.filter(_._4 > 0).groupBy(_._2.get).flatMap { case (_, ss) =>
-        var acc = 0L
-        ss.sortBy(_._3).map { case (pid, _, _, n, _) =>
-          val b = pid -> acc; acc += n; b
-        }
+      Iterator((s.getPath.toString, s.getStart, n, header))
+    }).collect()
+    // per-FILE prefix sums over the file's splits in start order (every
+    // file restarts at 0)
+    val bases: Map[(String, Long), Long] =
+      splits.groupBy(_._1).flatMap { case (file, ss) =>
+        val sorted = ss.sortBy(_._2)
+        sorted.map(s => (file, s._2)).zip(sorted.scanLeft(0L)(_ + _._3))
       }
-    val bcBases = spark.sparkContext.broadcast(bases)
-    // pass 2: per-file line number = split base + local ordinal
-    // (offsets ascend within a split, so iterator order IS file order)
-    val numbered = lines.mapPartitionsWithIndex { (pid, it) =>
-      val base = bcBases.value.getOrElse(pid, 0L)
-      it.zipWithIndex.map { case ((file, _, line), i) => (file, base + i, line) }
-    }
-    val headers = stats.flatMap { case (_, f, _, _, h) => h.map(f.get -> _) }
-    val nFiles = stats.flatMap(_._2).distinct.length
+    val headers = splits.flatMap { case (f, _, _, h) => h.map(f -> _) }
+    val nFiles = splits.map(_._1).distinct.length
     require(headers.nonEmpty, s"empty TSV: $path")
     require(headers.length == nFiles,
       s"$path: ${nFiles - headers.length} file(s) have no header line (empty)")
@@ -145,131 +93,101 @@ object TsvReader {
       s"TSV headers differ across input files: " +
         headers.map(_._2).distinct.mkString(" vs "))
     val names = headers.head._2.split("\t", -1)
-    val schema = org.apache.spark.sql.types.StructType(
-      names.map(n => org.apache.spark.sql.types.StructField(
-        n, org.apache.spark.sql.types.StringType)) :+
-      org.apache.spark.sql.types.StructField(
-        "n_line", org.apache.spark.sql.types.LongType) :+
-      org.apache.spark.sql.types.StructField(
-        "input_file", org.apache.spark.sql.types.StringType))
+    val schema = StructType(names.map(StructField(_, StringType)) :+
+      StructField("n_line", LongType) :+ StructField("input_file", StringType))
     val width = names.length
-    val rows = numbered.filter(_._2 > 0L).map { case (file, gid, line) =>
-      val parts = line.split("\t", -1)
-      require(parts.length == width,
-        s"$file line ${gid - 1}: ${parts.length} fields, header has $width")
-      org.apache.spark.sql.Row.fromSeq(
-        parts.toIndexedSeq :+ (gid - 1L) :+ file) // 0-based BODY line number
-    }
+    val bcBases = spark.sparkContext.broadcast(bases)
+    // pass 2: per-file line number = split base + local ordinal; line 0
+    // is the header, so body line n_line is file line n_line + 1
+    val rows = lines.mapPartitionsWithInputSplit({ (split, it) =>
+      val s = split.asInstanceOf[FileSplit]
+      val file = s.getPath.toString
+      val base = bcBases.value((file, s.getStart))
+      it.zipWithIndex.collect { case ((_, text), i) if base + i > 0L =>
+        val nLine = base + i - 1L
+        val parts = text.toString.split("\t", -1)
+        require(parts.length == width,
+          s"$file line $nLine: ${parts.length} fields, header has $width")
+        Row.fromSeq(parts.toIndexedSeq :+ nLine :+ file)
+      }
+    })
     (spark.createDataFrame(rows, schema), nFiles)
   }
 
-  /** S1: SNV reader. Required: gene/dna/prot; optional impact/exon;
-    * extra columns carried through in an `extras` array. Emits the
-    * reference's encoded variant key for parity-visible joins.
-    *
-    * KEY SCOPE: this reader (and readCnvs/readExpr) keeps the
-    * reference's exact key format, whose `n_line` component is
-    * per-file — `variant_key` is therefore unique WITHIN one input
-    * file only. Directory/multi-file ingestion should go through
-    * `readSnvsSplittable`, which file-qualifies the key (and scales
-    * past the one-task-per-file window this reader uses).
+  /** `readTsv`'s data columns (its line and file metadata excluded),
+    * checked for the reader's required ones. */
+  private def dataColumns(rows: DataFrame, required: String*): Seq[String] = {
+    val cols = rows.columns.toSeq.filterNot(Set("n_line", "input_file"))
+    for (c <- required)
+      require(cols.contains(c), s"Required column '$c' could not be found in header")
+    cols
+  }
+
+  /** The reference's `payload|n_line` record key, file-qualified
+    * (`...|n_line|input_file`) exactly when the read resolved more than
+    * one file, since `n_line` restarts in every file. */
+  private def variantKey(nFiles: Int, payload: Column*): Column =
+    concat_ws("|", (payload :+ col("n_line")) ++
+      (if (nFiles > 1) Seq(col("input_file")) else Nil): _*)
+
+  /** `fields`, then `n_line`, the pass-through `extras` (every data
+    * column no field reads) and `input_file`, then `variantKey` over
+    * `payload` and the data type. */
+  private def keyed(rows: DataFrame, nFiles: Int, fields: Seq[Column],
+                    extras: Seq[String], payload: Seq[Column],
+                    dataType: String): DataFrame =
+    rows.select(fields ++ Seq(col("n_line"),
+        array(extras.map(col): _*).as("extras"), col("input_file")): _*)
+      .withColumn("variant_key", variantKey(nFiles, payload: _*))
+      .withColumn("data_type", lit(dataType))
+
+  /** S1: SNV reader. Required: gene/dna/prot; optional impact/exon
+    * (an absent one reads as empty); extra columns carried through in
+    * an `extras` array. Emits the reference's encoded variant key
+    * (`dna|prot|impact|exon|n_line`) for parity-visible joins.
     */
   def readSnvs(spark: SparkSession, path: String,
                geneName: String = "Gene",
                dnaName: String = "Variant_dna",
                protName: String = "Variant_prot",
                impactName: String = "Variant_impact",
-               exonName: String = "Variant_exon"): DataFrame =
-    snvsFrom(withLineNumbers(readTsv(spark, path)),
-      geneName, dnaName, protName, impactName, exonName)
-
-  /** S1 over the splittable scan: `readSnvs`'s output contract for
-    * single-file input (bit-for-bit parity pinned in OperatorsSpec),
-    * line numbers from the split-invariant byte-offset numbering —
-    * the reader for the one-huge-TSV and many-file regimes.
-    *
-    * Multi-file (directory/glob) inputs number each file from 0, so
-    * the reference-format `variant_key` (payload + n_line) alone is no
-    * longer a unique record identity: for such reads the key is
-    * file-qualified (`...|n_line|input_file`). Single-file reads keep
-    * the reference's exact key format, so parity with `readSnvs`
-    * holds bit-for-bit in the reference regime.
-    */
-  def readSnvsSplittable(spark: SparkSession, path: String,
-                         geneName: String = "Gene",
-                         dnaName: String = "Variant_dna",
-                         protName: String = "Variant_prot",
-                         impactName: String = "Variant_impact",
-                         exonName: String = "Variant_exon",
-                         maxSplitBytes: Long = 0L): DataFrame = {
-    val (numbered, nFiles) = readTsvSplittableCounted(spark, path, maxSplitBytes)
-    snvsFrom(numbered, geneName, dnaName, protName, impactName, exonName,
-      fileInKey = nFiles > 1)
+               exonName: String = "Variant_exon"): DataFrame = {
+    val (rows, nFiles) = readTsv(spark, path)
+    val cols = dataColumns(rows, geneName, dnaName, protName)
+    def optional(c: String) = if (cols.contains(c)) col(c) else lit("")
+    keyed(rows, nFiles,
+      Seq(col(geneName).as("gene"), col(dnaName).as("dna"),
+        col(protName).as("prot"), optional(impactName).as("impact"),
+        optional(exonName).as("exon")),
+      cols.filterNot(Set(geneName, dnaName, protName, impactName, exonName)),
+      Seq(col("dna"), col("prot"), col("impact"), col("exon")), "SNV")
   }
 
-  private def snvsFrom(numbered: DataFrame,
-                       geneName: String, dnaName: String, protName: String,
-                       impactName: String, exonName: String,
-                       fileInKey: Boolean = false): DataFrame = {
-    // n_line and input_file are reader metadata, not data columns —
-    // neither belongs in the extras pass-through
-    val meta = Set("n_line", "input_file")
-    val cols = numbered.columns.filterNot(meta)
-    for (c <- Seq(geneName, dnaName, protName))
-      require(cols.contains(c), s"Required column '$c' could not be found in header")
-    val hasImpact = cols.contains(impactName)
-    val hasExon = cols.contains(exonName)
-    val extraCols = cols.filterNot(c =>
-      c == geneName || c == dnaName || c == protName ||
-      (hasImpact && c == impactName) || (hasExon && c == exonName))
-    val baseSel = Seq(
-        col(geneName).as("gene"),
-        col(dnaName).as("dna"),
-        col(protName).as("prot"),
-        (if (hasImpact) col(impactName) else lit("")).as("impact"),
-        (if (hasExon) col(exonName) else lit("")).as("exon"),
-        col("n_line"),
-        array(extraCols.toIndexedSeq.map(col): _*).as("extras"))
-    val keyCols = Seq(col("dna"), col("prot"), col("impact"), col("exon"),
-      col("n_line")) ++ (if (fileInKey) Seq(col("input_file")) else Nil)
-    numbered
-      .select((if (numbered.columns.contains("input_file"))
-        baseSel :+ col("input_file") else baseSel): _*)
-      .withColumn("variant_key", concat_ws("|", keyCols: _*))
-      .withColumn("data_type", lit("SNV"))
-  }
-
-  /** S2: CNV reader (required gene + cnv). */
+  /** S2: CNV reader (required gene + cnv; key `cnv|n_line`). */
   def readCnvs(spark: SparkSession, path: String,
                geneName: String = "Gene",
                cnvName: String = "Variant_cnv"): DataFrame = {
-    val raw = readTsv(spark, path)
-    for (c <- Seq(geneName, cnvName))
-      require(raw.columns.contains(c), s"Required column '$c' could not be found in header")
-    val extraCols = raw.columns.filterNot(c => c == geneName || c == cnvName)
-    withLineNumbers(raw)
-      .select(col(geneName).as("gene"), col(cnvName).as("cnv"), col("n_line"),
-        array(extraCols.toIndexedSeq.map(col): _*).as("extras"))
-      .withColumn("variant_key", concat_ws("|", col("cnv"), col("n_line")))
-      .withColumn("data_type", lit("CNV"))
+    val (rows, nFiles) = readTsv(spark, path)
+    val cols = dataColumns(rows, geneName, cnvName)
+    keyed(rows, nFiles, Seq(col(geneName).as("gene"), col(cnvName).as("cnv")),
+      cols.filterNot(Set(geneName, cnvName)), Seq(col("cnv")), "CNV")
   }
 
   /** S3: EXPR reader (required gene + logFC, logFC must be numeric and
-    * non-zero — validated downstream as in the reference).
+    * non-zero — validated downstream as in the reference). An empty
+    * logFC reads as NULL (and keys as `|n_line`); a malformed non-empty
+    * one fails the cast.
     */
   def readExpr(spark: SparkSession, path: String,
                geneName: String = "Gene",
                logfcName: String = "logFC"): DataFrame = {
-    val raw = readTsv(spark, path)
-    for (c <- Seq(geneName, logfcName))
-      require(raw.columns.contains(c), s"Required column '$c' could not be found in header")
-    val extraCols = raw.columns.filterNot(c => c == geneName || c == logfcName)
-    withLineNumbers(raw)
-      .select(col(geneName).as("gene"),
-        col(logfcName).cast("double").as("logfc"), col("n_line"),
-        array(extraCols.toIndexedSeq.map(col): _*).as("extras"))
-      .withColumn("variant_key", concat_ws("|", col("logfc"), col("n_line")))
-      .withColumn("data_type", lit("EXPR"))
+    val (rows, nFiles) = readTsv(spark, path)
+    val cols = dataColumns(rows, geneName, logfcName)
+    keyed(rows, nFiles,
+      Seq(col(geneName).as("gene"),
+        nullif(col(logfcName), lit("")).cast("double").as("logfc")),
+      cols.filterNot(Set(geneName, logfcName)),
+      Seq(coalesce(col("logfc").cast("string"), lit(""))), "EXPR")
   }
 
   /** S10: TCGA-style multi-annotation SNV cells:
@@ -284,21 +202,19 @@ object TsvReader {
   def readSnvsMultiAnnotation(spark: SparkSession, path: String,
                               geneVarCol: String, impactCol: String,
                               exonCol: String): DataFrame = {
-    val raw = withLineNumbers(readTsv(spark, path))
+    val (rows, nFiles) = readTsv(spark, path)
     val vs = split(col(geneVarCol), ";")
     val is = split(col(impactCol), ";")
     val es = split(col(exonCol), ";")
-    val base = raw
-      .withColumn("_nv", size(vs))
-      .withColumn("_ok", size(vs) === size(is) && size(vs) === size(es))
     // 1-1 correspondence is a hard error in the reference
     // (Query_CIViCutils.py:85-87)
-    val zipped = base
-      .withColumn("_z", when(col("_ok"),
+    val zipped = rows
+      .withColumn("_z", when(size(vs) === size(is) && size(vs) === size(es),
         arrays_zip(vs, is, es)).otherwise(
           raise_error(lit("Encountered different number of available annotations"))))
-      .select(col("n_line"), posexplode(col("_z")).as(Seq("annot_idx", "a")))
-      .select(col("n_line"), col("annot_idx"),
+      .select(col("n_line"), col("input_file"),
+        posexplode(col("_z")).as(Seq("annot_idx", "a")))
+      .select(col("n_line"), col("input_file"), col("annot_idx"),
         col("a").getField("0").as("v"),
         col("a").getField("1").as("i"),
         col("a").getField("2").as("e"))
@@ -311,10 +227,10 @@ object TsvReader {
       .withColumn("exon", coalesce(trim(split(col("e"), ":").getItem(2)), lit("")))
       // skip annotations without a valid c.HGVS (e.g. n.HGVS)
       .filter(lower(col("dna")).startsWith("c."))
-      .withColumn("variant_key", concat_ws("|",
-        col("dna"), col("prot"), col("impact"), col("exon"), col("n_line")))
+      .withColumn("variant_key", variantKey(nFiles,
+        col("dna"), col("prot"), col("impact"), col("exon")))
       .select("n_line", "annot_idx", "gene", "dna", "prot", "impact",
-        "exon", "variant_key")
+        "exon", "input_file", "variant_key")
       .withColumn("data_type", lit("SNV"))
   }
 

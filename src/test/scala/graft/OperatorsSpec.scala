@@ -50,15 +50,21 @@ class OperatorsSpec extends AnyFunSuite {
     assert(expr.select("logfc").collect().forall(r => !r.isNullAt(0)))
   }
 
-  test("splittable TSV reader: parity with the per-file reader + split invariance") {
-    // parity on the committed reference example
-    val snvPath = "/root/reference/civicutils/data/example_snv.txt"
-    def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.select("n_line", "gene", "dna", "prot", "impact", "exon", "variant_key")
-        .collect().map(_.toString).sorted.toSeq
-    assert(canon(TsvReader.readSnvsSplittable(spark, snvPath)) ==
-      canon(TsvReader.readSnvs(spark, snvPath)))
+  /** Runs `body` with the SparkContext's Hadoop input splits capped at
+    * `bytes` (0: the default), restoring the setting afterwards. */
+  private def withMaxSplit[T](bytes: Long)(body: => T): T = {
+    val key = "mapreduce.input.fileinputformat.split.maxsize"
+    val conf = spark.sparkContext.hadoopConfiguration
+    val old = Option(conf.get(key))
+    if (bytes > 0) conf.setLong(key, bytes)
+    try body finally old.fold(conf.unset(key))(conf.set(key, _))
+  }
 
+  private def writeTsv(path: String, lines: String*): Unit =
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
+      lines.mkString("", "\n", "\n"))
+
+  test("TSV reader: line numbering is invariant under the split plan") {
     // split invariance: a 400-row TSV forced into ~byte-sized splits
     // must number lines identically to the single-split read
     val dir = java.nio.file.Files.createTempDirectory("split").toString
@@ -66,13 +72,14 @@ class OperatorsSpec extends AnyFunSuite {
     val body = (0 until 400).map(i => s"G$i\tc.${i}A>G\tp.V${i}E")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(f),
       "Gene\tVariant_dna\tVariant_prot\n" + body.mkString("\n") + "\n")
-    def numbered(maxSplit: Long): Map[Long, String] =
-      TsvReader.readTsvSplittable(spark, f, maxSplit)
+    def numbered(maxSplit: Long): Map[Long, String] = withMaxSplit(maxSplit) {
+      TsvReader.readTsv(spark, f)._1
         .collect().map(r => r.getAs[Long]("n_line") -> r.getAs[String]("Gene")).toMap
+    }
     val single = numbered(0L)
     val tiny = numbered(256L) // forces many input splits
-    assert(TsvReader.readTsvSplittable(spark, f, 256L).rdd.getNumPartitions > 4,
-      "tiny maxSplitBytes failed to force multiple splits")
+    assert(withMaxSplit(256L)(TsvReader.readTsv(spark, f)._1.rdd.getNumPartitions) > 4,
+      "a tiny split.maxsize failed to force multiple splits")
     assert(single == tiny, "line numbering changed with the split plan")
     // dense, 0-based, in file order
     assert(single.keySet == (0L until 400L).toSet)
@@ -87,13 +94,14 @@ class OperatorsSpec extends AnyFunSuite {
       java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/$name.tsv"),
         "Gene\tVariant_dna\tVariant_prot\n" + body.mkString("\n") + "\n")
     }
-    def numbered(maxSplit: Long): Map[(String, Long), String] =
-      TsvReader.readTsvSplittable(spark, dir, maxSplit)
+    def numbered(maxSplit: Long): Map[(String, Long), String] = withMaxSplit(maxSplit) {
+      TsvReader.readTsv(spark, dir)._1
         .collect().map { r =>
           val f = r.getAs[String]("input_file")
           (f.substring(f.lastIndexOf('/') + 1), r.getAs[Long]("n_line")) ->
             r.getAs[String]("Gene")
         }.toMap
+    }
     val single = numbered(0L)
     // every file numbered independently from 0, dense, in file order
     assert(single.size == sizes.values.sum)
@@ -103,7 +111,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(numbered(256L) == single,
       "multi-file numbering changed with the split plan")
     // S1 reader over the directory: per-file n_line + input_file carried
-    val snv = TsvReader.readSnvsSplittable(spark, dir)
+    val snv = TsvReader.readSnvs(spark, dir)
     assert(snv.columns.contains("input_file"))
     assert(snv.filter(snv("n_line") === 0L).count() == 3) // one per file
     // multi-file keys are file-qualified: identical payloads at the
@@ -113,14 +121,75 @@ class OperatorsSpec extends AnyFunSuite {
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$dupDir/$name.tsv"),
         "Gene\tVariant_dna\tVariant_prot\nKRAS\tc.35G>A\tp.G12D\n")
-    val dup = TsvReader.readSnvsSplittable(spark, dupDir)
+    val dup = TsvReader.readSnvs(spark, dupDir)
     assert(dup.select("variant_key").distinct().count() == 2,
       "identical rows in two files collided on variant_key")
     // diverging headers must refuse, not silently union
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/bad.tsv"),
       "Gene\tOther\nG\tx\n")
     assertThrows[IllegalArgumentException](
-      TsvReader.readTsvSplittable(spark, dir).collect())
+      TsvReader.readTsv(spark, dir)._1.collect())
+  }
+
+  test("TSV reader: an empty Variant_prot keeps the five-field SNV key") {
+    val dir = java.nio.file.Files.createTempDirectory("emptyprot").toString
+    writeTsv(s"$dir/snv.tsv", "Gene\tVariant_dna\tVariant_prot",
+      "KRAS\tc.35G>A\t")
+    val rows = TsvReader.readSnvs(spark, s"$dir/snv.tsv").collect()
+    assert(rows.length == 1)
+    val r = rows(0)
+    assert(r.getAs[String]("prot") == "")
+    assert(r.getAs[String]("variant_key") == "c.35G>A||||0")
+  }
+
+  test("TSV reader: CNV and EXPR keys over two files are file-qualified") {
+    val cnvDir = java.nio.file.Files.createTempDirectory("cnv2").toString
+    writeTsv(s"$cnvDir/a.tsv", "Gene\tVariant_cnv", "KRAS\tAMP", "BRAF\tDEL")
+    writeTsv(s"$cnvDir/b.tsv", "Gene\tVariant_cnv", "TP53\tAMP", "EGFR\tDEL")
+    val exprDir = java.nio.file.Files.createTempDirectory("expr2").toString
+    writeTsv(s"$exprDir/a.tsv", "Gene\tlogFC", "KRAS\t1.5", "BRAF\t-2")
+    writeTsv(s"$exprDir/b.tsv", "Gene\tlogFC", "TP53\t1.5", "EGFR\t-2")
+    for (df <- Seq(TsvReader.readCnvs(spark, cnvDir),
+                   TsvReader.readExpr(spark, exprDir))) {
+      val rows = df.collect()
+      assert(rows.length == 4)
+      // the same payload at the same per-file line in two files
+      assert(rows.map(_.getAs[String]("variant_key")).distinct.length == 4,
+        "rows of two files collided on variant_key")
+      for (r <- rows) assert(r.getAs[String]("variant_key") ==
+        Seq(r.get(1), r.getAs[Long]("n_line"), r.getAs[String]("input_file"))
+          .mkString("|"))
+    }
+  }
+
+  test("TSV reader: an empty logFC reads as NULL and keys as |n_line") {
+    val dir = java.nio.file.Files.createTempDirectory("emptylogfc").toString
+    writeTsv(s"$dir/expr.tsv", "Gene\tlogFC", "KRAS\t1.5", "BRAF\t")
+    val rows = TsvReader.readExpr(spark, s"$dir/expr.tsv")
+      .orderBy("n_line").collect()
+    assert(rows(0).getAs[Double]("logfc") == 1.5)
+    assert(rows(0).getAs[String]("variant_key") == "1.5|0")
+    assert(rows(1).isNullAt(rows(1).fieldIndex("logfc")))
+    assert(rows(1).getAs[String]("variant_key") == "|1")
+  }
+
+  test("TSV reader: S10 over two files numbers per file and file-qualifies keys") {
+    val dir = java.nio.file.Files.createTempDirectory("multi2").toString
+    for (name <- Seq("a", "b"))
+      writeTsv(s"$dir/$name.tsv", "Sample\tVars\tImpacts\tExons",
+        "s1\tG1:c.1A>G|p.Lys1Glu\tG1:missense\tG1:c.1A>G|p.Lys1Glu:1/5",
+        "s2\tG2:c.2T>C|p.Leu2Pro\tG2:missense\tG2:c.2T>C|p.Leu2Pro:2/7")
+    val rows = TsvReader.readSnvsMultiAnnotation(spark, dir, "Vars", "Impacts", "Exons")
+      .collect()
+    val byFile = rows.groupBy(r => r.getAs[String]("input_file"))
+    assert(byFile.size == 2)
+    for ((file, rs) <- byFile) {
+      assert(rs.map(r => r.getAs[String]("gene") -> r.getAs[Long]("n_line")).toMap ==
+        Map("G1" -> 0L, "G2" -> 1L), s"$file numbered across files")
+      for (r <- rs) assert(r.getAs[String]("variant_key")
+        .endsWith(s"|${r.getAs[Long]("n_line")}|$file"))
+    }
+    assert(rows.map(_.getAs[String]("variant_key")).distinct.length == 4)
   }
 
   test("S10: multi-annotation cells explode with 1-1 zip and c.-filter") {
