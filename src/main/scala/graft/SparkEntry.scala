@@ -255,9 +255,9 @@ object SparkEntry {
       concat_ws(";", col("ds_tier_1")).as("ds_tier_1"))
       .orderBy(col("conv_id"), col("turn_idx"))
 
-  /** The shuffle-regime annotations (q59, q66): tier matching runs as
-    * the explode + (gene_key, domain, string) equi-join and the
-    * consensus counts join per gene; nothing is collected.
+  /** The shuffle-regime annotations (q59, q66): each turn is joined to
+    * its gene's `GeneDim`, built on the executors, and runs the
+    * kernel; nothing is collected.
     */
   private def shuffleAnnotations(s: SparkSession): DataFrame = {
     val turns = sources.Synth.transcripts(s,

@@ -1,7 +1,7 @@
 package graft.operators
 
 import scala.collection.mutable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Nomenclature
 
@@ -49,17 +49,18 @@ final case class DimIndex(genes: Map[String, GeneDim]) {
 }
 
 /** The dimension side of both annotation regimes: every relation the
-  * broadcast `build` collects is defined here once, and `MatchShuffle`
-  * and `Reports` read the same definitions distributed.
+  * broadcast `build` collects is defined here once, and one function,
+  * `geneDim`, turns a gene's rows of them into its `GeneDim`, on the
+  * driver for `build` and on the executors for `MatchShuffle`.
+  * `Reports` reads the same relations distributed.
   */
 object DimIndex {
 
-  /** Per-variant derived index entries — THE single definition of the
-    * dimension side of the match-string index, shared by the broadcast
-    * `build` below and the shuffle-regime `MatchShuffle` so the two
-    * regimes cannot drift. `nameUpper` must already be uppercased.
+  /** Per-variant derived index entries: the dimension side of the
+    * match-string index, which `geneDim` files under the variant's
+    * position. `nameUpper` must already be uppercased.
     */
-  final case class VariantIndexEntries(
+  private final case class VariantIndexEntries(
       snvStrings: Seq[String],
       exprStrings: Seq[String],
       isExonCnv: Boolean,
@@ -67,7 +68,7 @@ object DimIndex {
       isCnvRecord: Boolean,
       isExprRecord: Boolean)
 
-  def variantIndexEntries(nameUpper: String, hgvs: Seq[String]): VariantIndexEntries = {
+  private def variantIndexEntries(nameUpper: String, hgvs: Seq[String]): VariantIndexEntries = {
     // SNV strings: full pipeline (match.py:313-367); CNV/EXPR match on
     // the record name only (match.py:336); EXPR exon records also
     // match their expression type (match.py:720-728)
@@ -86,7 +87,7 @@ object DimIndex {
     * the first var_name and hgvs of each variant and its min
     * dim_order. `pos` is unique per variant (dim_order is unique per
     * dimension row) and sorts in scan order. `build` collects it,
-    * `MatchShuffle` keeps it distributed and `Reports.nameTable`
+    * `MatchShuffle` groups it per gene and `Reports.nameTable`
     * projects it.
     */
   def variantRecords(dim: DataFrame): DataFrame =
@@ -97,9 +98,9 @@ object DimIndex {
 
   /** Consensus drug-support counts (gene_key, var_id, drug, ct, pos,
     * neg, unk_b, unk_d): PREDICTIVE evidence only, ct-selected
-    * (reference: match.py:1420-1493). `build` collects it into the
-    * per-variant count vectors; `MatchShuffle` and
-    * `Reports.reprocessAcross` join it.
+    * (reference: match.py:1420-1493). `geneDim` folds a gene's rows
+    * into its per-variant count vectors; `Reports.reprocessAcross`
+    * joins it.
     */
   def supportTable(dim: DataFrame, ctCfg: CtConfig,
                    selectCt: Either[String, Seq[String]] = Left("highest")): DataFrame = {
@@ -116,6 +117,80 @@ object DimIndex {
         count(when(col("_cls") === "UNKNOWN_DNS", 1)).as("unk_d"))
   }
 
+  /** One gene's `GeneDim` from its `variantRecords` rows and its
+    * `supportTable` rows. Fields are read by name, so collected rows
+    * and the structs of a per-gene `collect_list` serve alike, in any
+    * order.
+    */
+  def geneDim(variants: Seq[Row], support: Seq[Row]): GeneDim = {
+    val ordered = variants.sortBy(_.getAs[Long]("pos")).toArray
+    val n = ordered.length
+    val varIds = new Array[String](n)
+    val varNames = new Array[String](n)
+    val isGeneral = new Array[Boolean](n)
+    val snvIdx = mutable.HashMap.empty[String, mutable.ArrayBuffer[Int]]
+    val cnvIdx = mutable.HashMap.empty[String, mutable.ArrayBuffer[Int]]
+    val exprIdx = mutable.HashMap.empty[String, mutable.ArrayBuffer[Int]]
+    val exonCnv = mutable.ArrayBuffer.empty[Int]
+    val snvFb = mutable.ArrayBuffer.empty[Int]
+    val cnvFb = mutable.ArrayBuffer.empty[Int]
+    val exprFb = mutable.ArrayBuffer.empty[Int]
+
+    // var_id -> (drug, ct) -> counts (pos, neg, unk_b, unk_d)
+    val supByVar: Map[String, Seq[((String, String), Array[Long])]] =
+      support.groupBy(_.getAs[String]("var_id")).map { case (v, rs) =>
+        v -> rs.map(r => (r.getAs[String]("drug"), r.getAs[String]("ct")) ->
+          Array(r.getAs[Long]("pos"), r.getAs[Long]("neg"),
+            r.getAs[Long]("unk_b"), r.getAs[Long]("unk_d")))
+      }
+
+    // gene-level (drug, ct) vocabulary in canonical order
+    val geneDrugCts = mutable.SortedSet.empty[(String, Int, String)](
+      Ordering.Tuple3(Ordering.String, Ordering.Int, Ordering.String))
+    for (r <- ordered; ((drug, ct), _) <- supByVar.getOrElse(r.getAs[String]("var_id"), Nil))
+      geneDrugCts += ((drug, graft.model.Cts.rank(ct), ct))
+    val drugCtList = geneDrugCts.toArray
+    val drugCtIndex = drugCtList.zipWithIndex
+      .map { case ((d, _, c), i) => (d, c) -> i }.toMap
+    val drugCtPrefix = drugCtList.map { case (d, _, c) => s"$d:${c.toUpperCase}:" }
+    val varSupIdx = new Array[Array[Int]](n)
+    val varSupCnt = new Array[Array[Long]](n)
+
+    for ((r, p) <- ordered.zipWithIndex) {
+      val varId = r.getAs[String]("var_id")
+      val name = r.getAs[String]("var_name").toUpperCase
+      varIds(p) = varId
+      varNames(p) = name
+
+      val entries = supByVar.getOrElse(varId, Nil).toArray
+        .map { case (dc, cnt) => (drugCtIndex(dc), cnt) }.sortBy(_._1)
+      varSupIdx(p) = entries.map(_._1)
+      varSupCnt(p) = entries.flatMap(_._2)
+
+      val e = variantIndexEntries(name, r.getSeq[String](r.fieldIndex("hgvs")))
+      isGeneral(p) = e.isGeneral
+      for (s <- e.snvStrings)
+        snvIdx.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += p
+      cnvIdx.getOrElseUpdate(name, mutable.ArrayBuffer.empty) += p
+      for (s <- e.exprStrings)
+        exprIdx.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += p
+      // exon-CNV records: positional match for input DELETION
+      // (match.py:627-638)
+      if (e.isExonCnv) exonCnv += p
+      // record-kind classification for tier-3 fallbacks
+      // (match.py:219-310)
+      if (!e.isCnvRecord && !e.isExprRecord) snvFb += p
+      if (e.isCnvRecord) cnvFb += p
+      if (e.isExprRecord) exprFb += p
+    }
+    GeneDim(varIds, varNames, isGeneral,
+      snvIdx.view.mapValues(_.toArray).toMap,
+      cnvIdx.view.mapValues(_.toArray).toMap,
+      exprIdx.view.mapValues(_.toArray).toMap,
+      exonCnv.toArray, snvFb.toArray, cnvFb.toArray, exprFb.toArray,
+      drugCtPrefix, varSupIdx, varSupCnt)
+  }
+
   /** Build the index from a flat evidence DataFrame (EvidenceRow
     * schema). `dim` should already be evidence-filtered
     * (EvidenceFilter); ct annotation/selection happens here because the
@@ -123,88 +198,11 @@ object DimIndex {
     */
   def build(spark: SparkSession, dim: DataFrame, ctCfg: CtConfig,
             selectCt: Either[String, Seq[String]] = Left("highest")): DimIndex = {
-
     val variantRows = variantRecords(dim).collect()
-
-    // consensus support vectors per variant
-    val supportRows = supportTable(dim, ctCfg, selectCt).collect()
-
-    // (gene, var) -> (drug, ct) -> counts
-    val supByVar = mutable.HashMap.empty[(String, String), mutable.HashMap[(String, String), Array[Long]]]
-    for (r <- supportRows) {
-      val key = (r.getString(0), r.getString(1))
-      val m = supByVar.getOrElseUpdate(key, mutable.HashMap.empty)
-      m((r.getString(2), r.getString(3))) =
-        Array(r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))
-    }
-
-    val byGene = variantRows.groupBy(_.getString(0))
-    val genes = byGene.map { case (gene, rows) =>
-      val ordered = rows.sortBy(_.getLong(4)) // pos
-      val n = ordered.length
-      val varIds = new Array[String](n)
-      val varNames = new Array[String](n)
-      val isGeneral = new Array[Boolean](n)
-      val snvIdx = mutable.HashMap.empty[String, mutable.ArrayBuffer[Int]]
-      val cnvIdx = mutable.HashMap.empty[String, mutable.ArrayBuffer[Int]]
-      val exprIdx = mutable.HashMap.empty[String, mutable.ArrayBuffer[Int]]
-      val exonCnv = mutable.ArrayBuffer.empty[Int]
-      val snvFb = mutable.ArrayBuffer.empty[Int]
-      val cnvFb = mutable.ArrayBuffer.empty[Int]
-      val exprFb = mutable.ArrayBuffer.empty[Int]
-
-      // gene-level (drug, ct) vocabulary in canonical order
-      val geneDrugCts = mutable.SortedSet.empty[(String, Int, String)](
-        Ordering.Tuple3(Ordering.String, Ordering.Int, Ordering.String))
-      for ((r, _) <- ordered.zipWithIndex;
-           m <- supByVar.get((gene, r.getString(1)));
-           (drug, ct) <- m.keys)
-        geneDrugCts += ((drug, graft.model.Cts.rank(ct), ct))
-      val drugCtList = geneDrugCts.toArray
-      val drugCtIndex = drugCtList.zipWithIndex
-        .map { case ((d, _, c), i) => (d, c) -> i }.toMap
-      val drugCtPrefix = drugCtList.map { case (d, _, c) => s"$d:${c.toUpperCase}:" }
-      val varSupIdx = new Array[Array[Int]](n)
-      val varSupCnt = new Array[Array[Long]](n)
-
-      for ((r, p) <- ordered.zipWithIndex) {
-        val varId = r.getString(1)
-        val name = r.getString(2).toUpperCase
-        val hgvs = r.getSeq[String](3)
-        varIds(p) = varId
-        varNames(p) = name
-
-        val sup = supByVar.getOrElse((gene, varId), mutable.HashMap.empty)
-        val entries = sup.toArray.map { case ((d, c), cnt) => (drugCtIndex((d, c)), cnt) }
-          .sortBy(_._1)
-        varSupIdx(p) = entries.map(_._1)
-        varSupCnt(p) = entries.flatMap(_._2)
-
-        // shared per-variant derivation (the shuffle regime explodes
-        // the same entries into a joinable relation)
-        val e = variantIndexEntries(name, hgvs)
-        isGeneral(p) = e.isGeneral
-        for (s <- e.snvStrings)
-          snvIdx.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += p
-        cnvIdx.getOrElseUpdate(name, mutable.ArrayBuffer.empty) += p
-        for (s <- e.exprStrings)
-          exprIdx.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += p
-        // exon-CNV records: positional match for input DELETION
-        // (match.py:627-638)
-        if (e.isExonCnv) exonCnv += p
-        // record-kind classification for tier-3 fallbacks
-        // (match.py:219-310)
-        if (!e.isCnvRecord && !e.isExprRecord) snvFb += p
-        if (e.isCnvRecord) cnvFb += p
-        if (e.isExprRecord) exprFb += p
-      }
-      gene -> GeneDim(varIds, varNames, isGeneral,
-        snvIdx.view.mapValues(_.toArray).toMap,
-        cnvIdx.view.mapValues(_.toArray).toMap,
-        exprIdx.view.mapValues(_.toArray).toMap,
-        exonCnv.toArray, snvFb.toArray, cnvFb.toArray, exprFb.toArray,
-        drugCtPrefix, varSupIdx, varSupCnt)
-    }
-    DimIndex(genes)
+    val supByGene = supportTable(dim, ctCfg, selectCt).collect()
+      .groupBy(_.getAs[String]("gene_key"))
+    DimIndex(variantRows.groupBy(_.getAs[String]("gene_key")).map { case (gene, rows) =>
+      gene -> geneDim(rows.toSeq, supByGene.getOrElse(gene, Array.empty[Row]).toSeq)
+    })
   }
 }

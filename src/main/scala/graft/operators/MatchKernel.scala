@@ -93,16 +93,24 @@ object MatchKernel {
     case _ => "EXPR"
   }
 
+  /** The turn's gene key: the uppercased ENTITY of `text` = "ENTITY
+    * payload". `parse` derives it here, and `MatchShuffle` joins each
+    * turn to its gene's `GeneDim` on it.
+    */
+  def geneKey(t: Turn): String = {
+    val sp = t.text.indexOf(' ')
+    require(sp > 0, s"malformed turn text: '${t.text}'")
+    t.text.substring(0, sp).toUpperCase
+  }
+
   /** Parse `text` = "ENTITY payload". SNV payload "dna|prot|impact|exon"
     * mirrors the reference's encoded variant key
     * (read_and_write.py:142); CNV payload is the cnv cell; EXPR payload
     * the logFC. Validation mirrors match.py:857-913.
     */
   def parse(t: Turn): Parsed = {
-    val sp = t.text.indexOf(' ')
-    require(sp > 0, s"malformed turn text: '${t.text}'")
-    val gene = t.text.substring(0, sp).toUpperCase
-    val payload = t.text.substring(sp + 1)
+    val gene = geneKey(t)
+    val payload = t.text.substring(t.text.indexOf(' ') + 1)
     roleToDataType(t.role) match {
       case "SNV" =>
         val f = PipeSplit.split(payload, -1)
@@ -135,13 +143,12 @@ object MatchKernel {
 
   /** Input-side match keys with their tier bits (bit0 = tier_1
     * true-exact, bit1 = tier_1b exact, bit2 = tier_2 positional) and
-    * index domain — THE single definition of the turn side of the
-    * match, shared by the broadcast kernel below and the
-    * shuffle-regime `MatchShuffle` equi-join so the two regimes
-    * cannot drift. The `CNV_EXON` domain is the positional probe an
-    * input DELETION makes against exon-CNV records (match.py:627-638).
+    * index domain: the turn side of the match, which `annotateTurn`
+    * probes against the gene's `GeneDim`. The `CNV_EXON` domain is the
+    * positional probe an input DELETION makes against exon-CNV records
+    * (match.py:627-638).
     */
-  def keyBits(p: Parsed): List[(String, String, Int)] = p.dataType match {
+  private def keyBits(p: Parsed): List[(String, String, Int)] = p.dataType match {
     case "SNV" =>
       Nomenclature.inputMatchStrings(p.variants, "SNV", p.impacts, p.exons)
         .map(k => ("SNV", k.s, if (k.isExact) { if (k.isTrueExact) 1 else 2 } else 4))
@@ -155,13 +162,20 @@ object MatchKernel {
   }
 
   /** The tier-resolution kernel for one turn against the broadcast
-    * index — pure function, zero shuffle (reference kernels:
-    * match.py:552-679 SNV/CNV, match.py:682-747 EXPR).
+    * index — pure function, zero shuffle.
     */
-  def annotateTurn(t: Turn, idx: DimIndex): Annotation = {
+  def annotateTurn(t: Turn, idx: DimIndex): Annotation =
+    annotateTurn(t, idx.genes.get(geneKey(t)))
+
+  /** The tier-resolution kernel for one turn given its gene's
+    * dimension (None: the gene is absent from it), the one copy of the
+    * tier and consensus rules both annotation regimes run (reference
+    * kernels: match.py:552-679 SNV/CNV, match.py:682-747 EXPR).
+    */
+  def annotateTurn(t: Turn, gene: Option[GeneDim]): Annotation = {
     val p = parse(t)
 
-    idx.genes.get(p.geneKey) match {
+    gene match {
       case None =>
         // gene absent from the dimension -> tier_4 (match.py:672-678)
         Annotation(t.conv_id, t.turn_idx, t.role, t.ts, p.geneKey, p.dataType,

@@ -7,10 +7,10 @@ import graft.model.{EvidenceRow, Turn}
 import graft.operators._
 import graft.sources.Synth
 
-/** Full-shuffle match-path parity: `MatchShuffle.annotate` (tier
-  * matching AND consensus as distributed equi-joins — the regime for a
-  * dimension whose exploded match-string index cannot be collected)
-  * must reproduce the broadcast kernel's output row-for-row, across
+/** Full-shuffle match-path parity: `MatchShuffle.annotate` (each turn
+  * joined to its gene's `GeneDim`, built on the executors — the regime
+  * for a dimension that cannot be collected) must reproduce the
+  * broadcast kernel's output row-for-row, across
   * every tier path: exact/1b/positional matches, general-variant
   * promotion, DELETION-vs-exon-CNV positional, EXPR type matching,
   * tier-3 fallbacks, sentinels, and tier_4 gene misses.
@@ -44,8 +44,8 @@ class MatchShuffleSpec extends AnyFunSuite {
     assert(got.keySet == want.keySet)
     for ((k, w) <- want)
       assert(got(k) == w, s"annotation mismatch at $k:\n  got  ${got(k)}\n  want $w")
-    // the fixture must actually exercise the paths the sparse assembly
-    // re-expresses — otherwise the equality above is vacuous
+    // the fixture must actually exercise every tier and consensus path
+    // — otherwise the equality above is vacuous
     val vs = want.values
     assert(vs.exists(_.tier_1.nonEmpty), "no tier_1 coverage")
     assert(vs.exists(_.tier_2.nonEmpty), "no tier_2 coverage")
@@ -124,5 +124,27 @@ class MatchShuffleSpec extends AnyFunSuite {
     assert(want(("c1", 6)).tier_3 == Seq("NON_CNV_MATCH_ONLY"))
     assert(want(("c1", 7)).tier_3 == Seq("NON_EXPR_MATCH_ONLY"))
     assert(want(("c1", 8)).tier_4)
+  }
+
+  test("rows sharing (conv_id, turn_idx) and gene annotate one per input row") {
+    val rows = Seq(
+      evRow("G1", "10", "V600E", Seq("NP_1:p.Val600Glu", "NM_1:c.1799T>A"), 0L),
+      evRow("G1", "11", "G12D", Seq("NM_1:c.35G>A"), 1L))
+    import spark.implicits._
+    val craftedDim = rows.toDS().toDF()
+    val craftedTurns = spark.createDataset(Seq(
+      turn("c1", 0, "user", "G1 c.1799T>A|p.Val600Glu|missense_variant|15/18"),
+      turn("c1", 0, "user", "G1 c.35G>A|||")))
+    val bcIdx = spark.sparkContext.broadcast(
+      DimIndex.build(spark, craftedDim, Pipeline.defaultCt))
+    val want = MatchKernel.annotate(craftedTurns, bcIdx).collect().toSeq
+    val got = MatchShuffle.annotate(spark, craftedTurns, craftedDim,
+      Pipeline.defaultCt).collect().toSeq
+    assert(want.size == 2 && want.map(_.tier_1).toSet == Set(Seq("10"), Seq("11")),
+      s"the kernel must annotate each row on its own payload: $want")
+    assert(got.size == 2, s"expected one annotation per input row, got $got")
+    assert(got.groupBy(identity).view.mapValues(_.size).toMap ==
+      want.groupBy(identity).view.mapValues(_.size).toMap,
+      s"\n  got  $got\n  want $want")
   }
 }

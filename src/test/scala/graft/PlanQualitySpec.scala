@@ -2,6 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.GenerateExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
@@ -419,6 +424,41 @@ class PlanQualitySpec extends AnyFunSuite {
       !plan.contains("BroadcastNestedLoopJoin"),
       s"full-shuffle match degraded to a non-equi join:\n$plan")
     operators.NearDup.unpersistAll()
+  }
+
+  test("full-shuffle match path: turns cross one exchange, on the gene key, and no explode") {
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val dim = graft.sources.Synth.evidenceDim(spark, 12, 42L).toDF()
+      val turns = spark.createDataset(Seq(
+        Turn("c1", 0, "user", "G1 c.1799T>A|p.V600E||", "t",
+          java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))))(
+        org.apache.spark.sql.Encoders.product[Turn])
+      val plan = operators.MatchShuffle.annotate(spark, turns, dim,
+        Pipeline.defaultCt).queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      // the top join is the turn-to-gene join; turns are its left side
+      val join = plan.collectFirst { case j: SortMergeJoinExec => j }
+        .getOrElse(fail(s"no sort-merge join:\n$plan"))
+      val turnSide = join.left
+      assert(turnSide.collect { case g: GenerateExec => g }.isEmpty,
+        s"the turn side must not explode:\n$turnSide")
+      val exchanges = turnSide.collect { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size == 1, s"turns must cross exactly one exchange:\n$turnSide")
+      exchanges.head.outputPartitioning match {
+        case h: HashPartitioning =>
+          assert(h.expressions.size == 1 &&
+            h.expressions.head.semanticEquals(join.leftKeys.head),
+            s"the turn exchange must partition on the gene key:\n$turnSide")
+        case other => fail(s"turn exchange is not hash-partitioned: $other")
+      }
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      operators.NearDup.unpersistAll()
+    }
   }
 
   test("hybrid star round: hot mins broadcast tiny, cold bulk stays one window pass") {
