@@ -415,14 +415,10 @@ object SparkEntry {
       val q = emb.filter(col("vec_id") < 20)
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
       val c = emb.select(col("vec_id").as("item_id"), col("embedding").as("iv"))
-      val scored = c.join(broadcast(q), col("item_id") =!= col("query_id"))
-        .withColumn("dotq",
-          operators.Similarity.quantizedDot(col("qv"), col("iv")))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("dotq").desc, col("item_id"))
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("rank"), col("item_id"), col("dotq"))
+      operators.Similarity.topKByScore(
+          c.join(broadcast(q), col("item_id") =!= col("query_id"))
+            .withColumn("dotq", operators.Similarity.quantizedDot(col("qv"), col("iv"))),
+          "dotq", 5)
         .orderBy(col("query_id"), col("rank"))
     }),
     "q11_doc_quality" -> ((s, dir) => {
@@ -568,10 +564,11 @@ object SparkEntry {
     "q36_jaccard_exact" -> ((s, dir) => {
       // EXACT n-gram Jaccard near-dup (inverted shingle index, no
       // hashing approximation) — the exact counterpart of q14. The
-      // explicit stop-shingle cap bounds each posting list's pairs at
-      // O(maxDocFreq²) per shingle; at the tested scales no shingle's
-      // doc-frequency reaches it, so the uncapped DuckDB oracle must
-      // agree bit-for-bit (cap-vs-uncapped recall pinned in DataOpsSpec)
+      // doc-frequency cap (maxDocFreq, no stop set) bounds each posting
+      // list's pairs at O(maxDocFreq²) per shingle; at the tested scales
+      // no shingle's doc-frequency reaches it, so the uncapped DuckDB
+      // oracle must agree bit-for-bit (cap-vs-uncapped recall pinned in
+      // DataOpsSpec)
       jaccardPairs(s, dir)
         .orderBy(col("doc_a"), col("doc_b"))
     }),

@@ -83,13 +83,12 @@ object CurateFlow {
 
     // 2. per-doc quality gates, IN PLACE (map-side filter on the rule
     // columns — never a verdict-table re-join): C4 blocklist + Gopher
-    val gopherCols = TextOps.gopherRulesTable(capped.limit(0), "doc_id",
-      "text").columns.filter(_ != "doc_id")
+    val gopherCols = TextOps.gopherRules(col("text")).map(_._1)
     val filtered = stage("quality_filters",
       TextOps.gopherAnnotate(capped, "text")
         .filter(TextOps.blocklistHits(col("text"), blocklist) === 0L &&
           expr(qualityKeep))
-        .drop(gopherCols.toIndexedSeq: _*))
+        .drop(gopherCols: _*))
 
     // 3a. within-doc line dedup — map-only in-place rewrite (q89)
     val lineDeduped = stage("line_dedup_indoc",

@@ -22,8 +22,7 @@ object FirstArrival {
 
   def keep(df: DataFrame, key: Column, order: Seq[String]): DataFrame =
     if (df.isStreaming) {
-      val k = Iterator.from(0).map(i => s"_first_key$i")
-        .find(c => !df.columns.contains(c)).get
+      val k = freshColumn(df, "_first_key")
       df.withColumn(k, key).dropDuplicatesWithinWatermark(k).drop(k)
     } else
       df.groupBy(key)

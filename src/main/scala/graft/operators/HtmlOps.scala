@@ -113,10 +113,8 @@ object HtmlOps {
     val clash = outCols.filter(df.columns.contains)
     require(clash.isEmpty,
       s"input already has extraction column(s): ${clash.mkString(", ")}")
-    val lines = Iterator.from(0).map(i => s"_lines$i")
-      .find(c => !df.columns.contains(c)).get
-    val kept = Iterator.from(0).map(i => s"_kept$i")
-      .find(c => !df.columns.contains(c)).get
+    val lines = freshColumn(df, "_lines")
+    val kept = freshColumn(df, "_kept")
     df.withColumn(lines, textLines(stripHtml(col(htmlCol))))
       .withColumn(kept, filter(col(lines), l => c4KeepLine(l, minWords)))
       .withColumn("raw_lines", size(col(lines)).cast("long"))

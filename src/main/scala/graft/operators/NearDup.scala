@@ -100,7 +100,8 @@ object NearDup {
     * the listener (`lastCapDropped`) once the materializing action
     * completes — a silent cap would be indistinguishable from an exact
     * run. Blocks under `minBlock` are filtered as well but not counted
-    * as dropped (the LSH paths pass 2: a singleton bucket has no pair).
+    * as dropped (`candidatePairs` passes 2: a singleton bucket has no
+    * pair).
     */
   private def capBlocks(members: DataFrame, keys: Seq[String], maxBlock: Int,
                         minBlock: Int = 1): DataFrame = {
@@ -130,7 +131,7 @@ object NearDup {
     * materialization (bucket values are internal join keys only; the
     * exact-jaccard verify pass decides membership).
     */
-  def bandKeys(sigCol: Column, bands: Int, rows: Int): Column =
+  private def bandKeys(sigCol: Column, bands: Int, rows: Int): Column =
     array((0 until bands).map { b =>
       struct(lit(b).as("band"),
         xxhash64(slice(sigCol, b * rows + 1, rows)).as("bucket"))
@@ -154,6 +155,26 @@ object NearDup {
       .select(explode(col("_ds")).as("doc_a"), col("_ds"))
       .select(col("doc_a"),
         explode(filter(col("_ds"), x => x > col("doc_a"))).as("doc_b"))
+
+  /** The candidate pairs of the LSH paths: `capBlocks` drops (and
+    * counts) the blocks over `maxBucket` and the singletons,
+    * `blockPairs` explodes the rest, and pairs dedup across blocks as
+    * bare (doc_a, doc_b) ids — the payload a verify step needs is
+    * re-attached after the dedup exchange (`withPayloads`).
+    */
+  private def candidatePairs(members: DataFrame, keys: Seq[String],
+                             maxBucket: Int): DataFrame =
+    blockPairs(capBlocks(members, keys, maxBucket, minBlock = 2), keys)
+      .dropDuplicates("doc_a", "doc_b")
+
+  /** `pairs` with the `payload` column of the (doc, payload) relation
+    * `rel` joined onto both sides as `<payload>_a` and `<payload>_b`.
+    */
+  private[graft] def withPayloads(pairs: DataFrame, rel: DataFrame,
+                                  payload: String): DataFrame = {
+    def side(s: String) = rel.select(col("doc").as(s"doc_$s"), col(payload).as(s"${payload}_$s"))
+    pairs.join(side("a"), Seq("doc_a")).join(side("b"), Seq("doc_b"))
+  }
 
   /** Candidate near-duplicate pairs via MinHash LSH, verified with
     * exact Jaccard over the shingle sets. Returns (doc_a, doc_b,
@@ -186,18 +207,11 @@ object NearDup {
         TextOps.shingles(col(textCol), nShingle).as("sh"))
       .withColumn("sig", minhashSignature(col("sh"), k)))
     // banded keys carry ONLY (doc, band, bucket): the shingle arrays
-    // never ride through the band shuffle or the candidate dedup —
-    // payload-light shuffles are what survive a 100x scale-up
+    // never ride through the band shuffle or the candidate dedup
     val banded = withSh
       .select(col("doc"), explode(bandKeys(col("sig"), bands, rows)).as("bk"))
       .select(col("doc"), col("bk.band"), col("bk.bucket"))
-    val keys = Seq("band", "bucket")
-    val cand = blockPairs(capBlocks(banded, keys, maxBucket, minBlock = 2), keys)
-      .dropDuplicates("doc_a", "doc_b")
-    // exact verification: re-attach shingles only for candidates
-    val shA = withSh.select(col("doc").as("doc_a"), col("sh").as("sh_a"))
-    val shB = withSh.select(col("doc").as("doc_b"), col("sh").as("sh_b"))
-    cand.join(shA, Seq("doc_a")).join(shB, Seq("doc_b"))
+    withPayloads(candidatePairs(banded, Seq("band", "bucket"), maxBucket), withSh, "sh")
       .withColumn("jaccard", round(
         size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
           size(array_union(col("sh_a"), col("sh_b"))), 4))
@@ -441,13 +455,7 @@ object NearDup {
           Similarity.hyperplaneSigs(col("vec"), nBits, nTables, seedBase = 101)))
     val sigs = base.select(col("doc"), posexplode(col("sigs")))
       .toDF("doc", "table", "sig")
-    // cap degenerate buckets, as in the MinHash path
-    val keys = Seq("table", "sig")
-    val cand = blockPairs(capBlocks(sigs, keys, maxBucket, minBlock = 2), keys)
-      .dropDuplicates("doc_a", "doc_b")
-    val vA = base.select(col("doc").as("doc_a"), col("vec").as("vec_a"))
-    val vB = base.select(col("doc").as("doc_b"), col("vec").as("vec_b"))
-    cand.join(vA, Seq("doc_a")).join(vB, Seq("doc_b"))
+    withPayloads(candidatePairs(sigs, Seq("table", "sig"), maxBucket), base, "vec")
       .withColumn("cos",
         round(Similarity.quantizedCosine(col("vec_a"), col("vec_b")), 6))
       .filter(col("cos") >= threshold)
@@ -496,12 +504,8 @@ object NearDup {
     * paths: a chunk value shared by 10^6 short/templated documents
     * (e.g. chunk 0 of a boilerplate-heavy corpus) would make its pair
     * list quadratic, so buckets above `maxBucket` are dropped and
-    * counted (`capBlocks`: partial-aggregated counts, never a
-    * materialized member list); a pair lost to one capped chunk is
-    * still found via its other agreeing chunks. The candidate pairs are
-    * deduplicated as bare (doc_a, doc_b) ids BEFORE the signatures are
-    * re-attached, so the dedup exchange carries 16-byte rows, not
-    * signature payloads.
+    * counted (`candidatePairs`); a pair lost to one capped chunk is
+    * still found via its other agreeing chunks.
     */
   def simhashNearDups(docs: DataFrame, idCol: String, textCol: String,
                       maxHamming: Int = 3, maxBucket: Int = 10000): DataFrame = {
@@ -510,12 +514,7 @@ object NearDup {
     val chunks = withSig.select(col("doc"),
         simhashChunks(col("sig"), maxHamming).as("ck"))
       .select(col("doc"), col("ck.chunk"), col("ck.v"))
-    val keys = Seq("chunk", "v")
-    val cand = blockPairs(capBlocks(chunks, keys, maxBucket, minBlock = 2), keys)
-      .dropDuplicates("doc_a", "doc_b")
-    val sA = withSig.select(col("doc").as("doc_a"), col("sig").as("sig_a"))
-    val sB = withSig.select(col("doc").as("doc_b"), col("sig").as("sig_b"))
-    cand.join(sA, Seq("doc_a")).join(sB, Seq("doc_b"))
+    withPayloads(candidatePairs(chunks, Seq("chunk", "v"), maxBucket), withSig, "sig")
       .select(col("doc_a"), col("doc_b"),
         hamming(col("sig_a"), col("sig_b")).as("hamming"))
       .filter(col("hamming") <= maxHamming)

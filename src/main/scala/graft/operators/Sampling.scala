@@ -76,11 +76,7 @@ object Sampling {
       .partitionBy(col(strataCol))
       .orderBy(md5(concat(col(keyCol).cast("string"), lit(":" + salt))),
         col(keyCol))
-    // collision-safe internal column: a fixed name like "_rk" would
-    // silently overwrite (and then drop) a caller's column of the
-    // same name
-    val rk = Iterator.from(0).map(i => s"_rk$i")
-      .find(c => !df.columns.contains(c)).get
+    val rk = freshColumn(df, "_rk")
     df.withColumn(rk, row_number().over(w))
       .filter(col(rk) <= n)
       .drop(rk)

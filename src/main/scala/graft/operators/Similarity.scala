@@ -75,16 +75,10 @@ object Similarity {
 
   /** Exact per-query top-k re-rank of a candidate set
     * (query_id, item_id, query_vec, item_vec) by quantized cosine.
-    * One shuffle on query_id for the window rank.
     */
-  def rerankTopK(cand: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("item_id"))
-    cand.withColumn("cos", round(quantizedCosine(col("query_vec"), col("item_vec")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("item_id"), col("cos"))
-  }
+  def rerankTopK(cand: DataFrame, k: Int): DataFrame =
+    topKByScore(cand.withColumn("cos",
+      round(quantizedCosine(col("query_vec"), col("item_vec")), 6)), "cos", k)
 
   /** Exact cosine top-k: broadcast the query set, score map-side,
     * per-query top-k via window rank.
@@ -93,14 +87,35 @@ object Similarity {
                 vecCol: String, k: Int = 10): DataFrame = {
     val c = corpus.select(col(idCol).as("item_id"), col(vecCol).as("item_vec"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("query_vec"))
-    val scored = c.join(broadcast(q), col("item_id") =!= col("query_id"))
-      .withColumn("cos", round(cosine(col("item_vec"), col("query_vec")), 6))
+    topKByScore(c.join(broadcast(q), col("item_id") =!= col("query_id"))
+      .withColumn("cos", round(cosine(col("item_vec"), col("query_vec")), 6)), "cos", k)
+  }
+
+  /** Per-query top-k of (query_id, item_id, `score`) rows by `score`
+    * descending, ties to the smaller item_id: one window over a shuffle
+    * on query_id. Returns (query_id, rank, item_id, `score`).
+    */
+  private[graft] def topKByScore(scored: DataFrame, score: String, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("item_id"))
+      .orderBy(col(score).desc, col("item_id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("item_id"), col("cos"))
+      .select(col("query_id"), col("rank"), col("item_id"), col(score))
   }
+
+  /** The ANN candidates' tail: (query_id, item_id) pairs dedup as bare
+    * ids, then the (broadcast) query and item vectors are re-attached.
+    * Returns (query_id, query_vec, item_id, item_vec).
+    */
+  private def withVectors(cand: DataFrame, corpus: DataFrame, queries: DataFrame,
+                          idCol: String, vecCol: String): DataFrame =
+    cand.select(col("query_id"), col("item_id"))
+      .dropDuplicates("query_id", "item_id")
+      .join(broadcast(queries.select(col(idCol).as("query_id"),
+        col(vecCol).as("query_vec"))), Seq("query_id"))
+      .join(corpus.select(col(idCol).as("item_id"), col(vecCol).as("item_vec")),
+        Seq("item_id"))
+      .select(col("query_id"), col("query_vec"), col("item_id"), col("item_vec"))
 
   /** k-means centroids fit on a bounded sample — the shared front end
     * of IVF and SemDeDup. Fitting on a cap: clustering quality needs
@@ -164,22 +179,13 @@ object Similarity {
     val probeUdf = udf((a: Seq[Float]) =>
       centers.indices.sortBy(i => dist2(a, centers(i))).take(nProbe))
 
-    // candidate generation and dedup carry ONLY (cell, ids): the
-    // vectors never ride through the dropDuplicates exchange — they are
-    // re-attached per-candidate afterwards (same payload-light pattern
-    // as NearDup.embeddingNearDups)
-    val c = corpus.select(col(idCol).as("item_id"), col(vecCol).as("item_vec"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("query_vec"))
-    val cCells = c.select(col("item_id"), assignUdf(col("item_vec")).as("cell"))
-    val qCells = q.select(col("query_id"),
-      explode(probeUdf(col("query_vec"))).as("cell"))
-    val cand = cCells.join(broadcast(qCells), Seq("cell"))
-      .filter(col("item_id") =!= col("query_id"))
-      .dropDuplicates("query_id", "item_id")
-      .select(col("query_id"), col("item_id"))
-    cand.join(broadcast(q), Seq("query_id"))
-      .join(c, Seq("item_id"))
-      .select(col("query_id"), col("query_vec"), col("item_id"), col("item_vec"))
+    // candidate generation carries ONLY (cell, ids)
+    val cCells = corpus.select(col(idCol).as("item_id"),
+      assignUdf(col(vecCol)).as("cell"))
+    val qCells = queries.select(col(idCol).as("query_id"),
+      explode(probeUdf(col(vecCol))).as("cell"))
+    withVectors(cCells.join(broadcast(qCells), Seq("cell"))
+      .filter(col("item_id") =!= col("query_id")), corpus, queries, idCol, vecCol)
   }
 
   /** IVF ANN top-k: candidates + exact quantized-cosine re-rank. */
@@ -226,26 +232,17 @@ object Similarity {
   def lshCandidates(corpus: DataFrame, queries: DataFrame, idCol: String,
                     vecCol: String, nBits: Int = 12,
                     nTables: Int = 4): DataFrame = {
-    // signature rows and the candidate dedup carry ONLY (id, table,
-    // sig): the vectors never ride through the bucket join or the
-    // dropDuplicates exchange — they are re-attached per-candidate
-    // afterwards (same payload-light pattern as embeddingNearDups)
+    // signature rows carry ONLY (id, table, sig): the vectors never
+    // ride through the bucket join
     def sigs(df: DataFrame, id: String): DataFrame =
       df.select(col(idCol).as(id),
         posexplode(hyperplaneSigs(col(vecCol), nBits, nTables, seedBase = 7)))
         .toDF(id, "table", "sig")
     val cs = sigs(corpus, "item_id")
     val qs = sigs(queries, "query_id")
-    val cand = cs.join(qs,
+    withVectors(cs.join(qs,
         cs("table") === qs("table") && cs("sig") === qs("sig") &&
-        col("item_id") =!= col("query_id"))
-      .select(col("query_id"), col("item_id"))
-      .dropDuplicates("query_id", "item_id")
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("query_vec"))
-    val c = corpus.select(col(idCol).as("item_id"), col(vecCol).as("item_vec"))
-    cand.join(broadcast(q), Seq("query_id"))
-      .join(c, Seq("item_id"))
-      .select(col("query_id"), col("query_vec"), col("item_id"), col("item_vec"))
+        col("item_id") =!= col("query_id")), corpus, queries, idCol, vecCol)
   }
 
   /** LSH ANN top-k: candidates + exact quantized-cosine re-rank on the
@@ -298,7 +295,6 @@ object Similarity {
   def semDedupVerdicts(cells: DataFrame, corpus: DataFrame, idCol: String,
                        vecCol: String, tau: Double,
                        maxCell: Int = 1000000): DataFrame = {
-    val a = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))
     // persisted: cell sizes, the pair derivation, and the final
     // verdict join all read the assignment — without a cache the
     // assignment map (and its upstream scan) executes once per branch
@@ -309,11 +305,10 @@ object Similarity {
       .select(col("cell"), (col("n") > maxCell).as("capped"))
     val flagged = c.join(broadcast(sizes), Seq("cell"))
     val eligible = flagged.filter(!col("capped"))
-    val dups = NearDup.blockPairs(
-        eligible.select(col("cell"), col("id").as("doc")), Seq("cell"))
-      .join(a.select(col("id").as("doc_a"), col("vec").as("va")), Seq("doc_a"))
-      .join(a.select(col("id").as("doc_b"), col("vec").as("vb")), Seq("doc_b"))
-      .filter(quantizedCosine(col("va"), col("vb")) >= tau)
+    val dups = NearDup.withPayloads(
+        NearDup.blockPairs(eligible.select(col("cell"), col("id").as("doc")), Seq("cell")),
+        corpus.select(col(idCol).as("doc"), col(vecCol).as("vec")), "vec")
+      .filter(quantizedCosine(col("vec_a"), col("vec_b")) >= tau)
       .select(col("doc_b"))
     val dupCounts = dups.groupBy(col("doc_b").as("id"))
       .agg(count(lit(1)).as("n_smaller_dups"))

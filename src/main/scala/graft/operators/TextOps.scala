@@ -231,14 +231,11 @@ object TextOps {
     * run per row).
     */
   def gopherAnnotate(docs: DataFrame, textCol: String): DataFrame = {
-    val taken = docs.columns.toSet
-    def fresh(base: String) = Iterator.from(0).map(i => s"$base$i")
-      .find(c => !taken.contains(c)).get
-    val tk = fresh("_toks")
-    val ln = fresh("_lines")
-    val ns = fresh("_nsym")
+    val tk = freshColumn(docs, "_toks")
+    val ln = freshColumn(docs, "_lines")
+    val ns = freshColumn(docs, "_nsym")
     val rules = gopherRulesFrom(col(tk), col(ln), col(ns))
-    val clash = rules.map(_._1).filter(taken.contains)
+    val clash = rules.map(_._1).filter(docs.columns.contains)
     require(clash.isEmpty,
       s"input already has rule column(s): ${clash.mkString(", ")}")
     rules.foldLeft(docs
@@ -334,8 +331,7 @@ object TextOps {
     */
   def dedupLinesInPlace(docs: DataFrame, textCol: String,
                         sep: String = "\n"): DataFrame = {
-    val tmp = Iterator.from(0).map(i => s"_lines$i")
-      .find(c => !docs.columns.contains(c)).get
+    val tmp = freshColumn(docs, "_lines")
     docs
       .withColumn(tmp,
         split(col(textCol), java.util.regex.Pattern.quote(sep)))

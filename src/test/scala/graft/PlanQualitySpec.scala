@@ -286,21 +286,27 @@ class PlanQualitySpec extends AnyFunSuite {
   test("ANN candidate dedup exchanges carry ids only, never vectors") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val q = emb.filter(col("vec_id") < 5)
+    // (name, plan, dedup key): the ANN candidates dedup on
+    // (query_id, item_id), the near-dup LSH paths on (doc_a, doc_b)
     val cands = Seq(
-      "lsh" -> operators.Similarity.lshCandidates(emb, q, "vec_id", "embedding",
-        nBits = 4, nTables = 4),
-      "ivf" -> operators.Similarity.ivfCandidates(emb, q, "vec_id", "embedding",
-        nCentroids = 4, nProbe = 2))
-    for ((name, df) <- cands) {
+      ("lsh", operators.Similarity.lshCandidates(emb, q, "vec_id", "embedding",
+        nBits = 4, nTables = 4), Set("query_id", "item_id")),
+      ("ivf", operators.Similarity.ivfCandidates(emb, q, "vec_id", "embedding",
+        nCentroids = 4, nProbe = 2), Set("query_id", "item_id"))) ++
+      Seq("q14_minhash_neardup", "q15_simhash_neardup", "q35_embed_neardup")
+        .map(n => (n, SparkEntry.queries(n)(spark, sf), Set("doc_a", "doc_b")))
+    // payload columns, bare or re-attached to one side
+    def payload(name: String) = name.matches("(sh|vec|sigs|sig)(_[ab])?|.*_vec")
+    for ((name, df, key) <- cands) {
       val dedups = df.queryExecution.optimizedPlan.collect {
         case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate
             if a.groupingExpressions.flatMap(_.references.map(_.name))
-              .toSet == Set("query_id", "item_id") => a
+              .toSet == key => a
       }
       assert(dedups.nonEmpty, s"$name candidate dedup aggregate not found")
       for (a <- dedups)
-        assert(a.output.forall(o => !o.name.endsWith("_vec")),
-          s"$name dedup exchange still carries vector payloads: ${a.output}")
+        assert(a.output.forall(o => !payload(o.name)),
+          s"$name dedup exchange still carries payloads: ${a.output}")
     }
   }
 

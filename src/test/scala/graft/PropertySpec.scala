@@ -85,6 +85,48 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
+  test("tier selection (TierSelect over Annotation) agrees with RefModel.filterMatch") {
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    import spark.implicits._
+    // half the tiers empty, so rows with no kept tier (tier_4) and
+    // every highest tier occur
+    val tierGen = Gen.frequency(1 -> Gen.const(Seq.empty[String]),
+      1 -> Gen.choose(1, 3).flatMap(n => Gen.listOfN(n, Gen.oneOf("V1", "V2", "V3", "V4"))
+        .map(_.distinct)))
+    val rowGen = for (t1 <- tierGen; t1b <- tierGen; t2 <- tierGen; t3 <- tierGen) yield {
+      val m = RefModel.Match(t1.toList, t1b.toList, t2.toList, t3.toList,
+        Seq(t1, t1b, t2, t3).forall(_.isEmpty))
+      val highest = graft.model.Tiers.sorted.zip(Seq(t1, t1b, t2, t3, Seq("")))
+        .collectFirst { case (n, t) if t.nonEmpty => n }.get
+      m -> highest
+    }
+    val rows = Gen.listOfN(300, rowGen)
+      .apply(Gen.Parameters.default, org.scalacheck.rng.Seed(20L)).get
+      .zipWithIndex.map { case ((m, highest), i) =>
+        operators.Annotation(s"c$i", 0, "user", new java.sql.Timestamp(0L),
+          "G", "SNV", m.tier1, m.tier1b, m.tier2, m.tier3, m.tier4, highest,
+          m.tier1, m.tier1b, m.tier2, m.tier3) -> m
+      }
+    val ds = spark.createDataset(rows.map(_._1))
+    val lists = (1 to graft.model.Tiers.sorted.size)
+      .flatMap(graft.model.Tiers.sorted.combinations).map(l => Right(l.toList))
+    val selections: Seq[Either[String, List[String]]] =
+      Seq(Left("all"), Left("highest")) ++ lists
+    for (sel <- selections) {
+      val got = operators.TierSelect(ds, sel).collect()
+        .map(a => a.conv_id -> RefModel.Match(a.tier_1.toList, a.tier_1b.toList,
+          a.tier_2.toList, a.tier_3.toList, a.tier_4)).toMap
+      for ((a, m) <- rows)
+        assert(got(a.conv_id) == RefModel.filterMatch(m, sel),
+          s"selection $sel on $m")
+    }
+  }
+
   test("input/civic match-string generation is deterministic and upper-cased") {
     val s = Gen.alphaNumStr.suchThat(_.nonEmpty)
     check(Prop.forAll(s) { raw =>
