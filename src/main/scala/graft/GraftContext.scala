@@ -51,8 +51,6 @@ final class GraftContext private () {
     * one completes); see `NearDup.lastCapDropped`.
     */
   @volatile var capDropped: Long = -1L
-  /** Rounds the most recent `connectedComponents` call took. */
-  @volatile var ccRounds: Int = 0
 
   /** The artifact memoized under `key`, built on first use. Concurrent
     * first calls run `build` once (the others wait on the key's cell);

@@ -32,12 +32,6 @@ import org.apache.spark.sql.functions._
   */
 object Components {
 
-  /** Rounds the most recent `connectedComponents` call in the current
-    * session's context took to converge (diagnostic only — benchmarks
-    * report it).
-    */
-  def lastRounds: Int = graft.GraftContext.current.fold(0)(_.ccRounds)
-
   /** Free the checkpoint blocks backing every completed CC run and
     * CurateFlow release in the current session's context. Each run's
     * last checkpoint backs the DataFrame it returns, so it cannot be
@@ -156,9 +150,8 @@ object Components {
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds")
-    val ctx = graft.GraftContext(pairs.sparkSession)
-    ctx.ccRounds = it
-    ctx.trackCheckpoint(edgesRdd) // final round backs the result; freed via releaseAll()
+    // the final round backs the result; freed via releaseAll()
+    graft.GraftContext(pairs.sparkSession).trackCheckpoint(edgesRdd)
     // at the fixpoint the edge set is a star forest: every edge links a
     // node directly to its component root. Nodes that appear only as
     // roots (u side never) map to themselves.

@@ -2,32 +2,64 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
+import graft.GraftContext.persistTracked
 
 /** Corpus relevance scoring (TF-IDF / BM25) for a fixed query-term
   * set — the retrieval primitive a curation pipeline uses to pull
-  * topic-targeted subsets out of a web-scale corpus.
+  * topic-targeted subsets out of a web-scale corpus — and CCNet-style
+  * LM quality scoring.
   *
-  * Scale shape: the fact-side pass is explode→broadcast-semi-filter on
-  * the tiny term set, so the only shuffled rows are (doc, matched
+  * Building a scorer starts no Spark job: every corpus scalar (N, Σdl,
+  * avgdl, the token total T, the mean-nll quartiles) is a scalar
+  * subquery of the returned plan, computed when the caller acts on it.
+  * The one tokenized relation a scorer reads more than once is
+  * persisted, so each document is tokenized once per scorer.
+  *
+  * Scale shape: the fact-side pass keeps, per document, only its
+  * query-term tokens, so the only shuffled rows are (doc, matched
   * term) — bounded by |terms| per document, NOT by document length.
   * The document-frequency relation is |terms| rows, broadcast back.
-  * Corpus-level scalars (N, avgdl) are one partial-aggregated scan.
   */
 object Relevance {
 
-  /** Per-(doc, term) term frequencies restricted to `terms` — the
-    * shared first stage. Filtering BEFORE the groupBy is the scale
-    * decision: the shuffle carries only query-term hits.
+  /** Integer division (SQL `div`) of two columns. */
+  private def intDiv(a: Column, b: Column): Column = call_function("div", a, b)
+
+  /** Corpus scalars of one term-scoring pass, as scalar subqueries. */
+  private final case class Corpus(n: Column, sumDl: Column, avgDl: Column)
+
+  /** The one term-scoring path: tokenize each document once into (doc,
+    * dl, its tokens that are query terms) — persisted, since the corpus
+    * scalars and the term frequencies both read it — then tf per (doc,
+    * term), df per term, the per-term `idf` broadcast back, and per doc
+    * Σ_t idf · `part`. `idf` reads column `df`; `part` reads `tf` and
+    * `dl`. `terms` is a set: a repeated term counts once.
     */
-  private def termFreqs(docs: DataFrame, idCol: String, textCol: String,
-                        terms: Seq[String]): DataFrame = {
-    import docs.sparkSession.implicits._
-    docs.select(col(idCol).as("doc"),
-        explode(TextOps.tokens(col(textCol))).as("term"))
-      .join(broadcast(terms.toDF("term")), Seq("term"))
-      .groupBy(col("doc"), col("term"))
+  private def termScores(docs: DataFrame, idCol: String, textCol: String,
+                         terms: Seq[String], out: String)
+                        (idf: Corpus => Column, part: Corpus => Column): DataFrame = {
+    // two-step select: CollapseProject would re-inline a same-select
+    // split per reference
+    val perDoc = persistTracked(
+      docs.select(col(idCol).as("doc"), TextOps.tokens(col(textCol)).as("toks"))
+        .select(col("doc"), size(col("toks")).cast("long").as("dl"),
+          filter(col("toks"), _.isin(terms: _*)).as("hits")))
+    val corpus = Corpus(perDoc.select(count(lit(1))).scalar(),
+      perDoc.select(sum(col("dl"))).scalar(), perDoc.select(avg(col("dl"))).scalar())
+    val tf = perDoc.select(col("doc"), col("dl"), explode(col("hits")).as("term"))
+      .groupBy(col("doc"), col("dl"), col("term"))
       .agg(count(lit(1)).as("tf"))
+    val idfs = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
+      .select(col("term"), idf(corpus).as("idf"))
+    tf.join(broadcast(idfs), Seq("term"))
+      .groupBy(col("doc"))
+      .agg(sum(col("idf") * part(corpus)).as(out))
+      .select(col("doc").as(idCol), col(out))
   }
+
+  /** Okapi idf ln(1 + (N − df + 0.5)/(df + 0.5)) over column `df`. */
+  private def okapiIdf(n: Column): Column =
+    log(lit(1.0) + (n.cast("double") - col("df") + 0.5) / (col("df") + 0.5))
 
   /** Integer-exact quantized TF-IDF: score_q = Σ_t tf(d,t) · idf_q(t)
     * with idf_q(t) = (N · scale) div df(t) — integer division, so the
@@ -42,19 +74,10 @@ object Relevance {
     * pass scale=10^3, not the default 10^6.
     */
   def tfIdfQuantized(docs: DataFrame, idCol: String, textCol: String,
-                     terms: Seq[String], scale: Long = 1000000L): DataFrame = {
-    val n = docs.count()
-    // tf feeds both the df aggregation and the score join — one
-    // tracked persist keeps the corpus explode to a single pass
-    val tf = graft.GraftContext.persistTracked(
-      termFreqs(docs, idCol, textCol, terms))
-    val idf = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .withColumn("idf_q", expr(s"${n * scale}L div df"))
-    tf.join(broadcast(idf), Seq("term"))
-      .groupBy(col("doc"))
-      .agg(sum(col("tf") * col("idf_q")).as("score_q"))
-      .select(col("doc").as(idCol), col("score_q"))
-  }
+                     terms: Seq[String], scale: Long = 1000000L): DataFrame =
+    termScores(docs, idCol, textCol, terms, "score_q")(
+      idf = c => intDiv(c.n * scale, col("df")),
+      part = _ => col("tf"))
 
   /** Cross-engine-exact quantized Okapi BM25 at the standard
     * (k1 = 1.2, b = 0.75): score_q = Σ_t idf_q(t) · tfpart_q(d,t),
@@ -80,31 +103,28 @@ object Relevance {
     * steps (pinned in the spec).
     */
   def bm25Quantized(docs: DataFrame, idCol: String, textCol: String,
-                    terms: Seq[String], scale: Long = 1000000L): DataFrame = {
-    // one pass gives both corpus scalars (row count + token total)
-    val lens = graft.GraftContext.persistTracked(
-      docs.select(col(idCol).as("doc"),
-        size(TextOps.tokens(col(textCol))).cast("long").as("dl")))
-    val stats = lens.agg(count(lit(1)).as("n"), sum(col("dl")).as("s")).head()
-    val n = stats.getLong(0)
-    if (n == 0)
-      return docs.select(col(idCol), lit(0L).as("score_q")).limit(0)
-    val sumDl = stats.getLong(1)
-    val tf = graft.GraftContext.persistTracked(
-      termFreqs(docs, idCol, textCol, terms))
-    val idf = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .withColumn("idf_q",
-        floor(log(lit(1.0) +
-          (lit(n.toDouble) - col("df") + 0.5) / (col("df") + 0.5)) * 1000)
-          .cast("long"))
-    val tfpartQ = expr(
-      s"(22L * tf * ${sumDl}L * ${scale}L) div " +
-        s"(10L * tf * ${sumDl}L + 3L * ${sumDl}L + 9L * dl * ${n}L)")
-    tf.join(broadcast(idf), Seq("term"))
-      .join(lens, Seq("doc"))
-      .groupBy(col("doc"))
-      .agg(sum(col("idf_q") * tfpartQ).as("score_q"))
-      .select(col("doc").as(idCol), col("score_q"))
+                    terms: Seq[String], scale: Long = 1000000L): DataFrame =
+    termScores(docs, idCol, textCol, terms, "score_q")(
+      idf = c => floor(okapiIdf(c.n) * 1000).cast("long"),
+      part = c => intDiv(lit(22L) * col("tf") * c.sumDl * scale,
+        lit(10L) * col("tf") * c.sumDl + lit(3L) * c.sumDl + lit(9L) * col("dl") * c.n))
+
+  /** Head/middle/tail buckets by the corpus quartiles of mean_nll_q =
+    * score_q div n_tok over `scored` (doc, score_q, n_tok). Quartile
+    * thresholds interpolate at exactly-representable 0.25/0.75
+    * positions over integers (the q46 exact-median argument), so the
+    * split is bit-identical on any engine and partitioning.
+    */
+  private def quartileBuckets(scored: DataFrame, idCol: String): DataFrame = {
+    val withMean = scored.withColumn("mean_nll_q", intDiv(col("score_q"), col("n_tok")))
+    val q = withMean.select(struct(
+      percentile(col("mean_nll_q"), lit(0.25)).as("q1"),
+      percentile(col("mean_nll_q"), lit(0.75)).as("q3"))).scalar()
+    withMean.select(col("doc").as(idCol), col("n_tok"), col("score_q"),
+      col("mean_nll_q"),
+      when(col("mean_nll_q") <= q.getField("q1"), "head")
+        .when(col("mean_nll_q") > q.getField("q3"), "tail")
+        .otherwise("middle").as("bucket"))
   }
 
   /** CCNet-style unigram-LM quality scoring: train a unigram LM on
@@ -119,59 +139,34 @@ object Relevance {
     * is an exact IEEE quotient of exact integers and the 1e-3 floor
     * grid is ~12 orders coarser than any libm last-ulp divergence —
     * then ONLY integers are summed: score_q(d) = Σ_t tf·nll_q(t),
-    * mean_nll_q = score_q div n_tok. Quartile thresholds interpolate
-    * at exactly-representable 0.25/0.75 positions over integers
-    * (the q46 exact-median argument), so the head/middle/tail split
-    * is bit-identical on any engine and partitioning.
+    * mean_nll_q = score_q div n_tok, bucketed by `quartileBuckets`.
     *
     * Scale shape: one explode pass; the LM is a (token -> count)
     * aggregation joined back on the token key (AQE broadcasts it when
-    * the vocabulary is small); the two quartile scalars are the only
-    * driver values. Overflow: score_q ≤ n_tok · 1000·ln(total) —
-    * at 10^12 tokens that is n_tok · 27 631, nowhere near 2^63.
+    * the vocabulary is small). Overflow: score_q ≤ n_tok ·
+    * 1000·ln(total) — at 10^12 tokens that is n_tok · 27 631, nowhere
+    * near 2^63.
     */
   def lmScoreQuantized(docs: DataFrame, idCol: String,
                        textCol: String): DataFrame = {
-    // the token explode feeds three consumers (total count, the LM
-    // aggregation, the per-doc term frequencies) and the scored
-    // relation two (the quartile action + the caller's) — persist
-    // both so the corpus is exploded once and scored once
-    val tok = graft.GraftContext.persistTracked(
+    // the token explode feeds the total, the LM aggregation and the
+    // per-doc scoring — persisted so the corpus is exploded once
+    val tok = persistTracked(
       docs.select(col(idCol).as("doc"),
         explode(TextOps.tokens(col(textCol))).as("term")))
-    val total = tok.count()
-    // empty corpus: percentile over zero rows is NULL and getDouble
-    // would NPE — return the empty result with the right schema (the
-    // same guard bm25 documents)
-    if (total == 0)
-      return docs.select(col(idCol), lit(0L).as("n_tok"),
-        lit(0L).as("score_q"), lit(0L).as("mean_nll_q"),
-        lit("middle").as("bucket")).limit(0)
+    val total = tok.select(count(lit(1))).scalar()
     val nll = tok.groupBy(col("term")).agg(count(lit(1)).as("cnt"))
-      .withColumn("nll_q",
-        floor(-log(col("cnt").cast("double") / total) * 1000).cast("long"))
-      .select(col("term"), col("nll_q"))
+      .select(col("term"),
+        floor(-log(col("cnt").cast("double") / total) * 1000).cast("long").as("nll_q"))
     // per-OCCURRENCE scoring: join each token row to its type's nll and
     // partial-aggregate straight to the doc key — Σ_occurrences nll_q
     // equals Σ_types tf·nll_q exactly (integers), and dropping the
     // intermediate (doc, term) aggregation removes one full exchange of
     // the token relation (the (doc, term) partitioning never served the
     // term-keyed join anyway)
-    val scored = graft.GraftContext.persistTracked(tok
-      .join(nll, Seq("term"))
+    quartileBuckets(tok.join(nll, Seq("term"))
       .groupBy(col("doc"))
-      .agg(sum(col("nll_q")).as("score_q"),
-        count(lit(1)).as("n_tok"))
-      .withColumn("mean_nll_q", expr("score_q div n_tok")))
-    val th = scored.agg(
-      percentile(col("mean_nll_q"), lit(0.25)).as("q1"),
-      percentile(col("mean_nll_q"), lit(0.75)).as("q3")).head()
-    val (q1, q3) = (th.getDouble(0), th.getDouble(1))
-    scored.select(col("doc").as(idCol), col("n_tok"), col("score_q"),
-      col("mean_nll_q"),
-      when(col("mean_nll_q") <= q1, "head")
-        .when(col("mean_nll_q") > q3, "tail")
-        .otherwise("middle").as("bucket"))
+      .agg(sum(col("nll_q")).as("score_q"), count(lit(1)).as("n_tok")), idCol)
   }
 
   /** CCNet-style BIGRAM LM with stupid backoff (Brants et al., "Large
@@ -187,43 +182,42 @@ object Relevance {
     *  - first token w0:     p = c_uni(w0)/T        (OOV: 1/T)
     *  - bigram (w1, w2):    p = c_bi(w1,w2)/c_uni(w1) when seen,
     *    else backoff        p = 0.4 · c_uni(w2)/T   (OOV w2: count 1)
+    * An empty `train` (T = 0) scores no document: the result is empty.
     *
     * Cross-engine exactness (the q60 discipline): every probability's
     * ln() argument is an IEEE product/quotient of exact integers (and
     * the exact double literal 0.4), nll_q = floor(-ln(p) · 1000), and
     * ONLY integers are summed: score_q(d) = nll_q(w0) + Σ nll_q(bigram
     * occurrences), mean_nll_q = score_q div n_tok, head/middle/tail by
-    * the corpus quartiles of the mean exactly as `lmScoreQuantized`.
+    * `quartileBuckets` exactly as `lmScoreQuantized`.
     *
     * Scale shape: bigrams derive map-only per document (zipped slices
     * of the token array — no self-join, no window); the LM tables are
     * (term) / (w1, w2)-keyed aggregations joined back on those keys
-    * (AQE broadcasts them when the vocabulary is small); the only
-    * driver scalars are T and the two quartiles. Overflow: per-token
-    * nll_q ≤ 1000·(ln T + 1), so at 10^12 tokens score_q ≤ n_tok·28547.
+    * (AQE broadcasts them when the vocabulary is small). Overflow:
+    * per-token nll_q ≤ 1000·(ln T + 1), so at 10^12 tokens score_q ≤
+    * n_tok·28547.
     */
   def bigramLmScoreQuantized(train: DataFrame, docs: DataFrame,
                              idCol: String, textCol: String): DataFrame = {
-    val trainTok = graft.GraftContext.persistTracked(
-      train.select(explode(TextOps.tokens(col(textCol))).as("term")))
-    val t = trainTok.count()
-    if (t == 0)
-      return docs.select(col(idCol), lit(0L).as("n_tok"),
-        lit(0L).as("score_q"), lit(0L).as("mean_nll_q"),
-        lit("middle").as("bucket")).limit(0)
+    // each side's token arrays are read more than once (train: the
+    // unigram and bigram tables; docs: lengths, first tokens, bigrams)
+    // — persisted so each document is tokenized once
+    val trainT = persistTracked(train.select(TextOps.tokens(col(textCol)).as("toks")))
+    val trainTok = trainT.select(explode(col("toks")).as("term"))
+    val t = trainTok.select(count(lit(1))).scalar()
     // unigram table: plain nll (first token), backoff nll (0.4·c/T),
     // and the raw count (the bigram table's denominator)
-    val uni = graft.GraftContext.persistTracked(
-      trainTok.groupBy(col("term")).agg(count(lit(1)).as("cnt"))
-        .select(col("term"), col("cnt"),
-          floor(-log(col("cnt").cast("double") / t) * 1000)
-            .cast("long").as("nll_uni_q"),
-          floor(-log(lit(0.4) * col("cnt") / t) * 1000)
-            .cast("long").as("nll_bo_q")))
+    val uni = trainTok.groupBy(col("term")).agg(count(lit(1)).as("cnt"))
+      .select(col("term"), col("cnt"),
+        floor(-log(col("cnt").cast("double") / t) * 1000)
+          .cast("long").as("nll_uni_q"),
+        floor(-log(lit(0.4) * col("cnt") / t) * 1000)
+          .cast("long").as("nll_bo_q"))
     // OOV constants: an unseen word scores as count 1 (the standard
     // <unk>-as-singleton floor — keeps every probability finite)
-    val nllUniOov = math.floor(math.log(t.toDouble) * 1000).toLong
-    val nllBoOov = math.floor(-math.log(0.4 * 1 / t.toDouble) * 1000).toLong
+    val nllUniOov = floor(log(t.cast("double")) * 1000).cast("long")
+    val nllBoOov = floor(-log(lit(0.4) / t) * 1000).cast("long")
 
     // map-only bigram derivation: zip the token array with its shift
     // (no self-join, no window). Two-step select so the token split
@@ -236,21 +230,22 @@ object Relevance {
         .withColumn("w1", col("bg.0")).withColumn("w2", col("bg.1"))
         .drop("bg", "toks")
 
-    val trainBi = bigramExplode(
-        train.select(TextOps.tokens(col(textCol)).as("toks")))
+    val trainBi = bigramExplode(trainT)
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cb"))
       .join(uni.select(col("term").as("w1"), col("cnt").as("c1")), Seq("w1"))
       .select(col("w1"), col("w2"),
         floor(-log(col("cb").cast("double") / col("c1")) * 1000)
           .cast("long").as("nll_bi_q"))
 
-    val evalT = graft.GraftContext.persistTracked(
+    // empty train: no document is scored
+    val evalT = persistTracked(
       docs.select(col(idCol).as("doc"), TextOps.tokens(col(textCol)).as("toks")))
+      .where(t > 0)
     val lens = evalT.select(col("doc"), size(col("toks")).cast("long").as("n_tok"))
     val firsts = evalT.select(col("doc"), element_at(col("toks"), 1).as("term"))
       .join(uni.select(col("term"), col("nll_uni_q")), Seq("term"), "left")
       .select(col("doc"),
-        coalesce(col("nll_uni_q"), lit(nllUniOov)).as("contrib"))
+        coalesce(col("nll_uni_q"), nllUniOov).as("contrib"))
     // per-OCCURRENCE scoring (the lmScoreQuantized discipline): each
     // bigram occurrence looks up its nll directly and the doc sum is
     // partial-aggregated — Σ_occurrences nll equals Σ_types tf·nll
@@ -261,21 +256,10 @@ object Relevance {
       .join(trainBi, Seq("w1", "w2"), "left")
       .join(uni.select(col("term").as("w2"), col("nll_bo_q")), Seq("w2"), "left")
       .select(col("doc"),
-        coalesce(col("nll_bi_q"), col("nll_bo_q"), lit(nllBoOov)).as("contrib"))
-    val scored = graft.GraftContext.persistTracked(
-      firsts.unionByName(bigr)
-        .groupBy(col("doc")).agg(sum(col("contrib")).as("score_q"))
-        .join(lens, Seq("doc"))
-        .withColumn("mean_nll_q", expr("score_q div n_tok")))
-    val th = scored.agg(
-      percentile(col("mean_nll_q"), lit(0.25)).as("q1"),
-      percentile(col("mean_nll_q"), lit(0.75)).as("q3")).head()
-    val (q1, q3) = (th.getDouble(0), th.getDouble(1))
-    scored.select(col("doc").as(idCol), col("n_tok"), col("score_q"),
-      col("mean_nll_q"),
-      when(col("mean_nll_q") <= q1, "head")
-        .when(col("mean_nll_q") > q3, "tail")
-        .otherwise("middle").as("bucket"))
+        coalesce(col("nll_bi_q"), col("nll_bo_q"), nllBoOov).as("contrib"))
+    quartileBuckets(firsts.unionByName(bigr)
+      .groupBy(col("doc")).agg(sum(col("contrib")).as("score_q"))
+      .join(lens, Seq("doc")), idCol)
   }
 
   /** Okapi BM25 over the query-term set (double-precision — the
@@ -285,32 +269,9 @@ object Relevance {
     * tf-part = tf·(k1+1)/(tf + k1·(1 - b + b·dl/avgdl)).
     */
   def bm25(docs: DataFrame, idCol: String, textCol: String,
-           terms: Seq[String], k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    // one pass gives both corpus scalars; empty corpus: avg(dl) is
-    // NULL and getDouble would NPE — return the empty result with the
-    // right schema instead. (A non-empty corpus always has avgdl >= 1:
-    // the tokenizer yields one empty token for blank text, so dl is
-    // never 0.)
-    val lens = graft.GraftContext.persistTracked(
-      docs.select(col(idCol).as("doc"),
-        size(TextOps.tokens(col(textCol))).as("dl")))
-    val stats = lens.agg(count(lit(1)).as("n"), avg(col("dl")).as("a")).head()
-    val n = stats.getLong(0)
-    if (n == 0)
-      return docs.select(col(idCol), lit(0.0).as("bm25")).limit(0)
-    val avgdl = stats.getDouble(1)
-    val tf = graft.GraftContext.persistTracked(
-      termFreqs(docs, idCol, textCol, terms))
-    val idf = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .withColumn("idf",
-        log(lit(1.0) + (lit(n.toDouble) - col("df") + 0.5) / (col("df") + 0.5)))
-    val tfPart: Column =
-      col("tf") * (k1 + 1) /
-        (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / avgdl))
-    tf.join(broadcast(idf), Seq("term"))
-      .join(lens, Seq("doc"))
-      .groupBy(col("doc"))
-      .agg(sum(col("idf") * tfPart).as("bm25"))
-      .select(col("doc").as(idCol), col("bm25"))
-  }
+           terms: Seq[String], k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    termScores(docs, idCol, textCol, terms, "bm25")(
+      idf = c => okapiIdf(c.n),
+      part = c => col("tf") * (k1 + 1) /
+        (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / c.avgDl)))
 }

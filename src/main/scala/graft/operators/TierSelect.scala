@@ -28,15 +28,11 @@ object TierSelect {
             sel: Either[String, Seq[String]]): Dataset[Annotation] = {
     import ann.sparkSession.implicits._
     validate(sel) match {
-      case Left("all") => ann
-      case Left("highest") => ann.map { a =>
-        val keep = a.highestTierOnly
-        keep
-      }
+      case Left("highest") => ann.map(_.highestTierOnly)
+      case Left(_) => ann // "all"
       case Right(list) =>
         val keep = list.toSet
         ann.map(_.keepTiers(keep))
-      case _ => ann
     }
   }
 }

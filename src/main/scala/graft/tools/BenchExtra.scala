@@ -1,5 +1,7 @@
 package graft.tools
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** Per-query isolation bench (guide §1.4): times individual declared
@@ -15,6 +17,13 @@ import org.apache.spark.sql.SparkSession
   * Timing methodology matches Bench.scala: wall time around the action,
   * near-dup/CC operator caches released after each rep so repeats don't
   * feed on persisted intermediates.
+  *
+  * Each query prints one line: `min/med/all` are the build + action
+  * seconds per rep; `construct` and `action` split them into the two
+  * phases, each with the Spark jobs started in it (median over reps)
+  * and its median seconds. A construction job is one that building
+  * the DataFrame runs before any action: schema inference, a driver
+  * round trip for a scalar, a memo build.
   */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
@@ -32,12 +41,31 @@ object BenchExtra {
     if (shm.isDirectory && shm.canWrite)
       b.config("spark.local.dir", "/dev/shm/graft-local")
     val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sc = spark.sparkContext
+    sc.setLogLevel("WARN")
     spark.range(1000000L).selectExpr("sum(id)").collect()
     Seq("lineitem", "events", "documents", "embeddings").foreach { t =>
       spark.read.parquet(s"$sfDir/$t.parquet").count()
     }
     graft.Pipeline.cachedIndex(spark)
+    // the job group of every job started; each phase of each rep runs
+    // under its own group
+    val started = new ConcurrentLinkedQueue[String]()
+    sc.addSparkListener(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        started.add(String.valueOf(j.properties.getProperty("spark.jobGroup.id")))
+    })
+    def inGroup[T](group: String)(body: => T): T = {
+      sc.setJobGroup(group, s"bench-extra:$group")
+      try body finally sc.clearJobGroup()
+    }
+    // listener events arrive in order: once the marker job's start is
+    // seen, so is every earlier job's
+    def awaitListener(marker: String): Unit = {
+      inGroup(marker)(sc.parallelize(Seq(1), 1).count())
+      while (!started.contains(marker)) Thread.sleep(5)
+    }
+    def med[T: Ordering](xs: Seq[T]): T = xs.sorted.apply(xs.size / 2)
     val qs = graft.SparkEntry.queries.filter { case (n, _) =>
       wanted.isEmpty || wanted.contains(n) }
     qs.foreach { case (name, fn) =>
@@ -48,22 +76,31 @@ object BenchExtra {
         val w = new java.io.PrintWriter(s"$d/$name.txt")
         try w.write(plan) finally w.close()
       }
-      val times = (1 to reps).map { _ =>
-        spark.sparkContext.setJobDescription(s"bench-extra:$name")
+      // per rep: (construct s, action s)
+      val phases = (1 to reps).map { rep =>
         val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
-        if (useNoop) df.write.format("noop").mode("overwrite").save()
-        else df.count()
-        val dt = (System.nanoTime() - t0) / 1e9
+        val df = inGroup(s"$name:$rep:construct")(fn(spark, sfDir))
+        val t1 = System.nanoTime()
+        inGroup(s"$name:$rep:action") {
+          if (useNoop) df.write.format("noop").mode("overwrite").save()
+          else df.count()
+        }
+        val t2 = System.nanoTime()
         graft.operators.NearDup.unpersistAll()
         graft.operators.Components.releaseAll()
-        dt
+        ((t1 - t0) / 1e9, (t2 - t1) / 1e9)
       }
-      if (times.nonEmpty)
+      val times = phases.map { case (c, a) => c + a }
+      if (times.nonEmpty) {
+        awaitListener(s"$name:flush")
+        def jobs(phase: String) = med((1 to reps).map { rep =>
+          started.toArray.count(_ == s"$name:$rep:$phase") })
         println(f"""BENCHX $name reps=$reps min=${times.min}%.3f med=${
-          times.sorted.apply(times.size / 2)}%.3f all=${
-          times.map(t => f"$t%.3f").mkString(",")}""")
-      else println(s"BENCHX $name plan-only")
+          med(times)}%.3f all=${times.map(t => f"$t%.3f").mkString(",")
+          } construct_jobs=${jobs("construct")} construct_med=${
+          med(phases.map(_._1))}%.3f action_jobs=${jobs("action")
+          } action_med=${med(phases.map(_._2))}%.3f""")
+      } else println(s"BENCHX $name plan-only")
     }
     spark.stop()
   }

@@ -207,8 +207,12 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("TSV reader line numbering never funnels through one partition") {
-    val snv = graft.sources.TsvReader.readSnvs(spark,
-      "/root/reference/civicutils/data/example_snv.txt")
+    // a generated SNV file in the reference column layout
+    // (civicutils/data/example_snv.txt: Gene, Variant_dna, Variant_prot)
+    val f = java.nio.file.Files.createTempDirectory("plan_snv").resolve("snv.txt")
+    java.nio.file.Files.writeString(f, "Gene\tVariant_dna\tVariant_prot\n" +
+      (0 until 60).map(i => s"G${i % 7}\tc.${100 + i}A>G\tp.V${100 + i}E\n").mkString)
+    val snv = graft.sources.TsvReader.readSnvs(spark, f.toString)
     val plan = snv.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange SinglePartition"),
       "per-file window degraded to a global single-partition exchange:\n" + plan)
