@@ -58,8 +58,7 @@ object Classifier {
     featureExplode(docs, idCol, textCol)
       .select(col("feature")).distinct()
       .select(col("feature"),
-        (conv(substring(md5(col("feature")), 1, 8), 16, 10)
-          .cast("long") % 1001 - 500).as("weight_q"))
+        (Sampling.md5Uint32(col("feature")) % 1001 - 500).as("weight_q"))
 
   /** Score every document: integer feature-weight sum, total feature
     * count, and the sign label. `weights` must be (feature, weight_q).

@@ -171,9 +171,7 @@ object Components {
     * exceeds the adaptive cut max(`threshold`, 4·edgeCount/P) — see
     * the `connectedComponents` scaladoc for why the cut tracks
     * per-task row volume. For large cuts the degree is estimated from
-    * a 1/256 deterministic hash sample of the edge rows (at half-cut,
-    * so sampling noise errs toward flagging) — the probe then scans
-    * 0.4% of the rows and shuffles a tiny count relation; small cuts
+    * a hash sample of the edge rows (`SkewProbe.sampled`); small cuts
     * (tests) count exactly. Mis-flagging a borderline key is
     * harmless: both routes compute identical mins, only the physical
     * plan differs.
@@ -183,24 +181,13 @@ object Components {
     if (threshold == 0) return Nil
     val effective =
       if (threshold > 0) threshold
-      else {
-        // non-numeric conf values (e.g. "auto" on some platforms) fall
-        // back to the default instead of throwing mid-round
-        val parallelism = scala.util.Try(edges.sparkSession.conf
-          .get("spark.sql.shuffle.partitions", "200").toLong)
-          .getOrElse(200L).max(1L)
-        (1L << 17).max(4L * edgeCount / parallelism)
-      }
+      else (1L << 17).max(4L * edgeCount / SkewProbe.shufflePartitions(edges.sparkSession))
     // driver-side early-out: a node's symmetric degree is bounded by
     // the edge count, so when the round's known |E| cannot clear the
     // cut no probe job needs to run at all — small/medium graphs pay
     // nothing for the skew guard
     if (edgeCount > 0 && edgeCount <= effective) return Nil
-    val (base, cut) =
-      if (effective >= (1L << 16))
-        (edges.filter(pmod(xxhash64(col("u"), col("v")), lit(256)) === 0),
-          effective >> 9)
-      else (edges, effective)
+    val (base, cut) = SkewProbe.sampled(edges, Seq(col("u"), col("v")), effective)
     base.select(col("u").as("n"))
       .unionByName(base.select(col("v").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("_d"))

@@ -46,7 +46,7 @@ object Dsir {
     * alone.
     */
   private def bucket(c: Column, buckets: Int): Column =
-    conv(substring(md5(c), 1, 8), 16, 10).cast("long") % buckets
+    Sampling.md5Uint32(c) % buckets
 
   /** Dense per-bucket feature-occurrence counts (plus the total) for
     * one corpus. B-bounded aggregate → driver array.
@@ -155,9 +155,8 @@ object Dsir {
     val logw = aggregate(
       transform(col("bs"), b => element_at(lut, b + 1)),
       lit(0L), (acc, x) => acc + x)
-    val u = (conv(substring(md5(concat(col(idCol).cast("string"),
-        lit(":" + salt))), 1, 8), 16, 10)
-      .cast("long").cast("double") + lit(0.5)) / lit(4294967296.0)
+    val u = (Sampling.md5Uint32(concat(col(idCol).cast("string"), lit(":" + salt)))
+      .cast("double") + lit(0.5)) / lit(4294967296.0)
     val gumbel = floor(-log(-log(u)) * 1000).cast("long")
 
     rawB.select(col(idCol), logw.as("logw_q"), gumbel.as("gumbel_q"))

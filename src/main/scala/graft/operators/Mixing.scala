@@ -145,8 +145,7 @@ object Mixing {
     require(!df.columns.contains(shardCol),
       s"input already has a '$shardCol' column")
     df.withColumn(shardCol,
-      (conv(substring(md5(concat(col(keyCol).cast("string"),
-        lit(":" + salt))), 1, 8), 16, 10).cast("long") % nShards)
-        .cast("int"))
+      (Sampling.md5Uint32(concat(col(keyCol).cast("string"), lit(":" + salt)))
+        % nShards).cast("int"))
   }
 }

@@ -51,6 +51,14 @@ object Sampling {
     substring(md5(concat(key.cast("string"), lit(":" + salt))), 1, 8) <
       lit(rateThreshold(rate))
 
+  /** uint32 of the first 8 md5 hex digits of `c`, as a long: the
+    * cross-engine hash (any engine recomputes it from md5 alone) of
+    * Dsir's feature buckets and Gumbel noise, Mixing's shards and
+    * Classifier's synthetic weights.
+    */
+  def md5Uint32(c: Column): Column =
+    conv(substring(md5(c), 1, 8), 16, 10).cast("long")
+
   /** Deterministic `rate`-fraction sample keyed on `keyCol`. */
   def sample(df: DataFrame, keyCol: String, rate: Double,
              salt: String = "graft"): DataFrame =

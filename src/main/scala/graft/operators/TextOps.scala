@@ -206,29 +206,20 @@ object TextOps {
       .filter(col("cnt") * k > n)
   }
 
-  /** `gopherRules` over a staged relation — THE hot-path form: the
-    * tokenization and line split are materialized ONCE per row in a
-    * separate projection (CollapseProject will not re-inline a
-    * non-cheap expression referenced many times), where the bare
-    * Column form re-embeds the full-text split in every output slot
-    * that references it (the repo's documented HOF-CSE pathology).
+  /** The Gopher rule columns per document: (id, rule columns) —
+    * `gopherAnnotate` over (id, text), with the text dropped.
     */
-  def gopherRulesTable(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val staged = docs.select(col(idCol),
-      tokens(col(textCol)).as("_toks"),
-      split(col(textCol), "\n").as("_lines"),
-      regexp_count(col(textCol), lit("#|\\.\\.\\.|…")).as("_nsym"))
-    staged.select(col(idCol) +:
-      gopherRulesFrom(col("_toks"), col("_lines"), col("_nsym"))
-        .map { case (n, c) => c.as(n) }: _*)
-  }
+  def gopherRulesTable(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    gopherAnnotate(docs.select(col(idCol), col(textCol)), textCol).drop(textCol)
 
-  /** `gopherRulesTable` with the input columns passed THROUGH: appends
-    * the rule columns to `docs`, so pipelines gate with a map-side
-    * filter instead of re-joining a verdict table on the id. Same
-    * staged-projection discipline (the token/line arrays are
-    * multi-referenced, so CollapseProject keeps the tokenize to one
-    * run per row).
+  /** The Gopher rule columns appended to `docs` (input columns passed
+    * THROUGH), so pipelines gate with a map-side filter instead of
+    * re-joining a verdict table on the id. THE hot-path form: the
+    * tokenization and line split are staged ONCE per row in their own
+    * columns — CollapseProject will not re-inline a non-cheap
+    * expression referenced many times, where the bare Column form
+    * re-embeds the full-text split in every output slot that
+    * references it (the repo's documented HOF-CSE pathology).
     */
   def gopherAnnotate(docs: DataFrame, textCol: String): DataFrame = {
     val tk = freshColumn(docs, "_toks")

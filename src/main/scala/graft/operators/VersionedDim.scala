@@ -179,7 +179,8 @@ object VersionedDim {
     * (VersionedDimSpec parity pin). The regime probe is ONE
     * partial-aggregated pass (count + ts range) that also supplies
     * the bucket width, plus — for inputs past the row threshold — a
-    * 1/256-sampled per-key skew estimate, so LARGE-BUT-UNIFORM inputs
+    * per-key skew count (`SkewProbe.sampled`: exact below 2^16, 1/256
+    * row-sampled above), so LARGE-BUT-UNIFORM inputs
     * keep the cheaper single-window plan and only a key estimated
     * above `maxKeyRows` engages bucketing (`maxKeyRows = 0` skips the
     * skew probe and buckets every over-threshold input); `nBuckets`
@@ -312,28 +313,25 @@ object VersionedDim {
         // bucket count tracks the shuffle parallelism so a 100%-hot
         // key spreads across ~8 tasks' worth of buckets; clamped so
         // the carry-in relation stays small per key
-        val p = scala.util.Try(events.sparkSession.conf
-          .get("spark.sql.shuffle.partitions", "200").toLong)
-          .getOrElse(200L).max(1L)
+        val p = SkewProbe.shufflePartitions(events.sparkSession)
         bucketed(r.getLong(1), r.getLong(2), (8L * p).min(4096L).max(2L))
       }
     }
   }
 
   /** Skew probe for large as-of inputs (the `Components.roundHotKeys`
-    * sampling discipline): estimate the largest single key's row count
-    * from a 1/256 deterministic row-hash sample, comparing against
-    * HALF the bound so borderline keys err toward the safe (bucketed)
-    * regime. One 0.4% scan + a tiny aggregation, paid only by inputs
-    * already past `maxSingleWindowRows`.
+    * probe, `SkewProbe.sampled`): does the largest single key's row
+    * count exceed `maxKeyRows`? Exact below 2^16; above, estimated from
+    * a row-hash sample against HALF the bound, so borderline keys err
+    * toward the safe (bucketed) regime. One scan + a tiny aggregation,
+    * paid only by inputs already past `maxSingleWindowRows`.
     */
   private def probeSkewed(union: DataFrame, maxKeyRows: Long): Boolean = {
     import org.apache.spark.sql.functions._
-    val top = union
-      .filter(pmod(xxhash64(col("_k"), col("_ts"), col("_ord"), col("_side")),
-        lit(256)) === 0)
-      .groupBy(col("_k")).agg(count(lit(1)).as("_c"))
+    val (base, cut) = SkewProbe.sampled(union,
+      Seq(col("_k"), col("_ts"), col("_ord"), col("_side")), maxKeyRows)
+    val top = base.groupBy(col("_k")).agg(count(lit(1)).as("_c"))
       .agg(max(col("_c"))).head()
-    !top.isNullAt(0) && top.getLong(0) * 256L > maxKeyRows / 2
+    !top.isNullAt(0) && top.getLong(0) > cut
   }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 import scala.collection.mutable
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, KeyValueGroupedDataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.model.Turn
@@ -101,14 +101,8 @@ object StreamingPipeline {
         col("ts"), col("text"), col("tool")).as("a"))
       // project the struct open but keep the ORIGINAL ts attribute —
       // `a.ts` would be a fresh attribute without the event-time marker
-      .select(col("a.conv_id").as("conv_id"), col("a.turn_idx").as("turn_idx"),
-        col("a.role").as("role"), col("ts"),
-        col("a.gene_key").as("gene_key"), col("a.data_type").as("data_type"),
-        col("a.tier_1").as("tier_1"), col("a.tier_1b").as("tier_1b"),
-        col("a.tier_2").as("tier_2"), col("a.tier_3").as("tier_3"),
-        col("a.tier_4").as("tier_4"), col("a.highest_tier").as("highest_tier"),
-        col("a.ds_tier_1").as("ds_tier_1"), col("a.ds_tier_1b").as("ds_tier_1b"),
-        col("a.ds_tier_2").as("ds_tier_2"), col("a.ds_tier_3").as("ds_tier_3"))
+      .select(Encoders.product[Annotation].schema.fieldNames.toIndexedSeq.map(f =>
+        if (f == "ts") col("ts") else col(s"a.$f").as(f)): _*)
       .as[Annotation]
   }
 
@@ -153,13 +147,65 @@ object StreamingPipeline {
         col("session_window.end").as("session_end"),
         col("conv_id"), col("n_turns"), col("n_tier_1"))
 
+  // ---------------------------------------------------------------------
+  // Keyed event-time automatons: pure per-key steps, one binding
+  // ---------------------------------------------------------------------
+
+  /** What one step of a keyed event-time automaton returns: the rows it
+    * emits, and the state it keeps with the event time, in ms, of the
+    * timer that runs its next step with no rows (`None` evicts the key).
+    */
+  private final case class Step[S, O](out: Seq[O], next: Option[(S, Long)])
+
+  /** The one event-time binding of the keyed automatons (session,
+    * escalation, SimHash pairs, burst): runs
+    * `step(key, state, rows, watermarkMs)` per key, from `empty` state
+    * for a new key. A step with no rows is a timer that fired. This is
+    * the only code that reads the watermark, sets a timer or evicts a
+    * key.
+    *  - On a stream each step sees the current watermark; the binding
+    *    then stores the next state or evicts the key, and sets the
+    *    timer — raised to watermark + 1 when the watermark has already
+    *    reached it (Spark rejects such a timeout).
+    *  - On a batch Dataset each key runs as one micro-batch before any
+    *    watermark, then end of input: a step with its rows at
+    *    `Long.MinValue`, then one with no rows at `Long.MaxValue`.
+    * Both run `flatMapGroupsWithState` with an event-time timeout, so
+    * the state encoders, and checkpoints, are each automaton's own.
+    */
+  private def runSteps[K, I, S: Encoder, O: Encoder](input: Dataset[_],
+      groups: KeyValueGroupedDataset[K, I], empty: S)(
+      step: (K, S, Iterator[I], Long) => Step[S, O]): Dataset[O] = {
+    val streaming = input.isStreaming
+    def bound(key: K, rows: Iterator[I], state: GroupState[S]): Iterator[O] =
+      if (streaming) {
+        val wm = state.getCurrentWatermarkMs()
+        val s = step(key, state.getOption.getOrElse(empty), rows, wm)
+        s.next match {
+          case Some((next, timerMs)) =>
+            state.update(next)
+            state.setTimeoutTimestamp(math.max(timerMs, wm + 1))
+          case None => state.remove()
+        }
+        s.out.iterator
+      } else {
+        val first = step(key, empty, rows, Long.MinValue)
+        val last = first.next.fold(Seq.empty[O]) { case (s, _) =>
+          step(key, s, Iterator.empty, Long.MaxValue).out }
+        (first.out ++ last).iterator
+      }
+    groups.flatMapGroupsWithState(OutputMode.Append,
+      GroupStateTimeout.EventTimeTimeout)(bound)
+  }
+
   /** The four columns of an annotated turn the session automaton reads. */
   final case class TierTurn(conv_id: String, turn_idx: Int, ts: Timestamp,
                             highest_tier: String)
 
   /** (c) The tier-resolution session automaton: flatMapGroupsWithState
     * keyed by conv_id with event-time timeout at session gap past the
-    * newest seen turn. Emits one SessionSummary per closed session.
+    * newest seen turn. Emits one SessionSummary per closed session; on
+    * a batch Dataset end of input closes each conversation's last one.
     *
     * Its input is a `TierTurn` projection, explicitly hash-repartitioned
     * into `cfg.partitions` on conv_id, and the groups are keyed by that
@@ -169,10 +215,10 @@ object StreamingPipeline {
     */
   def sessionAutomaton(ann: Dataset[Annotation], cfg: StreamConfig): Dataset[SessionSummary] = {
     import ann.sparkSession.implicits._
-    val streaming = ann.isStreaming
+    val noSession = ConvState(Long.MaxValue, 0L, 0, 0, 0, 0, 0, 0)
 
-    def fsm(convId: String, rows: Iterator[TierTurn],
-            state: GroupState[ConvState]): Iterator[SessionSummary] = {
+    def step(convId: String, s0: ConvState, rows: Iterator[TierTurn],
+             wm: Long): Step[ConvState, SessionSummary] = {
       def summarize(s: ConvState): SessionSummary = {
         val top =
           if (s.t1 > 0) "tier_1" else if (s.t1b > 0) "tier_1b"
@@ -181,53 +227,39 @@ object StreamingPipeline {
           new Timestamp(s.sessionEnd), s.nTurns,
           s.t1, s.t1b, s.t2, s.t3, s.t4, top)
       }
-      if (state.hasTimedOut) {
-        val out = state.getOption.map(summarize).iterator
-        state.remove()
-        out
-      } else {
-        var s = state.getOption.getOrElse(ConvState(Long.MaxValue, 0L, 0, 0, 0, 0, 0, 0))
-        val closed = Iterator.newBuilder[SessionSummary]
-        // group iterators carry no ordering guarantee: sort this
-        // micro-batch's rows by event time before gap detection
-        for (a <- rows.toSeq.sortBy(a => (a.ts.getTime, a.turn_idx))) {
-          val t = a.ts.getTime
-          // gap larger than the session gap within the same group of
-          // buffered rows closes the running session
-          if (s.nTurns > 0 && t > s.sessionEnd + cfg.sessionGapMs) {
-            closed += summarize(s)
-            s = ConvState(Long.MaxValue, 0L, 0, 0, 0, 0, 0, 0)
-          }
-          s = ConvState(
-            math.min(s.sessionStart, t), math.max(s.sessionEnd, t),
-            s.nTurns + 1,
-            s.t1 + (if (a.highest_tier == "tier_1") 1 else 0),
-            s.t1b + (if (a.highest_tier == "tier_1b") 1 else 0),
-            s.t2 + (if (a.highest_tier == "tier_2") 1 else 0),
-            s.t3 + (if (a.highest_tier == "tier_3") 1 else 0),
-            s.t4 + (if (a.highest_tier == "tier_4") 1 else 0))
-        }
-        // a row that passed the late filter (the previous trigger's
-        // watermark) can still end a session the CURRENT watermark has
-        // already closed: Spark rejects such a timeout, so emit the
-        // summary now — what the timeout would do one trigger later
-        val timeoutMs = s.sessionEnd + cfg.sessionGapMs
-        if (streaming && timeoutMs <= state.getCurrentWatermarkMs()) {
+      var s = s0
+      val closed = List.newBuilder[SessionSummary]
+      // group iterators carry no ordering guarantee: sort this
+      // micro-batch's rows by event time before gap detection
+      for (a <- rows.toSeq.sortBy(a => (a.ts.getTime, a.turn_idx))) {
+        val t = a.ts.getTime
+        // gap larger than the session gap within the same group of
+        // buffered rows closes the running session
+        if (s.nTurns > 0 && t > s.sessionEnd + cfg.sessionGapMs) {
           closed += summarize(s)
-          state.remove()
-        } else {
-          state.update(s)
-          state.setTimeoutTimestamp(timeoutMs)
+          s = noSession
         }
-        closed.result()
+        s = ConvState(
+          math.min(s.sessionStart, t), math.max(s.sessionEnd, t),
+          s.nTurns + 1,
+          s.t1 + (if (a.highest_tier == "tier_1") 1 else 0),
+          s.t1b + (if (a.highest_tier == "tier_1b") 1 else 0),
+          s.t2 + (if (a.highest_tier == "tier_2") 1 else 0),
+          s.t3 + (if (a.highest_tier == "tier_3") 1 else 0),
+          s.t4 + (if (a.highest_tier == "tier_4") 1 else 0))
       }
+      // the session closes once the watermark reaches its gap: on its
+      // timer, or at once when a row that passed the late filter (the
+      // previous trigger's watermark) ends a session the CURRENT
+      // watermark has already closed
+      val timeoutMs = s.sessionEnd + cfg.sessionGapMs
+      if (timeoutMs <= wm) Step(closed.result() :+ summarize(s), None)
+      else Step(closed.result(), Some((s, timeoutMs)))
     }
 
-    ann.select(col("conv_id"), col("turn_idx"), col("ts"), col("highest_tier"))
+    runSteps(ann, ann.select(col("conv_id"), col("turn_idx"), col("ts"), col("highest_tier"))
       .repartition(cfg.partitions, col("conv_id"))
-      .groupBy(col("conv_id")).as[String, TierTurn]
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(fsm)
+      .groupBy(col("conv_id")).as[String, TierTurn], noSession)(step)
   }
 
   // ---------------------------------------------------------------------
@@ -280,40 +312,36 @@ object StreamingPipeline {
     * ordering before the forced frontier drops as late (pinned in
     * StreamingSpec). Quiet conversations flush via event-time
     * timeout; state evicts one session gap after the newest finalized
-    * turn. Batch mode = one sorted pass per conversation from empty
-    * state — pinned equal to the streaming run in StreamingSpec.
+    * turn. On a batch Dataset the end-of-input step finalizes every
+    * pending turn in (ts, turn_idx) order — pinned equal to the
+    * streaming run in StreamingSpec.
     */
   def escalationsStream(ann: Dataset[Annotation], cfg: StreamConfig,
       runLen: Int = 3, maxPending: Int = 1 << 16): Dataset[Escalation] = {
     import ann.sparkSession.implicits._
     require(runLen >= 2, "runLen must be >= 2")
     require(maxPending >= 1, "maxPending must be >= 1")
-    val streaming = ann.isStreaming
 
-    def fsm(convId: String, rows: Iterator[Annotation],
-            state: GroupState[EscState]): Iterator[Escalation] = {
+    def step(convId: String, st: EscState, rows: Iterator[Annotation],
+             wm: Long): Step[EscState, Escalation] = {
+      // the watermark in microseconds, saturating at the batch
+      // binding's Long.MinValue / Long.MaxValue instead of overflowing
       val wmUs =
-        if (!streaming) Long.MaxValue
-        else if (state.getCurrentWatermarkMs() > 0)
-          state.getCurrentWatermarkMs() * 1000L
-        else 0L
-      var st = state.getOption.getOrElse(
-        EscState(Long.MinValue, Int.MinValue, Nil, Nil))
-      if (!state.hasTimedOut) {
-        val add = rows.map(a => (tsMicros(a.ts), a.turn_idx,
-            graft.model.Tiers.rank.getOrElse(a.highest_tier, 4)))
-          .filter { case (t, i, _) =>
-            t > st.lastUs || (t == st.lastUs && i > st.lastIdx) }
-          .toList
-        if (add.nonEmpty) st = st.copy(pending = add ::: st.pending)
-      }
+        if (wm >= Long.MaxValue / 1000L) Long.MaxValue
+        else if (wm <= Long.MinValue / 1000L) Long.MinValue
+        else wm * 1000L
+      val add = rows.map(a => (tsMicros(a.ts), a.turn_idx,
+          graft.model.Tiers.rank.getOrElse(a.highest_tier, 4)))
+        .filter { case (t, i, _) =>
+          t > st.lastUs || (t == st.lastUs && i > st.lastIdx) }
+        .toList
       // finalize everything the watermark has passed, in (ts, idx)
       // order; rows AT the watermark hold (equal-time peers may still
       // arrive). ONE sort serves both the watermark split (ts < wmUs
       // is a prefix of the (ts, idx) order) and the overflow policy:
       // anything beyond maxPending force-finalizes oldest-first, so
       // the held suffix never exceeds the cap.
-      val sorted = st.pending.sortBy(x => (x._1, x._2))
+      val sorted = (add ::: st.pending).sortBy(x => (x._1, x._2))
       val nReady = sorted.segmentLength(_._1 < wmUs, 0)
         .max(sorted.length - maxPending)
       val (ready, hold) = sorted.splitAt(nReady)
@@ -336,28 +364,18 @@ object StreamingPipeline {
           ranks = window.take(runLen - 1)
         }
       }
-      st = EscState(lastUs, lastIdx, ranks, hold)
-      if (!streaming) {
-        state.update(st) // single batch pass; value unused afterwards
-      } else if (hold.isEmpty && lastUs != Long.MinValue &&
-          wmUs > lastUs + cfg.sessionGapMs * 1000L) {
-        state.remove()
-      } else {
-        state.update(st)
-        val nextMs =
-          if (hold.nonEmpty) hold.map(_._1).min / 1000L + 1L
-          else if (lastUs != Long.MinValue)
-            lastUs / 1000L + cfg.sessionGapMs
-          else Long.MinValue
-        state.setTimeoutTimestamp(
-          math.max(nextMs, state.getCurrentWatermarkMs() + 1))
-      }
-      out.result().iterator
+      if (hold.isEmpty && lastUs != Long.MinValue &&
+          wmUs > lastUs + cfg.sessionGapMs * 1000L)
+        Step(out.result(), None)
+      else Step(out.result(), Some((EscState(lastUs, lastIdx, ranks, hold),
+        if (hold.nonEmpty) hold.head._1 / 1000L + 1L
+        else if (lastUs != Long.MinValue) lastUs / 1000L + cfg.sessionGapMs
+        else Long.MinValue)))
     }
 
-    ann.withWatermark("ts", cfg.watermark).groupByKey(_.conv_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(fsm)
+    val stamped = ann.withWatermark("ts", cfg.watermark)
+    runSteps(stamped, stamped.groupByKey(_.conv_id),
+      EscState(Long.MinValue, Int.MinValue, Nil, Nil))(step)
   }
 
   // ---------------------------------------------------------------------
@@ -536,7 +554,7 @@ object StreamingPipeline {
     * documented bounded-state trade, identical in spirit to the batch
     * cap.
     *
-    * Executed on a batch Dataset (no watermark, no eviction), the
+    * Executed on a batch Dataset (all rows before any watermark), the
     * output equals `NearDup.simhashNearDups` row-for-row — pinned in
     * StreamingSpec and by the q39 DuckDB oracle.
     */
@@ -546,8 +564,6 @@ object StreamingPipeline {
     import docs.sparkSession.implicits._
     val nChunks = maxHamming + 1
     val chunkBits = 64 / nChunks
-    // batch-mode GroupState has no watermark and rejects timeout calls
-    val streaming = docs.isStreaming
 
     def chunkOf(sig: Long, c: Int): Long =
       (sig >>> (c * chunkBits)) & ((1L << chunkBits) - 1)
@@ -557,14 +573,12 @@ object StreamingPipeline {
       c // < nChunks whenever hamming(a,b) <= maxHamming (pigeonhole)
     }
 
-    def fsm(key: (Int, Long), rows: Iterator[ChunkRow],
-            state: GroupState[BucketState]): Iterator[NearDupPair] = {
-      if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-      // batch-mode GroupState throws on watermark access
-      val wm = if (streaming && state.getCurrentWatermarkMs() > 0)
-        state.getCurrentWatermarkMs() else Long.MinValue
-      var entries = state.getOption.map(_.entries).getOrElse(Nil)
-      val out = Iterator.newBuilder[NearDupPair]
+    def step(key: (Int, Long), st: BucketState, rows: Iterator[ChunkRow],
+             wm: Long): Step[BucketState, NearDupPair] = {
+      // the retention timer: the bucket's newest entry has aged out
+      if (!rows.hasNext) return Step(Nil, None)
+      var entries = st.entries
+      val out = List.newBuilder[NearDupPair]
       var newest = entries.headOption.map(_._3).getOrElse(Long.MinValue)
       // group iterators carry no ordering guarantee: process this
       // micro-batch in event-time arrival order so within-batch pairs
@@ -583,11 +597,7 @@ object StreamingPipeline {
         // newest first; cap to the most recent maxPerBucket
         entries = ((r.doc_id, r.sig, t) :: entries).take(maxPerBucket)
       }
-      state.update(BucketState(entries))
-      if (streaming)
-        state.setTimeoutTimestamp(math.max(newest + retentionMs,
-          state.getCurrentWatermarkMs() + 1))
-      out.result()
+      Step(out.result(), Some((BucketState(entries), newest + retentionMs)))
     }
 
     val sigs = docs.select(col("doc_id"), col("ts"),
@@ -597,9 +607,7 @@ object StreamingPipeline {
         NearDup.simhashChunks(col("sig"), maxHamming).as("ck"))
       .select(col("doc_id"), col("sig"), col("ts"), col("ck.chunk"), col("ck.v"))
       .as[ChunkRow]
-    chunks.groupByKey(r => (r.chunk, r.v))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(fsm)
+    runSteps(chunks, chunks.groupByKey(r => (r.chunk, r.v)), BucketState(Nil))(step)
   }
 
   // -------------------------------------------------------------------
@@ -630,8 +638,8 @@ object StreamingPipeline {
     * comparison needs only O(1) history. Rows landing in a window
     * whose end the watermark has already passed are dropped — the
     * pipeline-wide late-data contract; state for a token is removed
-    * once no adjacent window can still receive events. Batch-mode
-    * execution is one group pass that closes every window — pinned
+    * once no adjacent window can still receive events. On a batch
+    * Dataset the end-of-input step closes every window — pinned
     * equal to the streaming run in StreamingSpec, and what q90's
     * oracle replays with a windowed count + lag.
     */
@@ -641,39 +649,26 @@ object StreamingPipeline {
     import events.sparkSession.implicits._
     require(windowSec > 0 && minCount >= 1 && ratio >= 1,
       "windowSec/minCount/ratio must be positive")
-    val streaming = events.isStreaming
     val wMs = windowSec * 1000L
 
-    def fsm(token: String, rows: Iterator[TokenEvent],
-            state: GroupState[BurstState]): Iterator[Burst] = {
-      val wm =
-        if (!streaming) Long.MaxValue
-        else if (state.getCurrentWatermarkMs() > 0) state.getCurrentWatermarkMs()
-        else 0L
-      var st = state.getOption.getOrElse(BurstState(Nil, Long.MinValue, 0L))
-      if (!state.hasTimedOut) {
-        val merged = mutable.TreeMap.empty[Long, Long]
-        st.open.foreach { case (w, c) => merged.put(w, c) }
-        var any = false
-        rows.foreach { r =>
-          val ws = Math.floorDiv(r.ts.getTime, wMs) * windowSec
-          // late beyond the watermark: the window already closed (or
-          // could have) — dropping is the deterministic choice
-          if (!streaming || (ws + windowSec) * 1000L > wm) {
-            merged.updateWith(ws) {
-              case Some(c) => Some(c + 1L)
-              case None => Some(1L)
-            }
-            any = true
+    def step(token: String, st: BurstState, rows: Iterator[TokenEvent],
+             wm: Long): Step[BurstState, Burst] = {
+      val merged = mutable.TreeMap.from(st.open)
+      rows.foreach { r =>
+        val ws = Math.floorDiv(r.ts.getTime, wMs) * windowSec
+        // late beyond the watermark: the window already closed (or
+        // could have) — dropping is the deterministic choice
+        if ((ws + windowSec) * 1000L > wm)
+          merged.updateWith(ws) {
+            case Some(c) => Some(c + 1L)
+            case None => Some(1L)
           }
-        }
-        if (any) st = st.copy(open = merged.toList)
       }
       // close every open window whose end the watermark passed, in
       // ascending order — adjacency needs only the immediately
       // preceding closed window
       val out = List.newBuilder[Burst]
-      var open = st.open
+      var open = merged.toList
       var lastWs = st.lastWs
       var lastCnt = st.lastCnt
       while (open.nonEmpty && (open.head._1 + windowSec) * 1000L <= wm) {
@@ -684,26 +679,18 @@ object StreamingPipeline {
         lastWs = w
         lastCnt = c
       }
-      st = BurstState(open, lastWs, lastCnt)
-      if (!streaming) {
-        state.update(st) // single batch pass; value unused afterwards
-      } else if (open.isEmpty && lastWs != Long.MinValue &&
-          wm > (lastWs + 2 * windowSec) * 1000L) {
-        state.remove() // nothing can be adjacent to lastWs anymore
-      } else {
-        state.update(st)
-        val next =
-          if (open.nonEmpty) (open.head._1 + windowSec) * 1000L
-          else if (lastWs != Long.MinValue) (lastWs + 2 * windowSec) * 1000L
-          else wm + 1
-        state.setTimeoutTimestamp(math.max(next, wm + 1))
-      }
-      out.result().iterator
+      if (open.isEmpty && lastWs != Long.MinValue &&
+          wm > (lastWs + 2 * windowSec) * 1000L)
+        Step(out.result(), None) // nothing can be adjacent to lastWs anymore
+      else Step(out.result(), Some((BurstState(open, lastWs, lastCnt),
+        if (open.nonEmpty) (open.head._1 + windowSec) * 1000L
+        else if (lastWs != Long.MinValue) (lastWs + 2 * windowSec) * 1000L
+        else Long.MinValue)))
     }
 
-    events.withWatermark("ts", cfg.watermark).groupByKey(_.token)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(fsm)
+    val stamped = events.withWatermark("ts", cfg.watermark)
+    runSteps(stamped, stamped.groupByKey(_.token),
+      BurstState(Nil, Long.MinValue, 0L))(step)
   }
 
   final case class PackEvent(stratum: String, doc_id: Long, n_tok: Int,

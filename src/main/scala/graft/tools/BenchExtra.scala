@@ -1,7 +1,7 @@
 package graft.tools
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Per-query isolation bench (guide §1.4): times individual declared
@@ -23,10 +23,14 @@ import org.apache.spark.sql.SparkSession
   * phases, each with the Spark jobs started in it (median over reps)
   * and its median seconds. A construction job is one that building
   * the DataFrame runs before any action: schema inference, a driver
-  * round trip for a scalar, a memo build.
+  * round trip for a scalar, a memo build. `skew_max_ms` and
+  * `skew_med_ms` are the longest and the median task of the action
+  * phase's heaviest stage (the one with the largest summed task time;
+  * median over reps).
   */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
+    import scala.jdk.CollectionConverters._
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = args.headOption.map(_.toInt).getOrElse(1)
@@ -51,16 +55,26 @@ object BenchExtra {
     // the job group of every job started; each phase of each rep runs
     // under its own group
     val started = new ConcurrentLinkedQueue[String]()
+    // each stage's job group (the first job to list it: the one that
+    // runs it), and its finished tasks' durations (ms)
+    val stageGroup = new ConcurrentHashMap[Int, String]()
+    val taskMs = new ConcurrentHashMap[Int, ConcurrentLinkedQueue[Long]]()
     sc.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        started.add(String.valueOf(j.properties.getProperty("spark.jobGroup.id")))
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val group = String.valueOf(j.properties.getProperty("spark.jobGroup.id"))
+        j.stageInfos.foreach(s => stageGroup.putIfAbsent(s.stageId, group))
+        started.add(group)
+      }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        taskMs.computeIfAbsent(t.stageId, _ => new ConcurrentLinkedQueue[Long]())
+          .add(t.taskInfo.duration)
     })
     def inGroup[T](group: String)(body: => T): T = {
       sc.setJobGroup(group, s"bench-extra:$group")
       try body finally sc.clearJobGroup()
     }
     // listener events arrive in order: once the marker job's start is
-    // seen, so is every earlier job's
+    // seen, so is every earlier job's and task's
     def awaitListener(marker: String): Unit = {
       inGroup(marker)(sc.parallelize(Seq(1), 1).count())
       while (!started.contains(marker)) Thread.sleep(5)
@@ -95,11 +109,21 @@ object BenchExtra {
         awaitListener(s"$name:flush")
         def jobs(phase: String) = med((1 to reps).map { rep =>
           started.toArray.count(_ == s"$name:$rep:$phase") })
+        // (max, median) task ms of each rep's heaviest action stage
+        val skew = (1 to reps).map { rep =>
+          val stages = stageGroup.asScala.collect {
+            case (id, g) if g == s"$name:$rep:action" =>
+              Option(taskMs.get(id)).map(_.asScala.toSeq).getOrElse(Nil)
+          }.filter(_.nonEmpty)
+          if (stages.isEmpty) (0L, 0L)
+          else { val ts = stages.maxBy(_.sum); (ts.max, med(ts)) }
+        }
         println(f"""BENCHX $name reps=$reps min=${times.min}%.3f med=${
           med(times)}%.3f all=${times.map(t => f"$t%.3f").mkString(",")
           } construct_jobs=${jobs("construct")} construct_med=${
           med(phases.map(_._1))}%.3f action_jobs=${jobs("action")
-          } action_med=${med(phases.map(_._2))}%.3f""")
+          } action_med=${med(phases.map(_._2))}%.3f skew_max_ms=${
+          med(skew.map(_._1))} skew_med_ms=${med(skew.map(_._2))}""")
       } else println(s"BENCHX $name plan-only")
     }
     spark.stop()

@@ -916,4 +916,87 @@ class StreamingSpec extends AnyFunSuite {
     assert(total == rows.size.toLong, s"rollup covered $total of ${rows.size} turns")
     assert(rollup.select("highest_tier").distinct().count() >= 3)
   }
+
+  /** `op` over `rows` on a batch Dataset, and over a stream of `rows`
+    * followed by one `pusher` row past every event time, each as
+    * sorted row strings.
+    */
+  private def batchAndPushed[T: org.apache.spark.sql.Encoder](name: String,
+      rows: Seq[T], pusher: T)(
+      op: org.apache.spark.sql.Dataset[T] => org.apache.spark.sql.Dataset[_]): (Seq[String], Seq[String]) = {
+    def sorted(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val batch = sorted(op(spark.createDataset(rows)).toDF())
+    implicit val sq = spark.sqlContext
+    val mem = MemoryStream[T]
+    val q = op(mem.toDS()).writeStream.format("memory").queryName(name)
+      .outputMode(OutputMode.Append).start()
+    for (chunk <- Seq(rows, Seq(pusher))) { mem.addData(chunk); q.processAllAvailable() }
+    q.stop()
+    (batch, sorted(spark.table(name)))
+  }
+
+  test("event-time automatons: a batch run equals the stream closed by one pusher row") {
+    import spark.implicits._
+    import graft.operators.Annotation
+    import StreamingPipeline.{DocEvent, TokenEvent}
+    val t0 = 1700000040000L // window-aligned (divisible by 60 000)
+    val day = 24 * 3600 * 1000L
+    def checkSame(name: String, got: (Seq[String], Seq[String])): Unit = {
+      val (batch, stream) = got
+      assert(batch.nonEmpty, s"$name: the fixture emits nothing")
+      assert(batch == stream, s"$name: batch-only ${batch.diff(stream)} " +
+        s"stream-only ${stream.diff(batch)}")
+    }
+
+    def ann(conv: String, idx: Int, tier: String) =
+      Annotation(conv, idx, "user", new java.sql.Timestamp(t0 + idx * 60000L),
+        "G", "SNV", Nil, Nil, Nil, Nil, tier_4 = tier == "tier_4",
+        tier, Nil, Nil, Nil, Nil)
+
+    // sessions: the batch run also closes each conversation's last one
+    val annotated = Pipeline.annotate(spark.createDataset(Synth.transcriptRows(
+      Synth.TurnGenConfig(nConvs = 12, turnsPerConv = 8, nGenes = 12))), bc).collect().toSeq
+    checkSame("session", batchAndPushed("pushed_sess", annotated,
+        ann("zz_pusher", 0, "tier_4").copy(
+          ts = new java.sql.Timestamp(annotated.map(_.ts.getTime).max + day))) { ds =>
+      StreamingPipeline.sessionAutomaton(ds.withWatermark("ts", cfg.watermark), cfg)
+    })
+
+    // escalations: random tiers, several conversations
+    val rnd = new scala.util.Random(7)
+    val tiers = Seq("tier_1", "tier_1b", "tier_2", "tier_3", "tier_4")
+    val anns = for (c <- 0 until 6; i <- 0 until 30)
+      yield ann(s"conv$c", i, tiers(rnd.nextInt(tiers.size)))
+    checkSame("escalation", batchAndPushed("pushed_esc", anns,
+        ann("zz_pusher", 24 * 60 * 2, "tier_4")) { ds =>
+      StreamingPipeline.escalationsStream(ds, StreamConfig(watermark = "10 minutes"))
+    })
+
+    // SimHash pairs: planted near-duplicates one second apart
+    val words = Vector("alpha", "beta", "gamma", "delta", "epsilon", "zeta",
+      "eta", "theta", "iota", "kappa", "lambda", "mu", "nu", "xi", "omicron")
+    val base = (0L until 20L).map(i =>
+      i -> Seq.fill(40)(words(rnd.nextInt(words.size))).mkString(" "))
+    val dups = (0L until 5L).map { i =>
+      val toks = base(i.toInt)._2.split(" "); toks(5) = "CHANGED"
+      (100L + i) -> toks.mkString(" ")
+    }
+    val docs = (base ++ dups).zipWithIndex.map { case ((id, text), k) =>
+      DocEvent(id, text, new java.sql.Timestamp(t0 + k * 1000L)) }
+    checkSame("simhash", batchAndPushed("pushed_simhash", docs,
+        DocEvent(999L, "a pusher document unlike any other one here",
+          new java.sql.Timestamp(t0 + day))) { ds =>
+      StreamingPipeline.simhashNearDupPairs(ds, StreamConfig(watermark = "1 hour"))
+    })
+
+    // bursts: random token counts over a few windows
+    val events = for (tok <- Seq("a", "b", "c"); sec <- 0 until 400
+        if rnd.nextInt(6) == 0 || (tok == "a" && sec / 60 == 3))
+      yield TokenEvent(tok, new java.sql.Timestamp(t0 + sec * 1000L))
+    checkSame("burst", batchAndPushed("pushed_burst", events,
+        TokenEvent("zz_pusher", new java.sql.Timestamp(t0 + day))) { ds =>
+      StreamingPipeline.burstDetectStream(ds, StreamConfig(watermark = "10 seconds"),
+        windowSec = 60, minCount = 3, ratio = 2)
+    })
+  }
 }

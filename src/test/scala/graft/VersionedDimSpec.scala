@@ -195,4 +195,32 @@ class VersionedDimSpec extends AnyFunSuite {
       .sortBy(_._1)
     assert(auto.sameElements(single), "auto-bucketed diverged")
   }
+
+  test("asof skew probe: a planted hot key buckets, a uniform input keeps one window") {
+    import spark.implicits._
+    def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
+    val rnd = new scala.util.Random(17)
+    val dim = (0 until 40).map(i =>
+      (s"k${i % 20}", ts((rnd.nextInt(20) * 400).toLong), i, s"v$i"))
+      .toDF("k", "ts", "ver", "name")
+    def events(key: Long => String) = (1L to 400L)
+      .map(i => (i, key(i), ts(rnd.nextInt(10000).toLong)))
+      .toDF("event_id", "k", "ts")
+    // past maxSingleWindowRows either way; only the hot key's count
+    // (~300 rows) clears maxKeyRows = 100 — uniform keys hold ~22
+    val hot = events(i => if (i % 4 != 0) "k0" else s"k${i % 20}")
+    val uniform = events(i => s"k${i % 20}")
+    for ((name, ev, wantBucketed) <- Seq(("hot", hot, true), ("uniform", uniform, false))) {
+      def run(nb: Int) = VersionedDim.asofJoin(ev, dim, "k", "ts", "ver",
+        Seq("name"), nBuckets = nb, maxSingleWindowRows = 10, maxKeyRows = 100)
+      val probed = run(0)
+      // only the bucketed regime joins its (_k, _b) carry-in
+      val bucketed = probed.queryExecution.optimizedPlan.toString.contains("Join")
+      assert(bucketed == wantBucketed, s"$name: bucketed=$bucketed\n" +
+        probed.queryExecution.optimizedPlan)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).sorted.toSeq
+      assert(rows(probed) == rows(run(1)), s"$name: probed regime diverged")
+    }
+  }
 }
